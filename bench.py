@@ -1,10 +1,15 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the headline catalog queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]`` and prints per-query JSON detail lines
+followed by ONE JSON summary line, always last.
 
-    {"metric": "...", "value": <total_sec>, "unit": "sec",
-     "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
+Usage: python bench.py [name ...]
+
+With names, only those catalog entries are timed (same session, warmup
+and best-of-N as the full run), so one query can be re-measured
+without a full sweep.  A query that raises is recorded under
+``"failed"`` (error class and first message line) and the run goes on.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver-side collect cost).  Session startup and a warmup query are
@@ -20,497 +25,20 @@ import os
 import re
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
 from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 
-# Headline set: one per operator family, weighted toward the shapes that
-# dominate at scale (grouped agg, join+agg, windows, as-of, dedup, ANN).
-# Read-path queries only — the reference's <300 ms budget applies to its
-# read tools; training/batch jobs (m5*, d4b fingerprint build) are
-# oracle-checked in the catalog but not part of the latency headline.
-HEADLINE = [
-    "q1_pricing_summary",
-    "j1_revenue_by_nation",
-    "a1_stats_block",
-    "a9_profile_table",
-    "a10_histogram",
-    "w1_zscore_outliers",
-    "w5_acwr_rolling_loads",
-    "j7_nearest_date_asof",
-    "j9_backward_asof",
-    "m1_linregress_by_group",
-    "m7_vdot",
-    "m8_best_segment",
-    "t3_sustained_islands",
-    "t2_t4_anomaly_pipeline",
-    "t4_full_causes",
-    "t6_work_recovery",
-    "d2_ngram_jaccard_pairs",
-    "d3_minhash_lsh_pairs",
-    "x1_text_quality",
-    "v1_cosine_topk",
-    # r6: CDC merge, SCD2 history, and daily gap-fill are read-shaped
-    # event-table queries (keyed windows + one join each)
-    "j10_cdc_apply",
-    "w11_scd2_intervals",
-    "t10_gap_fill_ffill",
-    "j11_snapshot_diff",
-    "j12_interval_overlap",
-    "t11_time_weighted_avg",
-    "c14_top_p_select",
-    "i4_stream_join_replay",
-    # r3: the heaviest previously-untimed plans (VERDICT r2 item 3) —
-    # wall numbers for the enrichment/robust-fit/anomaly-rate families
-    # and the scale-path dedup/ANN candidate generators.
-    "d10_performance_trends",
-    "m5c_huber_irls",
-    "t8_material_event_rates",
-    "d4b_simhash_pairs",
-    "v4_srp_lsh_pairs",
-    "c1_training_prep",
-    # r3 additions: batch retrieval + sessionization are read-shaped,
-    # the scrub pass is a batch job
-    "v5_batch_topk",
-    "t9_event_sessions",
-    "x5_redact_pii",
-    "v4b_srp_multiprobe",
-    # r4 additions: lexical retrieval is read-shaped; decontamination,
-    # sampling, repetition signals are corpus batch jobs; v6 is the
-    # quantized ANN read path
-    "x6_tfidf_topk",
-    "x7_bm25_search",
-    "v6_sq_topk",
-    "d6_decontamination",
-    "c2_stratified_sample",
-    "x8_repetition_signals",
-    "x9_vocab_stats",
-    "c3_curation_record",
-    "v7_embedding_outliers",
-    "c5_quality_audit",
-    "c6_mixture_report",
-    # r5 additions: the unigram-LM junk filter and line-level
-    # boilerplate fraction are corpus batch passes
-    "x10_unigram_logprob",
-    "x11_boilerplate_segments",
-    "v8_pq_topk",
-    # r6: the deployable PQ split — codebooks memoized after the first
-    # call, so best-of-N records the encode+ADC+re-rank read path the
-    # way v6's SQ path is recorded; v8 above keeps the train-per-call
-    # end-to-end number in the batch bucket
-    "v8b_pq_query_path",
-    "v9_semantic_dedup",
-    "c7_sequence_packing",
-    "x12_bpe_merges",
-    "x13_bpe_token_counts",
-    # r5 multimodal decode family: Arrow map passes over constructed
-    # payloads (decode throughput; no shuffle, so wall ≈ scan + decode)
-    "mm3_image_decode",
-    "mm4_audio_decode",
-    "mm5_frame_sample",
-    # r5 shard sink/source: assignment is a prefix-sum batch pass; the
-    # roundtrip writes+reads real tar shards
-    "c8_shard_assignment",
-    "c9_webdataset_roundtrip",
-    "c10_leakage_safe_split",
-    # r5 source/sink rows: ingestion parse and guarded export roundtrip
-    "s1_json_schema_parse",
-    "s5_export_roundtrip",
-    # r6: batch replays of the stateful incremental registries (two
-    # ingests against a throwaway registry; oracle = one-shot dedup),
-    # and the RAG/embedding chunking pass (in-row 1→N explode)
-    "i1_incremental_dedup_replay",
-    "i2_incremental_lsh_replay",
-    "c11_doc_chunks",
-    # r6 additions: corpus rewrite, bigram LM scoring, and merit-ordered
-    # budget selection are corpus batch passes
-    "d7_segment_dedup_rewrite",
-    "x14_bigram_logprob",
-    "c12_quality_budget_select",
-    "x15_heavy_hitters",
-    "c13_per_group_sample",
-    # r6: streaming windowed-agg replay (4 AvailableNow runs against a
-    # shared checkpoint; timed end-to-end like i1/i2)
-    "i3_stream_window_replay",
-    # r7 additions: sessionized funnel + retention cohorts are
-    # read-shaped event queries (keyed windows / two aggs + join); the
-    # ANN recall-verdict (k-means per call) and the streaming dedup
-    # replay are batch jobs
-    "t12_funnel_conversion",
-    "a17_retention_cohorts",
-    "v10_ivf_recall_verdict",
-    "i5_stream_dedup_replay",
-    # r7 cont.: SCD2 lookup join, EWMA, and rolling median are
-    # read-shaped event queries; DSIR scoring and weighted sampling
-    # are corpus batch passes
-    "j14_scd2_lookup",
-    "w12_ewma_halflife",
-    "w13_rolling_median_7d",
-    "x16_dsir_importance",
-    "c15_weighted_sample",
-    # r7 cont.: containment dedup is a corpus batch pass; the
-    # seasonal-naive backtest is a read-shaped keyed self-join; the
-    # session-window replay is a streaming batch job like i3/i4/i5
-    "d8_containment_pairs",
-    "t13_seasonal_naive_backtest",
-    "i6_stream_session_replay",
-    # r7 cont.: CUBE + percentile bands are read-shaped aggs; the
-    # versioned-CDC replay is a batch job like i1/i2
-    "a18_cube_volumes",
-    "a19_percentile_bands",
-    "i7_cdc_versioned_replay",
-    # r7: 3-iteration PageRank is an iterative batch program; the
-    # sketch rollup is a read-shaped two-agg + merge
-    "g1_pagerank",
-    "a20_sketch_rollup",
-    # r7: CSV edge-format roundtrip is a sink+source batch row
-    "s8_csv_roundtrip",
-    # r7: v10's deployable split — index memoized after the first
-    # call, so best-of-N records the IVF probe+rank+verify read path
-    # the way v8b records PQ's (v10 above keeps train-per-call)
-    "v10b_ivf_query_path",
-    # r7: MMR diversity re-rank is a serving read (k-bounded shortlist);
-    # CUSUM drift is a read-shaped keyed-window query
-    "o7_mmr_rerank",
-    "t14_cusum_drift",
-    "t15_autocorr_lag1",
-    "w14_seasonal_decompose",
-    # r8 additions: the salted hot-key aggregate and skew join are
-    # read-shaped event queries (the salting is a physical rewrite of
-    # a plain GROUP BY / JOIN); block-carry EWMA is a read-shaped
-    # keyed-window query like w12; Bloom decontamination is a corpus
-    # batch pass like d6
-    "k1_salted_hot_key_agg",
-    "k2_salted_skew_join",
-    "w15_ewma_blocked",
-    "d9_bloom_decontaminate",
-    # r8: the co-located bucketed join is a read-shaped query once the
-    # bucketed silver tables exist (written on first call, memoized —
-    # the v8b convention: best-of-N records the amortized read path)
-    "j15_bucketed_colocated_join",
-    # r8: the applyInPandasWithState replay is a streaming batch job
-    # like i3/i5/i6
-    "i8_stream_runs_replay",
-    # r8: RRF hybrid fusion is a serving read (both inputs k-bounded)
-    "o8_rrf_hybrid",
-    # r9 additions: graph iteration (CC + bounded BFS) are batch jobs;
-    # the HDR quantile sketch, z-order tile rollup, and schema-merge
-    # read are read-shaped single-agg queries; Holt smoothing is a
-    # keyed grouped-map pass like w12's family
-    "g2_connected_components",
-    "g3_bfs_hops",
-    "a21_hdr_quantile_sketch",
-    "z1_zorder_layout",
-    "s9_schema_evolution",
-    "t16_holt_linear",
-    # r9: trigram-backoff scoring is a corpus LM batch job like x14;
-    # nDCG eval is a k-bounded serving read like o8
-    "x17_trigram_backoff",
-    "o9_ndcg_eval",
-    # r9 cont.: triangle counting is a graph batch job; the count-min
-    # point-query and temperature-mix report are read-shaped aggs; the
-    # sliding distinct-user count is a read-shaped dedupe+explode agg;
-    # the partition-pruned scan is a read once the layout exists
-    # (written on first call, memoized — the j15 convention)
-    "g4_triangle_count",
-    "a22_countmin_sketch",
-    "c16_temperature_mix",
-    "w16_sliding_distinct_users",
-    "s10_partition_pruned_scan",
-    # r9: the left-outer stream join replay is a streaming batch job
-    # like i4 (4 state stores x partitions x runs); Holt-Winters is a
-    # keyed grouped-map pass like t16
-    "i9_stream_outer_join_replay",
-    "t17_holt_winters",
-    # r9: k-core peeling is a graph batch job like g2/g3
-    "g5_kcore",
-    # r9: Heaps-law fit is a corpus batch pass (term-keyed agg + two
-    # distributed prefix sums); keyset pagination is a serving read
-    "x18_heaps_law",
-    "o10_keyset_pagination",
-    # r9: PERMISSIVE JSON classification is a read-shaped in-row pass
-    "s11_corrupt_tolerant_json",
-    # r9: Theil-Sen is a robust-fit batch job like m5c (bounded
-    # per-group pairwise join + distributed medians)
-    "m16_theil_sen",
-    # r9: the Bloom-pruned selective join is a read-shaped query (the
-    # prune is a broadcast pipeline stage in front of the join); the
-    # HLL audience overlap is a read-shaped two-scan sketch agg
-    "j16_bloom_pruned_join",
-    "a23_hll_audience_overlap",
-    # r10: KS drift test and PSI report are read-shaped stat queries
-    # (value-keyed agg + bounded prefix sums / lang×bin agg); token
-    # entropy is a two-keyed-agg corpus pass (batch, like x9); the
-    # prefix-dim rerank is an ANN serving read like v6
-    "a24_ks_two_sample",
-    "c17_psi_drift",
-    "x19_token_entropy",
-    "v11_prefix_dim_rerank",
-    # r10: LPA communities is a graph batch job like g2/g5
-    "g6_label_propagation",
-    # r10: Zipf fit is a corpus batch pass (vocab agg + prefix-sum
-    # rank) like x18; weighted median and rolling correlation are
-    # read-shaped keyed-window stat queries
-    "x21_zipf_fit",
-    "a25_weighted_median",
-    "w18_rolling_corr",
-    # r10: image aHash near-dup is a corpus batch pass (assemble +
-    # decode + banded pair join), batch like d4b; the cluster-safe
-    # split composes the d3 pair graph + CC rounds, batch like d5;
-    # the ORC roundtrip is a sink+source read row like s8
-    "mm6_image_ahash_neardup",
-    "c18_cluster_safe_split",
-    "s12_orc_roundtrip",
-    # r10: the stream-static enrichment replay is a streaming batch
-    # job like i3/i4 (two AvailableNow runs over a shared checkpoint);
-    # KWIC snippets are a serving read like o7/o8 (k-bounded join)
-    "i10_stream_static_enrich_replay",
-    "o12_kwic_snippets",
-    # r10: chi-square drift is a read-shaped category agg; the audio
-    # near-dup is a corpus batch pass like mm6/d4b
-    "a27_chi_square_drift",
-    "mm7_audio_energyhash_neardup",
-    # r10: higher moments are a read-shaped one-pass agg; Mann-Kendall
-    # is a robust-fit batch job like m16 (bounded per-group pair join);
-    # the langid eval is a corpus batch pass like x2 itself
-    "a28_higher_moments",
-    "t18_mann_kendall",
-    "x23_langid_eval",
-    # r11: confidence-calibration eval (reliability bins + ECE) is a
-    # corpus batch pass like x23 (one scan into a 10-row bin agg)
-    "x24_calibration_ece",
-    # r11: AUC discrimination eval is a corpus batch pass (one scan
-    # into a score histogram + tiny prefix sum)
-    "x25_auc_discrimination",
-    # r11: Poisson-bootstrap CI is a 32-replicate uncertainty batch
-    # job (one scan, map-side 32x collapsed by partial agg)
-    "a29_poisson_bootstrap",
-    # r11: MRR/hit serving audit is an eval batch job (exact gold =
-    # |Q| x N cosines; the audited SYSTEM path stays k-bounded)
-    "o13_mrr_hit_eval",
-    # r11: isotonic calibration fit is a corpus batch pass (the x24
-    # scan + closed-form PAV on the 10-row bin frame)
-    "m17_isotonic_calibration",
-    # r11: split-leakage audit is a dedup-graph batch job (d3 pairs +
-    # CC dominate, like c18)
-    "c19_split_leakage_audit",
-    # r11: Good-Turing smoothing is a corpus LM batch pass (vocab agg
-    # + frequency-of-frequencies, like x9/x18)
-    "x28_good_turing",
-    # r11: sliding distinct via daily HLL merge is a read-shaped
-    # window query (one scan -> day-cardinality sketch algebra)
-    "w19_sliding_distinct_hll",
-    # r11: effective-dataset-size report is a dedup-graph batch job
-    # (d3 pairs + CC dominate, like c18/c19)
-    "c20_effective_tokens",
-    # r11: hot-key diagnostic is a read-shaped keyed count agg
-    "k3_hot_key_report",
-    # r11: trimmed mean is a read-shaped keyed-window stat query
-    "a31_trimmed_mean",
-    # r11: seasonal-strength diagnostic is a read-shaped keyed-window
-    # stat query (the w14 decomposition + a per-user moment agg)
-    "t19_seasonal_strength",
-    # r11: norm-pruned exact MIPS is an ANN serving read like v6/v11
-    "v12_mips_norm_pruned",
-    # r11: the mixture allocator is a corpus batch pass (one scan for
-    # supplies; the solve is source-cardinality algebra)
-    "c21_mixture_waterfill",
-    # r12: generation-diversity audit is a corpus n-gram batch pass
-    # (explode ×3 orders + two keyed aggs, like x9/d2b)
-    "x29_distinct_ngram_diversity",
-    # r12: unigram JS source drift is a corpus LM batch pass (vocab
-    # aggs + a sources×vocab contribution frame, like x10/x16)
-    "x30_unigram_js_source_drift",
-    # r12: tokenizer fertility is a corpus batch pass (the x13 in-row
-    # BPE projection + one lang-keyed agg)
-    "x31_tokenizer_fertility",
-    # r12: degree power-law audit is a read-shaped pair of keyed aggs
-    # (the x28 frequency-of-frequencies shape on degrees)
-    "g7_degree_powerlaw",
-    # r12: leave-last-out split is a read-shaped keyed-window query
-    # (one user-keyed exchange for the ranking + per-user pair agg)
-    "c22_leave_last_out_split",
-    # r12: winsorized mean is a read-shaped keyed-window stat query
-    # (a31's one-exchange shape with clamp instead of drop)
-    "a32_winsorized_mean",
-    # r12: binary segmentation is a read-shaped keyed-window query
-    # (one user-keyed exchange: daily rollup + prefix windows + argmax)
-    "t20_binary_segmentation",
-    # r12: the range-partition planner is a read-shaped layout audit
-    # (cell histogram + two bounded windows + one in-row bucket pass)
-    "k4_range_partition_planner",
-    # r12: the source-contamination matrix is a corpus dedup batch
-    # pass (distinct grams -> gram-keyed self-join, like d8)
-    "c23_source_contamination_matrix",
-    # r12: PMI collocations are a corpus n-gram batch pass (in-row
-    # bigrams -> one groupBy + bigram-frame algebra, like x14)
-    "x32_pmi_collocations",
-    # r12: MAD is a read-shaped keyed-window stat query (a31's
-    # one-exchange rank shape, twice on the same partitioning)
-    "a33_mad_robust_scale",
-    # r12: MAP/P/R serving audit is an eval batch job like o13
-    # (exact gold = |Q| x N cosines; system path k-bounded)
-    "o14_map_precision_recall",
-    # r12: HITS is a graph batch job like g1 (6 half-steps of
-    # node-keyed join + DECIMAL-sum agg)
-    "g8_hits",
-    # r12: Ljung-Box is a read-shaped keyed-window stat query (the
-    # t15 one-exchange shape with a 7-deep lag buffer)
-    "t21_ljung_box",
-    # r12: kappa is a corpus eval batch pass (the x23 scan + a 1-row
-    # integer reduction)
-    "x33_judge_agreement_kappa",
-    # r12: BH-FDR is a read-shaped keyed stat query (the t15 kernel
-    # + one bounded key-cardinality window)
-    "t22_bh_fdr",
-    # r12: centroid drift is a read-shaped embedding audit (one
-    # posexplode scan -> (label,dim) agg; pair algebra on the
-    # bounded centroid frame)
-    "v13_centroid_drift_matrix",
-    # r12: minhash calibration is a dedup batch audit (the d3 banded
-    # path + candidate-only exact-verify join)
-    "d11_minhash_calibration",
-    # r12: grouped mode is a read-shaped two-stage count-then-argmax
-    # (one data-sized exchange)
-    "a35_grouped_mode",
-    # r12: context-budget curve is a corpus batch pass (one scan,
-    # broadcast x4 fanout, 4-group reduction)
-    "c25_context_budget_curve",
-    # r12: scene cuts are a multimodal batch pass (Arrow demux
-    # fan-out + one video-keyed lag window)
-    "mm8_scene_cuts",
-    # r12: Gopher rule verdicts are a read-shaped in-row gate (one
-    # scan, zero shuffles)
-    "x34_gopher_quality_rules",
-    # r12: seasonal MK is a read-shaped keyed stat query (t18's
-    # calendar-bounded pair join on the (user, weekday) key)
-    "t23_seasonal_mann_kendall",
-    # r12: Bradley-Terry is an iterative batch fit like g1/g8 (one
-    # exchange for comparisons; 5 MM steps on the item matrix)
-    "o15_bradley_terry_strengths",
-]
-
-# Batch/training-shaped members of HEADLINE: timed and reported, but
-# broken out so the read-path subtotal stays comparable to the
-# reference's 300 ms/read budget (its benchmark scopes to read tools;
-# robust fits and corpus-wide dedup are batch jobs there too).
-BATCH_JOBS = {
-    "g2_connected_components",
-    "g3_bfs_hops",
-    "g4_triangle_count",
-    "g5_kcore",
-    "g6_label_propagation",
-    "x18_heaps_law",
-    "m16_theil_sen",
-    # a22 is TWO corpus token passes (CMS build + the x15 exact-top-k
-    # probe) — batch like x15 itself, not a read
-    "a22_countmin_sketch",
-    # x19 is a full-corpus explode + two keyed aggs, batch like x9;
-    # x21 is a corpus vocab pass + distributed rank, batch like x18;
-    # mm6 is a corpus assemble+decode+banded-join pass, batch like d4b
-    "x19_token_entropy",
-    "x21_zipf_fit",
-    "mm6_image_ahash_neardup",
-    "c18_cluster_safe_split",
-    "i10_stream_static_enrich_replay",
-    "mm7_audio_energyhash_neardup",
-    "t18_mann_kendall",
-    "x23_langid_eval",
-    "x24_calibration_ece",
-    "x25_auc_discrimination",
-    "a29_poisson_bootstrap",
-    "o13_mrr_hit_eval",
-    "o14_map_precision_recall",
-    "m17_isotonic_calibration",
-    "c19_split_leakage_audit",
-    "x28_good_turing",
-    "c20_effective_tokens",
-    "c21_mixture_waterfill",
-    "x29_distinct_ngram_diversity",
-    "x30_unigram_js_source_drift",
-    "x31_tokenizer_fertility",
-    "c23_source_contamination_matrix",
-    "d11_minhash_calibration",
-    "c25_context_budget_curve",
-    "mm8_scene_cuts",
-    "x32_pmi_collocations",
-    "x33_judge_agreement_kappa",
-    "x17_trigram_backoff",
-    "m5c_huber_irls",
-    "d4b_simhash_pairs",
-    "v4_srp_lsh_pairs",
-    "d2_ngram_jaccard_pairs",
-    "d3_minhash_lsh_pairs",
-    "c1_training_prep",
-    "x5_redact_pii",
-    "v4b_srp_multiprobe",
-    "d6_decontamination",
-    "c2_stratified_sample",
-    "x8_repetition_signals",
-    "x9_vocab_stats",
-    "c3_curation_record",
-    "v7_embedding_outliers",
-    "c5_quality_audit",
-    "c6_mixture_report",
-    "x10_unigram_logprob",
-    "x11_boilerplate_segments",
-    "v8_pq_topk",
-    "v9_semantic_dedup",
-    "c7_sequence_packing",
-    "x12_bpe_merges",
-    "x13_bpe_token_counts",
-    "mm3_image_decode",
-    "mm4_audio_decode",
-    "mm5_frame_sample",
-    "c8_shard_assignment",
-    "c9_webdataset_roundtrip",
-    "c10_leakage_safe_split",
-    "s1_json_schema_parse",
-    "s5_export_roundtrip",
-    # r9: s9 writes two parquet batches per call (sink+source
-    # roundtrip like s5); the CSV roundtrip s8 precedent keeps pure
-    # in-memory roundtrips on the read path, but s9's double write is
-    # ingest-shaped
-    "s9_schema_evolution",
-    # r13 (round-12 VERDICT item 6): s12 writes its ORC copy on EVERY
-    # timed run now (the memo that skipped the write after run 1 was
-    # silently recording a read-only number for a "roundtrip" entry) —
-    # sink-shaped like s5/s8, so it moves out of the read split
-    "s12_orc_roundtrip",
-    "i1_incremental_dedup_replay",
-    "i2_incremental_lsh_replay",
-    "c11_doc_chunks",
-    "d7_segment_dedup_rewrite",
-    "x14_bigram_logprob",
-    "c12_quality_budget_select",
-    "x15_heavy_hitters",
-    "c13_per_group_sample",
-    "i3_stream_window_replay",
-    # r7 (VERDICT r6 item 3): the stream-stream join replay spins 4
-    # state stores × partitions × runs — a replay job like i1/i2/i3,
-    # not a read tool; it was inflating the read-path average 0.69→0.84
-    "i4_stream_join_replay",
-    # r7 additions
-    "v10_ivf_recall_verdict",
-    "i5_stream_dedup_replay",
-    "x16_dsir_importance",
-    "c15_weighted_sample",
-    "d8_containment_pairs",
-    "i6_stream_session_replay",
-    "i7_cdc_versioned_replay",
-    "g1_pagerank",
-    "g8_hits",
-    "o15_bradley_terry_strengths",
-    "s8_csv_roundtrip",
-    # r8: Bloom decontamination is a corpus batch pass like d6
-    "d9_bloom_decontaminate",
-    # r8: streaming stateful replay job
-    "i8_stream_runs_replay",
-    # r9: left-outer stream join replay job
-    "i9_stream_outer_join_replay",
-}
+# Headline set: the catalog entries tagged "read" or "batch".  "read"
+# entries are the read-path queries the reference's <300 ms budget
+# applies to; "batch" entries (training, corpus passes, replays) are
+# timed and reported, but broken out so the read-path subtotal stays
+# comparable to that per-read budget.
+HEADLINE = [n for n, s in CATALOG.items() if {"read", "batch"} & set(s.tags)]
+BATCH_JOBS = {n for n, s in CATALOG.items() if "batch" in s.tags}
 
 
 def force(df) -> None:
@@ -548,19 +76,29 @@ def clear_persisted(spark) -> None:
         rdd.unpersist(False)
 
 
+def print_parts(part_key: str, key: str, values: dict, names: list) -> None:
+    """Print ``values`` for ``names`` as independently parseable JSON
+    lines of <=15 names each; every line must fit in 1 KB."""
+    chunk = 15
+    n_parts = (len(names) + chunk - 1) // chunk
+    for part, start in enumerate(range(0, len(names), chunk), start=1):
+        line = json.dumps(
+            {
+                part_key: part,
+                "of": n_parts,
+                key: {n: values[n] for n in names[start : start + chunk]},
+            }
+        )
+        if len(line) > 1024:
+            raise ValueError(f"{part_key} {part} exceeds 1 KB")
+        print(line)
+
+
 def main() -> None:
-    # mm7's numbers are comparable across rounds only at the default
-    # resolution knobs; a stray env override would silently shift the
-    # bench (and any in-bench parity anchor).  Unset with a warning —
-    # knob experiments live in scripts/mm7_resolution_knob.py.
-    for var in ("SPARK_GRAFT_MM7_SLICES", "SPARK_GRAFT_MM7_MAX_HAMMING"):
-        if var in os.environ:
-            print(
-                f"WARNING: unsetting {var}={os.environ[var]} — mm7 "
-                "bench numbers are defined at the defaults only",
-                file=sys.stderr,
-            )
-            del os.environ[var]
+    names = sys.argv[1:] or HEADLINE
+    unknown = [n for n in names if n not in CATALOG]
+    if unknown:
+        raise SystemExit(f"not in catalog: {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -592,21 +130,29 @@ def main() -> None:
     max_runs = max(runs, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RUNS", "5")))
     timings: dict[str, float] = {}
     steals: dict[str, float] = {}
-    for name in HEADLINE:
+    failed: dict[str, str] = {}
+    for name in names:
+        spark.sparkContext.setJobDescription(f"bench: {name}")
         s0, st0 = read_steal()
         walls: list[float] = []
-        while True:
-            t0 = time.perf_counter()
-            force(CATALOG[name].fn(spark, sf_dir))
-            walls.append(time.perf_counter() - t0)
-            if len(walls) >= max_runs:
-                break
-            if len(walls) >= runs and max(walls) <= 3.0 * min(walls):
-                break
-        s1, st1 = read_steal()
-        timings[name] = round(min(walls), 3)
-        # steal share of this query's whole wall (all runs), percent
-        steals[name] = round(100.0 * (s1 - s0) / max(1, st1 - st0), 2)
+        try:
+            while True:
+                t0 = time.perf_counter()
+                force(CATALOG[name].fn(spark, sf_dir))
+                walls.append(time.perf_counter() - t0)
+                if len(walls) >= max_runs:
+                    break
+                if len(walls) >= runs and max(walls) <= 3.0 * min(walls):
+                    break
+        except Exception as exc:  # noqa: BLE001 — recorded, the run goes on
+            traceback.print_exc()  # full trace on stderr; stdout stays JSON
+            first_line = (str(exc).strip().splitlines() or [""])[0]
+            failed[name] = f"{type(exc).__name__}: {first_line}"[:300]
+        else:
+            s1, st1 = read_steal()
+            timings[name] = round(min(walls), 3)
+            # steal share of this query's whole wall (all runs), percent
+            steals[name] = round(100.0 * (s1 - s0) / max(1, st1 - st0), 2)
         clear_persisted(spark)
 
     total = round(sum(timings.values()), 3)
@@ -619,7 +165,9 @@ def main() -> None:
     # every new entry pays Spark's ~0.2-0.3 s fixed local[32] overhead
     # regardless of plan quality.  Report the compliance split and the
     # p50/p90 read wall next to the average.
-    def _pctl(sorted_vals: list, q: float) -> float:
+    def _pctl(sorted_vals: list, q: float) -> float | None:
+        if not sorted_vals:
+            return None
         i = max(0, min(len(sorted_vals) - 1, round(q * (len(sorted_vals) - 1))))
         return round(sorted_vals[i], 3)
 
@@ -637,16 +185,14 @@ def main() -> None:
     # Ordering (round-9 VERDICT item 2): the driver's bounded tail kept
     # only the LAST parts in r9, so the detail for this round's fronted
     # entries must sit CLOSEST to the summary line.  The catalog's
-    # first-50 window IS the current round's fronted set (the rotation
+    # first-50 window IS the current round's fronted set (catalog.ORDER
     # puts it there), so print non-window queries first and window
     # queries last — whatever the tail truncates, every fronted entry's
     # number survives.
     window = set(list(CATALOG)[:50])
-    names = [n for n in timings if n not in window] + [
+    order = [n for n in timings if n not in window] + [
         n for n in timings if n in window
     ]
-    chunk = 15
-    n_parts = (len(names) + chunk - 1) // chunk
     # Per-query steal telemetry (round-12 VERDICT item 1): separate
     # chunks under a "steal" key — NOT "queries" — so any parser
     # collecting the timing dicts cannot confuse percent-steal with
@@ -655,26 +201,11 @@ def main() -> None:
     # the per-query SECONDS must sit closest to the summary — if the
     # tail truncates anything, it truncates steal percentages, whose
     # distribution survives in the summary's steal_p50/steal_max.
-    for part, start in enumerate(range(0, len(names), chunk), start=1):
-        line = json.dumps(
-            {
-                "steal_part": part,
-                "of": n_parts,
-                "steal": {n: steals[n] for n in names[start : start + chunk]},
-            }
-        )
-        assert len(line) <= 1024, f"steal part {part} exceeds 1 KB"
-        print(line)
-    for part, start in enumerate(range(0, len(names), chunk), start=1):
-        line = json.dumps(
-            {
-                "detail_part": part,
-                "of": n_parts,
-                "queries": {n: timings[n] for n in names[start : start + chunk]},
-            }
-        )
-        assert len(line) <= 1024, f"detail part {part} exceeds 1 KB"
-        print(line)
+    print_parts("steal_part", "steal", steals, order)
+    print_parts("detail_part", "queries", timings, order)
+    # failures after the timings: few, and each names its error
+    for name, err in failed.items():
+        print(json.dumps({"failed": {name: err}}))
     steal_sorted = sorted(steals.values())
     # Load honesty (round-8 VERDICT item 5): BENCH_r08 was captured
     # in-suite (median 1.31x uniform inflation vs idle across 44
@@ -688,7 +219,8 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "sf": sf,
-                "n_queries": len(timings),
+                "n_queries": len(names),
+                "failed": len(failed),
                 "read_path_sec": read_path,
                 "batch_job_sec": round(total - read_path, 3),
                 "reads_within_300ms": f"{reads_within}/{len(read_times)}",

@@ -34,7 +34,7 @@ SELECT l_returnflag,
 FROM lineitem
 GROUP BY l_returnflag
 """,
-    tags=("agg",),
+    tags=("agg", "read"),
 )
 def a1_stats_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 five-stat block (AVG/MEDIAN/STDDEV/MIN/MAX ×N metrics) — the
@@ -230,7 +230,9 @@ FROM lineitem"""
     return " UNION ALL ".join(parts)
 
 
-@register("a9_profile_table", oracle=_profile_oracle(), tags=("agg", "profiler"))
+@register(
+    "a9_profile_table", oracle=_profile_oracle(), tags=("agg", "profiler", "read")
+)
 def a9_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 table profiler: one row per column with count/min/max/avg/
     median/stddev/null-rate/n-distinct (``readers/utility.py:103-113``).
@@ -273,7 +275,7 @@ FROM lineitem, b
 WHERE l_extendedprice IS NOT NULL
 GROUP BY 1
 """,
-    tags=("agg", "profiler"),
+    tags=("agg", "profiler", "read"),
 )
 def a10_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10 equal-width 20-bin histogram with last-bin clamp
@@ -461,7 +463,7 @@ SELECT o_orderstatus, o_orderpriority,
 FROM orders
 GROUP BY CUBE(o_orderstatus, o_orderpriority)
 """,
-    tags=("agg",),
+    tags=("agg", "read"),
 )
 def a18_cube_volumes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All four (status × priority) marginal levels in ONE aggregation
@@ -494,7 +496,7 @@ SELECT l_returnflag,
          / 1000000.0 AS p90
 FROM lineitem GROUP BY l_returnflag
 """,
-    tags=("agg", "percentile"),
+    tags=("agg", "percentile", "read"),
 )
 def a19_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated P10/P50/P90 bands per group — the
@@ -553,7 +555,7 @@ FROM weekly w
 JOIN daily d ON date_trunc('week', d.day) = w.wk
 GROUP BY w.wk, w.w_exact
 """,
-    tags=("agg", "sketch"),
+    tags=("agg", "sketch", "read"),
 )
 def a20_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable-sketch rollup — THE distributed-sketch property the
@@ -629,7 +631,7 @@ SELECT user_id,
        MIN(CASE WHEN cum >= FLOOR((99 * n + 99) / 100.0) THEN bkey END) / 1000.0 AS p99
 FROM w GROUP BY user_id
 """,
-    tags=("aggregate", "sketch"),
+    tags=("aggregate", "sketch", "read"),
 )
 def a21_hdr_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable quantile sketch, HdrHistogram-style (public technique:
@@ -715,7 +717,8 @@ GROUP BY p.term, p.cnt
 @register(
     "a22_countmin_sketch",
     oracle=_a22_oracle(),
-    tags=("sketch", "text"),
+    # batch, not read: two corpus token passes (CMS build + the x15 top-k probe)
+    tags=("sketch", "text", "batch"),
 )
 def a22_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimation
@@ -768,7 +771,7 @@ SELECT CAST((SELECT COUNT(*) FROM a) AS BIGINT) AS exact_a,
             AS BIGINT) AS exact_intersection,
        1 AS ie_within_10pct
 """,
-    tags=("agg", "sketch"),
+    tags=("agg", "sketch", "read"),
 )
 def a23_hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience-overlap via sketch INCLUSION-EXCLUSION — the algebra
@@ -883,7 +886,7 @@ SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
                  THEN 1 ELSE 0 END AS INTEGER) AS reject_05
 FROM d, tot
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a24_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov distance between the `value`
@@ -969,7 +972,7 @@ totals AS (
 SELECT m.flag AS l_returnflag, m.wmedian, t.n_rows, t.total_weight
 FROM med m JOIN totals t ON m.flag = t.flag
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a25_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantity-weighted median price per return flag
@@ -1038,7 +1041,7 @@ SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
                  THEN 1 ELSE 0 END AS INTEGER) AS reject_05
 FROM agg
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a27_chi_square_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson chi-square two-sample homogeneity test on the
@@ -1121,7 +1124,7 @@ SELECT event_type, CAST(n AS BIGINT) AS n,
          AS excess_kurtosis
 FROM cm
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a28_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped skewness and excess kurtosis — the 3rd/4th-moment
@@ -1241,7 +1244,7 @@ FROM base JOIN se ON base.event_type = se.event_type
 @register(
     "a29_poisson_bootstrap",
     oracle=_a29_oracle(),
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "batch"),
 )
 def a29_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bootstrap standard error + 95% normal-interval CI for the
@@ -1376,7 +1379,7 @@ SELECT event_type,
 FROM kept
 GROUP BY 1
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a31_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10% two-sided TRIMMED MEAN per key — the robust-location
@@ -1453,7 +1456,7 @@ SELECT event_type,
        ROUND((sum_mid + k * v_lo + k * v_hi) / n, 6) AS winsorized_mean
 FROM agg
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a32_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10% two-sided WINSORIZED MEAN per key — a31's sibling that
@@ -1558,7 +1561,7 @@ SELECT d.event_type,
 FROM dev d JOIN mad ma USING (event_type)
 GROUP BY 1
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a33_mad_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median absolute deviation per key + robust-z outlier count —
@@ -1660,7 +1663,7 @@ SELECT r.user_id,
 FROM ranked r JOIN tot t USING (user_id)
 WHERE r.rk = 1
 """,
-    tags=("agg", "stats"),
+    tags=("agg", "stats", "read"),
 )
 def a35_grouped_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped MODE — each key's most frequent category with its share

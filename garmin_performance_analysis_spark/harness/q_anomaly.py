@@ -63,7 +63,7 @@ SELECT p.user_id, p.island_id, p.island_start, p.island_end, p.n_events,
             ELSE 'isolated' END AS cause
 FROM per p LEFT JOIN base b ON p.user_id = b.user_id
 """,
-    tags=("anomaly", "composite"),
+    tags=("anomaly", "composite", "read"),
 )
 def t2_t4_anomaly_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2+T3+T4+T5 composed: z/magnitude/direction gates → sustained

@@ -206,7 +206,7 @@ SELECT user_id, metric, sec, value,
 FROM classified
 ORDER BY user_id, metric, sec
 """,
-    tags=("anomaly", "composite"),
+    tags=("anomaly", "composite", "read"),
 )
 def t4_full_causes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4+T5 per-anomaly record with the reference's full cause chain,

@@ -550,7 +550,7 @@ def m6_baseline_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("m5c_huber_irls", oracle=_m5c_oracle(), tags=("ml", "baseline"))
+@register("m5c_huber_irls", oracle=_m5c_oracle(), tags=("ml", "baseline", "batch"))
 def m5c_huber_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M5 Huber baseline as a DISTRIBUTED frozen-schedule IRLS (init
     OLS + 2 Huber reweights, MAD scale, delta 1.35) — the fully

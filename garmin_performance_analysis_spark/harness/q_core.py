@@ -38,7 +38,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("flagship", "agg"))
+@register("q1_pricing_summary", oracle=Q1_ORACLE, tags=("flagship", "agg", "read"))
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped pricing summary (scan→filter→8-agg groupBy), the classic
     columnar-engine flagship.  Exercises the same shape as the
@@ -218,7 +218,7 @@ JOIN supplier s ON l.l_suppkey = s.s_suppkey
 JOIN nation n ON s.s_nationkey = n.n_nationkey
 GROUP BY n.n_name
 """,
-    tags=("join", "agg"),
+    tags=("join", "agg", "read"),
 )
 def j1_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact ⋈ dim ⋈ dim with broadcast dims (J1/J2 shape,
@@ -432,7 +432,7 @@ SELECT l_orderkey AS activity_id,
        l_tax AS maxHR
 FROM lineitem WHERE l_orderkey % 31 = 0
 """,
-    tags=("source",),
+    tags=("source", "batch"),
 )
 def s1_json_schema_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 raw-JSON source machinery end-to-end WITHOUT touching disk:
@@ -482,7 +482,7 @@ def s1_json_schema_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "s5_export_roundtrip",
     oracle="SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier",
-    tags=("source", "sink"),
+    tags=("source", "sink", "batch"),
 )
 def s5_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 export sink end-to-end: run ``guarded_export`` (row-guarded
@@ -510,7 +510,7 @@ SELECT n_nationkey, n_name, n_regionkey,
        ROUND(CAST(n_nationkey AS DOUBLE) / 4.0, 6) AS frac
 FROM nation
 """,
-    tags=("source", "sink"),
+    tags=("source", "sink", "batch"),
 )
 def s8_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + source with a PINNED schema — the interchange format
@@ -557,7 +557,8 @@ SELECT COALESCE(o_orderpriority, '(pre-evolution)') AS priority,
 FROM unioned
 GROUP BY 1
 """,
-    tags=("source", "schema"),
+    # batch, not read: two parquet writes per call, ingest-shaped like s5
+    tags=("source", "schema", "batch"),
 )
 def s9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on the read path — the operational reality of
@@ -624,7 +625,7 @@ SELECT event_id,
             THEN json_extract_string(line, '$.type') END AS type_parsed
 FROM cor
 """,
-    tags=("source", "json"),
+    tags=("source", "json", "read"),
 )
 def s11_corrupt_tolerant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PERMISSIVE-mode JSON ingestion — the semantics a 100 TB feed
@@ -688,7 +689,8 @@ FROM orders
 WHERE o_totalprice > 150000.0
 GROUP BY 1
 """,
-    tags=("source", "sink"),
+    # batch, not read: writes its ORC copy on every call, sink-shaped like s5/s8
+    tags=("source", "sink", "batch"),
 )
 def s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + source with predicate pushdown — the OTHER columnar

@@ -410,7 +410,11 @@ FROM joined
 """
 
 
-@register("d10_performance_trends", oracle=_d10_oracle(), tags=("enrichment", "composite"))
+@register(
+    "d10_performance_trends",
+    oracle=_d10_oracle(),
+    tags=("enrichment", "composite", "read"),
+)
 def d10_performance_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 performance-trends build over a lineitem-derived splits
     frame: GPS-fragment-robust pace-consistency CV (representative-lap

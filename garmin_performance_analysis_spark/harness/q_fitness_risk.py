@@ -488,7 +488,7 @@ SELECT user_id, dn, n_material, acute_n, chronic_n,
          AS event_rate_ratio
 FROM r
 """,
-    tags=("timeseries", "silver"),
+    tags=("timeseries", "silver", "read"),
 )
 def t8_material_event_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T8 material-event sweep as a persisted-silver-style query: daily

@@ -62,7 +62,7 @@ SELECT user_id, session_seq,
 FROM s3
 GROUP BY user_id, session_seq
 """,
-    tags=("window", "funnel"),
+    tags=("window", "funnel", "read"),
 )
 def t12_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized ordered funnel view → click → purchase: stage k
@@ -131,7 +131,7 @@ SELECT a.cohort_period, a.period_offset, a.active_users, s.cohort_size,
          AS retention_rate
 FROM active a JOIN sizes s ON a.cohort_period = s.cohort_period
 """,
-    tags=("agg", "cohort"),
+    tags=("agg", "cohort", "read"),
 )
 def a17_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention triangle: cohort = the week of each user's

@@ -51,7 +51,7 @@ FROM pr3 CROSS JOIN nn
 """
 
 
-@register("g1_pagerank", oracle=_g1_oracle(), tags=("graph",))
+@register("g1_pagerank", oracle=_g1_oracle(), tags=("graph", "batch"))
 def g1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank (3 unrolled power iterations, damping
     0.85) over the event-derived interaction graph — edge per event
@@ -135,7 +135,7 @@ reach AS (
 SELECT node, CAST(MIN(label) AS BIGINT) AS cluster_id
 FROM reach GROUP BY node
 """,
-    tags=("graph",),
+    tags=("graph", "batch"),
 )
 def g2_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components as a FIRST-CLASS graph entry (the same
@@ -187,7 +187,7 @@ nodes AS (SELECT u AS node FROM und UNION SELECT v FROM und)
 SELECT n.node, CAST(COALESCE(c.n, 0) AS BIGINT) AS n_triangles
 FROM nodes n LEFT JOIN cnt c ON n.node = c.node
 """,
-    tags=("graph",),
+    tags=("graph", "batch"),
 )
 def g4_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle participation over the g2 generator graph —
@@ -227,7 +227,7 @@ walk AS (
 )
 SELECT node, CAST(MIN(d) AS INT) AS hops FROM walk GROUP BY node
 """,
-    tags=("graph",),
+    tags=("graph", "batch"),
 )
 def g3_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS hop distance, bounded at 4 hops
@@ -300,7 +300,7 @@ GROUP BY node
 """
 
 
-@register("g5_kcore", oracle=_g5_oracle(), tags=("graph",))
+@register("g5_kcore", oracle=_g5_oracle(), tags=("graph", "batch"))
 def g5_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core of the dense generator graph via bounded-round peeling
     (``operators/graph.kcore_peel``): drop degree<3 nodes and their
@@ -368,7 +368,7 @@ SELECT node, CAST(label AS BIGINT) AS label FROM l{_G6_ROUNDS}
 """
 
 
-@register("g6_label_propagation", oracle=_g6_oracle(), tags=("graph",))
+@register("g6_label_propagation", oracle=_g6_oracle(), tags=("graph", "batch"))
 def g6_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection via synchronous label propagation
     (``operators/graph.label_propagation``; Raghavan et al. 2007, the
@@ -429,7 +429,7 @@ WHERE r.rk <= 10
 """
 
 
-@register("g7_degree_powerlaw", oracle=_G7_ORACLE, tags=("graph", "profiler"))
+@register("g7_degree_powerlaw", oracle=_G7_ORACLE, tags=("graph", "profiler", "read"))
 def g7_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-distribution health report + power-law exponent MLE over
     the g1 interaction graph's out-degrees (one edge per event, so a
@@ -531,7 +531,7 @@ FROM a3 JOIN h3 ON a3.node = h3.node CROSS JOIN nn
 """
 
 
-@register("g8_hits", oracle=_g8_oracle(), tags=("graph",))
+@register("g8_hits", oracle=_g8_oracle(), tags=("graph", "batch"))
 def g8_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration HITS hub/authority scores (Kleinberg 1999;
     3 unrolled iterations, L1 normalization after every half-step)

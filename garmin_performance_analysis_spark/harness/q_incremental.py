@@ -53,7 +53,7 @@ UNION ALL
 SELECT md5('{_SENTINEL_TEXT}') AS dedup_key,
        CAST({_SENTINEL_IDS[0]} AS BIGINT) AS keep_id
 """,
-    tags=("dedup", "incremental"),
+    tags=("dedup", "incremental", "batch"),
 )
 def i1_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-ingest replay of the exact-dedup registry
@@ -160,7 +160,7 @@ WHERE ({matches}) / 16.0 >= 0.5
 @register(
     "i2_incremental_lsh_replay",
     oracle=_incremental_lsh_oracle(),
-    tags=("dedup", "incremental"),
+    tags=("dedup", "incremental", "batch"),
 )
 def i2_incremental_lsh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-ingest replay of the LSH near-dup registry
@@ -259,7 +259,7 @@ FROM agg, wm WHERE ws_us + {_I3_WIN_US} <= wm2
 @register(
     "i3_stream_window_replay",
     oracle=_i3_oracle(),
-    tags=("streaming", "agg"),
+    tags=("streaming", "agg", "batch"),
 )
 def i3_stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of the STREAMING windowed aggregation
@@ -346,7 +346,8 @@ FROM lall l JOIN rall r
 @register(
     "i4_stream_join_replay",
     oracle=_i4_oracle(),
-    tags=("streaming", "join"),
+    # batch, not read: a replay over 4 state stores x partitions x runs
+    tags=("streaming", "join", "batch"),
 )
 def i4_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of a STREAM-STREAM inner join
@@ -439,7 +440,7 @@ WHERE user_id NOT IN (SELECT user_id FROM live)
 @register(
     "i5_stream_dedup_replay",
     oracle=_i5_oracle(),
-    tags=("streaming", "dedup"),
+    tags=("streaming", "dedup", "batch"),
 )
 def i5_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of the STREAMING watermarked dedup
@@ -574,7 +575,7 @@ FROM unioned
 @register(
     "i6_stream_session_replay",
     oracle=_i6_oracle(),
-    tags=("streaming", "window"),
+    tags=("streaming", "window", "batch"),
 )
 def i6_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of the STREAMING session-window aggregation
@@ -628,7 +629,7 @@ SELECT user_id, value, ts AS version_ts,
        CAST(event_id AS BIGINT) AS version_event
 FROM ranked WHERE rn = 1 AND op = 'upsert'
 """,
-    tags=("incremental", "cdc"),
+    tags=("incremental", "cdc", "batch"),
 )
 def i7_cdc_versioned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch replay of the VERSIONED CDC merge
@@ -739,7 +740,7 @@ SELECT CAST(user_id AS BIGINT) AS user_id, island_start, island_end,
 FROM ranked
 WHERE rn > 1 AND island_end - island_start + 1 >= {_I8_MIN_SPAN}
 """,
-    tags=("incremental", "streaming", "stateful"),
+    tags=("incremental", "streaming", "stateful", "batch"),
 )
 def i8_stream_runs_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-batch replay of the CUSTOM ``applyInPandasWithState``
@@ -855,7 +856,7 @@ WHERE l.us + {gap} < wm2.w2
 @register(
     "i9_stream_outer_join_replay",
     oracle=_i9_oracle(),
-    tags=("streaming", "join"),
+    tags=("streaming", "join", "batch"),
 )
 def i9_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of a STREAM-STREAM **LEFT OUTER** join — i4's
@@ -963,7 +964,7 @@ FROM agg, wm WHERE ws_us + {_I3_WIN_US} <= wm2
 @register(
     "i10_stream_static_enrich_replay",
     oracle=_i10_oracle(),
-    tags=("streaming", "join"),
+    tags=("streaming", "join", "batch"),
 )
 def i10_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-run replay of the STREAM-STATIC enrichment join

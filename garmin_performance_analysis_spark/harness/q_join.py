@@ -37,7 +37,7 @@ j AS (
 SELECT event_id, user_id, value, signup_event_id, signup_value, gap_days
 FROM j WHERE rn = 1
 """,
-    tags=("join", "asof"),
+    tags=("join", "asof", "read"),
 )
 def j7_nearest_date_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J7 nearest-date as-of join (±2-day band, tie → past side): each
@@ -80,7 +80,7 @@ FROM (SELECT * FROM events WHERE event_type = 'purchase') l
 ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') r
   ON l.user_id = r.user_id AND r.ts <= l.ts
 """,
-    tags=("join", "asof"),
+    tags=("join", "asof", "read"),
 )
 def j9_backward_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J9 backward as-of (fallback temporal lookup): for each purchase,
@@ -252,7 +252,7 @@ WHERE CASE WHEN o.user_id IS NULL THEN 'added'
            WHEN o.value IS DISTINCT FROM n.value THEN 'changed'
       END IS NOT NULL
 """,
-    tags=("join", "cdc"),
+    tags=("join", "cdc", "read"),
 )
 def j11_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot diff — the inverse of j10's CDC apply: two keyed
@@ -321,7 +321,7 @@ FROM sessions s JOIN top
   ON s.start_sec <= r_end_sec AND r_start_sec <= s.end_sec
  AND s.user_id <> r_user_id
 """,
-    tags=("join", "range"),
+    tags=("join", "range", "read"),
 )
 def j12_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap join via bucketing: every user session (t9's
@@ -396,7 +396,7 @@ SELECT o.o_orderpriority,
 FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 GROUP BY o.o_orderpriority
 """,
-    tags=("join", "bucketed"),
+    tags=("join", "bucketed", "read"),
 )
 def j15_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈fact equi-join with ZERO exchanges on either side: orders
@@ -489,7 +489,7 @@ FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
 WHERE o.o_orderpriority = '1-URGENT' AND o.o_orderkey % 7 = 0
 GROUP BY 1
 """,
-    tags=("join", "sketch"),
+    tags=("join", "sketch", "read"),
 )
 def j16_bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-pruned selective join — sideways information passing, the

@@ -58,7 +58,7 @@ SELECT CAST(zval >> 8 AS BIGINT) AS zbucket,
 FROM z
 GROUP BY 1
 """,
-    tags=("layout", "zorder"),
+    tags=("layout", "zorder", "read"),
 )
 def z1_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering index: interleave the bits of two dimensions
@@ -105,7 +105,7 @@ FROM events
 WHERE CAST(ts AS DATE) BETWEEN DATE '2024-01-10' AND DATE '2024-01-16'
 GROUP BY 1, 2
 """,
-    tags=("source", "layout"),
+    tags=("source", "layout", "read"),
 )
 def s10_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned write + partition-PRUNED read — the single

@@ -111,7 +111,7 @@ JOIN embeddings x ON c.id_a = x.vec_id
 JOIN embeddings y ON c.id_b = y.vec_id
 WHERE {_cos_expr('x.embedding', 'y.embedding')} >= 0.4
 """,
-    tags=("similarity", "dedup"),
+    tags=("similarity", "dedup", "batch"),
 )
 def v4_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed-random-projection LSH near-neighbor pairs (4 tables × 4
@@ -170,7 +170,7 @@ JOIN embeddings x ON c.id_a = x.vec_id
 JOIN embeddings y ON c.id_b = y.vec_id
 WHERE {_cos_expr('x.embedding', 'y.embedding')} >= 0.4
 """,
-    tags=("similarity", "dedup"),
+    tags=("similarity", "dedup", "batch"),
 )
 def v4b_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe SRP-LSH pairs (4 tables × 8 bits, Hamming-≤1 probe)
@@ -248,7 +248,7 @@ SELECT vec_id, cluster_id,
 FROM labeled
 ORDER BY vec_id
 """,
-    tags=("similarity", "dedup"),
+    tags=("similarity", "dedup", "batch"),
 )
 def v9_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup verdict for EVERY embedding:
@@ -283,7 +283,7 @@ SELECT probe_id, CAST(rank AS INTEGER) AS rank, vec_id,
        1 AS probe_recall_ok, 1 AS mean_recall_ok
 FROM ranked WHERE rank <= 10
 """,
-    tags=("similarity", "ann"),
+    tags=("similarity", "ann", "batch"),
 )
 def v10_ivf_recall_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe exact top-10 WITH an in-band IVF recall verdict —
@@ -388,7 +388,7 @@ SELECT probe_id, CAST(rank AS INTEGER) AS rank, vec_id,
        1 AS probe_recall_ok, 1 AS mean_recall_ok
 FROM ranked WHERE rank <= 10
 """,
-    tags=("similarity", "ann"),
+    tags=("similarity", "ann", "read"),
 )
 def v10b_ivf_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """v10's DEPLOYABLE split (the v8→v8b precedent): the IVF index —
@@ -506,7 +506,7 @@ s1 AS (
 """
 
 
-@register("o7_mmr_rerank", oracle=_o7_oracle(), tags=("similarity", "ranking"))
+@register("o7_mmr_rerank", oracle=_o7_oracle(), tags=("similarity", "ranking", "read"))
 def o7_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance diversity re-rank (Carbonell &
     Goldstein 1998, public technique): from the exact top-20 cosine

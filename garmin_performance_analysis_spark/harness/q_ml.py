@@ -42,7 +42,7 @@ SELECT event_type, n,
        ROUND((cxy / SQRT(vx * vy)) * SQRT((n - 2) / (1 - (cxy * cxy) / (vx * vy))), 6) AS t_stat
 FROM m WHERE n >= 3 AND vx > 0 AND vy > 0
 """,
-    tags=("ml", "regression"),
+    tags=("ml", "regression", "read"),
 )
 def m1_linregress_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M1 per-group OLS trend (slope/intercept/r²/t) in closed form —
@@ -128,7 +128,7 @@ SELECT l_orderkey, l_linenumber,
              6) AS vdot
 FROM r
 """,
-    tags=("ml", "scalar"),
+    tags=("ml", "scalar", "read"),
 )
 def m7_vdot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M7 Daniels VDOT from (distance, duration): oxygen-cost quadratic
@@ -173,7 +173,7 @@ ranked AS (
 SELECT l_orderkey, l_linenumber AS best_end_line, win_sum AS best_sum
 FROM ranked WHERE rn = 1
 """,
-    tags=("ml", "window"),
+    tags=("ml", "window", "read"),
 )
 def m8_best_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8 best contiguous effort segment: maximal 3-row sliding-window
@@ -293,7 +293,7 @@ SELECT nd.user_id, CAST(nd.n_points AS BIGINT) AS n_points,
 FROM nd JOIN sm ON nd.user_id = sm.user_id
 JOIN ic ON nd.user_id = ic.user_id
 """,
-    tags=("ml", "robust"),
+    tags=("ml", "robust", "batch"),
 )
 def m16_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend per user over the daily-mean series

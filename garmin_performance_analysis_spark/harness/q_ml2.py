@@ -480,7 +480,7 @@ SELECT w.user_id, w.work_count, r.recovery_count,
 FROM wsum w JOIN rsum r ON r.user_id = w.user_id
 LEFT JOIN psum p ON p.user_id = w.user_id
 """,
-    tags=("timeseries",),
+    tags=("timeseries", "read"),
 )
 def t6_work_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 work/recovery comparison + HR recovery rate (bpm/min): i-th

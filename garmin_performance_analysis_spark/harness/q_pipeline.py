@@ -69,7 +69,7 @@ SELECT doc_a, doc_b, shared, x.n AS size_a, y.n AS size_b,
 FROM shared JOIN sizes x ON doc_a = x.doc_id JOIN sizes y ON doc_b = y.doc_id
 WHERE shared * 1.0 / (x.n + y.n - shared) >= 0.5
 """,
-    tags=("dedup",),
+    tags=("dedup", "batch"),
 )
 def d2_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-duplicate pairs (J >= 0.5): shingle
@@ -133,7 +133,7 @@ WHERE ({matches}) / 16.0 >= 0.5
 """
 
 
-@register("d3_minhash_lsh_pairs", oracle=_minhash_oracle(), tags=("dedup",))
+@register("d3_minhash_lsh_pairs", oracle=_minhash_oracle(), tags=("dedup", "batch"))
 def d3_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16)+LSH(4×4) near-duplicate pairs with estimated Jaccard
     >= 0.5.  The banded bucket join is the 100 TB path: candidates only
@@ -194,7 +194,7 @@ SELECT doc_id,
              / len(string_split(lower(text), ' ')), 6) AS distinct_word_ratio
 FROM documents
 """,
-    tags=("text",),
+    tags=("text", "read"),
 )
 def x1_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality scoring (C4/Gopher-style signals) as one
@@ -300,7 +300,7 @@ WHERE e.vec_id <> 0
 ORDER BY {_cos_expr('e.embedding', 'q.qe')} DESC, e.vec_id ASC
 LIMIT 10
 """,
-    tags=("similarity",),
+    tags=("similarity", "read"),
 )
 def v1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 vs a query vector (vec_id=0): the exact
@@ -385,7 +385,7 @@ FROM ranked WHERE rank <= 10
         cos=_cos_expr("e.embedding", "q.qe"),
         verdicts="1 AS shortlist_recall_ok",
     ),
-    tags=("similarity", "ann"),
+    tags=("similarity", "ann", "batch"),
 )
 def v8_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (PQ-ADC + exact re-rank) WITH an
@@ -442,7 +442,7 @@ _PQ_CODES_MEMO: dict = {}
         cos=_cos_expr("e.embedding", "q.qe"),
         verdicts="1 AS shortlist_recall_ok",
     ),
-    tags=("similarity", "ann"),
+    tags=("similarity", "ann", "read"),
 )
 def v8b_pq_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DEPLOYABLE PQ split: codebooks are trained once per
@@ -695,7 +695,7 @@ SELECT doc_id,
             WHEN doc_id % 4 = 1 THEN CAST(ppm_v AS DOUBLE) END AS channel_mean_b
 FROM dims
 """,
-    tags=("multimodal",),
+    tags=("multimodal", "batch"),
 )
 def mm3_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL image decode through the multimodal mapInPandas
@@ -912,7 +912,7 @@ SELECT doc_id,
        END AS n_bytes
 FROM params
 """,
-    tags=("multimodal",),
+    tags=("multimodal", "batch"),
 )
 def mm4_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end REAL audio decode through the multimodal mapInPandas
@@ -1031,7 +1031,7 @@ SELECT doc_id,
          AS frame_sha
 FROM f
 """,
-    tags=("multimodal",),
+    tags=("multimodal", "batch"),
 )
 def mm5_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing end-to-end: construct a fixed-
@@ -1082,7 +1082,7 @@ SELECT doc_id,
                    THEN 1 ELSE 0 END AS BIGINT) AS shard_id
 FROM s
 """,
-    tags=("curation",),
+    tags=("curation", "batch"),
 )
 def c8_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic WebDataset shard assignment (16 KiB budget):
@@ -1120,7 +1120,7 @@ SELECT lpad(CAST(doc_id AS VARCHAR), 12, '0') AS key,
                    THEN 1 ELSE 0 END AS BIGINT) AS shard_id
 FROM s
 """,
-    tags=("curation", "multimodal"),
+    tags=("curation", "multimodal", "batch"),
 )
 def c9_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full sink→source roundtrip through REAL WebDataset tar shards:
@@ -1236,7 +1236,7 @@ SELECT doc_a, doc_b, hamming FROM (
   FROM cand)
 WHERE hamming <= 3
 """,
-    tags=("dedup",),
+    tags=("dedup", "batch"),
 )
 def d4b_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-duplicate pairs via the FULL rotate-and-block
@@ -1357,7 +1357,7 @@ FROM cum WHERE cum_tokens <= 10000
 """
 
 
-@register("c1_training_prep", oracle=_c1_oracle(), tags=("text", "dedup"))
+@register("c1_training_prep", oracle=_c1_oracle(), tags=("text", "dedup", "batch"))
 def c1_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-shard preparation: quality gate → language
     gate → exact dedup → fingerprint dedup → greedy token budget, as
@@ -1391,7 +1391,7 @@ SELECT query_id, corpus_id, ROUND(cosine, 6) AS cosine,
        CAST(rank AS BIGINT) AS rank
 FROM ranked WHERE rank <= 10
 """,
-    tags=("similarity",),
+    tags=("similarity", "read"),
 )
 def v5_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 retrieval for a BATCH of query vectors (the 10
@@ -1418,7 +1418,7 @@ SELECT doc_id,
              '{text.URL_RE}', '<URL>', 'g')) AS redacted_md5
 FROM documents
 """,
-    tags=("text",),
+    tags=("text", "batch"),
 )
 def x5_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Email/URL scrub pass: match counts + digest of the redacted
@@ -1448,7 +1448,7 @@ SELECT doc_a, doc_b, shared, x.n AS size_a, y.n AS size_b,
 FROM shared JOIN sizes x ON doc_a = x.doc_id JOIN sizes y ON doc_b = y.doc_id
 WHERE shared * 1.0 / LEAST(x.n, y.n) >= 0.6
 """,
-    tags=("dedup", "skew"),
+    tags=("dedup", "skew", "batch"),
 )
 def d8_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document duplication pairs by n-gram CONTAINMENT
@@ -1520,7 +1520,7 @@ SELECT doc_a, doc_b, CAST(hamming AS BIGINT) AS hamming FROM (
   FROM cand)
 WHERE hamming <= 3
 """,
-    tags=("multimodal", "dedup"),
+    tags=("multimodal", "dedup", "batch"),
 )
 def mm6_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image near-duplicate pairs: REAL BMP payloads are
@@ -1649,7 +1649,7 @@ FROM bucketed
 @register(
     "c18_cluster_safe_split",
     oracle=_c18_oracle(),
-    tags=("prep", "curation", "dedup"),
+    tags=("prep", "curation", "dedup", "batch"),
 )
 def c18_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/val/test split keyed on the NEAR-DUP CLUSTER id — the
@@ -1752,7 +1752,7 @@ WHERE hamming <= 3
 @register(
     "mm7_audio_energyhash_neardup",
     oracle=_mm7_oracle(),
-    tags=("multimodal", "dedup"),
+    tags=("multimodal", "dedup", "batch"),
 )
 def mm7_audio_energyhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-duplicate pairs via energy-envelope fingerprinting —
@@ -1772,27 +1772,18 @@ def mm7_audio_energyhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset, forgets the 8-bit unsigned→signed shift, or breaks the
     exact threshold hash-mismatches.
 
-    ``SPARK_GRAFT_MM7_SLICES`` (default 64, the t16 pack-knob
-    convention) sets the envelope resolution, and
-    ``SPARK_GRAFT_MM7_MAX_HAMMING`` the match budget (default scales
-    proportionally, 3 per 64 bits).  NON-default values change the
-    RESULT by design — a coarse 64-bit envelope saturates when the
-    corpus has more distinct tracks than its effective envelope
-    states (output then grows superlinearly with corpus size) — so
-    the oracle holds at the defaults only and scale experiments set
-    the env vars (``scripts/mm7_resolution_knob.py``).  Measured on
-    the 10x corpus: 128 slices at an ABSOLUTE budget of 4 holds the
-    default's family recall (0.9746 vs 0.9745) while halving the
-    false-match mass (316,984 → 148,387 collision pairs; output
+    The envelope resolution is 64 slices and the match budget 3 bits;
+    other values change the RESULT by design — a coarse 64-bit
+    envelope saturates when the corpus has more distinct tracks than
+    its effective envelope states (output then grows superlinearly
+    with corpus size) — so the oracle holds at these values only.
+    Measured on the 10x corpus: 128 slices at an ABSOLUTE budget of 4
+    holds the default's family recall (0.9746 vs 0.9745) while halving
+    the false-match mass (316,984 → 148,387 collision pairs; output
     growth 44x → 29x) — widening bits while scaling the budget
     proportionally (h=6) improves recall but not saturation, because
     the RELATIVE threshold is what the collision mass tracks."""
-    import os as _os
-
-    n_slices = int(_os.environ.get("SPARK_GRAFT_MM7_SLICES", "64"))
-    max_ham = int(
-        _os.environ.get("SPARK_GRAFT_MM7_MAX_HAMMING", str(3 * n_slices // 64))
-    )
+    n_slices, max_ham = 64, 3
     docs = load_table(spark, sf_dir, "documents")
     fam = F.floor(F.col("doc_id") / 4)
     d = docs.select(
@@ -1912,7 +1903,7 @@ FROM m
 @register(
     "x23_langid_eval",
     oracle=_x23_oracle(),
-    tags=("text", "eval"),
+    tags=("text", "eval", "batch"),
 )
 def x23_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classification-quality evaluation of the x2 language-ID model
@@ -2073,7 +2064,7 @@ def _x24_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "x24_calibration_ece",
     oracle=_x24_oracle(),
-    tags=("text", "eval"),
+    tags=("text", "eval", "batch"),
 )
 def x24_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confidence-calibration evaluation of the x2 language-ID model —
@@ -2152,7 +2143,7 @@ FROM u
 @register(
     "x25_auc_discrimination",
     oracle=_x25_oracle(),
-    tags=("text", "eval"),
+    tags=("text", "eval", "batch"),
 )
 def x25_auc_discrimination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC of a detector score against ground-truth labels — the
@@ -2247,7 +2238,7 @@ FROM r, e
 @register(
     "m17_isotonic_calibration",
     oracle=_m17_oracle(),
-    tags=("ml", "eval"),
+    tags=("ml", "eval", "batch"),
 )
 def m17_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration map over the x24 reliability bins —
@@ -2396,7 +2387,7 @@ FROM r
 @register(
     "c19_split_leakage_audit",
     oracle=_c19_oracle(),
-    tags=("prep", "curation", "eval"),
+    tags=("prep", "curation", "eval", "batch"),
 )
 def c19_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-leakage audit: of the d3 MinHash-LSH near-duplicate
@@ -2527,7 +2518,7 @@ FROM raw, eff
 @register(
     "c20_effective_tokens",
     oracle=_c20_oracle(),
-    tags=("curation", "dedup"),
+    tags=("curation", "dedup", "batch"),
 )
 def c20_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Effective-dataset-size report: raw vs near-dup-DEDUPED corpus
@@ -2642,7 +2633,7 @@ FROM ordered o, lam, budget b
 @register(
     "c21_mixture_waterfill",
     oracle=_c21_oracle(),
-    tags=("curation", "mixtures"),
+    tags=("curation", "mixtures", "batch"),
 )
 def c21_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Capped water-filling mixture allocator — the step between
@@ -2794,7 +2785,7 @@ FROM tot
 @register(
     "x33_judge_agreement_kappa",
     oracle=_x33_oracle(),
-    tags=("text", "eval"),
+    tags=("text", "eval", "batch"),
 )
 def x33_judge_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between the x2 language-ID judge and the ground-
@@ -2941,7 +2932,7 @@ FROM pairs GROUP BY nm
 @register(
     "d11_minhash_calibration",
     oracle=_d11_oracle(),
-    tags=("dedup", "eval"),
+    tags=("dedup", "eval", "batch"),
 )
 def d11_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator calibration audit: for EVERY LSH candidate
@@ -3060,7 +3051,7 @@ FROM c JOIN n ON n.doc_id = c.doc_id
 @register(
     "mm8_scene_cuts",
     oracle=_MM8_ORACLE,
-    tags=("multimodal",),
+    tags=("multimodal", "batch"),
 )
 def mm8_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video scene-cut detection end-to-end on the mm5 plumbing: a
@@ -3191,7 +3182,7 @@ FROM flags
 @register(
     "x34_gopher_quality_rules",
     oracle=_x34_oracle(),
-    tags=("text", "quality"),
+    tags=("text", "quality", "read"),
 )
 def x34_gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher quality-rule VERDICT layer (Rae et al. 2021 §A1.1,

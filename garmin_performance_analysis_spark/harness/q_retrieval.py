@@ -45,7 +45,7 @@ ranked AS (
 )
 SELECT doc_id, term, tf, df, tfidf, rk FROM ranked WHERE rk <= 5
 """,
-    tags=("retrieval", "text"),
+    tags=("retrieval", "text", "read"),
 )
 def x6_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 characteristic terms per document by smoothed TF-IDF —
@@ -101,7 +101,7 @@ def _bm25_oracle() -> str:
     )
 
 
-@register("x7_bm25_search", oracle=_bm25_oracle(), tags=("retrieval", "text"))
+@register("x7_bm25_search", oracle=_bm25_oracle(), tags=("retrieval", "text", "read"))
 def x7_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents for a 3-term bag-of-words query under Okapi
     BM25.  The IN-list filter lands inside the row before the explode,
@@ -138,7 +138,7 @@ SELECT d.doc_id, d.n_shingles,
        COALESCE(h.n_hits, 0) * 1.0 / d.n_shingles >= 0.1 AS contaminated
 FROM per_doc d LEFT JOIN hits h ON d.doc_id = h.doc_id
 """,
-    tags=("dedup", "decontamination"),
+    tags=("dedup", "decontamination", "batch"),
 )
 def d6_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination audit: distinct 5-gram overlap of each
@@ -207,7 +207,7 @@ LEFT JOIN bloom b ON d.doc_id = b.doc_id
 @register(
     "d9_bloom_decontaminate",
     oracle=_d9_oracle(),
-    tags=("dedup", "decontamination", "sketch"),
+    tags=("dedup", "decontamination", "sketch", "batch"),
 )
 def d9_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination through a RELATIONAL Bloom filter
@@ -254,7 +254,9 @@ FROM bucketed WHERE keep_bucket < CAST(round(rate * 1000000) AS BIGINT)
 """
 
 
-@register("c2_stratified_sample", oracle=_c2_oracle(), tags=("prep", "sampling"))
+@register(
+    "c2_stratified_sample", oracle=_c2_oracle(), tags=("prep", "sampling", "batch")
+)
 def c2_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified training-mix sample: keep 50% of en,
     25% of de/fr, 10% otherwise, keyed on md5(doc_id) so the sample is
@@ -295,7 +297,7 @@ SELECT b.doc_id, b.n_words, b.dup_2gram_frac, b.dup_3gram_frac,
        ROUND(t.top_tf * 1.0 / b.n_words, 6) AS top_term_frac
 FROM base b JOIN top t ON b.doc_id = t.doc_id
 """,
-    tags=("text", "quality"),
+    tags=("text", "quality", "batch"),
 )
 def x8_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style intra-document repetition filters: duplicate
@@ -357,7 +359,7 @@ SELECT * FROM ranked WHERE rk <= 10
 """
 
 
-@register("v6_sq_topk", oracle=_v6_oracle(), tags=("similarity",))
+@register("v6_sq_topk", oracle=_v6_oracle(), tags=("similarity", "read"))
 def v6_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8 scalar-quantized cosine top-10 with exact re-rank of a
     50-deep shortlist — the memory-bandwidth ANN path (4× less scan
@@ -392,7 +394,7 @@ SELECT CAST(length(bin(tf)) - 1 AS BIGINT) AS freq_bucket,
 FROM ctf
 GROUP BY 1
 """,
-    tags=("text", "profiling"),
+    tags=("text", "profiling", "batch"),
 )
 def x9_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary profile: log2-bucketed term-frequency histogram
@@ -519,7 +521,9 @@ FROM sampled
 """
 
 
-@register("c3_curation_record", oracle=_c3_oracle(), tags=("prep", "dedup", "text"))
+@register(
+    "c3_curation_record", oracle=_c3_oracle(), tags=("prep", "dedup", "text", "batch")
+)
 def c3_curation_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document curation record: quality gates, language,
     dedup canonical ids, contamination vs the probe set (doc_id % 23),
@@ -573,7 +577,11 @@ SELECT * FROM ranked WHERE rk <= 20
 """
 
 
-@register("v7_embedding_outliers", oracle=_v7_oracle(), tags=("similarity", "quality"))
+@register(
+    "v7_embedding_outliers",
+    oracle=_v7_oracle(),
+    tags=("similarity", "quality", "batch"),
+)
 def v7_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space outlier report: top-20 vectors by |z| of their
     distance to the corpus mean — the cheap junk-document signal.
@@ -614,7 +622,7 @@ rows AS (
 SELECT check_name, CAST(violations AS BIGINT) AS violations, total,
        violations = 0 AS passed FROM rows
 """,
-    tags=("audit", "quality"),
+    tags=("audit", "quality", "batch"),
 )
 def c5_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass data-quality audit of the documents table: five
@@ -653,7 +661,7 @@ SELECT lang, source, n_docs, tokens,
        ROUND(tokens * 1.0 / total_tokens, 6) AS token_share
 FROM per, tot
 """,
-    tags=("prep", "profiling"),
+    tags=("prep", "profiling", "batch"),
 )
 def c6_mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-mix accounting: documents and (regex-proxy) tokens per
@@ -693,7 +701,7 @@ SELECT doc_id,
 FROM tf JOIN vocab USING (term) CROSS JOIN tot
 GROUP BY doc_id
 """,
-    tags=("text", "quality"),
+    tags=("text", "quality", "batch"),
 )
 def x10_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perplexity-style quality score: per-document mean token
@@ -722,7 +730,7 @@ SELECT doc_id,
 FROM segs JOIN counts USING (seg)
 GROUP BY doc_id
 """,
-    tags=("text", "dedup"),
+    tags=("text", "dedup", "batch"),
 )
 def x11_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Line-level dedup signal (CCNet-style): fraction of each
@@ -766,7 +774,7 @@ SELECT doc_id, n_tokens,
 FROM cum
 ORDER BY doc_id
 """,
-    tags=("prep", "text"),
+    tags=("prep", "text", "batch"),
 )
 def c7_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing over the corpus token stream
@@ -856,7 +864,7 @@ FROM ({finals}) ORDER BY rank
 """
 
 
-@register("x12_bpe_merges", oracle=_x12_oracle(), tags=("text",))
+@register("x12_bpe_merges", oracle=_x12_oracle(), tags=("text", "batch"))
 def x12_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE vocabulary training: 20 merges learned from the
     corpus (one scan -> top-2000 word-frequency table; per-merge
@@ -873,7 +881,7 @@ def x12_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe.bpe_train(docs, "text", n_merges=20, top_v=2000)
 
 
-@register("x13_bpe_token_counts", oracle=_x13_oracle(), tags=("text", "prep"))
+@register("x13_bpe_token_counts", oracle=_x13_oracle(), tags=("text", "prep", "batch"))
 def x13_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget accounting under a FROZEN BPE tokenizer
     (``bpe.EN_MERGES``): per doc the regex proxy count and the real
@@ -916,7 +924,9 @@ FROM bucketed
 """
 
 
-@register("c10_leakage_safe_split", oracle=_c10_oracle(), tags=("prep", "curation"))
+@register(
+    "c10_leakage_safe_split", oracle=_c10_oracle(), tags=("prep", "curation", "batch")
+)
 def c10_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split: the 90/5/5 bucket is keyed on
     the order-insensitive content fingerprint, so exact and
@@ -953,7 +963,7 @@ SELECT doc_id,
        array_to_string(w[(i * 48 + 1):(i * 48 + 64)], ' ') AS chunk_text
 FROM c
 """,
-    tags=("prep", "curation"),
+    tags=("prep", "curation", "batch"),
 )
 def c11_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping per-document chunking (64-token windows every 48
@@ -993,7 +1003,7 @@ SELECT doc_id,
 FROM ranked
 GROUP BY doc_id
 """,
-    tags=("dedup", "text"),
+    tags=("dedup", "text", "batch"),
 )
 def d7_segment_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style corpus REWRITE: every segment that repeats anywhere in
@@ -1039,7 +1049,7 @@ UNION ALL
 SELECT doc_id, CAST(0 AS BIGINT) AS n_bigrams, CAST(NULL AS DOUBLE) AS avg_logprob
 FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM scored)
 """,
-    tags=("text", "quality"),
+    tags=("text", "quality", "batch"),
 )
 def x14_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-bigram LM quality score (add-0.5 smoothing): mean
@@ -1073,7 +1083,7 @@ SELECT doc_id, ROUND(score, 6) AS quality_score, n_tokens, cum_tokens
 FROM cum
 WHERE cum_tokens <= 20000
 """,
-    tags=("prep", "curation"),
+    tags=("prep", "curation", "batch"),
 )
 def c12_quality_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-ranked token-budget selection: spend a 20k-token budget
@@ -1097,7 +1107,7 @@ FROM cnt
 ORDER BY cnt DESC, term
 LIMIT 20
 """,
-    tags=("text", "sketch"),
+    tags=("text", "sketch", "batch"),
 )
 def x15_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-20 corpus terms via the two-pass Misra-Gries sketch +
@@ -1130,7 +1140,7 @@ SELECT doc_id, source, CAST(sample_rank AS BIGINT) AS sample_rank
 FROM ranked
 WHERE sample_rank <= 25
 """,
-    tags=("prep", "sampling"),
+    tags=("prep", "sampling", "batch"),
 )
 def c13_per_group_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 25-per-source uniform sample (md5-permutation
@@ -1157,7 +1167,7 @@ SELECT source, doc_id, n_chars, cum_score
 FROM scored
 WHERE (cum_score - n_chars) * 1000000 < 500000 * total
 """,
-    tags=("prep", "curation"),
+    tags=("prep", "curation", "read"),
 )
 def c14_top_p_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nucleus (top-p) selection per source: the smallest prefix of
@@ -1216,7 +1226,7 @@ GROUP BY doc_id
 @register(
     "x16_dsir_importance",
     oracle=_x16_oracle(),
-    tags=("text", "selection"),
+    tags=("text", "selection", "batch"),
 )
 def x16_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights: mean per-token log-likelihood ratio of
@@ -1259,7 +1269,7 @@ LIMIT 200
 @register(
     "c15_weighted_sample",
     oracle=_c15_oracle(),
-    tags=("prep", "sampling"),
+    tags=("prep", "sampling", "batch"),
 )
 def c15_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling WITHOUT replacement via the Efraimidis–
@@ -1331,7 +1341,7 @@ FROM top WHERE rank <= 10
 @register(
     "o8_rrf_hybrid",
     oracle=_o8_oracle(),
-    tags=("retrieval", "similarity", "fusion"),
+    tags=("retrieval", "similarity", "fusion", "read"),
 )
 def o8_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HYBRID search via reciprocal-rank fusion — the standard
@@ -1459,7 +1469,7 @@ UNION ALL
 SELECT doc_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(NULL AS DOUBLE)
 FROM held WHERE doc_id NOT IN (SELECT doc_id FROM scored)
 """,
-    tags=("text", "lm"),
+    tags=("text", "lm", "batch"),
 )
 def x17_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stupid-backoff trigram LM scoring of HELD-OUT documents
@@ -1515,7 +1525,7 @@ FROM dcg_t CROSS JOIN idcg_t
 @register(
     "o9_ndcg_eval",
     oracle=_o9_oracle(),
-    tags=("retrieval", "evaluation"),
+    tags=("retrieval", "evaluation", "read"),
 )
 def o9_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-quality evaluation as a first-class pipeline operator:
@@ -1607,7 +1617,7 @@ SELECT lang, source, CAST(n_docs AS BIGINT) AS n_docs,
        ROUND(POWER(n_docs, 0.3) / w_total * n_total / n_docs, 6) AS epochs
 FROM per, tot
 """,
-    tags=("prep", "curation"),
+    tags=("prep", "curation", "read"),
 )
 def c16_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled mixture weights for multi-stratum training
@@ -1680,7 +1690,7 @@ SELECT CAST(n AS BIGINT) AS n_points,
              6) AS k_coeff
 FROM fit
 """,
-    tags=("text", "profiling"),
+    tags=("text", "profiling", "batch"),
 )
 def x18_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps-law vocabulary-growth fit over the corpus in ingest order
@@ -1779,7 +1789,7 @@ SELECT lang, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b, psi,
             ELSE 'shifted' END AS verdict
 FROM agg
 """,
-    tags=("curation", "profiling"),
+    tags=("curation", "profiling", "read"),
 )
 def c17_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between two corpus snapshots, per
@@ -1866,7 +1876,7 @@ SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
          AS low_diversity
 FROM ent
 """,
-    tags=("text", "quality"),
+    tags=("text", "quality", "batch"),
 )
 def x19_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token-distribution Shannon entropy — the
@@ -1949,7 +1959,7 @@ SELECT * FROM ranked WHERE rk <= 10
 """
 
 
-@register("v11_prefix_dim_rerank", oracle=_v11_oracle(), tags=("similarity",))
+@register("v11_prefix_dim_rerank", oracle=_v11_oracle(), tags=("similarity", "read"))
 def v11_prefix_dim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style truncated-dimension top-10: shortlist by cosine
     over the first 16 of 64 dims (a 4× first-pass scan cut — with the
@@ -1997,7 +2007,7 @@ SELECT CAST(n AS BIGINT) AS n_terms,
          AS log_c
 FROM fit
 """,
-    tags=("text", "profiling"),
+    tags=("text", "profiling", "batch"),
 )
 def x21_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf rank-frequency fit over the corpus vocabulary (Zipf 1949:
@@ -2081,7 +2091,7 @@ FROM snip
 @register(
     "o12_kwic_snippets",
     oracle=_o12_oracle(),
-    tags=("retrieval", "serving"),
+    tags=("retrieval", "serving", "read"),
 )
 def o12_kwic_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyword-in-context snippets for the BM25 top-10 — the search
@@ -2187,7 +2197,7 @@ FROM per_q, macro
 @register(
     "o13_mrr_hit_eval",
     oracle=_o13_oracle(),
-    tags=("retrieval", "evaluation"),
+    tags=("retrieval", "evaluation", "batch"),
 )
 def o13_mrr_hit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MRR@10 + hit-rate@10 of the Matryoshka serving path (v11's
@@ -2312,7 +2322,7 @@ JOIN low ON low.r = f.r
 LEFT JOIN fof nx ON nx.r = f.r + 1
 CROSS JOIN tot t
 """,
-    tags=("text", "lm"),
+    tags=("text", "lm", "batch"),
 )
 def x28_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing frequency smoothing over the corpus vocabulary —
@@ -2422,7 +2432,7 @@ WHERE r.rk <= 10
 @register(
     "v12_mips_norm_pruned",
     oracle=_v12_oracle(),
-    tags=("similarity", "retrieval"),
+    tags=("similarity", "retrieval", "read"),
 )
 def v12_mips_norm_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT maximum-inner-product top-10 via Cauchy-Schwarz norm
@@ -2609,7 +2619,7 @@ GROUP BY 1, 2
 @register(
     "x29_distinct_ngram_diversity",
     oracle=_X29_ORACLE,
-    tags=("text", "diversity", "eval"),
+    tags=("text", "diversity", "eval", "batch"),
 )
 def x29_distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generation-diversity audit per source — the corpus-health check
@@ -2778,7 +2788,7 @@ GROUP BY source
 @register(
     "x30_unigram_js_source_drift",
     oracle=_X30_ORACLE,
-    tags=("text", "diversity", "eval"),
+    tags=("text", "diversity", "eval", "batch"),
 )
 def x30_unigram_js_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source unigram DISTRIBUTION drift vs the rest of the corpus
@@ -2887,7 +2897,7 @@ GROUP BY lang
 @register(
     "x31_tokenizer_fertility",
     oracle=_x31_oracle(),
-    tags=("text", "prep", "eval"),
+    tags=("text", "prep", "eval", "batch"),
 )
 def x31_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility + compression per language under the frozen
@@ -2971,7 +2981,7 @@ GROUP BY t.split, c.avg_gap_days, c.n_violations
 @register(
     "c22_leave_last_out_split",
     oracle=_C22_ORACLE,
-    tags=("prep", "splits", "eval"),
+    tags=("prep", "splits", "eval", "read"),
 )
 def c22_leave_last_out_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-last-out TEMPORAL split — the standard recommender/
@@ -3070,7 +3080,7 @@ FROM shared s JOIN sizes za ON za.source = s.src_a
 @register(
     "c23_source_contamination_matrix",
     oracle=_C23_ORACLE,
-    tags=("curation", "dedup", "eval"),
+    tags=("curation", "dedup", "eval", "batch"),
 )
 def c23_source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional cross-SOURCE 5-gram contamination matrix: for every
@@ -3159,7 +3169,7 @@ LIMIT 20
 @register(
     "x32_pmi_collocations",
     oracle=_X32_ORACLE,
-    tags=("text", "collocation"),
+    tags=("text", "collocation", "batch"),
 )
 def x32_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus collocation extraction (Church & Hanks 1990): the top-20
@@ -3300,7 +3310,7 @@ FROM per_q, macro
 @register(
     "o14_map_precision_recall",
     oracle=_o14_oracle(),
-    tags=("retrieval", "evaluation"),
+    tags=("retrieval", "evaluation", "batch"),
 )
 def o14_map_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP@10 + precision@10 + recall@10 of the Matryoshka serving
@@ -3453,7 +3463,7 @@ JOIN cnt cb ON cb.label = d.label_b
 @register(
     "v13_centroid_drift_matrix",
     oracle=_V13_ORACLE,
-    tags=("similarity", "drift", "eval"),
+    tags=("similarity", "drift", "eval", "read"),
 )
 def v13_centroid_drift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine between per-label embedding CENTROIDS — the
@@ -3575,7 +3585,7 @@ FROM x GROUP BY 1
 @register(
     "c25_context_budget_curve",
     oracle=_C25_ORACLE,
-    tags=("prep", "text", "eval"),
+    tags=("prep", "text", "eval", "batch"),
 )
 def c25_context_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-length budget curve: for each candidate context length

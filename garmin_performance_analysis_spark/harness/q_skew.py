@@ -43,7 +43,7 @@ SELECT {_K1_KEY_SQL} AS skew_key,
 FROM events
 GROUP BY 1
 """,
-    tags=("skew", "aggregate"),
+    tags=("skew", "aggregate", "read"),
 )
 def k1_salted_hot_key_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage SALTED aggregation over a power-law key (~90% of rows
@@ -96,7 +96,7 @@ SELECT n.n_name,
 FROM keyed k JOIN nation n ON k.n_key = n.n_nationkey
 GROUP BY n.n_name
 """,
-    tags=("skew", "join"),
+    tags=("skew", "join", "read"),
 )
 def k2_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SALTED equi-join on a power-law foreign key (~75% of fact rows
@@ -152,7 +152,7 @@ SELECT rk, skew_key, CAST(n_rows AS BIGINT) AS n_rows,
 FROM top, tot t
 WHERE rk <= 10
 """,
-    tags=("skew", "profiling"),
+    tags=("skew", "profiling", "read"),
 )
 def k3_hot_key_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hot-key diagnostic — the report run BEFORE choosing k1/k2's
@@ -247,7 +247,9 @@ FROM bkt b, tot t
 """
 
 
-@register("k4_range_partition_planner", oracle=_K4_ORACLE, tags=("skew", "layout"))
+@register(
+    "k4_range_partition_planner", oracle=_K4_ORACLE, tags=("skew", "layout", "read")
+)
 def k4_range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range-partitioner boundary planner with a balance audit — how a
     sorted write / range exchange picks its split keys, computed

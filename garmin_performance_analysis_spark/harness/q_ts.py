@@ -38,7 +38,7 @@ FROM islands
 GROUP BY l_orderkey, island_id
 HAVING MAX(l_linenumber) - MIN(l_linenumber) + 1 >= 3
 """,
-    tags=("anomaly", "window"),
+    tags=("anomaly", "window", "read"),
 )
 def t3_sustained_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 sustained-run filter: flagged rows grouped with ≤2-step
@@ -155,7 +155,7 @@ SELECT user_id, session_seq,
 FROM marked
 GROUP BY user_id, session_seq
 """,
-    tags=("window", "composite"),
+    tags=("window", "composite", "read"),
 )
 def t9_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timestamp-gap sessionization — the canonical event-stream
@@ -214,7 +214,7 @@ SELECT user_id,
 FROM base b FULL OUTER JOIN latest l USING (user_id)
 WHERE l.op IS NULL OR l.op <> 'delete'
 """,
-    tags=("join", "cdc"),
+    tags=("join", "cdc", "read"),
 )
 def j10_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch MERGE/upsert: even event_ids build the base snapshot
@@ -280,7 +280,7 @@ SELECT user_id, vband, CAST(version AS BIGINT) AS version, valid_from,
          AS valid_to
 FROM runs
 """,
-    tags=("window", "scd2"),
+    tags=("window", "scd2", "read"),
 )
 def w11_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension history with change suppression: the quantized
@@ -332,7 +332,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
        is_observed
 FROM joined
 """,
-    tags=("timeseries", "window"),
+    tags=("timeseries", "window", "read"),
 )
 def t10_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user daily gap fill + forward fill over each user's own
@@ -380,7 +380,7 @@ SELECT user_id, ROUND(CAST(num AS DOUBLE) / span_sec, 6) AS twa,
        span_sec, CAST(n_obs AS BIGINT) AS n_obs
 FROM a WHERE span_sec > 0
 """,
-    tags=("timeseries", "agg"),
+    tags=("timeseries", "agg", "read"),
 )
 def t11_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Step-function time-weighted average of each user's value series —
@@ -444,7 +444,7 @@ FROM events f JOIN intervals d
  AND f.ts >= d.valid_from
  AND (d.valid_to IS NULL OR f.ts < d.valid_to)
 """,
-    tags=("join", "scd2"),
+    tags=("join", "scd2", "read"),
 )
 def j14_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-validity-interval dimension lookup — the consumption
@@ -505,7 +505,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
          ROWS UNBOUNDED PRECEDING) * 1000000.0 + 0.5) / 1000000.0 AS ewma
 FROM terms
 """,
-    tags=("timeseries", "window"),
+    tags=("timeseries", "window", "read"),
 )
 def w12_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving average (alpha = 1/2) of each
@@ -622,7 +622,7 @@ SELECT s.user_id, strftime(s.day, '%Y-%m-%d') AS day,
          AS ewma
 FROM s LEFT JOIN carries c ON s.user_id = c.user_id AND s.b = c.b
 """,
-    tags=("timeseries", "window"),
+    tags=("timeseries", "window", "read"),
 )
 def w15_ewma_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Half-life EWMA of each user's daily mean via BLOCK-CARRY
@@ -677,7 +677,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
          / 1000000.0 AS rolling_median
 FROM daily
 """,
-    tags=("timeseries", "window"),
+    tags=("timeseries", "window", "read"),
 )
 def w13_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-row exact median of each user's daily mean — the
@@ -736,7 +736,7 @@ SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_scored,
              / COUNT(*) * 1000000.0 + 0.5) / 1000000.0 AS mae
 FROM scored GROUP BY user_id
 """,
-    tags=("timeseries", "forecast"),
+    tags=("timeseries", "forecast", "read"),
 )
 def t13_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest: predict each user-day's mean
@@ -817,7 +817,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
          AS drift_alarm
 FROM c2
 """,
-    tags=("timeseries", "anomaly"),
+    tags=("timeseries", "anomaly", "read"),
 )
 def t14_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided CUSUM drift detection over each user's daily mean —
@@ -905,7 +905,7 @@ SELECT user_id, CAST(n AS BIGINT) AS n_pairs,
          AS autocorr
 FROM m WHERE n >= 3
 """,
-    tags=("timeseries", "stats"),
+    tags=("timeseries", "stats", "read"),
 )
 def t15_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of each user's daily mean — the
@@ -992,7 +992,7 @@ FROM tr t JOIN seas s ON t.user_id = s.user_id AND t.wd = s.wd
 @register(
     "w14_seasonal_decompose",
     oracle=_W14_ORACLE,
-    tags=("timeseries", "window"),
+    tags=("timeseries", "window", "read"),
 )
 def w14_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition (STL-lite) of each user's daily
@@ -1051,16 +1051,12 @@ def w14_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pack_buckets() -> int:
-    """Grouped-map pack-bucket count for t16/t17 (the parallelism knob:
-    users never split across buckets; more buckets = more parallel
-    grouped-map tasks, fewer users looped per Arrow batch).  32 is the
-    measured sweet spot at sf0.1 on local[32]; the env override exists
-    so scripts/t16_pack_knob.py can measure the knob at 10x without
-    touching query semantics (results are bucket-count-invariant)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PACK_BUCKETS", "32"))
+# Grouped-map pack-bucket count for t16/t17 (the parallelism knob:
+# users never split across buckets; more buckets = more parallel
+# grouped-map tasks, fewer users looped per Arrow batch).  32 is the
+# measured sweet spot at sf0.1 on local[32]; results are
+# bucket-count-invariant.
+_PACK_BUCKETS = 32
 
 
 @register(
@@ -1090,7 +1086,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
        FLOOR(b * 1000000.0 + 0.5) / 1000000.0 AS trend
 FROM s
 """,
-    tags=("timeseries", "statefulness"),
+    tags=("timeseries", "statefulness", "read"),
 )
 def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt's linear (double exponential) smoothing over each user's
@@ -1157,7 +1153,7 @@ def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = (
-        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_pack_buckets())))
+        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_PACK_BUCKETS)))
         .groupBy("_b")
         .applyInPandas(
             holt, "user_id long, day string, level double, trend double"
@@ -1209,7 +1205,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
          AS seasonal
 FROM s
 """,
-    tags=("timeseries", "statefulness"),
+    tags=("timeseries", "statefulness", "read"),
 )
 def t17_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive Holt-Winters (triple exponential) smoothing per user —
@@ -1281,7 +1277,7 @@ def t17_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = (
-        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_pack_buckets())))
+        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_PACK_BUCKETS)))
         .groupBy("_b")
         .applyInPandas(
             hw,
@@ -1340,7 +1336,7 @@ SELECT user_id, n_days, s_stat, var_s, z,
             ELSE 'none' END AS trend
 FROM z
 """,
-    tags=("timeseries", "stats"),
+    tags=("timeseries", "stats", "batch"),
 )
 def t18_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall nonparametric trend test per user over the daily
@@ -1465,7 +1461,7 @@ FROM f
 @register(
     "t19_seasonal_strength",
     oracle=_t19_oracle(),
-    tags=("timeseries", "eval"),
+    tags=("timeseries", "eval", "read"),
 )
 def t19_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strength-of-trend and strength-of-seasonality per key
@@ -1585,7 +1581,7 @@ FROM best WHERE rk = 1
 @register(
     "t20_binary_segmentation",
     oracle=_T20_ORACLE,
-    tags=("timeseries", "anomaly"),
+    tags=("timeseries", "anomaly", "read"),
 )
 def t20_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-changepoint detection per user via exact binary
@@ -1712,7 +1708,7 @@ FROM q
 @register(
     "t21_ljung_box",
     oracle=_t21_oracle(),
-    tags=("timeseries", "stats"),
+    tags=("timeseries", "stats", "read"),
 )
 def t21_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau white-noise test (lags 1..7) on each
@@ -1864,7 +1860,7 @@ FROM kstar
 @register(
     "t22_bh_fdr",
     oracle=_t22_oracle(),
-    tags=("timeseries", "stats", "eval"),
+    tags=("timeseries", "stats", "eval", "read"),
 )
 def t22_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg false-discovery-rate correction across the
@@ -2040,7 +2036,7 @@ SELECT user_id, n_days, n_seasons, s_seasonal, var_s, z,
             ELSE 'none' END AS trend
 FROM z
 """,
-    tags=("timeseries", "stats"),
+    tags=("timeseries", "stats", "read"),
 )
 def t23_seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEASONAL Mann-Kendall trend test (Hirsch & Slack 1984) per
@@ -2229,7 +2225,7 @@ FROM wins w JOIN pi5 ON pi5.item = w.item
 @register(
     "o15_bradley_terry_strengths",
     oracle=_o15_oracle(),
-    tags=("eval", "ranking", "stats"),
+    tags=("eval", "ranking", "stats", "batch"),
 )
 def o15_bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bradley-Terry preference-strength fit — the arena-leaderboard /

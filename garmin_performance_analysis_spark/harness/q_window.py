@@ -28,7 +28,7 @@ SELECT event_id, event_type, value,
 FROM z
 WHERE ABS(CASE WHEN s > 0 THEN (value - m) / s ELSE 0.0 END) > 2.0
 """,
-    tags=("window", "anomaly"),
+    tags=("window", "anomaly", "read"),
 )
 def w1_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/T1 whole-partition z-score anomaly scan with the reference's
@@ -108,7 +108,7 @@ SELECT user_id, day, ROUND(load, 6) AS load, ROUND(acute, 6) AS acute,
        ROUND(CASE WHEN chronic > 0 THEN acute / chronic END, 6) AS acwr
 FROM rolled
 """,
-    tags=("window", "rolling"),
+    tags=("window", "rolling", "read"),
 )
 def w5_acwr_rolling_loads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 ACWR: acute 7-day / chronic 28-day/4 rolling load sums over a
@@ -272,7 +272,7 @@ FROM days g
 JOIN ud u ON u.d BETWEEN g.d - 6 AND g.d
 GROUP BY g.d
 """,
-    tags=("window", "rolling"),
+    tags=("window", "rolling", "read"),
 )
 def w16_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 7-day DISTINCT active users per observed day — the
@@ -323,7 +323,7 @@ WHERE o_totalprice < ap OR (o_totalprice = ap AND o_orderkey > ak)
 ORDER BY o_totalprice DESC, o_orderkey ASC
 LIMIT 20
 """,
-    tags=("topk", "pagination"),
+    tags=("topk", "pagination", "read"),
 )
 def o10_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KEYSET pagination — the page o4 fetches with LIMIT/OFFSET,
@@ -392,7 +392,7 @@ SELECT user_id, strftime(day, '%Y-%m-%d') AS day, CAST(n AS BIGINT) AS n_days,
 FROM rolled
 WHERE n >= 8
 """,
-    tags=("window", "stats"),
+    tags=("window", "stats", "read"),
 )
 def w18_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 14-day rolling Pearson correlation between a user's
@@ -466,7 +466,7 @@ SELECT strftime(day, '%Y-%m-%d') AS day,
        1 AS est_within_2pct
 FROM win
 """,
-    tags=("window", "sketch"),
+    tags=("window", "sketch", "read"),
 )
 def w19_sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 7-day distinct users via MERGEABLE DAILY HLL SKETCHES

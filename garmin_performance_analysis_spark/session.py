@@ -24,6 +24,7 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.sql.adaptive.enabled", "true")
+        # The AQE, join and state-store SQL confs below: override via spark.conf.set.
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # parallelismFirst stays at Spark's default (true): coalescing
         # purely by BYTES (false + 64 m advisory) collapsed every small
@@ -36,31 +37,19 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         # KB-scale frames still coalesce to one task under true —
         # minPartitionSize caps the split — so the per-exchange
         # scheduling saving that motivated false is retained where it
-        # matters.  Env-overridable for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_SIZE", "64m"),
-        )
+        # matters.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Let the planner pick shuffled-hash join where its size checks
         # pass (guide §3.1): SMJ pays two sorts a hash join does not,
         # and AQE additionally rewrites SMJ→SHJ at runtime when every
         # post-shuffle partition is under the local-map threshold.
-        # Physical-plan-only (bit-identical results); both knobs
-        # env-overridable — on memory-tight clusters set the threshold
-        # back to 0 and/or preferSortMergeJoin=true.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"),
-        )
+        # Physical-plan-only (bit-identical results); on memory-tight
+        # clusters set the threshold back to 0 and/or
+        # preferSortMergeJoin=true.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
         # Streaming state-store backend (round-12 VERDICT item 5):
         # measured at sf0.1, RocksDB LOSES on every join replay —
@@ -69,16 +58,11 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         # per-commit open/compact overhead × (4 stores × partitions ×
         # micro-batches) dominates at KB-scale state, so the
         # HDFS-backed default stays.  At cluster scale (state ≫ heap)
-        # RocksDB is the production choice: set
-        # SPARK_GRAFT_STATE_STORE_PROVIDER=org.apache.spark.sql.
-        # execution.streaming.state.RocksDBStateStoreProvider.
+        # RocksDB is the production choice (RocksDBStateStoreProvider).
         .config(
             "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATE_STORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
-            ),
+            "org.apache.spark.sql.execution.streaming.state."
+            "HDFSBackedStateStoreProvider",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

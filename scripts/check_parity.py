@@ -2,8 +2,12 @@
 """Run every catalog query against its DuckDB oracle and report parity.
 
 Usage: python scripts/check_parity.py [--strict] [--window N]
-           [--stalest N] [sf_dir] [name_filter]
+           [--stalest N] [sf_dir] [filter ...]
        python scripts/check_parity.py --staleness
+
+Each filter selects the entries whose name contains it; several
+filters run their union in one session, and a filter that matches no
+entry is an error.  With no filter every selected entry runs.
 
 --strict uses the driver-faithful comparator: dtype-sensitive cells
 (int64 271 != float64 271.0) and full-precision floats — the mode that
@@ -11,7 +15,7 @@ would have caught the round-4 e7/d10/t8 oracle-typing failures.
 
 --staleness reads CORRECTNESS_r*.json and prints, per catalog entry,
 the latest round with a driver row (or "never"), grouped stalest-first —
-the generated source of truth for each round's rotation pad.
+the generated source of truth for each round's window (catalog.ORDER).
 
 --stalest N sweeps the N entries with the OLDEST driver evidence that
 are NOT in the current 50-entry window (the window re-proves itself
@@ -21,6 +25,7 @@ catalog outgrows the window (VERDICT r10 item 4).
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -36,6 +41,7 @@ from garmin_performance_analysis_spark.harness.compare import (
     duckdb_connection,
 )
 from garmin_performance_analysis_spark.session import get_spark
+from garmin_performance_analysis_spark.sources.tables import DEFAULT_SF_DIR
 
 
 def _latest_driver_rounds() -> dict[str, int]:
@@ -83,62 +89,54 @@ def staleness_report() -> int:
     return 0
 
 
-def _guard_mm7_env() -> None:
-    """mm7's parity oracle is only valid at the default resolution
-    knobs; a stray SPARK_GRAFT_MM7_* in the environment would change
-    results silently and read as a hash-mismatch regression (ADVICE
-    r11).  Unset them here with a loud warning — scale experiments
-    use scripts/mm7_resolution_knob.py, never a parity sweep."""
-    for var in ("SPARK_GRAFT_MM7_SLICES", "SPARK_GRAFT_MM7_MAX_HAMMING"):
-        if var in os.environ:
-            print(
-                f"WARNING: unsetting {var}={os.environ[var]} — mm7's "
-                "oracle holds at the defaults only",
-                file=sys.stderr,
-            )
-            del os.environ[var]
+def select(items: list, filters: list[str]) -> list:
+    """The ``(name, spec)`` items whose name contains any filter (all
+    items when there is none); raises ValueError on a filter that
+    matches nothing."""
+    unmatched = [f for f in filters if not any(f in n for n, _ in items)]
+    if unmatched:
+        raise ValueError(f"filters match no catalog entry: {unmatched}")
+    return [(n, s) for n, s in items if not filters or any(f in n for f in filters)]
 
 
 def main() -> int:
-    _guard_mm7_env()
-    if "--staleness" in sys.argv[1:]:
+    parser = argparse.ArgumentParser(
+        description="Compare catalog queries against their DuckDB oracles."
+    )
+    parser.add_argument("--strict", action="store_true")
+    parser.add_argument("--staleness", action="store_true")
+    parser.add_argument("--window", type=int, default=0, metavar="N")
+    parser.add_argument("--stalest", type=int, default=0, metavar="N")
+    parser.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
+    parser.add_argument("filters", nargs="*")
+    args = parser.parse_args()
+    if args.staleness:
         return staleness_report()
-    argv = [a for a in sys.argv[1:] if a != "--strict"]
-    strict = "--strict" in sys.argv[1:]
-    window = 0  # 0 = no limit; --window N sweeps the first N entries
-    if "--window" in argv:
-        i = argv.index("--window")
-        window = int(argv[i + 1])
-        del argv[i : i + 2]
-    stalest = 0  # --stalest N sweeps the N oldest-evidence non-window entries
-    if "--stalest" in argv:
-        i = argv.index("--stalest")
-        stalest = int(argv[i + 1])
-        del argv[i : i + 2]
-    sf_dir = argv[0] if len(argv) > 0 else "/root/testdata/sf0.001"
-    name_filter = argv[1] if len(argv) > 1 else ""
-    spark = get_spark("parity-check")
-    con = duckdb_connection(sf_dir)
-    failures = 0
-    n_run = 0
+    if not os.path.isdir(args.sf_dir):
+        parser.error(f"sf_dir is not a directory: {args.sf_dir}")
+    sf_dir = args.sf_dir
     items = list(CATALOG.items())
-    if window:
-        items = items[:window]
-    elif stalest:
+    if args.window:
+        items = items[: args.window]
+    elif args.stalest:
         latest = _latest_driver_rounds()
         in_window = set(list(CATALOG)[:50])
         candidates = sorted(
             (n for n in CATALOG if n not in in_window),
             key=lambda n: (latest.get(n, 0), n),
-        )[:stalest]
+        )[: args.stalest]
         picked = set(candidates)
         items = [(n, s) for n, s in items if n in picked]
         print(f"re-soaking the {len(items)} stalest non-window entries: "
               f"{[n for n, _ in items]}")
+    try:
+        items = select(items, args.filters)
+    except ValueError as exc:
+        parser.error(str(exc))
+    spark = get_spark("parity-check")
+    con = duckdb_connection(sf_dir)
+    failures = 0
     for name, spec in items:
-        if name_filter and name_filter not in name:
-            continue
-        n_run += 1
         t0 = time.time()
         try:
             spark_pdf = spec.fn(spark, sf_dir).toPandas()
@@ -169,7 +167,7 @@ def main() -> int:
                 print(f"FAIL  {name}: oracle error: {e2}")
                 failures += 1
                 continue
-        res = compare_frames(name, spark_pdf, oracle_pdf, strict=strict)
+        res = compare_frames(name, spark_pdf, oracle_pdf, strict=args.strict)
         status = "ok  " if res.ok else "FAIL"
         print(
             f"{status}  {name}: spark={res.spark_rows} oracle={res.oracle_rows}"
@@ -177,7 +175,7 @@ def main() -> int:
         )
         if not res.ok:
             failures += 1
-    print(f"\n{n_run} of {len(CATALOG)} queries run, {failures} failures")
+    print(f"\n{len(items)} of {len(CATALOG)} queries run, {failures} failures")
     return 1 if failures else 0
 
 

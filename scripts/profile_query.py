@@ -20,42 +20,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_EVENTLOG", "1")
-
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
+from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
+    if len(sys.argv) < 2:
+        raise SystemExit(__doc__)
     name = sys.argv[1]
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     log_dir = tempfile.mkdtemp(prefix="prof_evlog_")
-    from pyspark.sql import SparkSession
-
-    from garmin_performance_analysis_spark import session as sess_mod
-
-    # same session settings as the bench, plus the event log
-    builder = sess_mod.get_spark  # ensure module import side effects match
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = log_dir
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    # the bench's session (get_spark) plus the event log, passed as
+    # spark-submit confs so the session builder itself is unchanged
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={log_dir}"
+        " --conf spark.eventLog.compress=false "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
     )
+    spark = get_spark("profile")
     # warmup as in bench
     CATALOG["p2_point_lookup"].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"

@@ -177,27 +177,6 @@ def test_x25_auc_matches_bruteforce_pair_counting(spark, sf_dir):
     assert abs(row["gini"] - round(u2 / (len(pos) * len(neg)) - 1, 6)) < 1e-9
 
 
-def test_mm7_resolution_env_knob(spark, sf_dir):
-    """SPARK_GRAFT_MM7_SLICES / _MAX_HAMMING rewire the mm7 entry:
-    at 128/h4 the pipeline still runs end-to-end and finds the planted
-    within-family pairs; defaults restore afterwards."""
-    import os
-
-    from garmin_performance_analysis_spark.harness.catalog import CATALOG
-
-    os.environ["SPARK_GRAFT_MM7_SLICES"] = "128"
-    os.environ["SPARK_GRAFT_MM7_MAX_HAMMING"] = "4"
-    try:
-        out = CATALOG["mm7_audio_energyhash_neardup"].fn(spark, sf_dir)
-        rows = out.collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_MM7_SLICES", None)
-        os.environ.pop("SPARK_GRAFT_MM7_MAX_HAMMING", None)
-    assert rows, "128-slice envelope must still pair the planted families"
-    assert all(r["hamming"] <= 4 for r in rows)
-    assert any(r["doc_a"] // 4 == r["doc_b"] // 4 for r in rows)
-
-
 def test_simhash_rotate_and_block_recall_is_total(spark):
     """Pigeonhole guarantee: EVERY pair within max_hamming is found —
     recall 1.0 vs the brute-force O(N²) Hamming join."""
