@@ -39,6 +39,8 @@ from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 # comparable to that per-read budget.
 HEADLINE = [n for n, s in CATALOG.items() if {"read", "batch"} & set(s.tags)]
 BATCH_JOBS = {n for n, s in CATALOG.items() if "batch" in s.tags}
+# timed runs per query, and the cap when a query's runs spread > 3x
+RUNS, MAX_RUNS = 3, 5
 
 
 def force(df) -> None:
@@ -126,8 +128,6 @@ def main() -> None:
     # spread within one query's runs is the wave signature, and up to
     # two bounded retries give the best-of a chance at a clean run.
     # The timed action per run is UNCHANGED (noop sink, full plan).
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    max_runs = max(runs, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RUNS", "5")))
     timings: dict[str, float] = {}
     steals: dict[str, float] = {}
     failed: dict[str, str] = {}
@@ -140,9 +140,9 @@ def main() -> None:
                 t0 = time.perf_counter()
                 force(CATALOG[name].fn(spark, sf_dir))
                 walls.append(time.perf_counter() - t0)
-                if len(walls) >= max_runs:
+                if len(walls) >= MAX_RUNS:
                     break
-                if len(walls) >= runs and max(walls) <= 3.0 * min(walls):
+                if len(walls) >= RUNS and max(walls) <= 3.0 * min(walls):
                     break
         except Exception as exc:  # noqa: BLE001 — recorded, the run goes on
             traceback.print_exc()  # full trace on stderr; stdout stays JSON

@@ -9,11 +9,11 @@ from ..functions.datetime_funcs import month_bucket, week_start
 from ..operators import stats
 from ..sources.tables import load_table
 from .registry import dec_sum as _dec_sum
-from .registry import ls_avg as _ls_avg
 from .registry import ls_sum as _ls_sum
+from .registry import q6
 from .registry import r6 as _r6
 from .registry import register
-from .registry import sql_lavg, sql_lstd, sql_lsum
+from .registry import sql_lavg, sql_lstd
 
 
 @register(
@@ -509,9 +509,6 @@ def a19_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     group; the mergeable-sketch sibling is a9b's
     ``percentile_approx``."""
     li = load_table(spark, sf_dir, "lineitem")
-
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
 
     # ONE percentile aggregate with an array of percentages: a single
     # sort-based buffer serves all three bands (three scalar
@@ -1145,15 +1142,12 @@ def a28_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     v = F.col("value")
 
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,12)")).cast("double")
-
     sums = ev.groupBy("event_type").agg(
         F.count("value").alias("n"),
-        dsum(v).alias("s1"),
-        dsum(v * v).alias("s2"),
-        dsum(v * v * v).alias("s3"),
-        dsum(v * v * v * v).alias("s4"),
+        _dec_sum(v, scale=12, precision=38).alias("s1"),
+        _dec_sum(v * v, scale=12, precision=38).alias("s2"),
+        _dec_sum(v * v * v, scale=12, precision=38).alias("s3"),
+        _dec_sum(v * v * v * v, scale=12, precision=38).alias("s4"),
     )
     n = F.col("n")
     mu = F.col("s1") / n
@@ -1355,16 +1349,40 @@ def a29_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "a31_trimmed_mean",
-    oracle="""
-WITH ranked AS (
+# a31/a32: each non-null value's rank within its event_type (event_id
+# tiebreak) beside the group size.
+_RANKED_VALUES = """ranked AS (
   SELECT event_type, value,
          ROW_NUMBER() OVER (PARTITION BY event_type
                             ORDER BY value ASC, event_id ASC) AS rk,
          COUNT(*) OVER (PARTITION BY event_type) AS n
   FROM events WHERE value IS NOT NULL
-),
+)"""
+
+
+def _ranked_values(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """a31/a32's rank window: each non-null value's rank ``rk`` within
+    its event_type (unique event_id tiebreak) beside the group size
+    ``n`` — one keyed exchange."""
+    from pyspark.sql import Window
+
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    w = Window.partitionBy("event_type").orderBy(
+        F.col("value").asc(), F.col("event_id").asc()
+    )
+    wn = Window.partitionBy("event_type")
+    return ev.select(
+        "event_type",
+        "value",
+        F.row_number().over(w).alias("rk"),
+        F.count(F.lit(1)).over(wn).alias("n"),
+    )
+
+
+@register(
+    "a31_trimmed_mean",
+    oracle=f"""
+WITH {_RANKED_VALUES},
 kept AS (
   SELECT event_type, value, n, CAST(FLOOR(n * 0.1) AS BIGINT) AS k
   FROM ranked
@@ -1398,19 +1416,7 @@ def a31_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     n − 2·floor(0.1·n) rows.  Shape for 100 TB: one keyed exchange
     (the window and the agg share it), no global ordering anywhere;
     group sizes bound the window state."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc()
-    )
-    wn = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
+    ranked = _ranked_values(spark, sf_dir)
     kept = ranked.filter(
         (F.col("rk") > F.floor(F.col("n") * 0.1))
         & (F.col("rk") <= F.col("n") - F.floor(F.col("n") * 0.1))
@@ -1428,14 +1434,8 @@ def a31_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a32_winsorized_mean",
-    oracle="""
-WITH ranked AS (
-  SELECT event_type, value,
-         ROW_NUMBER() OVER (PARTITION BY event_type
-                            ORDER BY value ASC, event_id ASC) AS rk,
-         COUNT(*) OVER (PARTITION BY event_type) AS n
-  FROM events WHERE value IS NOT NULL
-),
+    oracle=f"""
+WITH {_RANKED_VALUES},
 agg AS (
   SELECT event_type,
          MAX(n) AS n,
@@ -1474,19 +1474,7 @@ def a32_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     final 3-term double expression is order-fixed.  Shape for
     100 TB: ONE keyed exchange shared by the window and the agg —
     identical to a31's."""
-    from pyspark.sql import Window
-
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc()
-    )
-    wn = Window.partitionBy("event_type")
-    ranked = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rk"),
-        F.count(F.lit(1)).over(wn).alias("n"),
-    )
+    ranked = _ranked_values(spark, sf_dir)
     k = F.floor(F.col("n") * 0.1)
     agg = ranked.groupBy("event_type").agg(
         F.max("n").alias("n"),

@@ -14,7 +14,7 @@ from ..operators.baselines import (
     train_linear_baselines,
 )
 from ..sources.tables import load_table
-from .registry import register, r6, sql_davg
+from .registry import dec_avg, dec_sum, register, r6, sql_davg
 
 
 @register(
@@ -177,14 +177,11 @@ def w9_durability_decoupling(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = F.when(F.col("eus") < F.col("mid"), F.col("value"))
     second = F.when(F.col("eus") >= F.col("mid"), F.col("value"))
 
-    def davg(c):
-        return F.sum(c.cast("decimal(30,12)")).cast("double") / F.count(c)
-
     h = e.groupBy("user_id").agg(
         F.count(first).alias("n_first"),
         F.count(second).alias("n_second"),
-        davg(first).alias("first_avg"),
-        davg(second).alias("second_avg"),
+        dec_avg(first).alias("first_avg"),
+        dec_avg(second).alias("second_avg"),
     )
     dec = F.when(
         (F.col("n_first") > 0) & (F.col("n_second") > 0) & (F.col("first_avg") > 0),
@@ -280,16 +277,13 @@ def m5_powerlaw_baseline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     x, y = F.log(F.col("l_quantity")), F.log(F.col("l_extendedprice"))
 
-    def mdec(c):
-        return F.sum(c.cast("decimal(30,12)")).cast("double")
-
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        mdec(x).alias("sx"),
-        mdec(y).alias("sy"),
-        mdec(x * y).alias("sxy"),
-        mdec(x * x).alias("sxx"),
-        mdec(y * y).alias("syy"),
+        dec_sum(x, scale=12, precision=30).alias("sx"),
+        dec_sum(y, scale=12, precision=30).alias("sy"),
+        dec_sum(x * y, scale=12, precision=30).alias("sxy"),
+        dec_sum(x * x, scale=12, precision=30).alias("sxx"),
+        dec_sum(y * y, scale=12, precision=30).alias("syy"),
     )
     n, sx, sy, sxy, sxx, syy = (F.col(c) for c in ["n", "sx", "sy", "sxy", "sxx", "syy"])
     d = (n * sxy - sx * sy) / (n * sxx - sx * sx)

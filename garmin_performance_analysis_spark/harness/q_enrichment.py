@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..operators.enrichment import build_form_efficiency, build_performance_trends
 from ..sources.tables import load_table
-from .registry import register
+from .registry import q6, register
 
 _SPLITS_CTE = """
 ranked AS (
@@ -136,13 +136,8 @@ def d8_form_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = build_form_efficiency(splits)
 
-    def r6d(c):
-        # floor(x*1e6+0.5)/1e6: identical IEEE ops in both engines, no
-        # dependence on either engine's decimal-tie handling
-        return F.floor(F.col(c) * 1e6 + 0.5) / 1e6
-
     rounded = [
-        r6d(c).alias(c)
+        q6(F.col(c)).alias(c)
         if c.split("_", 1)[-1] in ("average", "min", "max", "std") or c == "gct_variability"
         else F.col(c)
         for c in out.columns
@@ -450,14 +445,11 @@ def d10_performance_trends(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = build_performance_trends(splits)
 
-    def r6d(c):
-        return F.floor(F.col(c) * 1e6 + 0.5) / 1e6
-
     return out.select(
         "activity_id",
-        r6d("pace_consistency").alias("pace_consistency"),
+        q6(F.col("pace_consistency")).alias("pace_consistency"),
         "workout_structure",
-        r6d("rep_hr_drift_pct").alias("rep_hr_drift_pct"),
+        q6(F.col("rep_hr_drift_pct")).alias("rep_hr_drift_pct"),
         "n_work_laps",
         "n_rest_laps",
     )

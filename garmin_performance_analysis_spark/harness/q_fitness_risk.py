@@ -23,7 +23,7 @@ from ..operators.risk import (
     wellness_risk,
 )
 from ..sources.tables import load_table
-from .registry import register, r6, sql_davg, sql_dstd
+from .registry import dec_avg, dec_std, register, r6, sql_davg, sql_dstd
 
 
 @register(
@@ -115,14 +115,11 @@ def m11_race_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve_v = F.when(F.col("event_type") == "purchase", F.col("value"))
     vdot_v = F.when(F.col("event_type") == "signup", F.col("value"))
 
-    def davg(c):
-        return F.sum(c.cast("decimal(30,12)")).cast("double") / F.count(c)
-
     p = ev.groupBy("user_id").agg(
         F.count(curve_v).alias("nc"),
         F.count(vdot_v).alias("nv"),
-        davg(curve_v).alias("curve_avg"),
-        davg(vdot_v).alias("vdot_avg"),
+        dec_avg(curve_v).alias("curve_avg"),
+        dec_avg(vdot_v).alias("vdot_avg"),
     )
     t = p.select(
         "user_id",
@@ -366,8 +363,6 @@ def m14_star_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M14 weighted star rating: clamped weighted mean of axis scores
     (``mcp/analysis/derivations.py:222-267``) — pure column arithmetic
     over one aggregation pass."""
-    from .registry import dec_avg, dec_std
-
     ev = load_table(spark, sf_dir, "events")
     s = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),

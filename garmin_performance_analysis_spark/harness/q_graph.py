@@ -32,17 +32,36 @@ pr{i} AS (
 )"""
 
 
-def _g1_oracle() -> str:
-    its = ",".join(_g1_iteration(i, f"pr{i - 1}" if i > 1 else "pr0") for i in (1, 2, 3))
-    return f"""
-WITH u AS (SELECT MAX(user_id) + 1 AS n FROM events),
+# g1/g8's event-derived interaction graph: an edge per event from its
+# user to ``(user_id + 1 + event_id % 7) mod N``, nodes = the users.
+_EVENT_GRAPH_CTES = """u AS (SELECT MAX(user_id) + 1 AS n FROM events),
 edges AS (
   SELECT user_id AS src,
          (user_id + 1 + event_id % 7) % (SELECT n FROM u) AS dst
   FROM events
 ),
 nodes AS (SELECT DISTINCT user_id AS node FROM events),
-nn AS (SELECT COUNT(*) AS n_nodes FROM nodes),
+nn AS (SELECT COUNT(*) AS n_nodes FROM nodes)"""
+
+
+def _event_graph(spark: SparkSession, sf_dir: str):
+    """The Spark side of ``_EVENT_GRAPH_CTES``: ``(edges(src, dst),
+    nodes(node), N)``; user ids are contiguous at every SF, so every
+    edge lands on an existing node and N is the node count."""
+    ev = load_table(spark, sf_dir, "events")
+    n_users = ev.agg(F.max("user_id")).first()[0] + 1  # bounded 1-row
+    edges = ev.select(
+        F.col("user_id").alias("src"),
+        ((F.col("user_id") + 1 + F.col("event_id") % 7) % n_users).alias("dst"),
+    )
+    nodes = ev.select(F.col("user_id").alias("node")).distinct()
+    return edges, nodes, n_users
+
+
+def _g1_oracle() -> str:
+    its = ",".join(_g1_iteration(i, f"pr{i - 1}" if i > 1 else "pr0") for i in (1, 2, 3))
+    return f"""
+WITH {_EVENT_GRAPH_CTES},
 deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
 pr0 AS (SELECT node, 1.0 / nn.n_nodes AS pr FROM nodes CROSS JOIN nn),
 {its}
@@ -66,13 +85,7 @@ def g1_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     node-keyed join + one DECIMAL-sum agg + one left join — the
     standard distributed power-iteration step (public technique;
     Page et al. 1999, Pregel-style propagation)."""
-    ev = load_table(spark, sf_dir, "events")
-    n_users = ev.agg(F.max("user_id")).first()[0] + 1  # bounded 1-row
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        ((F.col("user_id") + 1 + F.col("event_id") % 7) % n_users).alias("dst"),
-    )
-    nodes = ev.select(F.col("user_id").alias("node")).distinct()
+    edges, nodes, n_users = _event_graph(spark, sf_dir)
     pr = pagerank_fixed(edges, nodes, "src", "dst", "node", iters=3, damping=0.85)
     n_nodes = n_users  # contiguous ids: every node present
     return pr.select(
@@ -514,14 +527,7 @@ def _g8_oracle() -> str:
         prev = f"h{i}"
     its = ",".join(halves)
     return f"""
-WITH u AS (SELECT MAX(user_id) + 1 AS n FROM events),
-edges AS (
-  SELECT user_id AS src,
-         (user_id + 1 + event_id % 7) % (SELECT n FROM u) AS dst
-  FROM events
-),
-nodes AS (SELECT DISTINCT user_id AS node FROM events),
-nn AS (SELECT COUNT(*) AS n_nodes FROM nodes),
+WITH {_EVENT_GRAPH_CTES},
 h0 AS (SELECT node, 1.0 AS _s FROM nodes),
 {its}
 SELECT a3.node AS user_id,
@@ -549,13 +555,7 @@ def g8_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank's propagation cost with alternating edge direction."""
     from ..operators.graph import hits_fixed
 
-    ev = load_table(spark, sf_dir, "events")
-    n_users = ev.agg(F.max("user_id")).first()[0] + 1  # bounded 1-row
-    edges = ev.select(
-        F.col("user_id").alias("src"),
-        ((F.col("user_id") + 1 + F.col("event_id") % 7) % n_users).alias("dst"),
-    )
-    nodes = ev.select(F.col("user_id").alias("node")).distinct()
+    edges, nodes, n_users = _event_graph(spark, sf_dir)
     hits = hits_fixed(edges, nodes, "src", "dst", "node", iters=3)
     return hits.select(
         F.col("node").alias("user_id"),

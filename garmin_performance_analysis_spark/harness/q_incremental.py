@@ -23,7 +23,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +30,7 @@ from pyspark.sql import functions as F
 from ..pipelines import incremental
 from ..scratch import scratch_dir
 from ..sources.tables import load_table
-from .q_pipeline import _BANDS, _NUM_HASHES, _SHINGLES_CTE, _hex_horner
+from .q_pipeline import _BANDS, _NUM_HASHES, _minhash_sig_ctes
 from .registry import r6 as _r6
 from .registry import register
 
@@ -120,31 +119,8 @@ def _incremental_lsh_oracle() -> str:
     """d3's SQL minhash machinery, re-oriented for the incremental
     lookup: candidates are (old = even-id history doc, new = odd-id
     batch doc) band collisions, estimated Jaccard >= 0.5."""
-    h1 = _hex_horner("d", 1, 15)
-    h2 = _hex_horner("d", 17, 12)
-    mins = ",\n         ".join(
-        f"min(h1 + {i} * h2) AS mh{i}" for i in range(_NUM_HASHES)
-    )
-    rows = _NUM_HASHES // _BANDS
-    band_selects = []
-    for b in range(_BANDS):
-        parts = " || '|' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_idx, md5({parts}) AS bh FROM sig"
-        )
-    bands = " UNION ALL ".join(band_selects)
-    matches = " + ".join(
-        f"(CASE WHEN x.mh{i} = y.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(_NUM_HASHES)
-    )
-    return f"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-  SELECT doc_id, {h1} AS h1, {h2} AS h2
-  FROM (SELECT doc_id, md5(shingle) AS d FROM sh)
-),
-sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-bands AS ({bands}),
+    sig_ctes, matches = _minhash_sig_ctes()
+    return f"""{sig_ctes}
 cand AS (
   SELECT DISTINCT a.doc_id AS old_doc, b.doc_id AS new_doc
   FROM bands a JOIN bands b
@@ -300,18 +276,9 @@ def i3_stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 _I4_GAP_US = 1_800_000_000     # 30-minute attribution window
 _I4_WM_US = 120_000_000        # 2-minute watermark
 
-
-def _i4_oracle() -> str:
-    """Pure-SQL replay of the stream-stream inner join's watermark
-    arithmetic (rules pinned empirically — see
-    ``tests/test_streaming.py::test_stream_join_replay_watermark_semantics``):
-    run 1 joins batch 1 of both sides freely; run 2 drops input rows at
-    or below the run-1 global watermark (min over sides of ms-floored
-    max event time minus delay) on EITHER side, and the state-retention
-    bounds are exactly the reachability bounds, so the total emitted
-    bag is the join over (batch1 ∪ surviving-batch2) per side."""
-    return f"""
-WITH e AS (SELECT epoch_us(ts) AS us, user_id, event_id FROM events),
+# The i4/i9 oracles' shared replay arithmetic: the two runs' surviving
+# input bags per side (``lall``/``rall``) and their inner pair bag.
+_I4_BAGS = f"""WITH e AS (SELECT epoch_us(ts) AS us, user_id, event_id FROM events),
 m AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid,
              (MAX(us) - MIN(us)) // 4 AS tail FROM e),
 b1l AS (SELECT e.* FROM e, m WHERE event_id % 2 = 0 AND us <= mid),
@@ -334,12 +301,67 @@ lall AS (SELECT * FROM b1l
          SELECT l2.us, l2.user_id, l2.event_id FROM l2, wm WHERE us > wm1),
 rall AS (SELECT * FROM b1r
          UNION ALL
-         SELECT r2.us, r2.user_id, r2.event_id FROM r2, wm WHERE us > wm1)
-SELECT l.user_id, l.event_id AS l_event_id, r.event_id AS r_event_id,
+         SELECT r2.us, r2.user_id, r2.event_id FROM r2, wm WHERE us > wm1)"""
+_I4_INNER = f"""SELECT l.user_id, l.event_id AS l_event_id, r.event_id AS r_event_id,
        r.us - l.us AS gap_us
 FROM lall l JOIN rall r
   ON l.user_id = r.user_id
- AND r.us >= l.us AND r.us <= l.us + {_I4_GAP_US}
+ AND r.us >= l.us AND r.us <= l.us + {_I4_GAP_US}"""
+
+
+def _join_replay(
+    spark: SparkSession, sf_dir: str, prefix: str, join_type: str
+) -> DataFrame:
+    """The i4/i9 two-run stream-stream join replay: even event_ids on
+    the left, odd on the right; batch 1 = first half of event time,
+    batch 2 = the rest plus a redelivered last quarter of batch 1 on
+    both sides."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "ts", "event_id"
+    )
+    us = F.unix_micros(F.col("ts"))
+    bounds = ev.agg(F.min(us).alias("tmin"), F.max(us).alias("tmax")).first()
+    mid = (bounds["tmin"] + bounds["tmax"]) // 2
+    tail = (bounds["tmax"] - bounds["tmin"]) // 4
+    evl = ev.filter(F.col("event_id") % 2 == 0)
+    evr = ev.filter(F.col("event_id") % 2 == 1)
+    b1l = evl.filter(us <= mid)
+    b1r = evr.filter(us <= mid)
+    b2l = evl.filter(us > mid).unionByName(b1l.filter(us > mid - tail))
+    b2r = evr.filter(us > mid).unionByName(b1r.filter(us > mid - tail))
+    work = scratch_dir(prefix=prefix)
+    try:
+        from ..streaming.replay import stream_join_replay
+
+        out = stream_join_replay(
+            spark, [b1l, b2l], [b1r, b2r], work,
+            key_col="user_id", ts_col="ts",
+            max_gap_sec=_I4_GAP_US // 1_000_000,
+            watermark_sec=_I4_WM_US // 1_000_000,
+            join_type=join_type,
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+    return out.select(
+        F.col("k").alias("user_id"),
+        "l_event_id",
+        "r_event_id",
+        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("gap_us"),
+    )
+
+
+def _i4_oracle() -> str:
+    """Pure-SQL replay of the stream-stream inner join's watermark
+    arithmetic (rules pinned empirically — see
+    ``tests/test_streaming.py::test_stream_join_replay_watermark_semantics``):
+    run 1 joins batch 1 of both sides freely; run 2 drops input rows at
+    or below the run-1 global watermark (min over sides of ms-floored
+    max event time minus delay) on EITHER side, and the state-retention
+    bounds are exactly the reachability bounds, so the total emitted
+    bag is the join over (batch1 ∪ surviving-batch2) per side."""
+    return f"""
+{_I4_BAGS}
+{_I4_INNER}
 """
 
 
@@ -363,37 +385,7 @@ def i4_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors re-match and duplicate their pairs (at-least-once).  The
     oracle replays the pinned arithmetic in SQL; the unit pin test
     carries the per-rule probes at second granularity."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id"
-    )
-    us = F.unix_micros(F.col("ts"))
-    bounds = ev.agg(F.min(us).alias("tmin"), F.max(us).alias("tmax")).first()
-    mid = (bounds["tmin"] + bounds["tmax"]) // 2
-    tail = (bounds["tmax"] - bounds["tmin"]) // 4
-    evl = ev.filter(F.col("event_id") % 2 == 0)
-    evr = ev.filter(F.col("event_id") % 2 == 1)
-    b1l = evl.filter(us <= mid)
-    b1r = evr.filter(us <= mid)
-    b2l = evl.filter(us > mid).unionByName(b1l.filter(us > mid - tail))
-    b2r = evr.filter(us > mid).unionByName(b1r.filter(us > mid - tail))
-    work = scratch_dir(prefix="i4_stream_join_")
-    try:
-        from ..streaming.replay import stream_join_replay
-
-        out = stream_join_replay(
-            spark, [b1l, b2l], [b1r, b2r], work,
-            key_col="user_id", ts_col="ts",
-            max_gap_sec=_I4_GAP_US // 1_000_000,
-            watermark_sec=_I4_WM_US // 1_000_000,
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out.select(
-        F.col("k").alias("user_id"),
-        "l_event_id",
-        "r_event_id",
-        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("gap_us"),
-    )
+    return _join_replay(spark, sf_dir, "i4_stream_join_", "inner")
 
 
 _I5_DELAY_US = 120_000_000     # 2-minute dedup horizon
@@ -804,30 +796,7 @@ def _i9_oracle() -> str:
     watermark; matched rows never null-pad; held rows never emit."""
     gap, wm = _I4_GAP_US, _I4_WM_US
     return f"""
-WITH e AS (SELECT epoch_us(ts) AS us, user_id, event_id FROM events),
-m AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid,
-             (MAX(us) - MIN(us)) // 4 AS tail FROM e),
-b1l AS (SELECT e.* FROM e, m WHERE event_id % 2 = 0 AND us <= mid),
-b1r AS (SELECT e.* FROM e, m WHERE event_id % 2 = 1 AND us <= mid),
-wm AS (SELECT (LEAST((SELECT MAX(us) FROM b1l) // 1000,
-                     (SELECT MAX(us) FROM b1r) // 1000)
-               - {wm // 1000}) * 1000 AS wm1),
-l2 AS (
-  SELECT e.* FROM e, m WHERE event_id % 2 = 0 AND us > mid
-  UNION ALL
-  SELECT b1l.* FROM b1l, m WHERE us > mid - tail
-),
-r2 AS (
-  SELECT e.* FROM e, m WHERE event_id % 2 = 1 AND us > mid
-  UNION ALL
-  SELECT b1r.* FROM b1r, m WHERE us > mid - tail
-),
-lall AS (SELECT * FROM b1l
-         UNION ALL
-         SELECT l2.us, l2.user_id, l2.event_id FROM l2, wm WHERE us > wm1),
-rall AS (SELECT * FROM b1r
-         UNION ALL
-         SELECT r2.us, r2.user_id, r2.event_id FROM r2, wm WHERE us > wm1),
+{_I4_BAGS},
 wm2 AS (
   SELECT (LEAST(GREATEST((SELECT MAX(us) FROM b1l),
                          (SELECT MAX(us) FROM l2)),
@@ -835,11 +804,7 @@ wm2 AS (
                          (SELECT MAX(us) FROM r2))) // 1000
           - {wm // 1000}) * 1000 AS w2
 )
-SELECT l.user_id, l.event_id AS l_event_id, r.event_id AS r_event_id,
-       r.us - l.us AS gap_us
-FROM lall l JOIN rall r
-  ON l.user_id = r.user_id
- AND r.us >= l.us AND r.us <= l.us + {gap}
+{_I4_INNER}
 UNION ALL
 SELECT l.user_id, l.event_id AS l_event_id,
        CAST(NULL AS BIGINT) AS r_event_id, CAST(NULL AS BIGINT) AS gap_us
@@ -874,38 +839,7 @@ def i9_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain.  Scale shape identical to i4: state bounded by
     watermark + gap both sides, join-key-hash shuffle.  The oracle is
     i4's pinned inner bag plus the null-pad set stated declaratively."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id"
-    )
-    us = F.unix_micros(F.col("ts"))
-    bounds = ev.agg(F.min(us).alias("tmin"), F.max(us).alias("tmax")).first()
-    mid = (bounds["tmin"] + bounds["tmax"]) // 2
-    tail = (bounds["tmax"] - bounds["tmin"]) // 4
-    evl = ev.filter(F.col("event_id") % 2 == 0)
-    evr = ev.filter(F.col("event_id") % 2 == 1)
-    b1l = evl.filter(us <= mid)
-    b1r = evr.filter(us <= mid)
-    b2l = evl.filter(us > mid).unionByName(b1l.filter(us > mid - tail))
-    b2r = evr.filter(us > mid).unionByName(b1r.filter(us > mid - tail))
-    work = scratch_dir(prefix="i9_stream_outer_join_")
-    try:
-        from ..streaming.replay import stream_join_replay
-
-        out = stream_join_replay(
-            spark, [b1l, b2l], [b1r, b2r], work,
-            key_col="user_id", ts_col="ts",
-            max_gap_sec=_I4_GAP_US // 1_000_000,
-            watermark_sec=_I4_WM_US // 1_000_000,
-            join_type="leftOuter",
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out.select(
-        F.col("k").alias("user_id"),
-        "l_event_id",
-        "r_event_id",
-        (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("gap_us"),
-    )
+    return _join_replay(spark, sf_dir, "i9_stream_outer_join_", "leftOuter")
 
 
 def _i10_oracle() -> str:

@@ -283,6 +283,25 @@ def j11_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _gap_sessions(ev: DataFrame):
+    """30-minute-gap sessionization (t9's rule): each event gets its
+    per-user ``session_seq`` (a new session after >1800 s of
+    inactivity; event_id tiebreaks duplicate timestamps), returned with
+    the epoch-seconds Column the gaps were cut on."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    epoch = F.col("ts").cast("long")
+    gap = epoch - F.lag(epoch).over(w)
+    marked = ev.withColumn(
+        "session_seq",
+        F.sum(
+            F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
+        ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    )
+    return marked, epoch
+
+
 @register(
     "j12_interval_overlap",
     oracle="""
@@ -332,20 +351,10 @@ def j12_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-day buckets, hash-joins on the bucket, and keeps each pair only
     in its first shared bucket (exactly-once without a dedup
     shuffle)."""
-    from pyspark.sql import Window
-
     from ..operators.joins import interval_overlap_join
 
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    marked = ev.withColumn(
-        "session_seq",
-        F.sum(
-            F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
+    marked, epoch = _gap_sessions(ev)
     sessions = marked.groupBy("user_id", "session_seq").agg(
         F.min(epoch).alias("start_sec"), F.max(epoch).alias("end_sec")
     # materialize ONCE: sessions feeds both the top-20 ranking and the

@@ -7,13 +7,55 @@ from pyspark.sql import functions as F
 
 from ..pipelines.similarity import semantic_dedup, srp_lsh_pairs, srp_multiprobe_pairs
 from ..sources.tables import load_table
+from .q_pipeline import _cos_expr
 from .registry import r6 as _r6
 from .registry import register
 
-_COS = (
-    "list_sum(list_transform(generate_series(1, 64),"
-    " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-)
+
+def _srp_ctes(bits: int) -> str:
+    """The SRP-LSH oracles' md5-derived hyperplanes (4 tables x ``bits``)
+    and per-component rows, opening the ``proj`` CTE that
+    ``_SRP_BUCKETS`` completes."""
+    return f"""planes AS (
+  SELECT t, b, i,
+         CASE WHEN strpos('0123456789abcdef',
+                          substr(md5(t || ':' || b || ':' || i), 1, 1)) <= 8
+              THEN 1 ELSE -1 END AS coef
+  FROM (SELECT unnest(generate_series(0, 3)) AS t),
+       (SELECT unnest(generate_series(0, {bits - 1})) AS b),
+       (SELECT unnest(generate_series(0, 63)) AS i)
+),
+comps AS (
+  SELECT vec_id AS vid, i.i AS i, embedding[i.i + 1] AS v
+  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) i
+),
+proj AS (
+"""
+
+
+# scaled-long projection sums → per-table bucket bit strings
+_SRP_BUCKETS = """  SELECT c.vid, p.t, p.b,
+         SUM(CAST(FLOOR(p.coef * c.v * 10000000.0 + 0.5) AS BIGINT)) AS dot
+  FROM comps c JOIN planes p ON c.i = p.i
+  GROUP BY c.vid, p.t, p.b
+),
+buckets AS (
+  SELECT vid, t,
+         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS bucket
+  FROM proj GROUP BY vid, t
+)"""
+_SRP_CAND = """cand AS (
+  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
+  FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket AND a.vid < b.vid
+)"""
+# exact-cosine verification of the bucket candidates (cosine >= 0.4)
+_SRP_VERIFIED = f"""SELECT c.id_a, c.id_b,
+       ROUND({_cos_expr('x.embedding', 'y.embedding')}, 6) AS cosine
+FROM cand c
+JOIN embeddings x ON c.id_a = x.vec_id
+JOIN embeddings y ON c.id_b = y.vec_id
+WHERE {_cos_expr('x.embedding', 'y.embedding')} >= 0.4
+"""
 
 
 def _recall_verdict_output(exact: DataFrame, approx: DataFrame) -> DataFrame:
@@ -64,53 +106,14 @@ def _recall_verdict_output(exact: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def _cos_expr(a: str, b: str) -> str:
-    dot = _COS.format(a=a, b=b)
-    na = "sqrt(" + _COS.format(a=a, b=a) + ")"
-    nb = "sqrt(" + _COS.format(a=b, b=b) + ")"
-    return f"({dot}) / ({na} * {nb})"
-
-
 @register(
     "v4_srp_lsh_pairs",
     oracle=f"""
-WITH planes AS (
-  SELECT t, b, i,
-         CASE WHEN strpos('0123456789abcdef',
-                          substr(md5(t || ':' || b || ':' || i), 1, 1)) <= 8
-              THEN 1 ELSE -1 END AS coef
-  FROM (SELECT unnest(generate_series(0, 3)) AS t),
-       (SELECT unnest(generate_series(0, 3)) AS b),
-       (SELECT unnest(generate_series(0, 63)) AS i)
-),
-comps AS (
-  SELECT vec_id AS vid, i.i AS i, embedding[i.i + 1] AS v
-  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) i
-),
-proj AS (
-  -- scaled-long accumulation (FLOOR(x*1e7 + 0.5)), mirroring the
+WITH {_srp_ctes(4)}  -- scaled-long accumulation (FLOOR(x*1e7 + 0.5)), mirroring the
   -- engine's integerized projection sum exactly
-  SELECT c.vid, p.t, p.b,
-         SUM(CAST(FLOOR(p.coef * c.v * 10000000.0 + 0.5) AS BIGINT)) AS dot
-  FROM comps c JOIN planes p ON c.i = p.i
-  GROUP BY c.vid, p.t, p.b
-),
-buckets AS (
-  SELECT vid, t,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS bucket
-  FROM proj GROUP BY vid, t
-),
-cand AS (
-  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-  FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket AND a.vid < b.vid
-)
-SELECT c.id_a, c.id_b,
-       ROUND({_cos_expr('x.embedding', 'y.embedding')}, 6) AS cosine
-FROM cand c
-JOIN embeddings x ON c.id_a = x.vec_id
-JOIN embeddings y ON c.id_b = y.vec_id
-WHERE {_cos_expr('x.embedding', 'y.embedding')} >= 0.4
-""",
+{_SRP_BUCKETS},
+{_SRP_CAND}
+{_SRP_VERIFIED}""",
     tags=("similarity", "dedup", "batch"),
 )
 def v4_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,30 +129,7 @@ def v4_srp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "v4b_srp_multiprobe",
     oracle=f"""
-WITH planes AS (
-  SELECT t, b, i,
-         CASE WHEN strpos('0123456789abcdef',
-                          substr(md5(t || ':' || b || ':' || i), 1, 1)) <= 8
-              THEN 1 ELSE -1 END AS coef
-  FROM (SELECT unnest(generate_series(0, 3)) AS t),
-       (SELECT unnest(generate_series(0, 7)) AS b),
-       (SELECT unnest(generate_series(0, 63)) AS i)
-),
-comps AS (
-  SELECT vec_id AS vid, i.i AS i, embedding[i.i + 1] AS v
-  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) i
-),
-proj AS (
-  SELECT c.vid, p.t, p.b,
-         SUM(CAST(FLOOR(p.coef * c.v * 10000000.0 + 0.5) AS BIGINT)) AS dot
-  FROM comps c JOIN planes p ON c.i = p.i
-  GROUP BY c.vid, p.t, p.b
-),
-buckets AS (
-  SELECT vid, t,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS bucket
-  FROM proj GROUP BY vid, t
-),
+WITH {_srp_ctes(8)}{_SRP_BUCKETS},
 probes AS (
   SELECT vid, t, bucket FROM buckets
   UNION ALL
@@ -163,13 +143,7 @@ cand AS (
   SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
   FROM buckets a JOIN probes b ON a.t = b.t AND a.bucket = b.bucket AND a.vid < b.vid
 )
-SELECT c.id_a, c.id_b,
-       ROUND({_cos_expr('x.embedding', 'y.embedding')}, 6) AS cosine
-FROM cand c
-JOIN embeddings x ON c.id_a = x.vec_id
-JOIN embeddings y ON c.id_b = y.vec_id
-WHERE {_cos_expr('x.embedding', 'y.embedding')} >= 0.4
-""",
+{_SRP_VERIFIED}""",
     tags=("similarity", "dedup", "batch"),
 )
 def v4b_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -189,34 +163,8 @@ def v4b_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "v9_semantic_dedup",
     oracle=f"""
-WITH RECURSIVE planes AS (
-  SELECT t, b, i,
-         CASE WHEN strpos('0123456789abcdef',
-                          substr(md5(t || ':' || b || ':' || i), 1, 1)) <= 8
-              THEN 1 ELSE -1 END AS coef
-  FROM (SELECT unnest(generate_series(0, 3)) AS t),
-       (SELECT unnest(generate_series(0, 3)) AS b),
-       (SELECT unnest(generate_series(0, 63)) AS i)
-),
-comps AS (
-  SELECT vec_id AS vid, i.i AS i, embedding[i.i + 1] AS v
-  FROM embeddings, (SELECT unnest(generate_series(0, 63)) AS i) i
-),
-proj AS (
-  SELECT c.vid, p.t, p.b,
-         SUM(CAST(FLOOR(p.coef * c.v * 10000000.0 + 0.5) AS BIGINT)) AS dot
-  FROM comps c JOIN planes p ON c.i = p.i
-  GROUP BY c.vid, p.t, p.b
-),
-buckets AS (
-  SELECT vid, t,
-         string_agg(CASE WHEN dot >= 0 THEN '1' ELSE '0' END, '' ORDER BY b) AS bucket
-  FROM proj GROUP BY vid, t
-),
-cand AS (
-  SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
-  FROM buckets a JOIN buckets b ON a.t = b.t AND a.bucket = b.bucket AND a.vid < b.vid
-),
+WITH RECURSIVE {_srp_ctes(4)}{_SRP_BUCKETS},
+{_SRP_CAND},
 pairs AS (
   SELECT c.id_a, c.id_b
   FROM cand c
@@ -264,161 +212,17 @@ def v9_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("vec_id")
 
 
-@register(
-    "v10_ivf_recall_verdict",
-    oracle=f"""
-WITH pr AS (
-  SELECT vec_id AS probe_id, embedding AS p FROM embeddings WHERE vec_id < 10
-),
-ranked AS (
-  SELECT pr.probe_id, e.vec_id,
-         {_cos_expr('e.embedding', 'pr.p')} AS cos,
-         ROW_NUMBER() OVER (PARTITION BY pr.probe_id
-                            ORDER BY {_cos_expr('e.embedding', 'pr.p')} DESC,
-                                     e.vec_id ASC) AS rank
-  FROM embeddings e JOIN pr ON e.vec_id <> pr.probe_id
-)
-SELECT probe_id, CAST(rank AS INTEGER) AS rank, vec_id,
-       ROUND(cos, 6) AS cosine,
-       1 AS probe_recall_ok, 1 AS mean_recall_ok
-FROM ranked WHERE rank <= 10
-""",
-    tags=("similarity", "ann", "batch"),
-)
-def v10_ivf_recall_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe exact top-10 WITH an in-band IVF recall verdict —
-    the a9b pattern applied to ANN (r7): the approximate index can't
-    be hash-matched by any ANSI oracle, so the comparable output is
-    (a) the exact brute-force top-10 per probe (oracle-checked value
-    for value) and (b) verdict columns the oracle pins to 1 — per-probe
-    IVF recall@10 ≥ 0.3 with 3 of 8 clusters probed, and mean recall
-    over the 10 probes ≥ 0.7.  Measured recall floors are 0.4 / 0.86
-    across sf0.001/0.01/0.1, and the whole chain is deterministic
-    (k-means init = k smallest ids, DECIMAL centroid means →
-    partition-invariant; every ranking tiebreaks on vec_id), so a
-    verdict flip means the quantizer or the probe pruning actually
-    broke, not sketch luck.
-
-    Scale shape: ONE cosine pass over (10 probes × N vectors) via a
-    broadcast of the 10 probe vectors serves both the exact ranking
-    and the IVF candidate ranking (the candidate set is the same
-    frame filtered by the broadcast 30-row probe→cluster map); recall
-    is a keyed join of two top-10 lists — no second scan, no
-    driver-side vectors."""
+def _ivf_probe_verdict(
+    emb: DataFrame, assigned: DataFrame, cents: DataFrame
+) -> DataFrame:
+    """The v10/v10b query path over a built IVF index (``assigned``
+    cluster ids + ``cents`` centroids): ONE cosine pass over (10 probes
+    × N vectors) serves both the exact top-10 and the top-10 among the
+    3 nearest clusters' members, scored by ``_recall_verdict_output``."""
     from pyspark.sql import Window
 
-    from ..pipelines.similarity import _dot, _norm, ivf_centroids, kmeans_assign
+    from ..pipelines.similarity import _dot, _norm
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("_p")
-    )
-    # materialize the per-call training ONCE: exact, approx, and cents
-    # all consume `assigned`, and Catalyst has no cross-subtree CSE —
-    # without this the 3 Lloyd iterations re-run per consumer (still
-    # train-PER-CALL by design; v10b is the cross-call memo)
-    assigned = kmeans_assign(
-        emb, "vec_id", "embedding", k=8, iters=3
-    ).localCheckpoint(eager=True)
-    cents = ivf_centroids(assigned, "embedding", "cluster_id")
-    pairs = (
-        assigned.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn(
-            "cos", _dot("embedding", "_p") / (_norm("embedding") * _norm("_p"))
-        )
-        .select("probe_id", "vec_id", "cluster_id", "cos")
-        # BOTH the exact anchor and the probed ranking consume this
-        # frame; without a checkpoint each consumer re-runs the full
-        # probe x corpus cosine pass (no cross-subtree CSE) -- the
-        # dominant cost of the query path, paid twice
-        .localCheckpoint(eager=True)
-    )
-    w_rank = Window.partitionBy("probe_id").orderBy(
-        F.desc("cos"), F.asc("vec_id")
-    )
-    exact = pairs.withColumn("rank", F.row_number().over(w_rank)).filter(
-        F.col("rank") <= 10
-    )
-    probe_cent = cents.crossJoin(F.broadcast(probes)).withColumn(
-        "ccos", _dot("centroid", "_p") / (_norm("centroid") * _norm("_p"))
-    )
-    w_cent = Window.partitionBy("probe_id").orderBy(
-        F.desc("ccos"), F.asc("centroid_id")
-    )
-    probed = (
-        probe_cent.withColumn("crn", F.row_number().over(w_cent))
-        .filter(F.col("crn") <= 3)
-        .select("probe_id", F.col("centroid_id").alias("cluster_id"))
-    )
-    approx = (
-        pairs.join(F.broadcast(probed), ["probe_id", "cluster_id"])
-        .withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= 10)
-    )
-    return _recall_verdict_output(exact, approx)
-
-
-# (applicationId, sf_dir) → (checkpointed cluster assignments,
-# collected centroid rows).  The centroid table is k=8 tiny rows; the
-# assignment frame is a localCheckpoint (the persisted-index shape),
-# never collected.  Keyed on applicationId — unique per SparkContext,
-# unlike id(sparkContext) which CPython can recycle after GC — and the
-# cached frame's context is validated before reuse; a stale entry from
-# a stopped context is dropped so its checkpoint storage is released.
-_IVF_INDEX_MEMO: dict = {}
-
-
-@register(
-    "v10b_ivf_query_path",
-    oracle=f"""
-WITH pr AS (
-  SELECT vec_id AS probe_id, embedding AS p FROM embeddings WHERE vec_id < 10
-),
-ranked AS (
-  SELECT pr.probe_id, e.vec_id,
-         {_cos_expr('e.embedding', 'pr.p')} AS cos,
-         ROW_NUMBER() OVER (PARTITION BY pr.probe_id
-                            ORDER BY {_cos_expr('e.embedding', 'pr.p')} DESC,
-                                     e.vec_id ASC) AS rank
-  FROM embeddings e JOIN pr ON e.vec_id <> pr.probe_id
-)
-SELECT probe_id, CAST(rank AS INTEGER) AS rank, vec_id,
-       ROUND(cos, 6) AS cosine,
-       1 AS probe_recall_ok, 1 AS mean_recall_ok
-FROM ranked WHERE rank <= 10
-""",
-    tags=("similarity", "ann", "read"),
-)
-def v10b_ivf_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v10's DEPLOYABLE split (the v8→v8b precedent): the IVF index —
-    k-means cluster assignments + centroids — is built once per
-    (session, corpus) and memoized (assignments as a localCheckpoint,
-    the persisted-index shape; centroids as 8 collected rows, the
-    shipped-artifact size), so the query path pays probe selection +
-    candidate ranking + the exact-verification pass only.  Training is
-    deterministic (DECIMAL centroid means), so memoization cannot
-    change results; the oracle is identical to v10's."""
-    from pyspark.sql import Window
-
-    from ..pipelines.similarity import _dot, _norm, ivf_centroids, kmeans_assign
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _IVF_INDEX_MEMO.get(key)
-    if memo is not None and (
-        memo[0].sparkSession.sparkContext is not spark.sparkContext
-    ):
-        del _IVF_INDEX_MEMO[key]  # stale: context was recycled
-        memo = None
-    if memo is None:
-        assigned = kmeans_assign(
-            emb, "vec_id", "embedding", k=8, iters=3
-        ).localCheckpoint(eager=True)
-        cents = ivf_centroids(assigned, "embedding", "cluster_id").collect()
-        memo = _IVF_INDEX_MEMO[key] = (assigned, cents)
-    assigned, cent_rows = memo
-    cents = spark.createDataFrame(cent_rows)
     probes = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("_p")
     )
@@ -456,6 +260,110 @@ def v10b_ivf_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 10)
     )
     return _recall_verdict_output(exact, approx)
+
+
+# v10/v10b: exact top-10 per probe; both recall verdicts pinned to 1
+_V10_ORACLE = f"""
+WITH pr AS (
+  SELECT vec_id AS probe_id, embedding AS p FROM embeddings WHERE vec_id < 10
+),
+ranked AS (
+  SELECT pr.probe_id, e.vec_id,
+         {_cos_expr('e.embedding', 'pr.p')} AS cos,
+         ROW_NUMBER() OVER (PARTITION BY pr.probe_id
+                            ORDER BY {_cos_expr('e.embedding', 'pr.p')} DESC,
+                                     e.vec_id ASC) AS rank
+  FROM embeddings e JOIN pr ON e.vec_id <> pr.probe_id
+)
+SELECT probe_id, CAST(rank AS INTEGER) AS rank, vec_id,
+       ROUND(cos, 6) AS cosine,
+       1 AS probe_recall_ok, 1 AS mean_recall_ok
+FROM ranked WHERE rank <= 10
+"""
+
+
+@register(
+    "v10_ivf_recall_verdict",
+    oracle=_V10_ORACLE,
+    tags=("similarity", "ann", "batch"),
+)
+def v10_ivf_recall_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-probe exact top-10 WITH an in-band IVF recall verdict —
+    the a9b pattern applied to ANN (r7): the approximate index can't
+    be hash-matched by any ANSI oracle, so the comparable output is
+    (a) the exact brute-force top-10 per probe (oracle-checked value
+    for value) and (b) verdict columns the oracle pins to 1 — per-probe
+    IVF recall@10 ≥ 0.3 with 3 of 8 clusters probed, and mean recall
+    over the 10 probes ≥ 0.7.  Measured recall floors are 0.4 / 0.86
+    across sf0.001/0.01/0.1, and the whole chain is deterministic
+    (k-means init = k smallest ids, DECIMAL centroid means →
+    partition-invariant; every ranking tiebreaks on vec_id), so a
+    verdict flip means the quantizer or the probe pruning actually
+    broke, not sketch luck.
+
+    Scale shape: ONE cosine pass over (10 probes × N vectors) via a
+    broadcast of the 10 probe vectors serves both the exact ranking
+    and the IVF candidate ranking (the candidate set is the same
+    frame filtered by the broadcast 30-row probe→cluster map); recall
+    is a keyed join of two top-10 lists — no second scan, no
+    driver-side vectors."""
+    from ..pipelines.similarity import ivf_centroids, kmeans_assign
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    # materialize the per-call training ONCE: exact, approx, and cents
+    # all consume `assigned`, and Catalyst has no cross-subtree CSE —
+    # without this the 3 Lloyd iterations re-run per consumer (still
+    # train-PER-CALL by design; v10b is the cross-call memo)
+    assigned = kmeans_assign(
+        emb, "vec_id", "embedding", k=8, iters=3
+    ).localCheckpoint(eager=True)
+    cents = ivf_centroids(assigned, "embedding", "cluster_id")
+    return _ivf_probe_verdict(emb, assigned, cents)
+
+
+# (applicationId, sf_dir) → (checkpointed cluster assignments,
+# collected centroid rows).  The centroid table is k=8 tiny rows; the
+# assignment frame is a localCheckpoint (the persisted-index shape),
+# never collected.  Keyed on applicationId — unique per SparkContext,
+# unlike id(sparkContext) which CPython can recycle after GC — and the
+# cached frame's context is validated before reuse; a stale entry from
+# a stopped context is dropped so its checkpoint storage is released.
+_IVF_INDEX_MEMO: dict = {}
+
+
+@register(
+    "v10b_ivf_query_path",
+    oracle=_V10_ORACLE,
+    tags=("similarity", "ann", "read"),
+)
+def v10b_ivf_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """v10's DEPLOYABLE split (the v8→v8b precedent): the IVF index —
+    k-means cluster assignments + centroids — is built once per
+    (session, corpus) and memoized (assignments as a localCheckpoint,
+    the persisted-index shape; centroids as 8 collected rows, the
+    shipped-artifact size), so the query path pays probe selection +
+    candidate ranking + the exact-verification pass only.  Training is
+    deterministic (DECIMAL centroid means), so memoization cannot
+    change results; the oracle is identical to v10's."""
+    from ..pipelines.similarity import ivf_centroids, kmeans_assign
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    key = (spark.sparkContext.applicationId, sf_dir)
+    memo = _IVF_INDEX_MEMO.get(key)
+    if memo is not None and (
+        memo[0].sparkSession.sparkContext is not spark.sparkContext
+    ):
+        del _IVF_INDEX_MEMO[key]  # stale: context was recycled
+        memo = None
+    if memo is None:
+        assigned = kmeans_assign(
+            emb, "vec_id", "embedding", k=8, iters=3
+        ).localCheckpoint(eager=True)
+        cents = ivf_centroids(assigned, "embedding", "cluster_id").collect()
+        memo = _IVF_INDEX_MEMO[key] = (assigned, cents)
+    assigned, cent_rows = memo
+    cents = spark.createDataFrame(cent_rows)
+    return _ivf_probe_verdict(emb, assigned, cents)
 
 
 def _o7_oracle() -> str:

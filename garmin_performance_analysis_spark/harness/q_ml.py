@@ -16,6 +16,7 @@ from ..functions.vdot import race_vdot
 from ..operators.regression import linregress_by_group, ols2_by_group
 from ..operators.topk import weighted_similarity
 from ..sources.tables import load_table
+from .registry import q6
 from .registry import r6 as _r6
 from .registry import register
 
@@ -66,10 +67,9 @@ def m1_linregress_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "m3_multivariate_ols",
-    oracle="""
-WITH d AS (
+# m3/m4's (hour, day) -> value points ``d`` and the opening of their
+# per-event_type moment CTE ``m`` (the caller closes it).
+_OLS2_MOMENTS = """d AS (
   SELECT event_type,
          CAST(hour(ts) AS DOUBLE) AS x1,
          CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE) AS x2,
@@ -80,7 +80,25 @@ m AS (
   SELECT event_type, COUNT(*) AS n,
          AVG(x1) AS m1, AVG(x2) AS m2, AVG(y) AS my,
          COVAR_POP(x1, y) AS c1y, COVAR_POP(x2, y) AS c2y,
-         COVAR_POP(x1, x2) AS c12, VAR_POP(x1) AS v1, VAR_POP(x2) AS v2
+         COVAR_POP(x1, x2) AS c12, VAR_POP(x1) AS v1, VAR_POP(x2) AS v2"""
+
+
+def _hour_day_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """m3/m4's regression points: x1 = hour of day, x2 = day number,
+    y = the non-null event value, keyed by event_type."""
+    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    return ev.select(
+        "event_type",
+        F.hour("ts").cast("double").alias("x1"),
+        day_number(F.col("ts")).cast("double").alias("x2"),
+        F.col("value").alias("y"),
+    )
+
+
+@register(
+    "m3_multivariate_ols",
+    oracle=f"""
+WITH {_OLS2_MOMENTS}
   FROM d GROUP BY event_type
 )
 SELECT event_type, n,
@@ -96,13 +114,7 @@ def m3_multivariate_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 two-covariate OLS via closed-form normal equations — the heat
     model ``HR ~ pace + excess_temp`` shape
     (``heat_adjustment.py:38-115``) as one aggregation pass."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    prepared = ev.select(
-        "event_type",
-        F.hour("ts").cast("double").alias("x1"),
-        day_number(F.col("ts")).cast("double").alias("x2"),
-        F.col("value").alias("y"),
-    )
+    prepared = _hour_day_points(spark, sf_dir)
     out = ols2_by_group(prepared, ["event_type"], "x1", "x2", "y", min_points=10)
     return out.select(
         "event_type",
@@ -323,14 +335,9 @@ def m16_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = theil_sen_by_group(pts, ["user_id"], "t", "x", median_scale=8)
 
-    def q6(c):
-        # floor-quantization, not ROUND: the 1e-8 median grid puts
-        # midpoints EXACTLY on 6dp half-way points, where the engines'
-        # ROUND rules legally disagree (measured: 3 of 1500 groups at
-        # sf0.1); floor(x*1e6+0.5) is the identical op both sides (the
-        # t16/w12 convention)
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
-
+    # floor-quantization, not ROUND: the 1e-8 median grid puts
+    # midpoints EXACTLY on 6dp half-way points, where the engines'
+    # ROUND rules legally disagree (measured: 3 of 1500 groups at sf0.1)
     return out.select(
         "user_id",
         "n_points",

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from ..functions.datetime_funcs import day_number, week_start
 from ..operators.efforts import (
-    critical_speed_fit,
     interval_fatigue,
     interval_segments,
     work_recovery_comparison,
@@ -17,7 +16,8 @@ from ..operators.efforts import (
 from ..operators.fragility import loo_slope_fragility
 from ..operators.windows import trailing_baseline_band
 from ..sources.tables import load_table
-from .registry import dec_sum as _dec_sum
+from .q_ml import _OLS2_MOMENTS, _hour_day_points
+from .q_window import _DAILY_LOAD_CTE, _daily_load
 from .registry import r6 as _r6
 from .registry import register
 
@@ -89,19 +89,8 @@ def m2_loo_fragility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "m4_ols_vif",
-    oracle="""
-WITH d AS (
-  SELECT event_type,
-         CAST(hour(ts) AS DOUBLE) AS x1,
-         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS DOUBLE) AS x2,
-         value AS y
-  FROM events WHERE value IS NOT NULL
-),
-m AS (
-  SELECT event_type, COUNT(*) AS n,
-         AVG(x1) AS m1, AVG(x2) AS m2, AVG(y) AS my,
-         COVAR_POP(x1, y) AS c1y, COVAR_POP(x2, y) AS c2y,
-         COVAR_POP(x1, x2) AS c12, VAR_POP(x1) AS v1, VAR_POP(x2) AS v2,
+    oracle=f"""
+WITH {_OLS2_MOMENTS},
          VAR_POP(y) AS vy
   FROM d GROUP BY event_type
 ),
@@ -134,13 +123,7 @@ def m4_ols_vif(spark: SparkSession, sf_dir: str) -> DataFrame:
     collinearity diagnostics — the weight↔economy model
     (``mcp/analysis/running_economy.py:98-342``, VIF :214-232) in closed
     form (p-values become the monotone-equivalent t statistics)."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    d = ev.select(
-        "event_type",
-        F.hour("ts").cast("double").alias("x1"),
-        day_number(F.col("ts")).cast("double").alias("x2"),
-        F.col("value").alias("y"),
-    )
+    d = _hour_day_points(spark, sf_dir)
     m = d.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.avg("x1").alias("m1"),
@@ -255,15 +238,9 @@ def m9_critical_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "t6_interval_fatigue",
-    oracle="""
-WITH e AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN value >= 10 THEN 1 ELSE 0 END AS state
-  FROM events
-),
-c AS (
+# Work/recovery segmentation over the ``e`` CTE's 0/1 ``state``: a new
+# segment starts at every state change (event_id tiebreaks equal ts).
+_STATE_SEGMENT_CTES = """c AS (
   SELECT *, CASE WHEN LAG(state) OVER w IS NULL OR LAG(state) OVER w <> state
                  THEN 1 ELSE 0 END AS chg
   FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -272,7 +249,18 @@ s AS (
   SELECT *, CAST(SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS segment_id
   FROM c
+)"""
+
+
+@register(
+    "t6_interval_fatigue",
+    oracle=f"""
+WITH e AS (
+  SELECT user_id, ts, event_id, value,
+         CASE WHEN value >= 10 THEN 1 ELSE 0 END AS state
+  FROM events
 ),
+{_STATE_SEGMENT_CTES},
 seg AS (
   SELECT user_id, segment_id, MAX(state) AS is_work,
          CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(value) AS seg_avg
@@ -373,14 +361,8 @@ def a14_weekly_median_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w7_baseline_band",
-    oracle="""
-WITH daily AS (
-  SELECT user_id,
-         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS dn,
-         strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-         CAST(SUM(CAST(value AS DECIMAL(22,2))) AS DOUBLE) AS load
-  FROM events GROUP BY 1, 2, 3
-),
+    oracle=f"""
+WITH {_DAILY_LOAD_CTE},
 b AS (
   SELECT user_id, day, load,
          AVG(load) OVER w AS baseline_mean,
@@ -406,12 +388,7 @@ def w7_baseline_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W7 rolling personal baseline band: trailing-7-day mean ± SD
     excluding today, z-score + adverse flag
     (``mcp/analysis/wellness_baseline.py:52-198``)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id",
-        day_number(F.col("ts")).alias("dn"),
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-    ).agg(_dec_sum(F.col("value")).alias("load"))
+    daily = _daily_load(spark, sf_dir)
     banded = trailing_baseline_band(daily, ["user_id"], "dn", "load", 7, 3)
     adverse = F.when(
         F.col("baseline_z").isNotNull() & (F.col("baseline_z") < -1.0), 1
@@ -430,23 +407,14 @@ def w7_baseline_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t6_work_recovery",
-    oracle="""
+    oracle=f"""
 WITH e AS (
   SELECT user_id, ts, event_id, value,
          CAST(epoch_us(ts) AS DOUBLE) / 1000000.0 AS t_s,
          CASE WHEN value >= 10 THEN 1 ELSE 0 END AS state
   FROM events
 ),
-c AS (
-  SELECT *, CASE WHEN LAG(state) OVER w IS NULL OR LAG(state) OVER w <> state
-                 THEN 1 ELSE 0 END AS chg
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, CAST(SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS segment_id
-  FROM c
-),
+{_STATE_SEGMENT_CTES},
 seg AS (
   SELECT user_id, segment_id, MAX(state) AS is_work,
          CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(value) AS seg_avg,

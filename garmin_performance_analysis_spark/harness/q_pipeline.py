@@ -98,7 +98,11 @@ def _hex_horner(col: str, start: int, length: int) -> str:
     return expr
 
 
-def _minhash_oracle() -> str:
+def _minhash_sig_ctes() -> tuple[str, str]:
+    """The MinHash/LSH oracles' shared SQL: the CTE prefix through the
+    md5 signatures ``sig`` and their band hashes ``bands`` (ending in a
+    comma), and the matching-component count between signature rows
+    ``x`` and ``y``."""
     h1 = _hex_horner("d", 1, 15)
     h2 = _hex_horner("d", 17, 12)
     mins = ",\n         ".join(
@@ -113,16 +117,23 @@ def _minhash_oracle() -> str:
         )
     bands = " UNION ALL ".join(band_selects)
     matches = " + ".join(
-        f"(CASE WHEN x.mh{i} = y.mh{i} THEN 1 ELSE 0 END)" for i in range(_NUM_HASHES)
+        f"(CASE WHEN x.mh{i} = y.mh{i} THEN 1 ELSE 0 END)"
+        for i in range(_NUM_HASHES)
     )
-    return f"""
+    ctes = f"""
 WITH {_SHINGLES_CTE},
 hashed AS (
   SELECT doc_id, {h1} AS h1, {h2} AS h2
   FROM (SELECT doc_id, md5(shingle) AS d FROM sh)
 ),
 sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-bands AS ({bands}),
+bands AS ({bands}),"""
+    return ctes, matches
+
+
+def _minhash_oracle() -> str:
+    sig_ctes, matches = _minhash_sig_ctes()
+    return f"""{sig_ctes}
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b ON a.band_idx = b.band_idx AND a.bh = b.bh AND a.doc_id < b.doc_id
@@ -148,10 +159,9 @@ def d3_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_a", "doc_b", _r6(F.col("est_jaccard")).alias("est_jaccard"))
 
 
-@register(
-    "d4_simhash_fingerprints",
-    oracle="""
-WITH toks AS (
+# SimHash bit votes: +/-1 per md5 bit of each distinct token, summed
+# per (doc, bit position 0-63).
+_SIMHASH_VOTES_CTES = """toks AS (
   SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS tok
   FROM documents
 ),
@@ -162,7 +172,13 @@ bits AS (
            // (CASE CAST(bp % 4 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1 AS wt
   FROM h, (SELECT unnest(generate_series(0, 63)) AS bp)
 ),
-votes AS (SELECT doc_id, bp, SUM(wt) AS vote FROM bits GROUP BY 1, 2)
+votes AS (SELECT doc_id, bp, SUM(wt) AS vote FROM bits GROUP BY 1, 2)"""
+
+
+@register(
+    "d4_simhash_fingerprints",
+    oracle=f"""
+WITH {_SIMHASH_VOTES_CTES}
 SELECT doc_id,
        string_agg(CASE WHEN vote > 0 THEN '1' ELSE '0' END, '' ORDER BY bp) AS simhash64
 FROM votes GROUP BY doc_id
@@ -278,15 +294,18 @@ def x4_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _COS_DOT = (
-    "list_sum(list_transform(generate_series(1, 64),"
+    "list_sum(list_transform(generate_series(1, {n}),"
     " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
 )
 
 
-def _cos_expr(a: str, b: str) -> str:
-    dot = _COS_DOT.format(a=a, b=b)
-    na = "sqrt(" + _COS_DOT.format(a=a, b=a) + ")"
-    nb = "sqrt(" + _COS_DOT.format(a=b, b=b) + ")"
+def _cos_expr(a: str, b: str, n: int = 64) -> str:
+    """Oracle SQL for the cosine of list columns ``a`` and ``b`` over
+    their first ``n`` dimensions, in the DOUBLE dot-product order the
+    Spark side folds in."""
+    dot = _COS_DOT.format(a=a, b=b, n=n)
+    na = "sqrt(" + _COS_DOT.format(a=a, b=a, n=n) + ")"
+    nb = "sqrt(" + _COS_DOT.format(a=b, b=b, n=n) + ")"
     return f"({dot}) / ({na} * {nb})"
 
 
@@ -1133,8 +1152,6 @@ def c9_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone, so a lost sample, torn tar, key-zfill bug, metadata drift,
     or misassigned shard all hash-mismatch.  The manifest collect is
     bounded (one row per shard)."""
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     df = docs.select(
         "doc_id",
@@ -1159,11 +1176,9 @@ def c9_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "d2b_jaccard_capped_shingles",
-    oracle=f"""
-WITH {_SHINGLES_CTE},
-freq AS (SELECT shingle, COUNT(*) AS f FROM sh GROUP BY shingle),
+# d2b/d8: shingles with corpus frequency <= 25, per-doc sizes, and the
+# shared-shingle count of every doc pair (opens the final SELECT).
+_CAPPED_SHARED = """freq AS (SELECT shingle, COUNT(*) AS f FROM sh GROUP BY shingle),
 kept AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle) WHERE f <= 25),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
 shared AS (
@@ -1171,7 +1186,14 @@ shared AS (
   FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
-SELECT doc_a, doc_b, shared, x.n AS size_a, y.n AS size_b,
+SELECT doc_a, doc_b, shared, x.n AS size_a, y.n AS size_b,"""
+
+
+@register(
+    "d2b_jaccard_capped_shingles",
+    oracle=f"""
+WITH {_SHINGLES_CTE},
+{_CAPPED_SHARED}
        ROUND(shared * 1.0 / (x.n + y.n - shared), 6) AS jaccard
 FROM shared JOIN sizes x ON doc_a = x.doc_id JOIN sizes y ON doc_b = y.doc_id
 WHERE shared * 1.0 / (x.n + y.n - shared) >= 0.5
@@ -1199,19 +1221,8 @@ def d2b_jaccard_capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "d4b_simhash_pairs",
-    oracle="""
-WITH toks AS (
-  SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS tok
-  FROM documents
-),
-h AS (SELECT doc_id, md5(tok) AS h FROM toks),
-bits AS (
-  SELECT doc_id, bp,
-         (((strpos('0123456789abcdef', substr(h, CAST(bp // 4 AS INT) + 1, 1)) - 1)
-           // (CASE CAST(bp % 4 AS INT) WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2) * 2 - 1 AS wt
-  FROM h, (SELECT unnest(generate_series(0, 63)) AS bp)
-),
-votes AS (SELECT doc_id, bp, SUM(wt) AS vote FROM bits GROUP BY 1, 2),
+    oracle=f"""
+WITH {_SIMHASH_VOTES_CTES},
 fp AS (
   SELECT doc_id,
          string_agg(CASE WHEN vote > 0 THEN '1' ELSE '0' END, '' ORDER BY bp) AS simhash64
@@ -1249,11 +1260,10 @@ def d4b_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_pairs(fps, max_hamming=3)
 
 
-@register(
-    "d5_dedup_clusters",
-    oracle=f"""
-WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-edges AS (
+# The recursive transitive-closure CC over the ``pairs`` CTE's
+# (doc_a, doc_b) graph: ``lab`` maps each paired doc to its min
+# reachable doc_id — the oracle mirror of ``dedup.connected_components``.
+_CC_CTES = """edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
   SELECT doc_b, doc_a FROM pairs
@@ -1265,7 +1275,14 @@ reach AS (
 ),
 lab AS (
   SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
-)
+)"""
+
+
+@register(
+    "d5_dedup_clusters",
+    oracle=f"""
+WITH RECURSIVE pairs AS ({_minhash_oracle()}),
+{_CC_CTES}
 SELECT d.doc_id AS doc_id,
        COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
        (COALESCE(l.cluster_id, d.doc_id) = d.doc_id) AS is_canonical
@@ -1435,15 +1452,7 @@ def x5_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d8_containment_pairs",
     oracle=f"""
 WITH {_SHINGLES_CTE},
-freq AS (SELECT shingle, COUNT(*) AS f FROM sh GROUP BY shingle),
-kept AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN freq USING (shingle) WHERE f <= 25),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
-shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM kept a JOIN kept b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b, shared, x.n AS size_a, y.n AS size_b,
+{_CAPPED_SHARED}
        ROUND(shared * 1.0 / LEAST(x.n, y.n), 6) AS containment
 FROM shared JOIN sizes x ON doc_a = x.doc_id JOIN sizes y ON doc_b = y.doc_id
 WHERE shared * 1.0 / LEAST(x.n, y.n) >= 0.6
@@ -1608,23 +1617,46 @@ def mm6_image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cluster_split(docs: DataFrame, pairs: DataFrame):
+    """c18's cluster-keyed 90/5/5 split: each doc's near-dup CLUSTER id
+    (min-label CC over the pair graph; unpaired docs are their own
+    cluster), the md5 high-60-bit Horner bucket of that id, and the
+    split label it selects."""
+    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
+    clustered = docs.select("doc_id").join(cc, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
+    )
+    bucket = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.lit("csplit|"), F.col("cluster_id").cast("string")
+                    )
+                ),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("bigint")
+        % 100
+    )
+    split = (
+        F.when(bucket < 90, "train")
+        .when(bucket < 95, "val")
+        .otherwise("test")
+        .alias("split")
+    )
+    return clustered, bucket, split
+
+
 def _c18_oracle() -> str:
     horner = _hex_horner("h", 1, 15)
     return f"""
 WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-lab AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
-),
+{_CC_CTES},
 clustered AS (
   SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
   FROM documents d LEFT JOIN lab l ON l.doc_id = d.doc_id
@@ -1671,35 +1703,12 @@ def c18_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     one in-row hash — no extra exchange beyond the cluster join."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = d3_minhash_lsh_pairs(spark, sf_dir)
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
-    clustered = docs.select("doc_id").join(cc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("csplit|"), F.col("cluster_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    clustered, bucket, split = _cluster_split(docs, pairs)
     return clustered.select(
         "doc_id",
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
         bucket.alias("split_bucket"),
-        F.when(bucket < 90, "train")
-        .when(bucket < 95, "val")
-        .otherwise("test")
-        .alias("split"),
+        split,
     )
 
 
@@ -1849,7 +1858,11 @@ def mm7_audio_energyhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _x23_oracle() -> str:
+def _langid_ctes() -> str:
+    """The x23/x33 oracles' shared prefix: the x2 marker scorer's
+    prediction ``j`` per document beside its true label, and the
+    per-class ``per_true`` (support, tp) / ``per_pred`` counts (ends in
+    a comma)."""
     score_cols = []
     for lang, markers in text.LANG_MARKERS.items():
         marker_in = ", ".join(f"'{m}'" for m in markers)
@@ -1875,7 +1888,11 @@ per_true AS (
 ),
 per_pred AS (
   SELECT predicted_lang AS cls, COUNT(*) AS predicted_n FROM j GROUP BY 1
-),
+),"""
+
+
+def _x23_oracle() -> str:
+    return f"""{_langid_ctes()}
 cls AS (
   SELECT COALESCE(t.cls, p.cls) AS cls,
          COALESCE(t.support, 0) AS support, COALESCE(t.tp, 0) AS tp,
@@ -1900,6 +1917,30 @@ FROM m
 """
 
 
+def _langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """x2's language-ID prediction vs the ground-truth ``lang``, as the
+    class-union outer join of per-true-class (support, tp) and
+    per-predicted-class counts — NULLs where a class is on one side
+    only."""
+    docs = load_table(spark, sf_dir, "documents")
+    pred = text.language_id(docs, "doc_id", "text").select(
+        "doc_id", "predicted_lang"
+    )
+    j = pred.join(
+        docs.select("doc_id", F.col("lang").alias("true_lang")), "doc_id"
+    )
+    per_true = j.groupBy(F.col("true_lang").alias("cls")).agg(
+        F.count(F.lit(1)).alias("support"),
+        F.sum(
+            (F.col("predicted_lang") == F.col("true_lang")).cast("long")
+        ).alias("tp"),
+    )
+    per_pred = j.groupBy(F.col("predicted_lang").alias("cls")).agg(
+        F.count(F.lit(1)).alias("predicted_n")
+    )
+    return per_true.join(per_pred, "cls", "full_outer")
+
+
 @register(
     "x23_langid_eval",
     oracle=_x23_oracle(),
@@ -1920,30 +1961,11 @@ def x23_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     one corpus scan total, metric arithmetic on exact integers so
     every ratio hash-matches at 6dp (the F1 on ROUNDED P/R so both
     engines band identically)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pred = text.language_id(docs, "doc_id", "text").select(
-        "doc_id", "predicted_lang"
-    )
-    j = pred.join(
-        docs.select("doc_id", F.col("lang").alias("true_lang")), "doc_id"
-    )
-    per_true = j.groupBy(F.col("true_lang").alias("cls")).agg(
-        F.count(F.lit(1)).alias("support"),
-        F.sum(
-            (F.col("predicted_lang") == F.col("true_lang")).cast("long")
-        ).alias("tp"),
-    )
-    per_pred = j.groupBy(F.col("predicted_lang").alias("cls")).agg(
-        F.count(F.lit(1)).alias("predicted_n")
-    )
-    cls = (
-        per_true.join(per_pred, "cls", "full_outer")
-        .select(
-            "cls",
-            F.coalesce(F.col("support"), F.lit(0)).alias("support"),
-            F.coalesce(F.col("tp"), F.lit(0)).alias("tp"),
-            F.coalesce(F.col("predicted_n"), F.lit(0)).alias("predicted_n"),
-        )
+    cls = _langid_confusion(spark, sf_dir).select(
+        "cls",
+        F.coalesce(F.col("support"), F.lit(0)).alias("support"),
+        F.coalesce(F.col("tp"), F.lit(0)).alias("tp"),
+        F.coalesce(F.col("predicted_n"), F.lit(0)).alias("predicted_n"),
     )
     prec = F.when(
         F.col("predicted_n") > 0,
@@ -2330,19 +2352,7 @@ split10 AS (
               ELSE 'test' END AS split
   FROM fp
 ),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-lab AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
-),
+{_CC_CTES},
 hashed18 AS (
   SELECT d.doc_id,
          md5('csplit|' || CAST(COALESCE(l.cluster_id, d.doc_id) AS VARCHAR))
@@ -2416,34 +2426,8 @@ def c19_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s10 = prep.leakage_safe_split(docs, "doc_id", "text").select(
         "doc_id", "split"
     )
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
-    clustered = docs.select("doc_id").join(cc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
-    )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("csplit|"), F.col("cluster_id").cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
-    s18 = clustered.select(
-        "doc_id",
-        F.when(bucket < 90, "train")
-        .when(bucket < 95, "val")
-        .otherwise("test")
-        .alias("split"),
-    )
+    clustered, _, split = _cluster_split(docs, pairs)
+    s18 = clustered.select("doc_id", split)
 
     def audit(splits: DataFrame, rule: str) -> DataFrame:
         sa = splits.select(
@@ -2479,19 +2463,7 @@ def c19_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _c20_oracle() -> str:
     return f"""
 WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs
-),
-reach AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-),
-lab AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id FROM reach GROUP BY a
-),
+{_CC_CTES},
 toks AS (
   SELECT d.doc_id,
          COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
@@ -2730,32 +2702,7 @@ def c21_mixture_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x33_oracle() -> str:
-    score_cols = []
-    for lang, markers in text.LANG_MARKERS.items():
-        marker_in = ", ".join(f"'{m}'" for m in markers)
-        score_cols.append(
-            f"len(list_filter(string_split(lower(text), ' '),"
-            f" x -> x IN ({marker_in}))) AS score_{lang}"
-        )
-    langs = list(text.LANG_MARKERS)
-    best = "GREATEST(" + ", ".join(f"score_{lang}" for lang in langs) + ")"
-    pred = "'unknown'"
-    for lang in reversed(langs):
-        pred = (
-            f"CASE WHEN score_{lang} = {best} AND {best} > 0"
-            f" THEN '{lang}' ELSE {pred} END"
-        )
-    return f"""
-WITH s AS (SELECT doc_id, lang, {", ".join(score_cols)} FROM documents),
-j AS (SELECT doc_id, lang AS true_lang, {pred} AS predicted_lang FROM s),
-per_true AS (
-  SELECT true_lang AS cls, COUNT(*) AS support,
-         SUM(CASE WHEN predicted_lang = true_lang THEN 1 ELSE 0 END) AS tp
-  FROM j GROUP BY 1
-),
-per_pred AS (
-  SELECT predicted_lang AS cls, COUNT(*) AS predicted_n FROM j GROUP BY 1
-),
+    return f"""{_langid_ctes()}
 cls AS (
   SELECT COALESCE(t.cls, p.cls) AS cls,
          CAST(COALESCE(t.support, 0) AS BIGINT) AS support,
@@ -2806,33 +2753,12 @@ def x33_judge_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically.  Shape for 100 TB: the x23 scan — in-row scorer +
     two class-cardinality aggs + a class-cardinality outer join —
     then a 1-row integer reduction."""
-    docs = load_table(spark, sf_dir, "documents")
-    pred = text.language_id(docs, "doc_id", "text").select(
-        "doc_id", "predicted_lang"
-    )
-    j = pred.join(
-        docs.select("doc_id", F.col("lang").alias("true_lang")), "doc_id"
-    )
-    per_true = j.groupBy(F.col("true_lang").alias("cls")).agg(
-        F.count(F.lit(1)).alias("support"),
-        F.sum(
-            (F.col("predicted_lang") == F.col("true_lang")).cast("long")
-        ).alias("tp"),
-    )
-    per_pred = j.groupBy(F.col("predicted_lang").alias("cls")).agg(
-        F.count(F.lit(1)).alias("predicted_n")
-    )
-    cls = (
-        per_true.join(per_pred, "cls", "full_outer")
-        .select(
-            F.coalesce(F.col("support"), F.lit(0)).cast("bigint").alias(
-                "support"
-            ),
-            F.coalesce(F.col("tp"), F.lit(0)).cast("bigint").alias("tp"),
-            F.coalesce(F.col("predicted_n"), F.lit(0))
-            .cast("bigint")
-            .alias("predicted_n"),
-        )
+    cls = _langid_confusion(spark, sf_dir).select(
+        F.coalesce(F.col("support"), F.lit(0)).cast("bigint").alias("support"),
+        F.coalesce(F.col("tp"), F.lit(0)).cast("bigint").alias("tp"),
+        F.coalesce(F.col("predicted_n"), F.lit(0))
+        .cast("bigint")
+        .alias("predicted_n"),
     )
     tot = cls.agg(
         F.sum("support").cast("bigint").alias("n"),
@@ -2866,31 +2792,8 @@ def x33_judge_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _d11_oracle() -> str:
-    h1 = _hex_horner("d", 1, 15)
-    h2 = _hex_horner("d", 17, 12)
-    mins = ",\n         ".join(
-        f"min(h1 + {i} * h2) AS mh{i}" for i in range(_NUM_HASHES)
-    )
-    rows = _NUM_HASHES // _BANDS
-    band_selects = []
-    for b in range(_BANDS):
-        parts = " || '|' || ".join(f"mh{b * rows + r}" for r in range(rows))
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_idx, md5({parts}) AS bh FROM sig"
-        )
-    bands = " UNION ALL ".join(band_selects)
-    matches = " + ".join(
-        f"(CASE WHEN x.mh{i} = y.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(_NUM_HASHES)
-    )
-    return f"""
-WITH {_SHINGLES_CTE},
-hashed AS (
-  SELECT doc_id, {h1} AS h1, {h2} AS h2
-  FROM (SELECT doc_id, md5(shingle) AS d FROM sh)
-),
-sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id),
-bands AS ({bands}),
+    sig_ctes, matches = _minhash_sig_ctes()
+    return f"""{sig_ctes}
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a

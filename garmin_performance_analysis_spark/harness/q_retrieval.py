@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 from ..pipelines import dedup, prep, retrieval, similarity, text
 from ..sources.tables import load_table
-from .q_pipeline import _hex_horner
+from .q_pipeline import _cos_expr, _hex_horner
+from .registry import dec_avg, dec_sum
 from .registry import r6 as _r6
 from .registry import register
 
@@ -112,10 +113,9 @@ def x7_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "d6_decontamination",
-    oracle="""
-WITH words AS (
+# d6/d9: distinct word 5-gram shingles per document, split into the
+# benchmark probe set (doc_id % 23 == 0) and the corpus rows.
+_PROBE_SHINGLE_CTES = """words AS (
   SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
 ),
 sh AS (
@@ -126,7 +126,13 @@ sh AS (
   FROM words WHERE len(w) >= 5
 ),
 probe AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 23 = 0),
-corpus AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 23 != 0),
+corpus AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 23 != 0)"""
+
+
+@register(
+    "d6_decontamination",
+    oracle=f"""
+WITH {_PROBE_SHINGLE_CTES},
 per_doc AS (SELECT doc_id, COUNT(*) AS n_shingles FROM corpus GROUP BY 1),
 hits AS (
   SELECT c.doc_id, COUNT(*) AS n_hits
@@ -152,22 +158,9 @@ def d6_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _d9_oracle() -> str:
-    from .q_pipeline import _hex_horner
-
     h = _hex_horner("d", 1, 15)
     return f"""
-WITH words AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           generate_series(1, len(w) - 4),
-           i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]))) AS shingle
-  FROM words WHERE len(w) >= 5
-),
-probe AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 23 = 0),
-corpus AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 23 != 0),
+WITH {_PROBE_SHINGLE_CTES},
 js AS (SELECT unnest(generate_series(0, 2)) AS j),
 ppos AS (
   SELECT DISTINCT pos FROM (
@@ -1183,8 +1176,6 @@ def c14_top_p_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x16_oracle() -> str:
-    from .q_pipeline import _hex_horner
-
     h = _hex_horner("d", 1, 8)
     return f"""
 WITH toks AS (
@@ -1307,8 +1298,6 @@ def c15_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o8_oracle() -> str:
-    from .q_pipeline import _cos_expr
-
     cos = _cos_expr("e.embedding", "q.qe")
     return f"""
 WITH {_bm25_ctes()},
@@ -1490,8 +1479,6 @@ def x17_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o9_oracle() -> str:
-    from .q_pipeline import _cos_expr
-
     cos = _cos_expr("e.embedding", "q.qe")
     return f"""
 WITH {_bm25_ctes()},
@@ -1654,9 +1641,37 @@ def c16_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _loglog_ols(pts: DataFrame):
+    """Closed-form OLS of ``y`` on ``x`` over the points frame with
+    DECIMAL(38,18)-exact moment sums (the x18/x19 power-law fits):
+    the 1-row moments frame plus its n, slope and intercept Columns."""
+    fit = pts.agg(
+        F.count(F.lit(1)).alias("n"),
+        dec_sum(F.col("x"), scale=18, precision=38).alias("sx"),
+        dec_sum(F.col("y"), scale=18, precision=38).alias("sy"),
+        dec_sum(F.col("x") * F.col("x"), scale=18, precision=38).alias("sxx"),
+        dec_sum(F.col("x") * F.col("y"), scale=18, precision=38).alias("sxy"),
+    )
+    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
+    slope = (n * F.col("sxy") - sx * sy) / (n * F.col("sxx") - sx * sx)
+    return fit, n, slope, (sy - slope * sx) / n
+
+
+# x18/x19: DECIMAL(38,18)-exact moment sums of the ``pts`` (x, y) frame
+# (the oracle mirror of ``_loglog_ols``).
+_LOGLOG_FIT_CTE = """fit AS (
+  SELECT COUNT(*) AS n,
+         CAST(SUM(CAST(x AS DECIMAL(38,18))) AS DOUBLE) AS sx,
+         CAST(SUM(CAST(y AS DECIMAL(38,18))) AS DOUBLE) AS sy,
+         CAST(SUM(CAST(x * x AS DECIMAL(38,18))) AS DOUBLE) AS sxx,
+         CAST(SUM(CAST(x * y AS DECIMAL(38,18))) AS DOUBLE) AS sxy
+  FROM pts
+)"""
+
+
 @register(
     "x18_heaps_law",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
   FROM documents
@@ -1674,14 +1689,7 @@ pts AS (
   SELECT ln(cum_toks) AS x, ln(cum_vocab) AS y
   FROM pts0 WHERE cum_toks > 0 AND cum_vocab > 0
 ),
-fit AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(38,18))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,18))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,18))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,18))) AS DOUBLE) AS sxy
-  FROM pts
-)
+{_LOGLOG_FIT_CTE}
 SELECT CAST(n AS BIGINT) AS n_points,
        ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS beta,
        ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6)
@@ -1735,20 +1743,7 @@ def x18_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("cum_toks").cast("double")).alias("x"),
         F.log(F.col("cum_vocab").cast("double")).alias("y"),
     )
-
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,18)")).cast("double")
-
-    fit = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("x")).alias("sxx"),
-        dsum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    beta = (n * F.col("sxy") - sx * sy) / (n * F.col("sxx") - sx * sx)
-    log_k = (sy - beta * sx) / n
+    fit, n, beta, log_k = _loglog_ols(pts)
     return fit.select(
         n.cast("bigint").alias("n_points"),
         _r6(beta).alias("beta"),
@@ -1926,29 +1921,18 @@ def x19_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _v11_oracle() -> str:
-    dot = (
-        "list_sum(list_transform(generate_series(1, {n}),"
-        " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
-
-    def cos(a: str, b: str, n: int) -> str:
-        d = dot.format(a=a, b=b, n=n)
-        na = "sqrt(" + dot.format(a=a, b=a, n=n) + ")"
-        nb = "sqrt(" + dot.format(a=b, b=b, n=n) + ")"
-        return f"({d}) / ({na} * {nb})"
-
     return f"""
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
 cand AS (
   SELECT e.vec_id, e.embedding, q.qe,
-         {cos('e.embedding', 'q.qe', 16)} AS p_cosine
+         {_cos_expr('e.embedding', 'q.qe', 16)} AS p_cosine
   FROM embeddings e, q
   WHERE e.vec_id <> 0
   ORDER BY p_cosine DESC, e.vec_id ASC
   LIMIT 50
 ),
 rer AS (
-  SELECT vec_id, p_cosine, {cos('embedding', 'qe', 64)} AS cosine FROM cand
+  SELECT vec_id, p_cosine, {_cos_expr('embedding', 'qe', 64)} AS cosine FROM cand
 ),
 ranked AS (
   SELECT vec_id, ROUND(p_cosine, 6) AS p_cosine, ROUND(cosine, 6) AS cosine,
@@ -1984,7 +1968,7 @@ def v11_prefix_dim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "x21_zipf_fit",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT unnest(string_split(lower(text), ' ')) AS term FROM documents
 ),
@@ -1993,14 +1977,7 @@ ranked AS (
   SELECT tf, ROW_NUMBER() OVER (ORDER BY tf DESC, term ASC) AS rk FROM ctf
 ),
 pts AS (SELECT ln(rk) AS x, ln(tf) AS y FROM ranked),
-fit AS (
-  SELECT COUNT(*) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(38,18))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(38,18))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,18))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,18))) AS DOUBLE) AS sxy
-  FROM pts
-)
+{_LOGLOG_FIT_CTE}
 SELECT CAST(n AS BIGINT) AS n_terms,
        ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
        ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6)
@@ -2040,23 +2017,11 @@ def x21_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("rk").cast("double")).alias("x"),
         F.log(F.col("tf").cast("double")).alias("y"),
     )
-
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,18)")).cast("double")
-
-    fit = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("x")).alias("sxx"),
-        dsum(F.col("x") * F.col("y")).alias("sxy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    slope = (n * F.col("sxy") - sx * sy) / (n * F.col("sxx") - sx * sx)
+    fit, n, slope, log_c = _loglog_ols(pts)
     return fit.select(
         n.cast("bigint").alias("n_terms"),
         _r6(slope).alias("zipf_slope"),
-        _r6((sy - slope * sx) / n).alias("log_c"),
+        _r6(log_c).alias("log_c"),
     )
 
 
@@ -2134,25 +2099,14 @@ def o12_kwic_snippets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o13_oracle() -> str:
-    dot = (
-        "list_sum(list_transform(generate_series(1, {n}),"
-        " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
-
-    def cos(a: str, b: str, n: int) -> str:
-        d = dot.format(a=a, b=b, n=n)
-        na = "sqrt(" + dot.format(a=a, b=a, n=n) + ")"
-        nb = "sqrt(" + dot.format(a=b, b=b, n=n) + ")"
-        return f"({d}) / ({na} * {nb})"
-
     return f"""
 WITH q AS (
   SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10
 ),
 pairs AS (
   SELECT q.qid, e.vec_id, e.embedding, q.qe,
-         {cos('e.embedding', 'q.qe', 16)} AS p_cosine,
-         {cos('e.embedding', 'q.qe', 64)} AS cosine
+         {_cos_expr('e.embedding', 'q.qe', 16)} AS p_cosine,
+         {_cos_expr('e.embedding', 'q.qe', 64)} AS cosine
   FROM embeddings e, q WHERE e.vec_id <> q.qid
 ),
 short AS (
@@ -2194,32 +2148,12 @@ FROM per_q, macro
 """
 
 
-@register(
-    "o13_mrr_hit_eval",
-    oracle=_o13_oracle(),
-    tags=("retrieval", "evaluation", "batch"),
-)
-def o13_mrr_hit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MRR@10 + hit-rate@10 of the Matryoshka serving path (v11's
-    16-dim prefix shortlist -> exact re-rank) against EXACT-nearest-
-    neighbor gold, over a query SET — the per-query serving audit
-    next to o9's single-query graded nDCG (eval family: does the
-    dimension-truncated first pass ever drop the true NN, and when it
-    survives, does the re-rank put it first?).  Gold is the exact
-    full-dimension top-1 per query, so the verdict needs no sampling
-    caveat; per-query rows carry the found rank (0 = dropped by the
-    shortlist) and reciprocal rank, with the macro MRR/hit-rate
-    broadcast onto every row (the x24 scalar convention; DECIMAL sum
-    over per-query 6dp reciprocals keeps the mean order-independent).
-
-    Shape: the query set is FIXED (the first 10 vec_ids — a serving
-    benchmark is a fixed artifact, it does not grow with the corpus),
-    broadcast against the corpus; the shortlist and gold rankings are
-    query-KEYED windows (never global), so eval cost is LINEAR in N.
-    Honest cost note: exact gold is the expensive half — |Q| x N
-    full-dim cosines; production would compute it once and store it,
-    and the SYSTEM side still only touches prefix bytes + 50 full
-    vectors per query."""
+def _prefix_shortlist_rankings(spark: SparkSession, sf_dir: str):
+    """The o13/o14 serving audit's frames: the FIXED 10-query set
+    ``(qid, _qv, _qp)`` broadcast against the corpus, the system
+    ranking ``rk`` (16-dim prefix top-50 shortlist re-ranked by full
+    cosine) and the exact full-cosine ranking ``grk`` that defines
+    gold — both query-keyed windows, never global."""
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2256,10 +2190,38 @@ def o13_mrr_hit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prk") <= 50)
         .withColumn("rk", F.row_number().over(w_full))
     )
-    gold = (
-        pairs.withColumn("grk", F.row_number().over(w_full))
-        .filter(F.col("grk") == 1)
-        .select("qid", F.col("vec_id").alias("gold_id"))
+    return qdf, sys_rank, pairs.withColumn("grk", F.row_number().over(w_full))
+
+
+@register(
+    "o13_mrr_hit_eval",
+    oracle=_o13_oracle(),
+    tags=("retrieval", "evaluation", "batch"),
+)
+def o13_mrr_hit_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MRR@10 + hit-rate@10 of the Matryoshka serving path (v11's
+    16-dim prefix shortlist -> exact re-rank) against EXACT-nearest-
+    neighbor gold, over a query SET — the per-query serving audit
+    next to o9's single-query graded nDCG (eval family: does the
+    dimension-truncated first pass ever drop the true NN, and when it
+    survives, does the re-rank put it first?).  Gold is the exact
+    full-dimension top-1 per query, so the verdict needs no sampling
+    caveat; per-query rows carry the found rank (0 = dropped by the
+    shortlist) and reciprocal rank, with the macro MRR/hit-rate
+    broadcast onto every row (the x24 scalar convention; DECIMAL sum
+    over per-query 6dp reciprocals keeps the mean order-independent).
+
+    Shape: the query set is FIXED (the first 10 vec_ids — a serving
+    benchmark is a fixed artifact, it does not grow with the corpus),
+    broadcast against the corpus; the shortlist and gold rankings are
+    query-KEYED windows (never global), so eval cost is LINEAR in N.
+    Honest cost note: exact gold is the expensive half — |Q| x N
+    full-dim cosines; production would compute it once and store it,
+    and the SYSTEM side still only touches prefix bytes + 50 full
+    vectors per query."""
+    _, sys_rank, gold_rank = _prefix_shortlist_rankings(spark, sf_dir)
+    gold = gold_rank.filter(F.col("grk") == 1).select(
+        "qid", F.col("vec_id").alias("gold_id")
     )
     hit = sys_rank.filter(F.col("rk") <= 10).select("qid", "vec_id", "rk")
     per_q = gold.join(
@@ -2479,9 +2441,7 @@ def v12_mips_norm_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
             [],
             "vec_id long, dot double, rk int, n_full_dots long, prune_rate double",
         )
-    qlit = "array(" + ", ".join(
-        f"CAST({float(v)} AS FLOAT)" for v in qrow[0]
-    ) + ")"
+    qlit = similarity._float_array_sql(qrow[0])
 
     def _with_q(df: DataFrame) -> DataFrame:
         return df.withColumn("_qv", F.expr(qlit))
@@ -2811,7 +2771,6 @@ def x30_unigram_js_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of the source-cardinality totals, no windows, no
     collects."""
     from ..plans.layout import spread_for_compute
-    from .registry import dec_sum
 
     docs = load_table(spark, sf_dir, "documents")
     toks = spread_for_compute(docs, "doc_id").select(
@@ -3239,25 +3198,14 @@ def x32_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _o14_oracle() -> str:
-    dot = (
-        "list_sum(list_transform(generate_series(1, {n}),"
-        " i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
-
-    def cos(a: str, b: str, n: int) -> str:
-        d = dot.format(a=a, b=b, n=n)
-        na = "sqrt(" + dot.format(a=a, b=a, n=n) + ")"
-        nb = "sqrt(" + dot.format(a=b, b=b, n=n) + ")"
-        return f"({d}) / ({na} * {nb})"
-
     return f"""
 WITH q AS (
   SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10
 ),
 pairs AS (
   SELECT q.qid, e.vec_id,
-         {cos('e.embedding', 'q.qe', 16)} AS p_cosine,
-         {cos('e.embedding', 'q.qe', 64)} AS cosine
+         {_cos_expr('e.embedding', 'q.qe', 16)} AS p_cosine,
+         {_cos_expr('e.embedding', 'q.qe', 64)} AS cosine
   FROM embeddings e, q WHERE e.vec_id <> q.qid
 ),
 sys AS (
@@ -3333,47 +3281,9 @@ def o14_map_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     store-once expensive half."""
     from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    qdf = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("_qv"),
-        F.slice(F.col("embedding"), 1, 16).alias("_qp"),
-    )
-    pairs = (
-        emb.select("vec_id", "embedding", F.slice("embedding", 1, 16).alias("_pv"))
-        .crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            (
-                similarity._dot("_pv", "_qp")
-                / (similarity._norm("_pv") * similarity._norm("_qp"))
-            ).alias("p_cosine"),
-            (
-                similarity._dot("embedding", "_qv")
-                / (similarity._norm("embedding") * similarity._norm("_qv"))
-            ).alias("cosine"),
-        )
-    )
-    w_pref = Window.partitionBy("qid").orderBy(
-        F.col("p_cosine").desc(), F.col("vec_id").asc()
-    )
-    w_full = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    sys_rank = (
-        pairs.withColumn("prk", F.row_number().over(w_pref))
-        .filter(F.col("prk") <= 50)
-        .withColumn("rk", F.row_number().over(w_full))
-        .filter(F.col("rk") <= 10)
-        .select("qid", "vec_id", "rk")
-    )
-    gold = (
-        pairs.withColumn("grk", F.row_number().over(w_full))
-        .filter(F.col("grk") <= 5)
-        .select("qid", "vec_id")
-    )
+    qdf, ranked, gold_rank = _prefix_shortlist_rankings(spark, sf_dir)
+    sys_rank = ranked.filter(F.col("rk") <= 10).select("qid", "vec_id", "rk")
+    gold = gold_rank.filter(F.col("grk") <= 5).select("qid", "vec_id")
     w_hit = Window.partitionBy("qid").orderBy(F.col("rk").asc())
     hits = (
         sys_rank.join(gold, ["qid", "vec_id"])
@@ -3485,8 +3395,6 @@ def v13_centroid_drift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the label×64 centroid frame (bounded), checkpointed once for its
     three consumers; the pair join fans out by label-count², never
     by N."""
-    from .registry import dec_avg, dec_sum
-
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.size(F.col("embedding")) == 64
     )

@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 
 from ..operators.windows import sustained_islands, zscore
 from ..sources.tables import load_table
+from .q_join import _gap_sessions
+from .registry import dec_avg, dec_sum, q6
 from .registry import r6 as _r6
 from .registry import register
 
@@ -168,17 +170,7 @@ def t9_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     single hash shuffle on user_id, no cross-partition state (the
     streaming sibling is ``streaming/stateful.py``'s session logic)."""
     ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    marked = ev.withColumn(
-        "session_seq",
-        F.sum(
-            F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-        ).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
+    marked, epoch = _gap_sessions(ev)
     return marked.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -246,10 +238,9 @@ def j10_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "value")
 
 
-@register(
-    "w11_scd2_intervals",
-    oracle="""
-WITH snap AS (
+# SCD2 runs over the quantized value band: one row per (user, version)
+# with its first valid_from — w11's output and j14's interval source.
+_SCD2_RUNS = """snap AS (
   SELECT user_id, ts, CAST(floor(value) AS BIGINT) % 5 AS vband
   FROM (
     SELECT user_id, ts, value,
@@ -274,7 +265,13 @@ runs AS (
   SELECT user_id, version, MIN(vband) AS vband,
          MIN(ts) AS valid_from
   FROM versioned GROUP BY 1, 2
-)
+)"""
+
+
+@register(
+    "w11_scd2_intervals",
+    oracle=f"""
+WITH {_SCD2_RUNS}
 SELECT user_id, vband, CAST(version AS BIGINT) AS version, valid_from,
        lead(valid_from) OVER (PARTITION BY user_id ORDER BY version)
          AS valid_to
@@ -288,19 +285,24 @@ def w11_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval per DISTINCT run — redelivered unchanged snapshots must
     NOT mint versions; ``operators/windows.scd2_intervals``.  valid_to
     is null on each user's current version."""
+    ev = load_table(spark, sf_dir, "events")
+    return _vband_intervals(ev).select(
+        "user_id", "vband", "version", "valid_from", "valid_to"
+    )
+
+
+def _vband_intervals(ev: DataFrame) -> DataFrame:
+    """The w11/j14 SCD2 history: the latest snapshot per (user, ts)
+    (event_id tiebreak), quantized to ``vband = floor(value) % 5``,
+    folded into one validity interval per distinct run."""
     from ..operators.windows import latest_per_key, scd2_intervals
 
-    ev = load_table(spark, sf_dir, "events")
-    snap = latest_per_key(
-        ev, ["user_id", "ts"], [F.col("event_id")]
-    ).select(
+    snap = latest_per_key(ev, ["user_id", "ts"], [F.col("event_id")]).select(
         "user_id",
         "ts",
         (F.floor("value").cast("bigint") % 5).alias("vband"),
     )
-    return scd2_intervals(snap, ["user_id"], "ts", ["vband"]).select(
-        "user_id", "vband", "version", "valid_from", "valid_to"
-    )
+    return scd2_intervals(snap, ["user_id"], "ts", ["vband"])
 
 
 @register(
@@ -340,7 +342,6 @@ def t10_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     features whose frames assume one row per day; calendar built
     in-row with sequence()+explode (no calendar-table cross join);
     ``operators/windows.gap_fill_ffill``."""
-    from ..harness.registry import dec_avg
     from ..operators.windows import gap_fill_ffill
 
     ev = load_table(spark, sf_dir, "events")
@@ -398,33 +399,8 @@ def t11_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_J14_INTERVALS = """
-snap AS (
-  SELECT user_id, ts, CAST(floor(value) AS BIGINT) % 5 AS vband
-  FROM (
-    SELECT user_id, ts, value,
-           row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id) AS rn
-    FROM events)
-  WHERE rn = 1
-),
-marked AS (
-  SELECT user_id, ts, vband,
-         CASE WHEN lag(ts) OVER w IS NULL THEN 1
-              WHEN vband IS DISTINCT FROM lag(vband) OVER w THEN 1
-              ELSE 0 END AS new_run
-  FROM snap
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-versioned AS (
-  SELECT *, SUM(new_run) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) AS version
-  FROM marked
-),
-runs AS (
-  SELECT user_id, version, MIN(vband) AS vband,
-         MIN(ts) AS valid_from
-  FROM versioned GROUP BY 1, 2
-),
+_J14_INTERVALS = f"""
+{_SCD2_RUNS},
 intervals AS (
   SELECT user_id, vband, version, valid_from,
          lead(valid_from) OVER (PARTITION BY user_id ORDER BY version)
@@ -459,15 +435,9 @@ def j14_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoop).  The same reduction is the 100 TB shape for
     any temporal dimension lookup."""
     from ..operators.joins import backward_asof_join
-    from ..operators.windows import latest_per_key, scd2_intervals
 
     ev = load_table(spark, sf_dir, "events")
-    snap = latest_per_key(ev, ["user_id", "ts"], [F.col("event_id")]).select(
-        "user_id",
-        "ts",
-        (F.floor("value").cast("bigint") % 5).alias("vband"),
-    )
-    dim = scd2_intervals(snap, ["user_id"], "ts", ["vband"]).select(
+    dim = _vband_intervals(ev).select(
         "user_id", F.col("valid_from"), "vband", "version"
     )
     facts = ev.select("user_id", "event_id", "ts", "value")
@@ -479,15 +449,30 @@ def j14_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "w12_ewma_halflife",
-    oracle="""
-WITH daily AS (
+# The daily grid most series oracles start from: each user's per-day
+# DECIMAL-exact mean event value (mirrors ``_daily_mean``).
+_DAILY_CTE = """daily AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
          CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
            AS day_value
   FROM events GROUP BY 1, 2
-),
+)"""
+
+
+def _daily_mean(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Each user's per-day DECIMAL-exact mean event value as
+    ``(user_id, day, <name>)`` — the daily grid the series entries
+    start from."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+        dec_avg(F.col("value")).alias(name)
+    )
+
+
+@register(
+    "w12_ewma_halflife",
+    oracle=f"""
+WITH {_DAILY_CTE},
 idx AS (
   SELECT user_id, day, day_value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) - 1 AS i
@@ -523,12 +508,7 @@ def w12_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     and cumulative-sum windows."""
     from pyspark.sql import Window
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.to_date("ts").alias("day")
-    ).agg(dec_avg(F.col("value")).alias("day_value"))
+    daily = _daily_mean(spark, sf_dir, "day_value")
     w = Window.partitionBy("user_id").orderBy("day")
     i = F.row_number().over(w) - 1
     idx = daily.withColumn("i", i)
@@ -555,9 +535,6 @@ def w12_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DuckDB's scaled-double round — measured at sf0.01 row 545), so
     # both sides quantize with the IDENTICAL IEEE expression
     # floor(x·1e6 + 0.5)/1e6 instead of ROUND (the a15 precedent).
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
-
     return idx.select(
         "user_id",
         F.date_format("day", "yyyy-MM-dd").alias("day"),
@@ -568,13 +545,8 @@ def w12_ewma_halflife(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w15_ewma_blocked",
-    oracle="""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
-           AS day_value
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {_DAILY_CTE},
 idx AS (
   SELECT user_id, day, day_value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) - 1 AS i
@@ -641,16 +613,8 @@ def w15_ewma_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global windows, no recursion."""
     from ..operators.windows import ewma_halflife_blocked
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id", F.to_date("ts").alias("day")
-    ).agg(dec_avg(F.col("value")).alias("day_value"))
+    daily = _daily_mean(spark, sf_dir, "day_value")
     out = ewma_halflife_blocked(daily, ["user_id"], "day", "day_value", block=8)
-
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
 
     return out.select(
         "user_id",
@@ -662,13 +626,8 @@ def w15_ewma_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w13_rolling_median_7d",
-    oracle="""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
-           AS day_value
-  FROM events GROUP BY 1, 2
-)
+    oracle=f"""
+WITH {_DAILY_CTE}
 SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
        FLOOR(day_value * 1000000.0 + 0.5) / 1000000.0 AS day_value,
        FLOOR(MEDIAN(day_value) OVER (
@@ -692,20 +651,12 @@ def w13_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical floor(x·1e6 + 0.5) expression (the w12 lesson)."""
     from pyspark.sql import Window
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("day_value")
-    )
+    daily = _daily_mean(spark, sf_dir, "day_value")
     w = (
         Window.partitionBy("user_id")
         .orderBy("day")
         .rowsBetween(-6, Window.currentRow)
     )
-
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
 
     return daily.select(
         "user_id",
@@ -719,13 +670,8 @@ def w13_rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t13_seasonal_naive_backtest",
-    oracle="""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
-           AS day_value
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {_DAILY_CTE},
 scored AS (
   SELECT a.user_id, ABS(a.day_value - f.day_value) AS abs_err
   FROM daily a JOIN daily f
@@ -747,12 +693,7 @@ def t13_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day−7) — date-shifted equi keys, NOT a range join — plus
     one grouped DECIMAL mean; two exchanges total, co-partitioned at
     scale."""
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("day_value")
-    )
+    daily = _daily_mean(spark, sf_dir, "day_value")
     fc = daily.select(
         "user_id",
         F.date_add("day", 7).alias("day"),
@@ -777,13 +718,8 @@ def t13_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t14_cusum_drift",
-    oracle="""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
-           AS day_value
-  FROM events GROUP BY 1, 2
-),
+    oracle=f"""
+WITH {_DAILY_CTE},
 per_user AS (
   SELECT user_id,
          CAST(SUM(CAST(day_value AS DECIMAL(30,12))) AS DOUBLE)
@@ -833,12 +769,7 @@ def t14_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the identical expression in both engines."""
     from pyspark.sql import Window
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("day_value")
-    )
+    daily = _daily_mean(spark, sf_dir, "day_value")
     from .registry import dec_std
 
     w_cum = (
@@ -860,9 +791,6 @@ def t14_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s_raw = F.col("r") - F.least(F.lit(0.0), F.min("r").over(w_cum))
 
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
-
     return cum.select(
         "user_id",
         F.date_format("day", "yyyy-MM-dd").alias("day"),
@@ -874,21 +802,32 @@ def t14_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "t15_autocorr_lag1",
-    oracle="""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*)
-           AS day_value
-  FROM events GROUP BY 1, 2
-),
-pairs AS (
-  SELECT user_id, day_value AS x,
-         LEAD(day_value) OVER (PARTITION BY user_id ORDER BY day) AS y
-  FROM daily
-),
-m AS (
+def _lag1_moments(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lag-1 pairs of each user's daily mean (one LEAD window) reduced
+    to the DECIMAL-exact Pearson moment sums ``(user_id, n, sx, sy,
+    sxy, sxx, syy)`` — t15's autocorrelation kernel, reused by t22."""
+    from pyspark.sql import Window
+
+    daily = _daily_mean(spark, sf_dir, name)
+    w = Window.partitionBy("user_id").orderBy("day")
+    pairs = daily.select(
+        "user_id",
+        F.col(name).alias("x"),
+        F.lead(name).over(w).alias("y"),
+    ).filter(F.col("y").isNotNull())
+    return pairs.groupBy("user_id").agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        dec_sum(F.col("x"), scale=12, precision=30).alias("sx"),
+        dec_sum(F.col("y"), scale=12, precision=30).alias("sy"),
+        dec_sum(F.col("x") * F.col("y"), scale=12, precision=38).alias("sxy"),
+        dec_sum(F.col("x") * F.col("x"), scale=12, precision=38).alias("sxx"),
+        dec_sum(F.col("y") * F.col("y"), scale=12, precision=38).alias("syy"),
+    )
+
+
+# t15/t22: DECIMAL-exact Pearson moment sums of the lag-1 ``pairs``
+# (the oracle mirror of ``_lag1_moments``).
+_LAG1_MOMENTS_CTE = """m AS (
   SELECT user_id,
          CAST(COUNT(*) AS DOUBLE) AS n,
          CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) AS sx,
@@ -897,7 +836,19 @@ m AS (
          CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
          CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
   FROM pairs WHERE y IS NOT NULL GROUP BY user_id
-)
+)"""
+
+
+@register(
+    "t15_autocorr_lag1",
+    oracle=f"""
+WITH {_DAILY_CTE},
+pairs AS (
+  SELECT user_id, day_value AS x,
+         LEAD(day_value) OVER (PARTITION BY user_id ORDER BY day) AS y
+  FROM daily
+),
+{_LAG1_MOMENTS_CTE}
 SELECT user_id, CAST(n AS BIGINT) AS n_pairs,
        ROUND(CASE WHEN (n*sxx - sx*sx) > 0 AND (n*syy - sy*sy) > 0
                   THEN (n*sxy - sx*sy)
@@ -915,32 +866,7 @@ def t15_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     the m5-style DECIMAL moment sums give Pearson r in closed form —
     order-independent, oracle bit-matched at 6dp.  One keyed exchange
     total (the daily agg and the LEAD share the user_id hash)."""
-    from pyspark.sql import Window
-
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("day_value")
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    pairs = daily.select(
-        "user_id",
-        F.col("day_value").alias("x"),
-        F.lead("day_value").over(w).alias("y"),
-    ).filter(F.col("y").isNotNull())
-
-    def dsum(c, p=30):
-        return F.sum(c.cast(f"decimal({p},12)")).cast("double")
-
-    m = pairs.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("y"), 38).alias("sxy"),
-        dsum(F.col("x") * F.col("x"), 38).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 38).alias("syy"),
-    )
+    m = _lag1_moments(spark, sf_dir, "day_value")
     n, sx, sy, sxy, sxx, syy = (F.col(c) for c in ["n", "sx", "sy", "sxy", "sxx", "syy"])
     r = (n * sxy - sx * sy) / (
         F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
@@ -1009,15 +935,7 @@ def w14_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     dayofweek (both Sunday-based)."""
     from pyspark.sql import Window
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("day_value")
-    )
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
-
+    daily = _daily_mean(spark, sf_dir, "day_value")
     # every DECIMAL cast sees only 6dp-quantized doubles: a 12dp cast
     # of an ARBITRARY double rounds in Spark but truncates in DuckDB
     # (±1e-12/row — measured flipping one residual of 40k at sf0.1);
@@ -1059,10 +977,8 @@ def w14_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_BUCKETS = 32
 
 
-@register(
-    "t16_holt_linear",
-    oracle="""
-WITH RECURSIVE daily AS (
+# t16/t17: the daily mean ``x`` numbered 1.. per user in day order.
+_DAILY_IDX_CTES = """daily AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
          CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS x
   FROM events GROUP BY 1, 2
@@ -1071,7 +987,13 @@ idx AS (
   SELECT user_id, day, x,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
   FROM daily
-),
+)"""
+
+
+@register(
+    "t16_holt_linear",
+    oracle=f"""
+WITH RECURSIVE {_DAILY_IDX_CTES},
 s AS (
   SELECT user_id, rn, day, x, x AS l, CAST(0.0 AS DOUBLE) AS b
   FROM idx WHERE rn = 1
@@ -1112,12 +1034,7 @@ def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets)."""
     import pandas as pd
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("x")
-    )
+    daily = _daily_mean(spark, sf_dir, "x")
 
     # group-PACKING: one pandas frame per user costs an Arrow
     # round-trip per tiny group (4k groups of ~30 rows at sf0.1 —
@@ -1160,9 +1077,6 @@ def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
-
     return out.select(
         "user_id", "day", q6(F.col("level")).alias("level"),
         q6(F.col("trend")).alias("trend"),
@@ -1171,17 +1085,8 @@ def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "t17_holt_winters",
-    oracle="""
-WITH RECURSIVE daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         CAST(SUM(CAST(value AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS x
-  FROM events GROUP BY 1, 2
-),
-idx AS (
-  SELECT user_id, day, x,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day) AS rn
-  FROM daily
-),
+    oracle=f"""
+WITH RECURSIVE {_DAILY_IDX_CTES},
 s AS (
   SELECT user_id, rn, day, x, x AS l, CAST(0.0 AS DOUBLE) AS b,
          [CAST(0.0 AS DOUBLE),0.0,0.0,0.0,0.0,0.0,0.0] AS sl
@@ -1228,12 +1133,7 @@ def t17_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed bucket key, then embarrassingly parallel per-key scans."""
     import pandas as pd
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("x")
-    )
+    daily = _daily_mean(spark, sf_dir, "x")
 
     # group-packed like t16: ~125 users per Arrow batch, per-user
     # state reset on the key change inside the sorted batch
@@ -1285,9 +1185,6 @@ def t17_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "seasonal double",
         )
     )
-
-    def q6(c):
-        return F.floor(c * 1_000_000.0 + 0.5) / 1_000_000.0
 
     return out.select(
         "user_id",
@@ -1482,13 +1379,10 @@ def t19_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     — diagnostics cost one scan over the component frame."""
     base = w14_seasonal_decompose(spark, sf_dir)
 
-    def dsum(c, p=30):
-        return F.sum(c.cast(f"decimal({p},12)")).cast("double")
-
     def var_cols(col, tag):
         return [
-            dsum(col).alias(f"sx_{tag}"),
-            dsum(col * col, 38).alias(f"sxx_{tag}"),
+            dec_sum(col, scale=12, precision=30).alias(f"sx_{tag}"),
+            dec_sum(col * col, scale=12, precision=38).alias(f"sxx_{tag}"),
         ]
 
     m = base.groupBy("user_id").agg(
@@ -1731,12 +1625,7 @@ def t21_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final agg; per-user state is the 7-deep lag buffer."""
     from pyspark.sql import Window
 
-    from .registry import dec_avg
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("dv")
-    )
+    daily = _daily_mean(spark, sf_dir, "dv")
     wp = Window.partitionBy("user_id")
     wo = Window.partitionBy("user_id").orderBy("day")
     xbar = (
@@ -1750,17 +1639,18 @@ def t21_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.lag("dv", k).over(wo).alias(f"x{k}") for k in range(1, 8)],
     )
 
-    def dsum(c):
-        return F.sum(c.cast("decimal(38,12)")).cast("double")
-
     m = centered.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        dsum((F.col("dv") - F.col("xbar")) * (F.col("dv") - F.col("xbar"))).alias(
-            "d"
-        ),
+        dec_sum(
+            (F.col("dv") - F.col("xbar")) * (F.col("dv") - F.col("xbar")),
+            scale=12,
+            precision=38,
+        ).alias("d"),
         *[
-            dsum(
-                (F.col("dv") - F.col("xbar")) * (F.col(f"x{k}") - F.col("xbar"))
+            dec_sum(
+                (F.col("dv") - F.col("xbar")) * (F.col(f"x{k}") - F.col("xbar")),
+                scale=12,
+                precision=38,
             ).alias(f"s{k}")
             for k in range(1, 8)
         ],
@@ -1812,16 +1702,7 @@ pairs AS (
          LEAD(dv) OVER (PARTITION BY user_id ORDER BY day) AS y
   FROM daily
 ),
-m AS (
-  SELECT user_id,
-         CAST(COUNT(*) AS DOUBLE) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(30,12))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(y AS DECIMAL(30,12))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy
-  FROM pairs WHERE y IS NOT NULL GROUP BY user_id
-),
+{_LAG1_MOMENTS_CTE},
 stat AS (
   SELECT user_id, n,
          (n*sxy - sx*sy) / (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy)) AS r
@@ -1886,30 +1767,8 @@ def t22_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..operators.windows import bounded_partition_key
-    from .registry import dec_avg
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
-        dec_avg(F.col("value")).alias("dv")
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    pairs = daily.select(
-        "user_id",
-        F.col("dv").alias("x"),
-        F.lead("dv").over(w).alias("y"),
-    ).filter(F.col("y").isNotNull())
-
-    def dsum(c, p=30):
-        return F.sum(c.cast(f"decimal({p},12)")).cast("double")
-
-    m = pairs.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(F.col("x")).alias("sx"),
-        dsum(F.col("y")).alias("sy"),
-        dsum(F.col("x") * F.col("y"), 38).alias("sxy"),
-        dsum(F.col("x") * F.col("x"), 38).alias("sxx"),
-        dsum(F.col("y") * F.col("y"), 38).alias("syy"),
-    )
+    m = _lag1_moments(spark, sf_dir, "dv")
     n, sx, sy, sxy, sxx, syy = (
         F.col(c) for c in ["n", "sx", "sy", "sxy", "sxx", "syy"]
     )

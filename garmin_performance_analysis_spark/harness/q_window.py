@@ -87,16 +87,32 @@ def w4_centered_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "w5_acwr_rolling_loads",
-    oracle="""
-WITH daily AS (
+# w5/w7: each user's daily DECIMAL load sum keyed by day number
+# (the oracle mirror of ``_daily_load``).
+_DAILY_LOAD_CTE = """daily AS (
   SELECT user_id,
          datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS dn,
          strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
          CAST(SUM(CAST(value AS DECIMAL(22,2))) AS DOUBLE) AS load
   FROM events GROUP BY 1, 2, 3
-),
+)"""
+
+
+def _daily_load(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each user's daily DECIMAL-exact load sum as ``(user_id, dn, day,
+    load)`` — dn the integer day number the rolling frames range over."""
+    ev = load_table(spark, sf_dir, "events")
+    return ev.groupBy(
+        "user_id",
+        day_number(F.col("ts")).alias("dn"),
+        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
+    ).agg(_dec_sum(F.col("value")).alias("load"))
+
+
+@register(
+    "w5_acwr_rolling_loads",
+    oracle=f"""
+WITH {_DAILY_LOAD_CTE},
 rolled AS (
   SELECT user_id, day, load,
          SUM(load) OVER (PARTITION BY user_id ORDER BY dn RANGE BETWEEN 6 PRECEDING AND CURRENT ROW) AS acute,
@@ -113,12 +129,7 @@ FROM rolled
 def w5_acwr_rolling_loads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 ACWR: acute 7-day / chronic 28-day/4 rolling load sums over a
     daily rollup, plus the ratio (``readers/training_load.py:54-120``)."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "user_id",
-        day_number(F.col("ts")).alias("dn"),
-        F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
-    ).agg(_dec_sum(F.col("value")).alias("load"))
+    daily = _daily_load(spark, sf_dir)
     acute = windows.rolling_range_sum(daily, ["user_id"], "dn", "load", 6, "acute")
     both = windows.rolling_range_sum(acute, ["user_id"], "dn", "load", 27, "_c28")
     return both.select(

@@ -44,6 +44,15 @@ def r6(col):
     return F.round(col, 6)
 
 
+def q6(col):
+    """Floor-quantize to 6 dp: ``floor(x·1e6 + 0.5) / 1e6`` — the same
+    IEEE ops as the oracle's ``FLOOR(x * 1000000.0 + 0.5) / 1000000.0``,
+    so unlike ``r6`` it never depends on either engine's decimal-tie
+    rule (interpolated medians/quantiles and recursive outputs can land
+    exactly on a 6 dp half-way point)."""
+    return F.floor(col * 1_000_000.0 + 0.5) / 1_000_000.0
+
+
 def dec_sum(col, scale: int = 2, precision: int = 22):
     """Exact, order-independent SUM of a fractional double column."""
     return F.sum(col.cast(f"decimal({precision},{scale})")).cast("double")

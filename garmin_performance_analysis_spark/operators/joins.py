@@ -158,25 +158,6 @@ def missing_children_having(
     )
 
 
-def preaggregated_join(
-    fact: DataFrame,
-    group_key: str,
-    agg_col: str,
-    dim: DataFrame,
-    dim_key: str,
-    agg_alias: str = "agg_value",
-) -> DataFrame:
-    """CTE-style pre-aggregate then join — aggregate the fact table on
-    the key first, then join the (now small) aggregate to the dimension.
-
-    Reference: main-pace CTE joined back to activities
-    (``mcp/rag/queries/comparisons.py:209-231``).  Aggregating before
-    the join cuts shuffle volume by the group cardinality ratio.
-    """
-    pre = fact.groupBy(group_key).agg(F.avg(agg_col).alias(agg_alias))
-    return dim.join(pre, dim[dim_key] == pre[group_key]).drop(group_key)
-
-
 def cdc_apply(
     base: DataFrame,
     changes: DataFrame,

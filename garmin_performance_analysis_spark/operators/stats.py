@@ -15,23 +15,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-
-
-def _dec_avg(c: Column) -> Column:
-    """Deterministic AVG via DECIMAL-exact sum (plain float avg varies
-    run-to-run with shuffle fetch order — SCALING.md lesson 5)."""
-    return F.sum(c.cast("decimal(30,12)")).cast("double") / F.count(c)
-
-
-def _dec_std(c: Column, sample: bool = True) -> Column:
-    """Deterministic STDDEV from DECIMAL-exact moment sums, guarded
-    against negative cancellation."""
-    n = F.count(c)
-    sx = F.sum(c.cast("decimal(30,12)")).cast("double")
-    sxx = F.sum((c * c).cast("decimal(38,12)")).cast("double")
-    den = (n - 1) if sample else n
-    return F.when(den > 0, F.sqrt(F.greatest((sxx - sx * sx / n) / den, F.lit(0.0))))
+from ..harness.registry import _WIDE_B, dec_avg, dec_std, ls_avg, ls_std
 
 
 def _median_over_counts(
@@ -118,6 +102,19 @@ def _median_over_counts(
                 (F.col("_lupto") + F.col("_offset") - F.col("_cnt")).alias("_below"),
             )
         )
+    return _interpolate_ranked(
+        ranked, keys, F.count(F.lit(1)).alias("_n_distinct")
+    )
+
+
+def _interpolate_ranked(
+    ranked: DataFrame, keys: Sequence[str], *extra: Column
+) -> DataFrame:
+    """Final step shared by every exact-median shape: given rows
+    ``(*keys, _v, _r, _upto, _below)`` covering at least the two
+    rank-bracketing values, emit ``(*keys, _median, *extra)`` with
+    ``percentile``'s two-sided interpolation weights; ``extra`` are
+    further aggregates over the same per-key rows."""
     r, upto, below = F.col("_r"), F.col("_upto"), F.col("_below")
     lo = F.when((below <= F.floor(r)) & (F.floor(r) < upto), F.col("_v"))
     hi = F.when((below <= F.ceil(r)) & (F.ceil(r) < upto), F.col("_v"))
@@ -139,35 +136,7 @@ def _median_over_counts(
             )
             .otherwise(F.max("_lo") * F.max("_wlo") + F.max("_hi") * F.max("_whi"))
             .alias("_median"),
-            F.count(F.lit(1)).alias("_n_distinct"),
-        )
-    )
-
-
-def _interpolate_ranked(ranked: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Final step shared by every exact-median shape: given rows
-    ``(*keys, _v, _r, _upto, _below)`` covering at least the two
-    rank-bracketing values, emit ``(*keys, _median)`` with
-    ``percentile``'s two-sided interpolation weights."""
-    r, upto, below = F.col("_r"), F.col("_upto"), F.col("_below")
-    lo = F.when((below <= F.floor(r)) & (F.floor(r) < upto), F.col("_v"))
-    hi = F.when((below <= F.ceil(r)) & (F.ceil(r) < upto), F.col("_v"))
-    return (
-        ranked.select(
-            *keys,
-            lo.alias("_lo"),
-            hi.alias("_hi"),
-            (F.ceil(r) - r).alias("_wlo"),
-            (r - F.floor(r)).alias("_whi"),
-        )
-        .groupBy(*keys)
-        .agg(
-            F.when(
-                (F.max("_whi") == 0.0) | (F.max("_lo") == F.max("_hi")),
-                F.max("_lo"),
-            )
-            .otherwise(F.max("_lo") * F.max("_wlo") + F.max("_hi") * F.max("_whi"))
-            .alias("_median")
+            *extra,
         )
     )
 
@@ -255,14 +224,7 @@ def selected_median(
         (F.col("_nbelow") + F.sum("_cnt").over(w) - F.col("_cnt")).alias("_below"),
     )
     per_metric = _interpolate_ranked(ranked, keys)
-    return per_metric.groupBy(*group_cols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
-    )
+    return _pivot_medians(per_metric, group_cols, metrics)
 
 
 def grid_median(
@@ -308,6 +270,38 @@ def grid_median(
     coarse = _long([*keys, "_cell"]).groupBy(*keys, "_cell").agg(
         F.count(F.lit(1)).alias("_ccnt")
     )
+    per_metric = _grid_select_median(
+        coarse, _long([*keys, "_v", "_cell"]), keys, F.count(F.lit(1))
+    )
+    return _pivot_medians(per_metric, group_cols, metrics)
+
+
+def _pivot_medians(
+    per_metric: DataFrame, group_cols: Sequence[str], metrics: Sequence[str]
+) -> DataFrame:
+    """``(*group_cols, _metric, _median)`` rows → one row per group with
+    ``{m}_median`` columns."""
+    return per_metric.groupBy(*group_cols).agg(
+        *[
+            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
+                f"{m}_median"
+            )
+            for m in metrics
+        ]
+    )
+
+
+def _grid_select_median(
+    coarse: DataFrame, cells: DataFrame, keys: Sequence[str], cnt: Column
+) -> DataFrame:
+    """Two-level grid rank selection shared by ``grid_median`` and the
+    fused five-stat/profile plans.  ``coarse`` is the cell histogram
+    ``(*keys, _cell, _ccnt)``; the 1-2 cells straddling ranks
+    ``floor(r)``/``ceil(r)`` are joined back (broadcast — one row per
+    key) as a filter on ``cells`` (rows ``(*keys, _cell, _v, ...)``,
+    each weighing the ``cnt`` aggregate), whose values get the fine rank
+    scan offset by the exact below-cell count.  Returns
+    ``(*keys, _median)``."""
     w_cell = Window.partitionBy(*keys).orderBy("_cell")
     w_all = Window.partitionBy(*keys)
     n = F.sum("_ccnt").over(w_all)
@@ -336,11 +330,10 @@ def grid_median(
         F.first("_r").alias("_r"),
     )
     fine = (
-        _long([*keys, "_v", "_cell"])
-        .join(F.broadcast(offsets), keys)
+        cells.join(F.broadcast(offsets), keys)
         .filter((F.col("_cell") >= F.col("_cell_lo")) & (F.col("_cell") <= F.col("_cell_hi")))
         .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .agg(cnt.alias("_cnt"))
     )
     w_v = Window.partitionBy(*keys).orderBy("_v")
     ranked = fine.select(
@@ -350,15 +343,7 @@ def grid_median(
         (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
         (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias("_below"),
     )
-    per_metric = _interpolate_ranked(ranked, keys)
-    return per_metric.groupBy(*group_cols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
-    )
+    return _interpolate_ranked(ranked, keys)
 
 
 def grouped_median(
@@ -401,41 +386,7 @@ def grouped_median(
     per_metric = _median_over_counts(
         counts, [*group_cols, "_metric"], bucketed=bucketed
     )
-    return per_metric.groupBy(*group_cols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
-    )
-
-
-_WIDE_B = 1 << 20
-
-
-def _ls_avg(c: Column, scale: int) -> Column:
-    """Deterministic AVG for a KNOWN-fixed-scale column via scaled-long
-    sums — primitive codegen, ~4× faster than the DECIMAL path (see
-    ``harness.registry.ls_sum`` for the overflow bounds)."""
-    f = 10**scale
-    return (F.sum(F.floor(c * f + 0.5)).cast("double") / float(f)) / F.count(c)
-
-
-def _ls_std(c: Column, scale: int, sample: bool = True) -> Column:
-    """Deterministic STDDEV for fixed-scale columns: scaled-long first
-    moment; second moment as hi/lo long pairs (q² per row ≤ 1e14 would
-    overflow one long sum), recombined in double deterministically."""
-    f = float(10**scale)
-    q = F.floor(c * f + 0.5)
-    n = F.count(c)
-    sx = F.sum(q).cast("double") / f
-    q2 = q * q
-    hi = F.sum(((q2 - q2 % _WIDE_B) / _WIDE_B).cast("long")).cast("double")
-    lo = F.sum(q2 % _WIDE_B).cast("double")
-    sxx = (hi * float(_WIDE_B) + lo) / (f * f)
-    den = (n - 1) if sample else n
-    return F.when(den > 0, F.sqrt(F.greatest((sxx - sx * sx / n) / den, F.lit(0.0))))
+    return _pivot_medians(per_metric, group_cols, metrics)
 
 
 def _five_stat_fused_grid(
@@ -448,7 +399,7 @@ def _five_stat_fused_grid(
 ) -> DataFrame:
     """Fused grid-mode five-stat block: ONE stacked scan produces
     per-(group, metric, cell) partials — row count, scaled-long moment
-    sums (the ``_ls_avg``/``_ls_std`` integers, summed per cell then
+    sums (the ``ls_avg``/``ls_std`` integers, summed per cell then
     re-summed per group: BIGINT addition is associative, so the totals
     are bit-identical to the per-row pass), min/max, and the coarse
     rank histogram — replacing five_stat_block's separate moments scan
@@ -523,63 +474,26 @@ def _five_stat_fused_grid(
     coarse = part.filter(F.col("_cell").isNotNull()).select(
         *keys, "_cell", F.col("_ccnt")
     )
-    w_cell = Window.partitionBy(*keys).orderBy("_cell")
-    w_all = Window.partitionBy(*keys)
-    n = F.sum("_ccnt").over(w_all)
-    upto_c = F.sum("_ccnt").over(w_cell)
-    below_c = upto_c - F.col("_ccnt")
-    r = (n - 1) / 2.0
-    targets = coarse.select(
-        *keys,
-        "_cell",
-        r.alias("_r"),
-        upto_c.alias("_upto_c"),
-        below_c.alias("_below_c"),
-    ).filter(
-        (F.col("_below_c") <= F.ceil(F.col("_r")))
-        & (F.floor(F.col("_r")) < F.col("_upto_c"))
-    )
-    offsets = targets.groupBy(*keys).agg(
-        F.min("_cell").alias("_cell_lo"),
-        F.max("_cell").alias("_cell_hi"),
-        F.min("_below_c").alias("_nbelow"),
-        F.first("_r").alias("_r"),
-    )
-    fine = (
-        long.filter(v.isNotNull())
-        .withColumn("_cell", F.floor(v / grid_expr))
-        .join(F.broadcast(offsets), keys)
-        .filter(
-            (F.col("_cell") >= F.col("_cell_lo"))
-            & (F.col("_cell") <= F.col("_cell_hi"))
-        )
-        .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    w_v = Window.partitionBy(*keys).orderBy("_v")
-    ranked = fine.select(
-        *keys,
-        "_v",
-        "_r",
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias(
-            "_below"
-        ),
-    )
-    per_metric = _interpolate_ranked(ranked, keys)
-    medians = per_metric.groupBy(*gcols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
-    )
-    if gcols:
-        joined = moments.join(medians, gcols, "left")
+    cells = long.filter(v.isNotNull()).withColumn("_cell", F.floor(v / grid_expr))
+    per_metric = _grid_select_median(coarse, cells, keys, F.count(F.lit(1)))
+    medians = _pivot_medians(per_metric, gcols, metrics)
+    return _five_stat_columns(moments, medians, gcols, metrics, count_col)
+
+
+def _five_stat_columns(
+    moments: DataFrame,
+    medians: DataFrame,
+    group_cols: Sequence[str],
+    metrics: Sequence[str],
+    count_col: str,
+) -> DataFrame:
+    """Join the per-group medians onto the moments and order the block's
+    columns: ``*group_cols, count_col, {m}_{avg,median,stddev,min,max}``."""
+    if group_cols:
+        joined = moments.join(medians, list(group_cols), "left")
     else:
         joined = moments.crossJoin(medians)
-    order = [*gcols, count_col]
+    order = [*group_cols, count_col]
     for m in metrics:
         order += [f"{m}_avg", f"{m}_median", f"{m}_stddev", f"{m}_min", f"{m}_max"]
     return joined.select(*order)
@@ -635,9 +549,9 @@ def five_stat_block(
     for m in metrics:
         c = F.col(m)
         if fixed_scale is None:
-            avg_c, std_c = _dec_avg(c), _dec_std(c)
+            avg_c, std_c = dec_avg(c), dec_std(c)
         else:
-            avg_c, std_c = _ls_avg(c, fixed_scale), _ls_std(c, fixed_scale)
+            avg_c, std_c = ls_avg(c, fixed_scale), ls_std(c, fixed_scale)
         aggs += [
             avg_c.alias(f"{m}_avg"),
             std_c.alias(f"{m}_stddev"),
@@ -655,14 +569,7 @@ def five_stat_block(
         medians = grouped_median(
             df, group_cols, metrics, bucketed=(median_mode == "bucketed")
         )
-    if group_cols:
-        joined = moments.join(medians, list(group_cols), "left")
-    else:
-        joined = moments.crossJoin(medians)
-    order = [*group_cols, count_col]
-    for m in metrics:
-        order += [f"{m}_avg", f"{m}_median", f"{m}_stddev", f"{m}_min", f"{m}_max"]
-    return joined.select(*order)
+    return _five_stat_columns(moments, medians, group_cols, metrics, count_col)
 
 
 def time_range_stats(
@@ -683,8 +590,8 @@ def time_range_stats(
     for m in metrics:
         c = F.col(m)
         aggs += [
-            _dec_avg(c).alias(f"{m}_avg"),
-            _dec_std(c).alias(f"{m}_stddev"),
+            dec_avg(c).alias(f"{m}_avg"),
+            dec_std(c).alias(f"{m}_stddev"),
             F.min(c).alias(f"{m}_min"),
             F.max(c).alias(f"{m}_max"),
         ]
@@ -713,8 +620,8 @@ def conditional_halves(
     joined = df.join(F.broadcast(bounds), list(group_cols))
     aggs: list[Column] = []
     for m in metrics:
-        first = _dec_avg(F.when(F.col(order_col) < F.col("_mid"), F.col(m)))
-        second = _dec_avg(F.when(F.col(order_col) >= F.col("_mid"), F.col(m)))
+        first = dec_avg(F.when(F.col(order_col) < F.col("_mid"), F.col(m)))
+        second = dec_avg(F.when(F.col(order_col) >= F.col("_mid"), F.col(m)))
         aggs += [
             first.alias(f"{m}_first_half"),
             second.alias(f"{m}_second_half"),
@@ -805,7 +712,7 @@ def _profile_fused_grid(
     ONE raw pass builds a per-(column, value) histogram (nulls kept as
     their own row), and every statistic is then algebra over that
     histogram — moments as scaled-long sums weighted by the value
-    count (bit-identical to the per-row ``_ls_avg``/``_ls_std`` sums,
+    count (bit-identical to the per-row ``ls_avg``/``ls_std`` sums,
     since integer addition is associative), null rate and row count
     from the counts, exact n_distinct = non-null histogram rows, and
     the median via the same two-level grid selection as
@@ -873,46 +780,7 @@ def _profile_fused_grid(
     )
     keys = ["column_name"]
     coarse = cells.groupBy(*keys, "_cell").agg(F.sum(c).alias("_ccnt"))
-    w_cell = Window.partitionBy(*keys).orderBy("_cell")
-    w_all = Window.partitionBy(*keys)
-    n = F.sum("_ccnt").over(w_all)
-    upto_c = F.sum("_ccnt").over(w_cell)
-    below_c = upto_c - F.col("_ccnt")
-    r = (n - 1) / 2.0
-    targets = coarse.select(
-        *keys,
-        "_cell",
-        r.alias("_r"),
-        upto_c.alias("_upto_c"),
-        below_c.alias("_below_c"),
-    ).filter(
-        (F.col("_below_c") <= F.ceil(F.col("_r")))
-        & (F.floor(F.col("_r")) < F.col("_upto_c"))
-    )
-    offsets = targets.groupBy(*keys).agg(
-        F.min("_cell").alias("_cell_lo"),
-        F.max("_cell").alias("_cell_hi"),
-        F.min("_below_c").alias("_nbelow"),
-        F.first("_r").alias("_r"),
-    )
-    fine = (
-        cells.join(F.broadcast(offsets), keys)
-        .filter(
-            (F.col("_cell") >= F.col("_cell_lo"))
-            & (F.col("_cell") <= F.col("_cell_hi"))
-        )
-        .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.sum("_c").alias("_cnt"))
-    )
-    w_v = Window.partitionBy(*keys).orderBy("_v")
-    ranked = fine.select(
-        *keys,
-        "_v",
-        "_r",
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias("_below"),
-    )
-    med = _interpolate_ranked(ranked, keys).withColumnRenamed(
+    med = _grid_select_median(coarse, cells, keys, F.sum("_c")).withColumnRenamed(
         "_median", "stat_median"
     )
     return base.join(F.broadcast(med), keys, "left").select(
@@ -961,9 +829,9 @@ def profile_columns(
     for m in columns:
         c = F.col(m)
         if fixed_scale is None:
-            avg_c, std_c = _dec_avg(c), _dec_std(c)
+            avg_c, std_c = dec_avg(c), dec_std(c)
         else:
-            avg_c, std_c = _ls_avg(c, fixed_scale), _ls_std(c, fixed_scale)
+            avg_c, std_c = ls_avg(c, fixed_scale), ls_std(c, fixed_scale)
         basic += [
             F.min(c).cast("double").alias(f"{m}__min"),
             F.max(c).cast("double").alias(f"{m}__max"),

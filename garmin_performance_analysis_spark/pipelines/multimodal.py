@@ -1137,6 +1137,27 @@ def _ppm_header(payload: bytes):
     return None
 
 
+def _bmp_rows(payload: bytes, w: int, h: int):
+    """The raster of an uncompressed 8/24/32-bpp BMP as ``(bytes per
+    pixel, (h, stride) uint8 rows in stored order)``; None for any
+    other encoding or a truncated raster."""
+    import numpy as np
+
+    bpp = int.from_bytes(payload[28:30], "little")
+    compression = int.from_bytes(payload[30:34], "little")
+    offset = int.from_bytes(payload[10:14], "little")
+    if compression != 0 or bpp not in (8, 24, 32):
+        return None
+    bpx = bpp // 8
+    stride = ((w * bpx + 3) // 4) * 4
+    if offset + stride * h > len(payload) or offset < 54:
+        return None
+    rows = np.frombuffer(
+        payload, dtype=np.uint8, count=stride * h, offset=offset
+    ).reshape(h, stride)
+    return bpx, rows
+
+
 _UNSET = object()
 
 
@@ -1211,18 +1232,10 @@ def decode_pixels(payload: bytes, header=_UNSET):
     if hdr[0] != "bmp":
         return None
     w, h = hdr[1], hdr[2]
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    offset = int.from_bytes(payload[10:14], "little")
-    if compression != 0 or bpp not in (8, 24, 32):
+    raster = _bmp_rows(payload, w, h)
+    if raster is None:
         return None
-    bpx = bpp // 8
-    stride = ((w * bpx + 3) // 4) * 4
-    if offset + stride * h > len(payload) or offset < 54:
-        return None
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=stride * h, offset=offset
-    ).reshape(h, stride)
+    bpx, rows = raster
     samples = rows[:, : w * bpx].reshape(h * w, bpx).astype(np.int64)
     ch_sums = samples.sum(axis=0)
     n_px = w * h
@@ -1817,18 +1830,10 @@ def ahash64_bits(payload: bytes) -> "str | None":
     w, h = hdr[1], hdr[2]
     if w < 8 or h < 8:
         return None
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    offset = int.from_bytes(payload[10:14], "little")
-    if compression != 0 or bpp not in (8, 24, 32):
+    raster = _bmp_rows(payload, w, h)
+    if raster is None:
         return None
-    bpx = bpp // 8
-    stride = ((w * bpx + 3) // 4) * 4
-    if offset + stride * h > len(payload) or offset < 54:
-        return None
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=stride * h, offset=offset
-    ).reshape(h, stride)
+    bpx, rows = raster
     # biHeight is SIGNED: positive = rows stored bottom-up (flip to
     # spatial top-down), negative = already top-down (no flip) — a
     # top-down DIB flipped anyway would fingerprint as its mirror.

@@ -10,6 +10,7 @@ pruned scans.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 import numpy as np
@@ -39,12 +40,28 @@ def _norm(a: str) -> Column:
     )
 
 
+def _float_array_sql(values: Sequence[float]) -> str:
+    """SQL literal ``array(CAST(x AS FLOAT), ...)`` of a query vector.
+    Finite components render as Python's shortest repr; NaN and ±Inf
+    render as the quoted strings Spark casts to those values (a bare
+    ``nan``/``inf`` would parse as a column name)."""
+
+    def lit(v: float) -> str:
+        v = float(v)
+        if math.isnan(v):
+            return "CAST('NaN' AS FLOAT)"
+        if math.isinf(v):
+            return "CAST('Infinity' AS FLOAT)" if v > 0 else "CAST('-Infinity' AS FLOAT)"
+        return f"CAST({v} AS FLOAT)"
+
+    return "array(" + ", ".join(lit(v) for v in values) + ")"
+
+
 def with_query_cosine(
     df: DataFrame, vec_col: str, query: Sequence[float], out_col: str = "cosine"
 ) -> DataFrame:
     """Cosine similarity of every row's vector vs a literal query vector."""
-    qlit = "array(" + ", ".join(f"CAST({float(v)} AS FLOAT)" for v in query) + ")"
-    qdf = df.withColumn("_q", F.expr(qlit))
+    qdf = df.withColumn("_q", F.expr(_float_array_sql(query)))
     cos = _dot(vec_col, "_q") / (_norm(vec_col) * _norm("_q"))
     return qdf.withColumn(out_col, cos).drop("_q")
 
@@ -546,6 +563,22 @@ def scalar_quantize(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
+def _exact_rerank(cand: DataFrame, id_col: str, vec_col: str, k: int) -> DataFrame:
+    """Full-vector cosine re-rank of a shortlist whose rows carry the
+    query vector in ``_qv``: rows ranked ``rk`` <= k by (cosine DESC,
+    id ASC)."""
+    rer = cand.withColumn(
+        "cosine", _dot(vec_col, "_qv") / (_norm(vec_col) * _norm("_qv"))
+    )
+    # the window input is the shortlist-row LIMIT result — bounded by
+    # construction; the constant partition key documents that and keeps
+    # it off the global-window warning path
+    w = Window.partitionBy(bounded_partition_key(id_col)).orderBy(
+        F.col("cosine").desc(), F.col(id_col).asc()
+    )
+    return rer.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
 def sq_topk(
     df: DataFrame,
     id_col: str,
@@ -593,19 +626,8 @@ def sq_topk(
         .orderBy(F.col("q_cosine").desc(), F.col(id_col).asc())
         .limit(shortlist)
     )
-    rer = cand.withColumn(
-        "cosine", _dot(vec_col, "_qv") / (_norm(vec_col) * _norm("_qv"))
-    )
-    # the window input is the shortlist-row LIMIT result — bounded by
-    # construction; the constant partition key documents that and keeps
-    # it off the global-window warning path
-    w = Window.partitionBy(bounded_partition_key(id_col)).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(id_col, "q_cosine", "cosine", "rk")
+    return _exact_rerank(cand, id_col, vec_col, k).select(
+        id_col, "q_cosine", "cosine", "rk"
     )
 
 
@@ -994,14 +1016,6 @@ def prefix_rerank_topk(
         .orderBy(F.col("p_cosine").desc(), F.col(id_col).asc())
         .limit(shortlist)
     )
-    rer = cand.withColumn(
-        "cosine", _dot(vec_col, "_qv") / (_norm(vec_col) * _norm("_qv"))
-    )
-    w = Window.partitionBy(bounded_partition_key(id_col)).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(id_col, "p_cosine", "cosine", "rk")
+    return _exact_rerank(cand, id_col, vec_col, k).select(
+        id_col, "p_cosine", "cosine", "rk"
     )

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..harness.registry import dec_sum
 from ..plans.layout import spread_for_compute
 
 # Tiny marker-word lists per language (public stopword heads). The
@@ -29,14 +30,10 @@ def _words(text_col: str) -> Column:
     return F.split(F.lower(F.col(text_col)), " ")
 
 
-def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document quality signals: length, word count, mean word
-    length, stopword ratio, non-alpha ratio, distinct-word ratio.
-    The standard pre-training quality filters (C4/Gopher-style rules)
-    reduced to one select."""
-    # NOT spread: this pass is scan-bound, not compute-bound — the A/B
-    # at the 10× corpus measured the text shuffle as a net loss here
-    # (2.1 s → 2.5 s), unlike the gram-transform paths below
+def _quality_exprs(text_col: str):
+    """The quality-signal building blocks: the word array and its size,
+    the char count, the stopword count and the non-alphanumeric char
+    count."""
     w = _words(text_col)
     n_words = F.size(w)
     n_chars = F.length(F.col(text_col))
@@ -45,6 +42,18 @@ def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     non_alpha = n_chars - F.length(
         F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "")
     )
+    return w, n_words, n_chars, n_stop, non_alpha
+
+
+def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document quality signals: length, word count, mean word
+    length, stopword ratio, non-alpha ratio, distinct-word ratio.
+    The standard pre-training quality filters (C4/Gopher-style rules)
+    reduced to one select."""
+    # NOT spread: this pass is scan-bound, not compute-bound — the A/B
+    # at the 10× corpus measured the text shuffle as a net loss here
+    # (2.1 s → 2.5 s), unlike the gram-transform paths below
+    w, n_words, n_chars, n_stop, non_alpha = _quality_exprs(text_col)
     return df.select(
         F.col(id_col).alias("doc_id"),
         n_chars.alias("n_chars"),
@@ -58,15 +67,22 @@ def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Marker-word language ID: per-language marker counts + argmax with
-    a deterministic preference order on ties."""
+def _marker_scores(text_col: str) -> dict:
+    """Per-language marker-word counts of ``text_col``, in
+    ``LANG_MARKERS`` order."""
     scores = {}
     for lang, markers in LANG_MARKERS.items():
         marker_in = ", ".join(f"'{m}'" for m in markers)
         scores[lang] = F.expr(
             f"size(filter(split(lower({text_col}), ' '), x -> x IN ({marker_in})))"
         )
+    return scores
+
+
+def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Marker-word language ID: per-language marker counts + argmax with
+    a deterministic preference order on ties."""
+    scores = _marker_scores(text_col)
     out = df.select(
         F.col(id_col).alias("doc_id"),
         *[scores[lang].alias(f"score_{lang}") for lang in LANG_MARKERS],
@@ -112,12 +128,7 @@ def fingerprint_expr(text_col: str) -> Column:
 def predicted_lang_expr(text_col: str) -> Column:
     """The ``language_id`` argmax expression (marker counts + tie
     preference in ``LANG_MARKERS`` order), for single-pass composition."""
-    scores = {}
-    for lang, markers in LANG_MARKERS.items():
-        marker_in = ", ".join(f"'{m}'" for m in markers)
-        scores[lang] = F.expr(
-            f"size(filter(split(lower({text_col}), ' '), x -> x IN ({marker_in})))"
-        )
+    scores = _marker_scores(text_col)
     best = F.greatest(*scores.values())
     pred = F.lit("unknown")
     for lang in reversed(list(LANG_MARKERS)):  # earlier languages win ties
@@ -168,14 +179,7 @@ def corpus_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     expression here is identical to its per-family sibling (the
     composite's oracle reuses the per-family SQL fragments verbatim)."""
     df = spread_for_compute(df, id_col)
-    w = _words(text_col)
-    n_words = F.size(w)
-    n_chars = F.length(F.col(text_col))
-    stop_in = ", ".join(f"'{s}'" for s in STOPWORDS)
-    n_stop = F.expr(f"size(filter(split(lower({text_col}), ' '), x -> x IN ({stop_in})))")
-    non_alpha = n_chars - F.length(
-        F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", "")
-    )
+    w, n_words, n_chars, n_stop, non_alpha = _quality_exprs(text_col)
     regex_tokens = F.expr(
         f"size(regexp_extract_all(lower({text_col}), '[a-z]+|[0-9]+', 0))"
     )
@@ -292,8 +296,6 @@ def unigram_logprob_scores(
     Output: (doc_id, n_tokens, avg_logprob) — avg_logprob rounded 6dp,
     more negative = more surprising under the corpus distribution.
     """
-    from ..harness.registry import dec_sum
-
     tf = (
         spread_for_compute(df, id_col)
         .select(
@@ -398,8 +400,6 @@ def bigram_logprob_scores(
 
     Output: (doc_id, n_bigrams, avg_logprob) — avg_logprob rounded 6dp.
     """
-    from ..harness.registry import dec_sum
-
     toks = F.filter(_words(text_col), lambda x: x != "")
     n = F.size(toks)
     pairs_arr = F.arrays_zip(
@@ -490,8 +490,6 @@ def dsir_importance(
     reduction with DECIMAL sums.  Output: (doc_id, n_tokens,
     is_target, avg_log_ratio) — higher = more target-like.
     """
-    from ..harness.registry import dec_sum
-
     bucket = (
         F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10).cast("long")
         % buckets
@@ -582,8 +580,6 @@ def trigram_backoff_scores(
     avg_logscore rounded 6dp, NULL (with n_trigrams = 0) for docs
     under 3 tokens.
     """
-    from ..harness.registry import dec_sum
-
     def tri_frame(df: DataFrame) -> DataFrame:
         toks = F.filter(_words(text_col), lambda x: x != "")
         n = F.size(toks)

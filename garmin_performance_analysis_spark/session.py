@@ -16,6 +16,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ship_package_path(spark: SparkSession) -> None:
+    """Put this package's root on the Python-worker ``PYTHONPATH`` of
+    ``spark``'s context, so the pandas/Arrow UDFs defined here unpickle
+    in workers of ANY session started from ANY working directory, not
+    only ``get_spark``'s.  A UDF captures ``SparkContext.environment``
+    when it is built, so the entry points that receive a session
+    (``get_spark``, ``sources.tables.load_table``, ``tools.GarminTools``)
+    call this before any plan is built.  Idempotent."""
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *parts])
+
 
 def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -70,4 +86,5 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package_path(spark)
     return spark

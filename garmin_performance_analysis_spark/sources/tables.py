@@ -16,6 +16,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import ship_package_path
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -83,6 +85,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``unix_micros(ts)`` etc.  The session timezone is UTC
     (``session.py``), so the NTZ→TZ cast preserves the wall-clock value.
     """
+    ship_package_path(spark)
     key = (id(spark.sparkContext), sf_dir, name)
     if key in _TABLE_MEMO:
         return _TABLE_MEMO[key]

@@ -15,9 +15,9 @@ fixture or a 1000-executor cluster unchanged.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import vdot as vdot_fns
@@ -42,6 +42,7 @@ from .operators.joins import (
     nearest_date_asof_join,
 )
 from .operators.regression import linregress_by_group, ols2_by_group
+from .session import ship_package_path
 
 
 class GarminTools:
@@ -54,6 +55,7 @@ class GarminTools:
     """
 
     def __init__(self, spark: SparkSession, tables: dict[str, DataFrame]):
+        ship_package_path(spark)
         self.spark = spark
         self.t = tables
 

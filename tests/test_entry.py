@@ -32,3 +32,47 @@ def test_query_callables_accept_spark_and_sfdir(spark):
     name = sorted(q)[0]
     df = q[name](spark, "/root/testdata/sf0.001")
     assert df.columns
+
+
+_FOREIGN_CWD_SCRIPT = """
+import importlib.util, sys
+spec = importlib.util.spec_from_file_location("e", sys.argv[1])
+m = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(m)
+from pyspark.sql import SparkSession
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.memory", "1g")
+    .getOrCreate()
+)
+print("ROWS", m.queries()["v9_semantic_dedup"](spark, sys.argv[2]).count())
+spark.stop()
+"""
+
+
+def test_python_worker_entry_from_foreign_cwd(tmp_path, sf_dir):
+    # a caller that loads the contract file by path, from its own cwd
+    # and with its own session: a UDF entry (v9's pandas_udf) must still
+    # find this package inside the Python workers
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            _FOREIGN_CWD_SCRIPT,
+            os.path.join(repo, "__spark_entry__.py"),
+            sf_dir,
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS 500" in proc.stdout

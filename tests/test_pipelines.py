@@ -1429,3 +1429,17 @@ def test_mm8_cuts_at_run_boundaries(spark, tmp_path):
             assert r["n_scenes"] == math.ceil(12 / L)
             want_after = 32 + (did * 5 + (r["cut_frame_idx"] // L) * 17) % 95
             assert r["intensity_after"] == want_after
+
+
+def test_query_cosine_non_finite_components(spark):
+    # a NaN/Inf query component must render as a float literal, not as
+    # a bare `nan`/`inf` identifier that fails analysis
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    for query in ([float("nan"), 1.0], [float("inf"), 0.0], [0.0, float("-inf")]):
+        rows = similarity.with_query_cosine(df, "embedding", query).collect()
+        assert len(rows) == 2
+        assert all(r["cosine"] != r["cosine"] for r in rows)  # NaN
+    finite = similarity.with_query_cosine(df, "embedding", [1.0, 0.0]).collect()
+    assert {r["vec_id"]: r["cosine"] for r in finite} == {1: 1.0, 2: 0.0}
