@@ -491,16 +491,15 @@ def s5_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return them — the oracle is the plain source query, so a dropped
     row, re-typed column, or lossy write hash-mismatches.  Gives the
     sink a driver row; the over-limit guard path is unit-tested."""
-    import tempfile
-
     from ..operators.export import guarded_export
 
     sup = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
-    out = scratch_dir(prefix="s5_export_") + "/supplier_export"
-    guarded_export(sup, out, fmt="parquet", max_rows=100_000)
-    return spark.read.parquet(out)
+    with scratch_dir(prefix="s5_export_") as work:
+        out = work + "/supplier_export"
+        guarded_export(sup, out, fmt="parquet", max_rows=100_000)
+        return spark.read.parquet(out).localCheckpoint(eager=True)
 
 
 @register(
@@ -525,20 +524,24 @@ def s8_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-mismatches.  Scale note: CSV scans can't push predicates or
     prune columns — this entry is the EDGE format; everything internal
     stays parquet."""
-    import tempfile
-
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey",
         "n_name",
         "n_regionkey",
         _r6(F.col("n_nationkey").cast("double") / 4.0).alias("frac"),
     )
-    out = scratch_dir(prefix="s8_csv_") + "/nation_csv"
-    nat.write.mode("overwrite").option("header", True).csv(out)
     schema = (
         "n_nationkey bigint, n_name string, n_regionkey bigint, frac double"
     )
-    return spark.read.schema(schema).option("header", True).csv(out)
+    with scratch_dir(prefix="s8_csv_") as work:
+        out = work + "/nation_csv"
+        nat.write.mode("overwrite").option("header", True).csv(out)
+        return (
+            spark.read.schema(schema)
+            .option("header", True)
+            .csv(out)
+            .localCheckpoint(eager=True)
+        )
 
 
 @register(
@@ -575,29 +578,27 @@ def s9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns must be added nullable-at-end, never re-typed (parquet
     has no in-place cast), which is exactly the shape this entry
     exercises."""
-    import tempfile
-
     orders = load_table(spark, sf_dir, "orders")
-    root = scratch_dir(prefix="s9_evolve_")
-    orders.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(root + "/batch=1")
-    orders.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    ).write.mode("overwrite").parquet(root + "/batch=2")
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        root + "/batch=1", root + "/batch=2"
-    )
-    return merged.groupBy(
-        F.coalesce(F.col("o_orderpriority"), F.lit("(pre-evolution)")).alias(
-            "priority"
+    with scratch_dir(prefix="s9_evolve_") as root:
+        orders.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
+        ).write.mode("overwrite").parquet(root + "/batch=1")
+        orders.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        ).write.mode("overwrite").parquet(root + "/batch=2")
+        merged = spark.read.option("mergeSchema", "true").parquet(
+            root + "/batch=1", root + "/batch=2"
         )
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(22,2)"))
-        .cast("double")
-        .alias("total"),
-    )
+        return merged.groupBy(
+            F.coalesce(F.col("o_orderpriority"), F.lit("(pre-evolution)")).alias(
+                "priority"
+            )
+        ).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum(F.col("o_totalprice").cast("decimal(22,2)"))
+            .cast("double")
+            .alias("total"),
+        ).localCheckpoint(eager=True)
 
 
 @register(

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.graph import pagerank_fixed
+from ..operators.graph import connected_components, pagerank_fixed
 from ..sources.tables import load_table
 from .registry import r6 as _r6
 from .registry import register
@@ -153,7 +153,7 @@ FROM reach GROUP BY node
 def g2_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components as a FIRST-CLASS graph entry (the same
     pointer-jumping min-label kernel the dedup pipeline uses
-    transitively in d5/v9 — ``pipelines/dedup.connected_components``,
+    transitively in d5/v9 — ``operators/graph.connected_components``,
     O(log diameter) rounds, two node-keyed shuffles per round) over a
     sparse deterministic event-derived graph.  The oracle is a
     recursive-CTE transitive closure computing min-reachable-label —
@@ -164,8 +164,6 @@ def g2_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, not closure pairs — the 100 TB asymmetry that makes
     pointer-jumping (not transitive closure) the production algorithm.
     """
-    from ..pipelines.dedup import connected_components
-
     ev = load_table(spark, sf_dir, "events")
     raw = _g2_raw_edges(ev)
     cc = connected_components(raw, "src", "dst")

@@ -12,17 +12,17 @@ run would compute").  Reference anchor for the catch-up ingest
 semantics being replicated: ``mcp/database/db_reader.py:217-282``
 (the reference's incremental activity catch-up).
 
-The registry lives in a ``tempfile.mkdtemp`` directory; results are
-materialized with ``localCheckpoint`` BEFORE the directory is deleted,
-so the returned DataFrame survives cleanup and repeated calls are
+The registry lives in a ``scratch.scratch_dir`` block, which deletes
+the directory on exit even when the replay raises; results are
+materialized with ``localCheckpoint`` inside the block, so the
+returned DataFrame survives cleanup and repeated calls are
 independent (fresh registry every call — deterministic by
-construction, no cross-call state beyond the session-scoped temp dir).
+construction, no cross-call state).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,8 +86,7 @@ def i1_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(redelivered.select("doc_id", "text"))
         .unionByName(sentinels)
     )
-    reg_dir = scratch_dir(prefix="i1_dedup_replay_")
-    try:
+    with scratch_dir(prefix="i1_dedup_replay_") as reg_dir:
         key = incremental.exact_key_expr("text")
         # Stage batch 2's within-batch collapse CONCURRENTLY with
         # ingest 1 (guide §2.6: overlap independent jobs) — the
@@ -110,8 +109,6 @@ def i1_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = incremental.read_registry(spark, reg_dir).localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(reg_dir, ignore_errors=True)
     return final.select("dedup_key", F.col("keep_id").cast("bigint").alias("keep_id"))
 
 
@@ -152,8 +149,7 @@ def i2_incremental_lsh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     b1 = docs.filter(F.col("doc_id") % 2 == 0)
     b2 = docs.filter(F.col("doc_id") % 2 == 1)
-    reg_dir = scratch_dir(prefix="i2_lsh_replay_")
-    try:
+    with scratch_dir(prefix="i2_lsh_replay_") as reg_dir:
         # Stage batch 2's minhash signatures CONCURRENTLY with ingest 1
         # (guide §2.6) — the signature pass touches only the batch,
         # never the band/sig stores, so the store mutations stay
@@ -175,8 +171,6 @@ def i2_incremental_lsh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
                 num_hashes=_NUM_HASHES, bands=_BANDS, n=3, threshold=0.5,
                 staged_sigs=staged_b2.result(),
             ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(reg_dir, ignore_errors=True)
     return pairs.select(
         "old_doc", "new_doc", _r6(F.col("est_jaccard")).alias("est_jaccard")
     )
@@ -260,17 +254,13 @@ def i3_stream_window_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = ev.filter(us > mid).unionByName(
         b1.filter(us > mid - _I3_LATE_US)
     )
-    work = scratch_dir(prefix="i3_stream_replay_")
-    try:
-        out = windowed_stats_replay(
+    with scratch_dir(prefix="i3_stream_replay_") as work:
+        return windowed_stats_replay(
             spark, [b1, b2], work,
             ts_col="ts", key_col="event_type", value_col="value",
             window_sec=_I3_WIN_US // 1_000_000,
             watermark_sec=_I3_WM_US // 1_000_000,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 _I4_GAP_US = 1_800_000_000     # 30-minute attribution window
@@ -329,8 +319,7 @@ def _join_replay(
     b1r = evr.filter(us <= mid)
     b2l = evl.filter(us > mid).unionByName(b1l.filter(us > mid - tail))
     b2r = evr.filter(us > mid).unionByName(b1r.filter(us > mid - tail))
-    work = scratch_dir(prefix=prefix)
-    try:
+    with scratch_dir(prefix=prefix) as work:
         from ..streaming.replay import stream_join_replay
 
         out = stream_join_replay(
@@ -340,8 +329,6 @@ def _join_replay(
             watermark_sec=_I4_WM_US // 1_000_000,
             join_type=join_type,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out.select(
         F.col("k").alias("user_id"),
         "l_event_id",
@@ -469,16 +456,12 @@ def i5_stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("ts").alias("ts"))
         .unionByName(b1.filter(F.unix_micros(F.col("ts")) > mid - tail))
     )
-    work = scratch_dir(prefix="i5_stream_dedup_")
-    try:
-        out = stream_dedup_replay(
+    with scratch_dir(prefix="i5_stream_dedup_") as work:
+        return stream_dedup_replay(
             spark, [b1, b2], work,
             ts_col="ts", key_cols=["user_id"],
             delay_sec=_I5_DELAY_US // 1_000_000,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 _I6_GAP_US = 1_800_000_000     # 30-minute session gap
@@ -593,17 +576,13 @@ def i6_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail = (bounds["tmax"] - bounds["tmin"]) // 4
     b1 = ev.filter(us <= mid)
     b2 = ev.filter(us > mid).unionByName(b1.filter(us > mid - tail))
-    work = scratch_dir(prefix="i6_stream_session_")
-    try:
-        out = stream_session_replay(
+    with scratch_dir(prefix="i6_stream_session_") as work:
+        return stream_session_replay(
             spark, [b1, b2], work,
             ts_col="ts", key_col="user_id", value_col="value",
             gap_sec=_I6_GAP_US // 1_000_000,
             watermark_sec=_I6_WM_US // 1_000_000,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 @register(
@@ -666,8 +645,7 @@ def i7_cdc_versioned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2 = odd.filter(us > mid).unionByName(
         c1.filter((us > mid - tail) & (F.col("op") == "upsert"))
     )
-    work = scratch_dir(prefix="i7_cdc_replay_")
-    try:
+    with scratch_dir(prefix="i7_cdc_replay_") as work:
         s1 = cdc_apply_versioned(
             base0, c1, ["user_id"], "ts", "event_id", ["value"]
         )
@@ -681,8 +659,6 @@ def i7_cdc_versioned_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("_deleted")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return final.select(
         "user_id",
         "value",
@@ -765,8 +741,7 @@ def i8_stream_runs_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = (bounds["tmin"] + bounds["tmax"]) // 2
     b1 = flagged.filter(F.col("_us") <= mid).drop("_us")
     b2 = flagged.filter(F.col("_us") > mid).drop("_us")
-    work = scratch_dir(prefix="i8_stateful_runs_")
-    try:
+    with scratch_dir(prefix="i8_stateful_runs_") as work:
         out = stream_stateful_runs_replay(
             spark,
             [b1, b2],
@@ -776,8 +751,6 @@ def i8_stream_runs_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_gap=_I8_MAX_GAP,
             min_span=_I8_MIN_SPAN,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     return out.select(
         F.col("key").cast("bigint").alias("user_id"),
         "island_start",
@@ -942,15 +915,11 @@ def i10_stream_static_enrich_replay(spark: SparkSession, sf_dir: str) -> DataFra
     mid = (bounds["tmin"] + bounds["tmax"]) // 2
     b1 = ev.filter(us <= mid)
     b2 = ev.filter(us > mid).unionByName(b1.filter(us > mid - _I3_LATE_US))
-    work = scratch_dir(prefix="i10_stream_static_")
-    try:
-        out = stream_static_enrich_replay(
+    with scratch_dir(prefix="i10_stream_static_") as work:
+        return stream_static_enrich_replay(
             spark, [b1, b2], dim, work,
             ts_col="ts", join_col="user_id", key_col="tier",
             value_col="value",
             window_sec=_I3_WIN_US // 1_000_000,
             watermark_sec=_I3_WM_US // 1_000_000,
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out

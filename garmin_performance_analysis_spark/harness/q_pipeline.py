@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import connected_components
 from ..pipelines import dedup, multimodal, shards, similarity, text
 from ..plans import layout
 from ..sources.tables import load_table
@@ -1160,20 +1161,20 @@ def c9_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
     )
     assigned = shards.assign_shards(df, "doc_id", "n_bytes", 16384)
-    out_dir = scratch_dir(prefix="wds_roundtrip_")
-    manifest = shards.write_webdataset_shards(
-        assigned, out_dir, "doc_id", "payload", ["doc_id", "lang"]
-    )
-    manifest.collect()  # force the sink; bounded: one row per shard
-    back = shards.read_webdataset_shards(spark, out_dir + "/*.tar")
-    return back.select(
-        "key",
-        F.octet_length("payload").alias("n_payload_bytes"),
-        "meta",
-        F.regexp_extract("shard_path", r"shard-(\d+)\.tar", 1)
-        .cast("bigint")
-        .alias("shard_id"),
-    )
+    with scratch_dir(prefix="wds_roundtrip_") as out_dir:
+        manifest = shards.write_webdataset_shards(
+            assigned, out_dir, "doc_id", "payload", ["doc_id", "lang"]
+        )
+        manifest.collect()  # force the sink; bounded: one row per shard
+        back = shards.read_webdataset_shards(spark, out_dir + "/*.tar")
+        return back.select(
+            "key",
+            F.octet_length("payload").alias("n_payload_bytes"),
+            "meta",
+            F.regexp_extract("shard_path", r"shard-(\d+)\.tar", 1)
+            .cast("bigint")
+            .alias("shard_id"),
+        ).localCheckpoint(eager=True)
 
 
 # d2b/d8: shingles with corpus frequency <= 25, per-doc sizes, and the
@@ -1262,7 +1263,7 @@ def d4b_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The recursive transitive-closure CC over the ``pairs`` CTE's
 # (doc_a, doc_b) graph: ``lab`` maps each paired doc to its min
-# reachable doc_id — the oracle mirror of ``dedup.connected_components``.
+# reachable doc_id — the oracle mirror of ``graph.connected_components``.
 _CC_CTES = """edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
@@ -1297,13 +1298,13 @@ def d5_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachable doc_id), keep the minimum id per cluster as canonical —
     the keep/drop decision a training-data dedup pipeline actually
     ships.  The Spark side runs pointer-jumping min-label propagation
-    (O(log diameter) joins, see ``dedup.connected_components``); the
+    (O(log diameter) joins, see ``graph.connected_components``); the
     oracle computes the same unique fixpoint with a recursive
     transitive-closure CTE — identical output regardless of algorithm.
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = d3_minhash_lsh_pairs(spark, sf_dir)
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
+    cc = connected_components(pairs, "doc_a", "doc_b")
     out = docs.select("doc_id").join(cc, "doc_id", "left")
     cluster = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     return (
@@ -1622,7 +1623,7 @@ def _cluster_split(docs: DataFrame, pairs: DataFrame):
     (min-label CC over the pair graph; unpaired docs are their own
     cluster), the md5 high-60-bit Horner bucket of that id, and the
     split label it selects."""
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
+    cc = connected_components(pairs, "doc_a", "doc_b")
     clustered = docs.select("doc_id").join(cc, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
@@ -1689,7 +1690,7 @@ def c18_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring calls the fingerprint "the cheap single-pass stand-in
     for a full near-dup cluster id"; this entry is that cluster id):
     d3's MinHash-LSH pair graph connects into components
-    (``dedup.connected_components``, pointer-jumping min-label), and
+    (``graph.connected_components``, pointer-jumping min-label), and
     the 90/5/5 bucket hashes the CLUSTER id — so not just exact/
     shuffled duplicates but every LSH-detectable near-duplicate lands
     on the same side of the split by construction.  This is the
@@ -2509,7 +2510,7 @@ def c20_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row; the report is one row regardless of volume."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = d3_minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
+    cc = connected_components(pairs, "doc_a", "doc_b")
     toks = (
         docs.select(
             "doc_id",

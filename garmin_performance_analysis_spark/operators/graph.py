@@ -1,35 +1,93 @@
-"""Graph operators expressed as keyed DataFrame programs.
-
-Connected components live in ``pipelines/dedup.connected_components``
-(pointer-jumping, used by the dedup clusters); this module holds the
-rank-propagation side.  Everything is deterministic: DECIMAL
-contribution sums (shuffle-order-independent) and fixed iteration
+"""Graph operators expressed as keyed DataFrame programs: rank
+propagation (PageRank, HITS), triangles, and the integer fixpoints —
+BFS hops, k-core peeling, label propagation and connected components.
+Everything is deterministic: DECIMAL contribution sums
+(shuffle-order-independent), min/argmax combines and fixed iteration
 counts, so a SQL oracle can unroll the same program.
+
+The four integer fixpoints share ONE small-graph decision,
+``_driver_solve``: it persists the kernel's projection, and below
+``_DRIVER_GRAPH_MAX_EDGES`` NULL-free integral rows it fetches the
+projection to the driver, where the same fixpoint runs without
+per-round job choreography.  It unpersists the projection when the
+kernel returns or raises.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence  # noqa: F401  (kept for sig parity)
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-# Edge count under which the INTEGER-EXACT fixed-round kernels (BFS,
-# k-core peel, label propagation) solve on the driver from one bounded
-# collect: each distributed round costs 2-3 jobs of pure choreography,
-# and the event-derived graphs these kernels run on are a tiny
-# fraction of the corpus (the connected_components precedent,
-# pipelines/dedup._DRIVER_CC_MAX_EDGES).  The distributed loops are
-# untouched above the gate and remain the 100 TB path.  Only integral
-# node types take the driver path — min/tie-break semantics on longs
-# are engine-identical by construction; anything else falls through.
+if TYPE_CHECKING:
+    import pandas as pd
+
+# Row count under which the INTEGER-EXACT kernels (BFS, k-core peel,
+# label propagation, connected components) solve on the driver from
+# one bounded Arrow fetch (~16 bytes/edge → ≤ ~3 MB): each distributed
+# round costs 2-3 jobs of pure choreography, and the event-derived and
+# near-dup pair graphs these kernels run on are a tiny fraction of the
+# corpus.  The distributed loops are untouched above the gate and
+# remain the 100 TB path.  Only integral node types take the driver
+# path — min/tie-break semantics on longs are engine-identical by
+# construction; anything else falls through, and so does any graph
+# with a NULL endpoint (NULL join/min semantics stay the engine's).
 # PageRank/HITS stay distributed at every size: their DECIMAL
 # contribution sums are plan-shaped, not worth re-proving driver-side.
 _DRIVER_GRAPH_MAX_EDGES = 200_000
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+@contextmanager
+def _driver_solve(
+    frame: DataFrame, cols: Sequence[str], gate: bool = True
+) -> Iterator[tuple[DataFrame, pd.DataFrame | None]]:
+    """Yield ``(projection, pdf)`` for one kernel call.
+
+    ``projection`` is ``frame.select(*cols)`` persisted
+    MEMORY_AND_DISK — not ``localCheckpoint``-ed: it is materialized
+    once (by the gate agg or the first round) and read back by every
+    later consumer, while keeping LINEAGE so a lost executor
+    recomputes blocks instead of failing the job.  ``pdf`` is the
+    projection fetched over Arrow when ``gate`` holds, every column is
+    integral of ONE type (the driver solve's output schema then equals
+    the distributed path's coercion result), and one bounded agg finds
+    at most ``_DRIVER_GRAPH_MAX_EDGES`` rows with no NULL endpoint;
+    otherwise ``None`` and the caller runs its distributed loop over
+    the projection.  The cheap type gate runs first, so a
+    non-integral graph pays no job.
+
+    The projection is unpersisted when the block exits, whether the
+    kernel returns or raises; a kernel's returned frame must not read
+    it lazily except through recomputable lineage.
+    """
+    proj = frame.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        pdf = None
+        dt = proj.schema[cols[0]].dataType
+        if (
+            gate
+            and isinstance(dt, _INTEGRAL)
+            and all(proj.schema[c].dataType == dt for c in cols)
+        ):
+            # count(col) skips NULLs, so one job sizes the graph and
+            # detects NULL endpoints
+            row = proj.agg(
+                F.count(F.lit(1)), *[F.count(c) for c in cols]
+            ).first()
+            if row[0] <= _DRIVER_GRAPH_MAX_EDGES and all(
+                c == row[0] for c in row[1:]
+            ):
+                pdf = proj.toPandas()
+        yield proj, pdf
+    finally:
+        proj.unpersist(False)
 
 
 def pagerank_fixed(
@@ -164,121 +222,59 @@ def bfs_hops(
     loop grows the plan exponentially).  Deterministic: min() combine,
     no RNG — a recursive-CTE SQL oracle walks the same fixpoint.
 
-    Size-gated driver solve (``_DRIVER_GRAPH_MAX_EDGES``): BFS hops are
-    a pure integer min-fixpoint, so below the gate the same bounded
-    walk runs driver-side.  The size gate runs only after the cheap
-    type checks pass, as one bounded agg that also detects NULL
-    endpoints engine-side, so no Arrow collect is paid unless the
-    graph is both small and NULL-free.  The edge projection is
-    ``persist``-ed (not ``localCheckpoint``-ed), materialized once by
-    the gate agg and read back by every later consumer — persist keeps
-    LINEAGE so a lost executor recomputes blocks instead of failing
-    the job, and MEMORY_AND_DISK spills a data-sized edge list instead
-    of pinning it.
+    Size-gated driver solve (``_driver_solve``): BFS hops are a pure
+    integer min-fixpoint, so below the gate the same bounded walk runs
+    driver-side.  The source set is gated too (distinct, same node
+    type as the edges), and only after the edge list passed.
     """
     spark = edges.sparkSession
     node_dt = sources.schema[node_col].dataType
-    # cheap type gate FIRST (no job): the driver walk needs integral,
-    # exactly-matching node types on BOTH edge endpoints — a mixed-type
-    # edge list (e.g. string src, long dst) would silently diverge from
-    # the distributed join's implicit-cast semantics, and type equality
-    # keeps the driver path's output schema identical to the
-    # distributed union's coercion result
-    type_ok = (
-        isinstance(node_dt, _INTEGRAL)
-        and edges.schema[src_col].dataType == node_dt
-        and edges.schema[dst_col].dataType == node_dt
-    )
-    # persist(), not localCheckpoint: the edge lineage here typically
-    # contains a corpus scan + distinct shuffle, so it is materialized
-    # exactly ONCE (by the gate agg below) and every later consumer —
-    # the driver fetch or the per-round loop joins — reads the cache.
-    # persist keeps LINEAGE (a lost executor recomputes blocks instead
-    # of failing the job) and MEMORY_AND_DISK spills a data-sized edge
-    # list instead of pinning it; re-running the lineage per pass was
-    # measured 1.5-2x worse (the distinct shuffle re-runs), and the
-    # old eager localCheckpoint was the fault-tolerance hazard.
-    edges = edges.select(src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
-    small = False
-    src_frame = None
-    if type_ok:
-        # one bounded agg job materializes the cache, sizes the graph
-        # AND detects NULLs engine-side (count(col) skips NULLs; NULL
-        # endpoints have engine-specific join semantics, so those
-        # graphs stay distributed) — no Arrow collect is paid unless
-        # the graph is both small and NULL-free
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(src_col).alias("ns"),
-            F.count(dst_col).alias("nd"),
-        ).first()
-        small = (
-            row["n"] <= _DRIVER_GRAPH_MAX_EDGES
-            and row["ns"] == row["n"]
-            and row["nd"] == row["n"]
-        )
-    if small:
-        src_frame = (
-            sources.select(node_col)
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        srow = src_frame.agg(
-            F.count(F.lit(1)).alias("n"), F.count(node_col).alias("nn")
-        ).first()
-        small = srow["n"] <= _DRIVER_GRAPH_MAX_EDGES and srow["nn"] == srow["n"]
-    if small:
-        epdf = edges.toPandas()
-        spdf = src_frame.toPandas()
-        edges.unpersist(False)
-        src_frame.unpersist(False)
-        adj: dict = {}
-        for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
-            adj.setdefault(s, []).append(d)
-        dist = {n: 0 for n in spdf[node_col].tolist()}
-        frontier = set(dist)
+    with _driver_solve(edges, (src_col, dst_col)) as (edges, epdf), _driver_solve(
+        sources.select(node_col).distinct(),
+        (node_col,),
+        gate=epdf is not None and edges.schema[src_col].dataType == node_dt,
+    ) as (_, spdf):
+        if spdf is not None:
+            adj: dict = {}
+            for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
+                adj.setdefault(s, []).append(d)
+            dist = {n: 0 for n in spdf[node_col].tolist()}
+            frontier = set(dist)
+            for h in range(1, max_hops + 1):
+                nxt = set()
+                for u in frontier:
+                    for v in adj.get(u, ()):
+                        if v not in dist:
+                            dist[v] = h
+                            nxt.add(v)
+                if not nxt:
+                    break
+                frontier = nxt
+            schema = T.StructType(
+                [
+                    T.StructField(node_col, node_dt),
+                    T.StructField("hops", T.IntegerType()),
+                ]
+            )
+            return spark.createDataFrame(sorted(dist.items()), schema)
+        dist = sources.select(
+            F.col(node_col), F.lit(0).alias("hops")
+        ).distinct().localCheckpoint(eager=True)
         for h in range(1, max_hops + 1):
-            nxt = set()
-            for u in frontier:
-                for v in adj.get(u, ()):
-                    if v not in dist:
-                        dist[v] = h
-                        nxt.add(v)
-            if not nxt:
-                break
-            frontier = nxt
-        schema = T.StructType(
-            [
-                T.StructField(node_col, node_dt),
-                T.StructField("hops", T.IntegerType()),
-            ]
-        )
-        return spark.createDataFrame(sorted(dist.items()), schema)
-    if src_frame is not None:
-        # sources were gated but the graph fell through (NULL-bearing
-        # or oversized source set)
-        src_frame.unpersist(False)
-    dist = sources.select(
-        F.col(node_col), F.lit(0).alias("hops")
-    ).distinct().localCheckpoint(eager=True)
-    for h in range(1, max_hops + 1):
-        frontier = dist.filter(F.col("hops") == h - 1).select(
-            F.col(node_col).alias("_fnode")
-        )
-        reached = (
-            edges.join(frontier, edges[src_col] == F.col("_fnode"))
-            .select(F.col(dst_col).alias(node_col), F.lit(h).alias("hops"))
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy(node_col)
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-    # dist was eagerly checkpointed every round, so the returned frame
-    # no longer references the cached projection
-    edges.unpersist(False)
-    return dist
+            frontier = dist.filter(F.col("hops") == h - 1).select(
+                F.col(node_col).alias("_fnode")
+            )
+            reached = (
+                edges.join(frontier, edges[src_col] == F.col("_fnode"))
+                .select(F.col(dst_col).alias(node_col), F.lit(h).alias("hops"))
+            )
+            dist = (
+                dist.unionByName(reached)
+                .groupBy(node_col)
+                .agg(F.min("hops").alias("hops"))
+                .localCheckpoint(eager=True)
+            )
+        return dist
 
 
 def kcore_peel(
@@ -307,82 +303,66 @@ def kcore_peel(
     O(log n) rounds in practice).  Lineage flattens per round with
     ``localCheckpoint`` (the iterative-DataFrame rule).
 
+    Size-gated driver solve (``_driver_solve``): the peel is pure
+    integer degree counting on the simple-edge set, so below the gate
+    the SAME fixed rounds iterate driver-side.  (NULL endpoints are
+    impossible here: the src != dst filter drops NULL comparisons.)
+
     Output: (node, core_deg) for every node surviving round
     ``rounds``, with its degree inside the surviving subgraph.
     """
-    # persist(), not localCheckpoint: the simple-edge lineage contains
-    # a corpus scan + distinct shuffle, materialized exactly ONCE (by
-    # the gate count) and read back by the driver fetch or round 1's
-    # three consumers (degree agg + two semi-joins).  persist keeps
-    # LINEAGE (lost executors recompute instead of failing) and
-    # MEMORY_AND_DISK spills a data-sized edge set instead of pinning
-    # it.  (NULL endpoints are impossible here: the src != dst filter
-    # drops NULL comparisons.)
-    und = (
-        edges.filter(F.col(src_col) != F.col(dst_col))
-        .select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # size-gated driver solve: the peel is pure integer degree counting
-    # on the simple-edge set — below the gate, iterate the SAME fixed
-    # rounds driver-side instead of paying ~3 jobs per round.  The
-    # cheap type check runs FIRST so non-integral graphs never pay the
-    # count job.
-    u_dt = und.schema["u"].dataType
-    if isinstance(u_dt, _INTEGRAL) and und.count() <= _DRIVER_GRAPH_MAX_EDGES:
-        spark = edges.sparkSession
-        updf = und.toPandas()  # Arrow transfer, bounded by the gate
-        und.unpersist(False)
-        cur_pairs = set(zip(updf["u"].tolist(), updf["v"].tolist()))
-        for _ in range(rounds):
-            deg: dict = {}
+    simple = edges.filter(F.col(src_col) != F.col(dst_col)).select(
+        F.least(F.col(src_col), F.col(dst_col)).alias("u"),
+        F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
+    ).distinct()
+    with _driver_solve(simple, ("u", "v")) as (und, updf):
+        if updf is not None:
+            cur_pairs = set(zip(updf["u"].tolist(), updf["v"].tolist()))
+            for _ in range(rounds):
+                deg: dict = {}
+                for u, v in cur_pairs:
+                    deg[u] = deg.get(u, 0) + 1
+                    deg[v] = deg.get(v, 0) + 1
+                keep = {n for n, d in deg.items() if d >= k}
+                cur_pairs = {
+                    (u, v) for (u, v) in cur_pairs if u in keep and v in keep
+                }
+            core_deg: dict = {}
             for u, v in cur_pairs:
-                deg[u] = deg.get(u, 0) + 1
-                deg[v] = deg.get(v, 0) + 1
-            keep = {n for n, d in deg.items() if d >= k}
-            cur_pairs = {
-                (u, v) for (u, v) in cur_pairs if u in keep and v in keep
-            }
-        core_deg: dict = {}
-        for u, v in cur_pairs:
-            core_deg[u] = core_deg.get(u, 0) + 1
-            core_deg[v] = core_deg.get(v, 0) + 1
-        schema = T.StructType(
-            [
-                T.StructField("node", u_dt),
-                T.StructField("core_deg", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame(sorted(core_deg.items()), schema)
-    cur = und
-    for _ in range(rounds):
-        deg = (
+                core_deg[u] = core_deg.get(u, 0) + 1
+                core_deg[v] = core_deg.get(v, 0) + 1
+            schema = T.StructType(
+                [
+                    T.StructField("node", und.schema["u"].dataType),
+                    T.StructField("core_deg", T.LongType()),
+                ]
+            )
+            return edges.sparkSession.createDataFrame(
+                sorted(core_deg.items()), schema
+            )
+        cur = und
+        for _ in range(rounds):
+            deg = (
+                cur.select(F.col("u").alias("node"))
+                .unionByName(cur.select(F.col("v").alias("node")))
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            keep = deg.filter(F.col("deg") >= k).select("node")
+            cur = (
+                cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+                .select("u", "v")
+                .localCheckpoint(eager=True)
+            )
+        # with rounds == 0 the returned frame still reads the cached
+        # simple-edge set lazily — safe after unpersist, lineage kept
+        return (
             cur.select(F.col("u").alias("node"))
             .unionByName(cur.select(F.col("v").alias("node")))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
         )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        cur = (
-            cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-    # cur was eagerly checkpointed every round, so the returned frame
-    # only references the cached simple-edge set when rounds == 0 — and
-    # persist kept lineage, so unpersisting is safe even then
-    und.unpersist(False)
-    return (
-        cur.select(F.col("u").alias("node"))
-        .unionByName(cur.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
-    )
 
 
 def label_propagation(
@@ -416,107 +396,182 @@ def label_propagation(
     with no out-edges keeps its previous label.  Symmetrized input
     makes both statements the undirected neighbor rule.
 
+    Size-gated driver solve (``_driver_solve``): the synchronous update
+    is integer label counting with a (count DESC, label ASC) argmax —
+    engine-identical on integral labels, so below the gate the SAME
+    fixed rounds run driver-side.  Duplicate (src, dst) rows keep their
+    multiplicity exactly as the distributed count does.
+
     Output: (node, label) after ``rounds`` synchronous updates.
     """
     from pyspark.sql import Window
 
-    # size-gated driver solve: the synchronous update is integer label
-    # counting with a (count DESC, label ASC) argmax — engine-identical
-    # on integral labels, so below the gate the SAME fixed rounds run
-    # driver-side (each distributed round costs a join + agg + window
-    # + checkpoint of pure choreography on a KB-scale graph).  The
-    # cheap type gate runs FIRST (no job); the size gate is one
-    # bounded agg that also detects NULL endpoints engine-side, so no
-    # Arrow collect is paid unless the graph is both small and
-    # NULL-free.  The projection is persist()-ed, not
-    # localCheckpoint-ed — materialized once by the gate agg, read
-    # back by the driver fetch or the per-round loop joins; persist
-    # keeps LINEAGE (lost executors recompute instead of failing) with
-    # MEMORY_AND_DISK spill for data-sized graphs.  Duplicate
-    # (src, dst) rows keep their multiplicity exactly as the
-    # distributed count does.
-    src_dt = edges.schema[src_col].dataType
-    type_ok = (
-        isinstance(src_dt, _INTEGRAL)
-        and edges.schema[dst_col].dataType == src_dt
-    )
-    edges = edges.select(src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
-    small = False
-    if type_ok:
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(src_col).alias("ns"),
-            F.count(dst_col).alias("nd"),
-        ).first()
-        small = (
-            row["n"] <= _DRIVER_GRAPH_MAX_EDGES
-            and row["ns"] == row["n"]
-            and row["nd"] == row["n"]
-        )
-    if small:
-        epdf = edges.toPandas()
-        edges.unpersist(False)
-        spark = edges.sparkSession
-        out_adj: dict = {}
-        node_set: set = set()
-        for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
-            out_adj.setdefault(s, []).append(d)
-            node_set.add(s)
-            node_set.add(d)
-        lab = {n: n for n in node_set}
-        for _ in range(rounds):
-            new_lab = dict(lab)
-            for n, outs in out_adj.items():
-                cnt: dict = {}
-                for d in outs:
-                    dl = lab[d]
-                    cnt[dl] = cnt.get(dl, 0) + 1
-                new_lab[n] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            lab = new_lab
-        schema = T.StructType(
-            [
-                T.StructField("node", src_dt),
-                T.StructField("label", src_dt),
-            ]
-        )
-        return spark.createDataFrame(sorted(lab.items()), schema)
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-    )
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(rounds):
-        neigh = edges.join(
-            labels.withColumnRenamed("node", "_ln"),
-            F.col(dst_col) == F.col("_ln"),
-        ).select(F.col(src_col).alias("node"), "label")
-        counts = neigh.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w = Window.partitionBy("node").orderBy(
-            F.col("c").desc(), F.col("label").asc()
-        )
-        best = (
-            counts.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("node", "label")
-        )
-        # nodes with no in-edges keep their current label
-        labels = (
-            labels.join(best.withColumnRenamed("label", "_new"), "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+    with _driver_solve(edges, (src_col, dst_col)) as (edges, epdf):
+        if epdf is not None:
+            out_adj: dict = {}
+            node_set: set = set()
+            for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
+                out_adj.setdefault(s, []).append(d)
+                node_set.add(s)
+                node_set.add(d)
+            lab = {n: n for n in node_set}
+            for _ in range(rounds):
+                new_lab = dict(lab)
+                for n, outs in out_adj.items():
+                    cnt: dict = {}
+                    for d in outs:
+                        dl = lab[d]
+                        cnt[dl] = cnt.get(dl, 0) + 1
+                    new_lab[n] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+                lab = new_lab
+            src_dt = edges.schema[src_col].dataType
+            schema = T.StructType(
+                [
+                    T.StructField("node", src_dt),
+                    T.StructField("label", src_dt),
+                ]
             )
+            return edges.sparkSession.createDataFrame(sorted(lab.items()), schema)
+        nodes = (
+            edges.select(F.col(src_col).alias("node"))
+            .unionByName(edges.select(F.col(dst_col).alias("node")))
+            .distinct()
+        )
+        labels = nodes.select(
+            "node", F.col("node").alias("label")
+        ).localCheckpoint(eager=True)
+        for _ in range(rounds):
+            neigh = edges.join(
+                labels.withColumnRenamed("node", "_ln"),
+                F.col(dst_col) == F.col("_ln"),
+            ).select(F.col(src_col).alias("node"), "label")
+            counts = neigh.groupBy("node", "label").agg(
+                F.count(F.lit(1)).alias("c")
+            )
+            w = Window.partitionBy("node").orderBy(
+                F.col("c").desc(), F.col("label").asc()
+            )
+            best = (
+                counts.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") == 1)
+                .select("node", "label")
+            )
+            # nodes with no in-edges keep their current label
+            labels = (
+                labels.join(best.withColumnRenamed("label", "_new"), "node", "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        return labels
+
+
+def connected_components(
+    pairs: DataFrame,
+    a_col: str = "doc_a",
+    b_col: str = "doc_b",
+    max_iter: int = 50,
+) -> DataFrame:
+    """Cluster near-duplicate PAIRS into components: ``(doc_id,
+    cluster_id)`` where ``cluster_id`` is the MINIMUM doc_id reachable
+    through the pair graph — the standard step between candidate-pair
+    generation (d1/d3/d4b/v4) and canonical-document selection in a
+    training-data dedup pipeline.  The fixpoint is unique, so any
+    correct algorithm (including a SQL transitive-closure oracle)
+    produces identical output.
+
+    Algorithm: min-label propagation with POINTER JUMPING — each round
+    a node takes ``min(own label, labels of neighbors, label OF its
+    label)``.  The neighbor step alone converges in graph-diameter
+    rounds; the label-of-label join doubles the propagation distance
+    per round, giving O(log diameter) convergence (the same idea as
+    large-star/small-star).  Each round is two shuffles on node id;
+    per-round ``localCheckpoint`` keeps the lineage flat (an iterative
+    DataFrame loop otherwise grows the plan exponentially).
+    Convergence detection: labels only ever decrease, so SUM(label)
+    strictly decreases until the fixpoint — one cheap agg per round.
+
+    Size-gated driver solve (``_driver_solve``): below the gate the
+    component labels come from a driver union-find over the doubled
+    edge set (same unique fixpoint; near-dup pair graphs are a tiny
+    fraction of the corpus, and the per-round jobs are pure
+    choreography at that size).  A pair with a NULL endpoint keeps the
+    distributed loop, whose answer includes a ``(NULL, NULL)`` row.
+    """
+    und = pairs.select(
+        F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
+    )
+    doubled = und.unionByName(
+        und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    with _driver_solve(doubled, ("src", "dst")) as (edges, epdf):
+        if epdf is not None:
+            parent: dict = {}
+
+            def find(x: int) -> int:
+                r = x
+                while parent.get(r, r) != r:
+                    r = parent[r]
+                while parent.get(x, x) != r:  # path compression
+                    parent[x], x = r, parent[x]
+                return r
+
+            nodes: set = set()
+            for s, d in zip(epdf["src"].tolist(), epdf["dst"].tolist()):
+                nodes.add(s)
+                a, b = find(s), find(d)
+                if a != b:
+                    # union by MIN id: the winning root is always the
+                    # component's minimum node id, which is exactly the
+                    # distributed loop's fixpoint label
+                    if b < a:
+                        a, b = b, a
+                    parent[b] = a
+            return pairs.sparkSession.createDataFrame(
+                sorted((n, find(n)) for n in nodes), "doc_id long, cluster_id long"
+            )
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
             .localCheckpoint(eager=True)
         )
-    # labels was eagerly checkpointed every round, so the returned
-    # frame no longer references the cached edge projection
-    edges.unpersist(False)
-    return labels
+        prev_sum = labels.agg(F.sum("label")).first()[0]
+        for _ in range(max_iter):
+            neigh = (
+                edges.join(labels, edges["src"] == labels["node"])
+                .groupBy(edges["dst"].alias("node2"))
+                .agg(F.min("label").alias("_nmin"))
+            )
+            hop = labels.select(
+                F.col("node").alias("lnode"), F.col("label").alias("_lmin")
+            )
+            labels = (
+                labels.join(neigh, labels["node"] == neigh["node2"], "left")
+                .join(hop, labels["label"] == hop["lnode"], "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("_nmin"), F.col("label")),
+                        F.coalesce(F.col("_lmin"), F.col("label")),
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            new_sum = labels.agg(F.sum("label")).first()[0]
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+        return labels.select(
+            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+        )
 
 
 def hits_fixed(

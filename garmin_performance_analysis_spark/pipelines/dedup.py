@@ -20,7 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -339,139 +338,6 @@ def simhash_near_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
     )
-
-
-# Doubled-edge count under which connected_components solves on the
-# driver (one bounded collect, ~16 bytes/edge → ≤ ~3 MB).  Above it
-# the distributed pointer-jumping loop runs unchanged.
-_DRIVER_CC_MAX_EDGES = 200_000
-
-
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Cluster near-duplicate PAIRS into components: ``(doc_id,
-    cluster_id)`` where ``cluster_id`` is the MINIMUM doc_id reachable
-    through the pair graph — the standard step between candidate-pair
-    generation (d1/d3/d4b/v4) and canonical-document selection in a
-    training-data dedup pipeline.  The fixpoint is unique, so any
-    correct algorithm (including a SQL transitive-closure oracle)
-    produces identical output.
-
-    Algorithm: min-label propagation with POINTER JUMPING — each round
-    a node takes ``min(own label, labels of neighbors, label OF its
-    label)``.  The neighbor step alone converges in graph-diameter
-    rounds; the label-of-label join doubles the propagation distance
-    per round, giving O(log diameter) convergence (the same idea as
-    large-star/small-star).  Each round is two shuffles on node id;
-    per-round ``localCheckpoint`` keeps the lineage flat (an iterative
-    DataFrame loop otherwise grows the plan exponentially).
-    Convergence detection: labels only ever decrease, so SUM(label)
-    strictly decreases until the fixpoint — one cheap agg per round.
-
-    Size-gated driver solve: below ``_DRIVER_CC_MAX_EDGES`` doubled
-    edges the component labels come from a driver union-find over one
-    bounded collect (same unique fixpoint; near-dup pair graphs are a
-    tiny fraction of the corpus, and the per-round jobs are pure
-    choreography at that size).  The distributed pointer-jumping loop
-    is untouched and remains the path for data-sized graphs.
-    """
-    und = pairs.select(
-        F.col(a_col).cast("long").alias("src"), F.col(b_col).cast("long").alias("dst")
-    )
-    # persist(), not localCheckpoint: the doubled-edge set (union +
-    # distinct shuffle) is materialized exactly ONCE (by the gate
-    # count) and read back by the driver collect or the per-round
-    # pointer-jumping joins.  persist keeps LINEAGE — a lost executor
-    # recomputes blocks instead of failing the job — and
-    # MEMORY_AND_DISK spills a data-sized edge set instead of pinning
-    # it (the 100 TB path stays fault-tolerant).
-    edges = (
-        und.unionByName(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_CC_MAX_EDGES:
-        # size-gated driver solve: the pair graph is usually a tiny
-        # fraction of the corpus (near-dup pairs), and each pointer-
-        # jumping round costs 2+ Spark jobs of pure choreography.
-        # Below the gate (≤ ~3 MB of edge longs) a driver union-find
-        # computes the SAME unique fixpoint (min reachable id per
-        # node) in one bounded collect; above it the distributed loop
-        # below is unchanged — the scale path stays the default.
-        spark = pairs.sparkSession
-        parent: dict = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        nodes: set = set()
-        rows = edges.collect()  # bounded by the gate above
-        edges.unpersist(False)
-        for row in rows:
-            nodes.add(row[0])
-            a, b = find(row[0]), find(row[1])
-            if a != b:
-                # union by MIN id: the winning root is always the
-                # component's minimum node id, which is exactly the
-                # distributed loop's fixpoint label
-                if b < a:
-                    a, b = b, a
-                parent[b] = a
-        return spark.createDataFrame(
-            sorted((n, find(n)) for n in nodes), "doc_id long, cluster_id long"
-        )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(edges["dst"].alias("node2"))
-            .agg(F.min("label").alias("_nmin"))
-        )
-        hop = labels.select(
-            F.col("node").alias("lnode"), F.col("label").alias("_lmin")
-        )
-        jumped = (
-            labels.join(neigh, labels["node"] == neigh["node2"], "left")
-            .join(hop, labels["label"] == hop["lnode"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("_nmin"), F.col("label")),
-                    F.coalesce(F.col("_lmin"), F.col("label")),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        labels = jumped
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    # labels was eagerly checkpointed every round, so the returned
-    # frame no longer references the cached doubled-edge set
-    edges.unpersist(False)
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
 def contamination_stats(

@@ -720,7 +720,7 @@ def semantic_dedup(
          (``srp_lsh_pairs`` — never an all-pairs cross), verified by
          exact cosine ≥ ``threshold``;
       2. the pair graph connected into components with pointer-jumping
-         min-label propagation (``dedup.connected_components``,
+         min-label propagation (``graph.connected_components``,
          O(log diameter) rounds);
       3. canonical = minimum id per component; singleton docs are their
          own canonical.
@@ -737,7 +737,7 @@ def semantic_dedup(
     shuffle, never a broadcast of the (cluster-cardinality ≈ N) size
     table and never an unpartitioned window.
     """
-    from .dedup import connected_components
+    from ..operators.graph import connected_components
 
     pairs = srp_lsh_pairs(
         df, id_col, vec_col, dim=dim, tables=tables, bits=bits, threshold=threshold

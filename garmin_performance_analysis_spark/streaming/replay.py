@@ -38,6 +38,15 @@ Scale shape: the aggregation state is O(open windows × keys), bounded
 by the watermark; the shuffle is the window+key hash — identical to
 the batch twin (A2/A4's rollups).  Nothing here collects to the
 driver.
+
+Every public replay here (windowed stats, stream-stream join, dedup,
+session windows, the custom stateful operator, stream-static enrich)
+runs through ONE private scaffold, ``_replay``: stage → size state
+partitions → override confs → run → restore the confs in a
+``finally``.  It is the single place that starts a streaming query,
+so per-micro-batch progress (``StreamingQuery.lastProgress``) has one
+call site.  The caller owns ``work_dir`` and its deletion
+(``scratch.scratch_dir``).
 """
 
 from __future__ import annotations
@@ -67,22 +76,22 @@ _STATE_PARTITION_BYTES = 64 << 20
 _ALLOW_MULTIPLE_CONF = "spark.sql.streaming.statefulOperator.allowMultiple"
 
 
-def _state_partitions(src_dirs: list[str], session_default: int) -> int:
+def _state_partitions(staged: str, session_default: int) -> int:
     """State partition count derived from the bytes actually staged
     for the stream (guide §2 — partitioning sized from input, not a
     constant).  Floor 2 keeps cross-partition state semantics
     exercised; cap at the session's shuffle parallelism so a replay
     never out-fans the session.  The replay harness stages sources on
-    a local filesystem by construction, so a directory walk is exact;
-    cluster jobs size state explicitly via ``shuffle_partitions``."""
+    a local filesystem by construction, so a directory walk is exact.
+    The count is pinned into the checkpoint at the first micro-batch;
+    results are partitioning-invariant."""
     total = 0
-    for d in src_dirs:
-        for dirpath, _, files in os.walk(d):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
-                except OSError:
-                    continue
+    for dirpath, _, files in os.walk(staged):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(dirpath, f))
+            except OSError:
+                continue
     return max(2, min(session_default, total // _STATE_PARTITION_BYTES + 1))
 
 
@@ -118,34 +127,78 @@ def _stage_batches(batches: list[DataFrame], src: str) -> None:
         os.utime(dst, (t0 + i, t0 + i))
 
 
-def _single_run(
+def _replay(
     spark: SparkSession,
-    batches: list[DataFrame],
+    sides: list[list[DataFrame]],
     work_dir: str,
     build,
-    shuffle_partitions: int | None,
+    *,
+    per_batch: bool = False,
 ) -> str:
-    """Shared single-query replay scaffold: stage the batches, size
-    the state partitions from the staged bytes, and run ONE
-    ``Trigger.AvailableNow`` query with ``maxFilesPerTrigger=1`` —
-    one micro-batch per staged file (in mtime order) plus the run's
-    trailing no-data cleanup micro-batch.  ``build`` maps the file
-    stream to the streaming DataFrame to sink.  Returns the sink
-    path."""
-    src = os.path.join(work_dir, "src")
+    """The one replay scaffold: stage every batch of every side in one
+    ``_stage_batches`` call (the writes overlap), size the state
+    partitions from the staged bytes, run the query, and restore every
+    overridden conf in one ``finally``.  ``sides`` holds one batch list
+    per stream source (equal lengths, one schema); ``build`` maps one
+    file stream per side to the streaming DataFrame to sink.  Returns
+    the sink path.
+
+    Default mode: every batch is released into its side's source dir
+    up-front and ONE ``Trigger.AvailableNow`` query with
+    ``maxFilesPerTrigger=1`` runs them — one micro-batch per staged
+    file per side (in mtime order) plus the run's trailing no-data
+    cleanup micro-batch — in single-watermark mode.
+
+    ``per_batch=True`` runs one AvailableNow query per batch over the
+    shared checkpoint, releasing each batch just before its run, for
+    the operators whose pinned semantics DEPEND on the no-data cleanup
+    micro-batch running between batches: ``dropDuplicatesWithinWatermark``
+    re-emits a key whose state the between-run cleanup evicted (an
+    arrival inside one continuous run instead finds the
+    expired-but-unevicted state and is dropped), and ``session_window``
+    opens a separate session over an emitted-and-evicted one (an
+    arrival inside one run merges into the still-live session).
+    Probed: the single-run shape changes both.  These runs keep the
+    session's watermark mode, as the historical per-run loop did."""
+    staged = os.path.join(work_dir, "staged")
     out = os.path.join(work_dir, "out")
     chk = os.path.join(work_dir, "chk")
-    schema = batches[0].schema
-    _stage_batches(batches, src)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_multi = spark.conf.get(_ALLOW_MULTIPLE_CONF, "true")
-    try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([src], int(prev))
+    schema = sides[0][0].schema
+    n = len(sides[0])
+    _stage_batches([b for side in sides for b in side], staged)
+    srcs = [os.path.join(work_dir, f"src{j}") for j in range(len(sides))]
+    for src in srcs:
+        os.makedirs(src, exist_ok=True)
+
+    def release(i: int) -> None:
+        # staged file j*n+i is side j's batch i; the move keeps its mtime
+        for j, src in enumerate(srcs):
+            os.replace(
+                os.path.join(staged, f"batch_{j * n + i:05d}.parquet"),
+                os.path.join(src, f"batch_{i:05d}.parquet"),
+            )
+
+    def run() -> None:
+        streams = [
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            for src in srcs
+        ]
+        q = (
+            build(*streams)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", chk)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        q.awaitTermination()
+
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    confs = {"spark.sql.shuffle.partitions": str(_state_partitions(staged, shuffle))}
+    if not per_batch:
         # Single-watermark mode (every replay has exactly ONE stateful
         # operator): late events filter against the CURRENT batch's
         # watermark, exactly as a per-run restart filters against the
@@ -153,82 +206,22 @@ def _single_run(
         # stateful operators) lags the late filter one micro-batch —
         # probed: a late row into a closed window merged instead of
         # dropping.
-        spark.conf.set(_ALLOW_MULTIPLE_CONF, "false")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            build(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ALLOW_MULTIPLE_CONF, prev_multi)
-    return out
-
-
-def _multi_run(
-    spark: SparkSession,
-    batches: list[DataFrame],
-    work_dir: str,
-    build,
-    shuffle_partitions: int | None,
-) -> str:
-    """Per-run replay scaffold for the operators whose pinned
-    semantics DEPEND on the no-data cleanup micro-batch running
-    between batches: ``dropDuplicatesWithinWatermark`` re-emits a key
-    whose state the between-run cleanup evicted (an arrival inside one
-    continuous run instead finds the expired-but-unevicted state and
-    is dropped), and ``session_window`` opens a separate session over
-    an emitted-and-evicted one (an arrival inside one run merges into
-    the still-live session).  Probed: the single-run shape changes
-    both.  Batches are still staged up-front with overlapping writes
-    (``_stage_batches``); each is moved into the source dir just
-    before its run, so per-run visibility matches the historical
-    append-then-run loop.  Returns the sink path."""
-    staged = os.path.join(work_dir, "staged")
-    src = os.path.join(work_dir, "src")
-    out = os.path.join(work_dir, "out")
-    chk = os.path.join(work_dir, "chk")
-    schema = batches[0].schema
-    _stage_batches(batches, staged)
-    os.makedirs(src, exist_ok=True)
-
-    def run_once() -> None:
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            build(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+        confs[_ALLOW_MULTIPLE_CONF] = "false"
+    prev = {k: spark.conf.get(k) for k in confs}
     try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([staged], int(prev))
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        for i in range(len(batches)):
-            name = f"batch_{i:05d}.parquet"
-            os.replace(os.path.join(staged, name), os.path.join(src, name))
-            run_once()
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        if per_batch:
+            for i in range(n):
+                release(i)
+                run()
+        else:
+            for i in range(n):
+                release(i)
+            run()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     return out
 
 
@@ -242,7 +235,6 @@ def windowed_stats_replay(
     value_col: str = "value",
     window_sec: int = 300,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` (in order) through the streaming windowed
     aggregation and return the parquet sink's contents — the finalized
@@ -252,14 +244,10 @@ def windowed_stats_replay(
     ``value_sum`` aggregates through DECIMAL(30,12) inside the stream
     (shuffle-order-independent, registry convention); ``value_avg`` is
     derived as sum/n at read-back so both engines share one formula.
-
-    ``shuffle_partitions`` bounds the stream's state partition count
-    (see ``stream_join_replay`` — per-partition state-store setup is
-    the replay's fixed cost; results are partitioning-invariant).
     """
-    out = _single_run(
+    out = _replay(
         spark,
-        batches,
+        [batches],
         work_dir,
         lambda stream: (
             stream.withWatermark(ts_col, f"{watermark_sec} seconds")
@@ -274,7 +262,6 @@ def windowed_stats_replay(
                 F.max(value_col).alias("vmax"),
             )
         ),
-        shuffle_partitions,
     )
     sink = spark.read.parquet(out)
     return sink.select(
@@ -298,7 +285,6 @@ def stream_join_replay(
     ts_col: str = "ts",
     max_gap_sec: int = 600,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
     join_type: str = "inner",
 ) -> DataFrame:
     """Deterministic replay of a STREAM-STREAM inner join — the
@@ -359,73 +345,22 @@ def stream_join_replay(
 
     Returns the sink contents: one row per emitted match with both
     sides' payloads.
-
-    ``shuffle_partitions`` bounds the stream's STATE partition count
-    (pinned into the checkpoint at the first batch): a stream-stream
-    join spins four state stores per partition per run, a fixed cost
-    that dwarfs the data at replay scale — the earlier constant 8
-    halved the replay wall vs the session's 32 with identical results.
-    The default (``None``) now derives the count from the bytes staged
-    for the first batch pair (``_state_partitions`` — 64 MB/partition,
-    floor 2), so the harness stays scale-adaptive instead of pinning a
-    local-mode constant; results are partitioning-invariant either
-    way.  Cluster jobs size state explicitly by key cardinality via an
-    int.
     """
-    src_l = os.path.join(work_dir, "src_l")
-    src_r = os.path.join(work_dir, "src_r")
-    out = os.path.join(work_dir, "out")
-    chk = os.path.join(work_dir, "chk")
-    schema = left_batches[0].schema
-    _stage_batches(list(left_batches) + list(right_batches), work_dir + "/all")
-    # staged together so the two sides' writes overlap; split the files
-    # into the per-side source dirs, preserving per-side order
-    os.makedirs(src_l, exist_ok=True)
-    os.makedirs(src_r, exist_ok=True)
-    n = len(left_batches)
-    for i in range(n):
-        os.replace(
-            os.path.join(work_dir, "all", f"batch_{i:05d}.parquet"),
-            os.path.join(src_l, f"batch_{i:05d}.parquet"),
-        )
-        os.replace(
-            os.path.join(work_dir, "all", f"batch_{n + i:05d}.parquet"),
-            os.path.join(src_r, f"batch_{i:05d}.parquet"),
+
+    def side(stream: DataFrame, prefix: str, key_alias: str) -> DataFrame:
+        return stream.withWatermark(ts_col, f"{watermark_sec} seconds").select(
+            F.col(key_col).alias(key_alias),
+            F.col(ts_col).alias(f"{prefix}ts"),
+            *[
+                F.col(c).alias(f"{prefix}{c}")
+                for c in stream.columns
+                if c not in (key_col, ts_col)
+            ],
         )
 
-    def run_single() -> None:
-        left = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_l)
-            .withWatermark(ts_col, f"{watermark_sec} seconds")
-            .select(
-                F.col(key_col).alias("k"),
-                F.col(ts_col).alias("l_ts"),
-                *[
-                    F.col(c).alias(f"l_{c}")
-                    for c in schema.fieldNames()
-                    if c not in (key_col, ts_col)
-                ],
-            )
-        )
-        right = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_r)
-            .withWatermark(ts_col, f"{watermark_sec} seconds")
-            .select(
-                F.col(key_col).alias("r_k"),
-                F.col(ts_col).alias("r_ts"),
-                *[
-                    F.col(c).alias(f"r_{c}")
-                    for c in schema.fieldNames()
-                    if c not in (key_col, ts_col)
-                ],
-            )
-        )
-        joined = left.join(
-            right,
+    def build(left: DataFrame, right: DataFrame) -> DataFrame:
+        return side(left, "l_", "k").join(
+            side(right, "r_", "r_k"),
             (F.col("k") == F.col("r_k"))
             & (F.col("r_ts") >= F.col("l_ts"))
             & (
@@ -434,32 +369,8 @@ def stream_join_replay(
             ),
             join_type,
         ).drop("r_k")
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_multi = spark.conf.get(_ALLOW_MULTIPLE_CONF, "true")
-    try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([src_l, src_r], int(prev))
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        # single-watermark mode — see _single_run
-        spark.conf.set(_ALLOW_MULTIPLE_CONF, "false")
-        run_single()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(_ALLOW_MULTIPLE_CONF, prev_multi)
-
+    out = _replay(spark, [left_batches, right_batches], work_dir, build)
     return spark.read.parquet(out)
 
 
@@ -471,12 +382,11 @@ def stream_dedup_replay(
     ts_col: str = "ts",
     key_cols: list[str] | None = None,
     delay_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the REAL streaming watermarked dedup
     (``withWatermark`` → ``dropDuplicatesWithinWatermark``), one
     ``Trigger.AvailableNow`` run per batch over a shared checkpoint
-    (``_multi_run`` — the between-run cleanup micro-batch is what
+    (``_replay(per_batch=True)`` — the between-run cleanup micro-batch is what
     evicts expired keys so a later redelivery RE-EMITS; one continuous
     run would drop it against the unevicted state), and return the
     sink's emitted KEY rows (multiplicity = emissions).
@@ -503,14 +413,14 @@ def stream_dedup_replay(
     are.  Callers wanting payloads must make them functions of the key.
     """
     key_cols = key_cols or ["k"]
-    out = _multi_run(
+    out = _replay(
         spark,
-        batches,
+        [batches],
         work_dir,
         lambda stream: stream.withWatermark(
             ts_col, f"{delay_sec} seconds"
         ).dropDuplicatesWithinWatermark(key_cols),
-        shuffle_partitions,
+        per_batch=True,
     )
     return spark.read.parquet(out).select(*key_cols)
 
@@ -525,12 +435,11 @@ def stream_session_replay(
     value_col: str = "value",
     gap_sec: int = 1800,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the REAL streaming session-window
     aggregation (``session_window`` + ``withWatermark``, append mode),
     one ``Trigger.AvailableNow`` run per batch over a shared
-    checkpoint (``_multi_run`` — the between-run cleanup micro-batch
+    checkpoint (``_replay(per_batch=True)`` — the between-run cleanup micro-batch
     evicts emitted sessions so a late survivor opens a SEPARATE
     session; one continuous run would merge it into the still-live
     state), and return the emitted sessions.
@@ -553,9 +462,9 @@ def stream_session_replay(
       overlapping it opens a separate session (probed: overlapping
       emitted+new sessions both appear in the sink).
     """
-    out = _multi_run(
+    out = _replay(
         spark,
-        batches,
+        [batches],
         work_dir,
         lambda stream: (
             stream.withWatermark(ts_col, f"{watermark_sec} seconds")
@@ -568,7 +477,7 @@ def stream_session_replay(
                 F.sum(F.col(value_col).cast("decimal(30,12)")).alias("vsum"),
             )
         ),
-        shuffle_partitions,
+        per_batch=True,
     )
     sink = spark.read.parquet(out)
     return sink.select(
@@ -589,12 +498,11 @@ def stream_stateful_runs_replay(
     seq_col: str = "seq",
     max_gap: int = 2,
     min_span: int = 5,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the CUSTOM stateful operator
     (``streaming/stateful.sustained_runs_stateful`` —
     ``applyInPandasWithState``), one ``Trigger.AvailableNow`` run with
-    one micro-batch per staged batch file (``_single_run``), and
+    one micro-batch per staged batch file (``_replay``), and
     return the emitted islands.
 
     Emission contract (follows directly from the operator, so the i8
@@ -619,14 +527,13 @@ def stream_stateful_runs_replay(
     """
     from .stateful import sustained_runs_stateful
 
-    out = _single_run(
+    out = _replay(
         spark,
-        batches,
+        [batches],
         work_dir,
         lambda stream: sustained_runs_stateful(
             stream, key_col, seq_col, max_gap=max_gap, min_span=min_span
         ),
-        shuffle_partitions,
     )
     return spark.read.parquet(out)
 
@@ -643,7 +550,6 @@ def stream_static_enrich_replay(
     value_col: str = "value",
     window_sec: int = 300,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through a STREAM-STATIC enrichment pipeline:
     file stream → watermark → INNER join against the static ``dim``
@@ -651,7 +557,7 @@ def stream_static_enrich_replay(
     watermark needed on the static side, unmatched stream rows drop)
     → tumbling windowed aggregate per enriched key → append-mode
     parquet sink, one ``Trigger.AvailableNow`` run with one
-    micro-batch per staged batch file (``_single_run``).
+    micro-batch per staged batch file (``_replay``).
 
     Stream-static is its OWN Structured Streaming feature, distinct
     from the stream-stream joins (i4/i9): the static side is re-read
@@ -664,9 +570,9 @@ def stream_static_enrich_replay(
 
     Aggregates mirror ``windowed_stats_replay`` (DECIMAL sums).
     """
-    out = _single_run(
+    out = _replay(
         spark,
-        batches,
+        [batches],
         work_dir,
         lambda stream: (
             stream.withWatermark(ts_col, f"{watermark_sec} seconds")
@@ -680,7 +586,6 @@ def stream_static_enrich_replay(
                 F.sum(F.col(value_col).cast("decimal(30,12)")).alias("vsum"),
             )
         ),
-        shuffle_partitions,
     )
     sink = spark.read.parquet(out)
     return sink.select(

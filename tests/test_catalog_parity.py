@@ -87,3 +87,21 @@ def test_null_shapes_normalize_identically():
     e = pd.DataFrame({"t": [pd.NaT]})
     f = pd.DataFrame({"t": [None]})
     assert compare_frames("nat", e, f, strict=True).ok
+
+
+def test_sink_roundtrips_leave_no_scratch(spark, tmp_path, monkeypatch):
+    """The per-call scratch dirs of the sink/source roundtrips and a
+    streaming replay are gone when the entry returns, while the
+    returned frame still collects (it was materialized inside the
+    scoped dir)."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    for name in (
+        "s5_export_roundtrip",
+        "s8_csv_roundtrip",
+        "s9_schema_evolution",
+        "c9_webdataset_roundtrip",
+        "i3_stream_window_replay",
+    ):
+        df = CATALOG[name].fn(spark, SF_SMOKE)
+        assert list(tmp_path.iterdir()) == [], name
+        assert len(df.collect()) > 0, name

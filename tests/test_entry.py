@@ -46,14 +46,25 @@ spark = (
     .config("spark.driver.memory", "1g")
     .getOrCreate()
 )
-print("ROWS", m.queries()["v9_semantic_dedup"](spark, sys.argv[2]).count())
+for name in sys.argv[3:]:
+    print("ROWS", name, m.queries()[name](spark, sys.argv[2]).count())
 spark.stop()
 """
+
+# One entry per Python-worker UDF family: pandas_udf, mapInPandas,
+# applyInPandas, and applyInPandasWithState (through the streaming
+# replay scaffold).
+_FOREIGN_CWD_ENTRIES = (
+    "v9_semantic_dedup",
+    "mm2_decoded_features",
+    "c9_webdataset_roundtrip",
+    "i8_stream_runs_replay",
+)
 
 
 def test_python_worker_entry_from_foreign_cwd(tmp_path, sf_dir):
     # a caller that loads the contract file by path, from its own cwd
-    # and with its own session: a UDF entry (v9's pandas_udf) must still
+    # and with its own session: an entry of every UDF family must still
     # find this package inside the Python workers
     import subprocess
     import sys
@@ -67,6 +78,7 @@ def test_python_worker_entry_from_foreign_cwd(tmp_path, sf_dir):
             _FOREIGN_CWD_SCRIPT,
             os.path.join(repo, "__spark_entry__.py"),
             sf_dir,
+            *_FOREIGN_CWD_ENTRIES,
         ],
         cwd=tmp_path,
         env=env,
@@ -75,4 +87,11 @@ def test_python_worker_entry_from_foreign_cwd(tmp_path, sf_dir):
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "ROWS 500" in proc.stdout
+    rows = dict(
+        line.split()[1:]
+        for line in proc.stdout.splitlines()
+        if line.startswith("ROWS ")
+    )
+    assert rows.keys() == set(_FOREIGN_CWD_ENTRIES), proc.stdout
+    assert rows["v9_semantic_dedup"] == "500"
+    assert all(int(n) > 0 for n in rows.values()), rows

@@ -1021,6 +1021,41 @@ def test_graph_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert d == s and len(d) > 0
 
 
+def test_graph_kernels_release_projection_when_they_raise(spark, monkeypatch):
+    """Every integer graph fixpoint persists its projection; a kernel
+    that raises on its distributed path must still unpersist it, so
+    the session's CacheManager is empty after each raise."""
+    import pytest
+
+    from garmin_performance_analysis_spark.operators import graph as g
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    monkeypatch.setattr(g, "_DRIVER_GRAPH_MAX_EDGES", 0)
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        g.connected_components(path, max_iter=1)
+    assert cache.isEmpty()
+    # a long-typed edge column that raises when evaluated
+    bad = spark.range(8).select(
+        F.col("id").alias("src"),
+        F.when(F.col("id") < 0, F.col("id"))
+        .otherwise(F.raise_error(F.lit("boom")))
+        .alias("dst"),
+    )
+    sources = spark.createDataFrame([(0,)], "node long")
+    for kernel in (
+        lambda: g.bfs_hops(bad, sources),
+        lambda: g.kcore_peel(bad),
+        lambda: g.label_propagation(bad),
+    ):
+        with pytest.raises(Exception, match="boom"):
+            kernel()
+        assert cache.isEmpty()
+
+
 def test_hdr_sketch_quantiles_bound_and_merge(spark):
     """The a21 sketch's percentile estimate must be the lower bound of
     the bucket CONTAINING the exact rank-order statistic (≤ 6.25%

@@ -9,6 +9,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from garmin_performance_analysis_spark.operators import graph
 from garmin_performance_analysis_spark.pipelines import (
     dedup,
     multimodal,
@@ -498,7 +499,7 @@ def test_connected_components_path_graph(spark):
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(df, max_iter=8).collect()
+        for r in graph.connected_components(df, max_iter=8).collect()
     }
     assert got == {n: 0 for n in range(24)}
 
@@ -524,7 +525,7 @@ def test_connected_components_matches_union_find(spark):
     df = spark.createDataFrame(all_edges, "doc_a long, doc_b long")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.connected_components(df).collect()
+        for r in graph.connected_components(df).collect()
     }
     assert got == want
 
@@ -533,16 +534,27 @@ def test_connected_components_driver_and_distributed_paths_agree(spark, monkeypa
     """The size-gated driver union-find and the distributed pointer-
     jumping loop must produce the identical fixpoint — forced onto
     each path via the gate constant (path graph stresses compression,
-    the mixed cases stress min-label tie shapes)."""
+    the mixed cases stress min-label tie shapes).  A NULL endpoint
+    must not reach the driver solve: the gate sends it to the
+    distributed loop on both settings."""
     edges = [(i, i + 1) for i in range(40)] + [
         (500, 900), (900, 501), (777, 777), (1000, 999),
     ]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 10**9)
-    via_driver = sorted(map(tuple, dedup.connected_components(df).collect()))
-    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
-    via_spark = sorted(map(tuple, dedup.connected_components(df).collect()))
-    assert via_driver == via_spark
+
+    def null_last(row):
+        return tuple((v is None, v or 0) for v in row)
+
+    for case in (edges, edges + [(None, 3), (2000, None)]):
+        df = spark.createDataFrame(case, "doc_a long, doc_b long")
+        monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", 10**9)
+        via_driver = sorted(
+            map(tuple, graph.connected_components(df).collect()), key=null_last
+        )
+        monkeypatch.setattr(graph, "_DRIVER_GRAPH_MAX_EDGES", 0)
+        via_spark = sorted(
+            map(tuple, graph.connected_components(df).collect()), key=null_last
+        )
+        assert via_driver == via_spark
 
 
 def test_batch_topk_matches_per_query_brute_force(spark):
@@ -1273,7 +1285,7 @@ def test_c20_effective_tokens_consistency(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     pairs = d3_minhash_lsh_pairs(spark, sf_dir)
-    cc = dedup.connected_components(pairs, "doc_a", "doc_b")
+    cc = graph.connected_components(pairs, "doc_a", "doc_b")
     in_pairs = cc.count()
     n_multi = cc.select("cluster_id").distinct().count()
     want_clusters = n_docs - in_pairs + n_multi  # singletons + components
