@@ -30,7 +30,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
-from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
+from garmin_performance_analysis_spark.session import call_scope, get_spark  # noqa: E402
 
 # Headline set: the catalog entries tagged "read" or "batch".  "read"
 # entries are the read-path queries the reference's <300 ms budget
@@ -65,17 +65,14 @@ def read_steal() -> tuple[int, int]:
         return 0, 0
 
 
-def clear_persisted(spark) -> None:
-    """Drop checkpoint/cache blocks left by the previous query.
-
-    Several catalog queries localCheckpoint small interior frames; a
-    30-query × 3-run session otherwise accumulates ~100 pinned block
-    sets and late-list queries pay the memory pressure (d4b measured
-    16 s in-suite vs ~2.5 s isolated before this sweep).  Safe between
-    queries: no DataFrame from a finished run is referenced again."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rdd in jmap.values():  # py4j exposes the Java map dict-like
-        rdd.unpersist(False)
+def warm_up(spark, sf_dir: str) -> None:
+    """JVM/codegen/parquet-footer caches, plus one Arrow/pandas UDF
+    pass so the Python workers exist before any timed pandas-backed
+    query (worker spawn was otherwise charged to the first such query
+    in the list).  ``scripts/profile_query.py`` runs the same warm-up."""
+    with call_scope(spark):
+        force(CATALOG["p2_point_lookup"].fn(spark, sf_dir))
+        force(CATALOG["mm2_decoded_features"].fn(spark, sf_dir))
 
 
 def print_parts(part_key: str, key: str, values: dict, names: list) -> None:
@@ -114,13 +111,7 @@ def main() -> None:
     # session default.
     spark = get_spark("bench")
 
-    # warmup: JVM/codegen/parquet-footer caches, plus one Arrow/pandas
-    # UDF pass so the 32 Python workers exist before any timed
-    # pandas-backed query (worker spawn was otherwise charged to the
-    # first such query in the list)
-    force(CATALOG["p2_point_lookup"].fn(spark, sf_dir))
-    force(CATALOG["mm2_decoded_features"].fn(spark, sf_dir))
-    clear_persisted(spark)
+    warm_up(spark, sf_dir)
 
     # best-of-3, widened to best-of-N (N <= 5) when the run spread
     # exceeds 3x (round-12 VERDICT item 1): the host is CPU-
@@ -135,15 +126,19 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"bench: {name}")
         s0, st0 = read_steal()
         walls: list[float] = []
+        # the scope releases the blocks this query's runs persisted (a
+        # session that keeps them slows later queries: d4b measured 16 s
+        # in-suite vs ~2.5 s isolated); its snapshots sit outside timers
         try:
-            while True:
-                t0 = time.perf_counter()
-                force(CATALOG[name].fn(spark, sf_dir))
-                walls.append(time.perf_counter() - t0)
-                if len(walls) >= MAX_RUNS:
-                    break
-                if len(walls) >= RUNS and max(walls) <= 3.0 * min(walls):
-                    break
+            with call_scope(spark):
+                while True:
+                    t0 = time.perf_counter()
+                    force(CATALOG[name].fn(spark, sf_dir))
+                    walls.append(time.perf_counter() - t0)
+                    if len(walls) >= MAX_RUNS:
+                        break
+                    if len(walls) >= RUNS and max(walls) <= 3.0 * min(walls):
+                        break
         except Exception as exc:  # noqa: BLE001 — recorded, the run goes on
             traceback.print_exc()  # full trace on stderr; stdout stays JSON
             first_line = (str(exc).strip().splitlines() or [""])[0]
@@ -153,7 +148,6 @@ def main() -> None:
             timings[name] = round(min(walls), 3)
             # steal share of this query's whole wall (all runs), percent
             steals[name] = round(100.0 * (s1 - s0) / max(1, st1 - st0), 2)
-        clear_persisted(spark)
 
     total = round(sum(timings.values()), 3)
     read_times = sorted(v for k, v in timings.items() if k not in BATCH_JOBS)

@@ -5,8 +5,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
-from ..scratch import scratch_dir
+from ..scratch import artifact_dir, scratch_dir
+from ..sources.tables import artifact_tag, load_table
 from .registry import dec_sum as _dec_sum
 from .registry import dec_avg as _dec_avg
 from .registry import ls_avg as _ls_avg
@@ -712,30 +712,10 @@ def s12_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench number includes the sink in every run (the write was
     previously memoized after run 1, which silently turned the
     recorded number read-only).  The output path is still keyed per
-    (applicationId, sf_dir) under a shared reclaimable root with
-    mtime-based reclaim so repeated sweeps/bench runs do not
-    accumulate temp copies."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    app_id = spark.sparkContext.applicationId
-    digest = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:8]
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_s12")
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):  # reclaim copies from dead sessions
-        full = os.path.join(root, d)
-        try:
-            stale = _time.time() - os.path.getmtime(full) > 3600
-        except OSError:
-            # a concurrent session reclaimed this entry between
-            # listdir and getmtime — nothing left to sweep
-            continue
-        if stale:
-            shutil.rmtree(full, ignore_errors=True)
-    out = os.path.join(root, digest)
+    (application, sf_dir) under the artifact root, whose mtime-based
+    reclaim keeps repeated sweeps/bench runs from accumulating
+    copies."""
+    out = artifact_dir(f"s12_{artifact_tag(spark, sf_dir)}")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )

@@ -7,7 +7,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.joins import backward_asof_join, nearest_date_asof_join
-from ..sources.tables import load_table
+from ..scratch import reclaim_stale
+from ..sources.tables import artifact, artifact_tag, load_table
 from .registry import register
 
 
@@ -387,14 +388,6 @@ def j12_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) → bucketed table names.  The bucketed silver
-# tables are a materialized artifact (the v8b/v10b memoization shape):
-# written once per (session, corpus), then every call joins them with
-# zero exchanges — exactly how a production lakehouse pays the
-# bucketing cost at ingest and amortizes it over every later join.
-_J15_BUCKET_MEMO: dict = {}
-
-
 @register(
     "j15_bucketed_colocated_join",
     oracle="""
@@ -426,43 +419,29 @@ def j15_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary-double product is engine-ambiguous in the dropped
     digits (the r7 w14 lesson; measured flipping the last ulp here
     at sf0.01)."""
-    import hashlib
     import os
     import shutil
 
     from ..pipelines.silver import write_bucketed
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    names = _J15_BUCKET_MEMO.get(key)
-    if names is None:
-        # applicationId goes INTO the table name (not just the memo
-        # key) so two concurrent sessions sharing spark-warehouse/
-        # can't race on the same directory (round-8 VERDICT item 6 —
-        # the judge's parity sweep raced pytest on j15_orders_*)
-        digest = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:8]
-        t_o, t_l = f"j15_orders_{digest}", f"j15_lineitem_{digest}"
+    def _build():
+        # the application's tag goes INTO the table names so two
+        # concurrent sessions sharing spark-warehouse/ can't race on
+        # the same directory (round-8 VERDICT item 6 — the judge's
+        # parity sweep raced pytest on j15_orders_*)
+        tag = artifact_tag(spark, sf_dir)
+        names = f"j15_orders_{tag}", f"j15_lineitem_{tag}"
         # a killed earlier run can leave the directory without a
         # catalog entry in THIS session (test_silver precedent): purge
         # both before writing
         warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
             "file:"
         )
-        for t in (t_o, t_l):
+        reclaim_stale(warehouse, prefix="j15_")
+        dirs = tuple(os.path.join(warehouse, t) for t in names)
+        for t, d in zip(names, dirs):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-            shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
-        # best-effort GC: per-app table names mean finished sessions
-        # leave directories behind; anything older than an hour cannot
-        # belong to a live concurrent writer, so reclaim it
-        import glob as _glob
-        import time as _time
-
-        for d in _glob.glob(os.path.join(warehouse, "j15_*")):
-            if _time.time() - os.path.getmtime(d) > 3600:
-                spark.sql(
-                    f"DROP TABLE IF EXISTS {os.path.basename(d)}"
-                )
-                shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
         )
@@ -476,10 +455,11 @@ def j15_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("_rev4"),
         )
-        write_bucketed(orders, t_o, "o_orderkey", 8)
-        write_bucketed(li, t_l, "o_orderkey", 8)
-        names = _J15_BUCKET_MEMO[key] = (t_o, t_l)
-    t_o, t_l = names
+        write_bucketed(orders, names[0], "o_orderkey", 8)
+        write_bucketed(li, names[1], "o_orderkey", 8)
+        return names, dirs
+
+    t_o, t_l = artifact(spark, sf_dir, "j15", _build)
     joined = spark.table(t_o).hint("MERGE").join(spark.table(t_l), "o_orderkey")
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items"),

@@ -21,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..scratch import artifact_dir
+from ..sources.tables import artifact, artifact_tag, load_table
 from .registry import register
 
 _BITS = 8
@@ -91,9 +92,6 @@ def z1_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_S10_MEMO: dict = {}
-
-
 @register(
     "s10_partition_pruned_scan",
     oracle="""
@@ -119,50 +117,25 @@ def s10_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     it a PartitionFilter instead of a pushed data filter;
     ``tests/test_plan_shapes.py`` gates both the plan's
     PartitionFilters clause and the pruned ``inputFiles()`` set.  The
-    layout is memoized per (applicationId, sf_dir) — table names
-    include the app id so concurrent sessions cannot race (the j15
-    convention).  MEASURED CONTRACT (round-12 VERDICT item 6): the
-    bench number for this entry is the pruned READ path; the one-time
-    partitioned write is amortized BY DESIGN (best-of-N pays it only
-    on the first run), exactly like j15's bucketing and v8b/v10b's
-    index builds — the write-every-run sibling is s12, whose
-    "roundtrip" name demands the sink in every timed run."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import time as _time
+    layout is a registered artifact (``sources.tables.artifact``):
+    one dir per (application, sf_dir) under the artifact root, so
+    concurrent sessions cannot race.  MEASURED CONTRACT (round-12
+    VERDICT item 6): the bench number for this entry is the pruned
+    READ path; the one-time partitioned write is amortized BY DESIGN
+    (best-of-N pays it only on the first run), exactly like j15's
+    bucketing and v8b/v10b's index builds — the write-every-run
+    sibling is s12, whose "roundtrip" name demands the sink in every
+    timed run."""
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    path = _S10_MEMO.get(key)
-    if path is not None:
-        # Refresh mtime on every memoized reuse so a session alive for
-        # longer than the 1h reclaim horizon cannot have its live
-        # layout deleted by a newer concurrent session's reclaim pass;
-        # if the layout is already gone anyway, rebuild it.
-        try:
-            os.utime(path)
-        except OSError:
-            path = None
-            _S10_MEMO.pop(key, None)
-    if path is None:
-        digest = hashlib.md5(f"{app_id}:{sf_dir}".encode()).hexdigest()[:8]
-        root = os.path.join(tempfile.gettempdir(), "spark_graft_s10")
-        os.makedirs(root, exist_ok=True)
-        # reclaim layouts from dead sessions (>1h cannot be live)
-        for d in os.listdir(root):
-            full = os.path.join(root, d)
-            if _time.time() - os.path.getmtime(full) > 3600:
-                shutil.rmtree(full, ignore_errors=True)
-        path = os.path.join(root, digest)
-        shutil.rmtree(path, ignore_errors=True)
+    def _build():
+        path = artifact_dir(f"s10_{artifact_tag(spark, sf_dir)}")
         ev = load_table(spark, sf_dir, "events")
         ev.withColumn(
             "d", F.date_format("ts", "yyyy-MM-dd")
         ).write.partitionBy("d").parquet(path)
-        _S10_MEMO[key] = path
-    pruned = spark.read.parquet(path).filter(
+        return spark.read.parquet(path), (path,)
+
+    pruned = artifact(spark, sf_dir, "s10", _build).filter(
         (F.col("d") >= "2024-01-10") & (F.col("d") <= "2024-01-16")
     )
     return pruned.groupBy(

@@ -300,6 +300,11 @@ def registry_stats(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+# the doc_id column metadata key under which stage_lsh_sigs records
+# its (num_hashes, n)
+_SIG_META = "lsh_sig"
+
+
 def stage_lsh_sigs(
     batch: DataFrame,
     id_col: str,
@@ -311,12 +316,14 @@ def stage_lsh_sigs(
     batch-only (store-independent) half of
     ``incremental_lsh_candidates``, exposed so a pipeline can stage
     the next batch's signatures while the previous batch appends
-    (guide §2.6, the ``collapse_batch`` convention)."""
+    (guide §2.6, the ``collapse_batch`` convention).  The frame records
+    ``num_hashes`` and ``n`` in its ``doc_id`` column metadata, which
+    ``incremental_lsh_candidates`` checks against its own."""
     from .dedup import minhash_signatures
 
-    return minhash_signatures(batch, id_col, text_col, num_hashes, n).localCheckpoint(
-        eager=True
-    )
+    sigs = minhash_signatures(batch, id_col, text_col, num_hashes, n)
+    meta = {_SIG_META: {"num_hashes": num_hashes, "n": n}}
+    return sigs.withMetadata("doc_id", meta).localCheckpoint(eager=True)
 
 
 def incremental_lsh_candidates(
@@ -336,7 +343,9 @@ def incremental_lsh_candidates(
     is an optional pre-computed ``stage_lsh_sigs`` result: the minhash
     pass touches only the batch, never the stores, so an ingest
     pipeline can stage the next batch's signatures concurrently with
-    the current batch's appends (guide §2.6).
+    the current batch's appends (guide §2.6); a frame staged with
+    other ``num_hashes``/``n`` (or not by ``stage_lsh_sigs``) raises
+    ``ValueError``.
 
     Two persisted stores under ``registry_path``:
 
@@ -368,11 +377,19 @@ def incremental_lsh_candidates(
     )
     band_schema = f"doc_id long, band_idx int, band_hash string, {_PREFIX_COL} string"
 
-    sigs = (
-        staged_sigs
-        if staged_sigs is not None
-        else stage_lsh_sigs(batch, id_col, text_col, num_hashes, n)
-    )
+    if staged_sigs is None:
+        sigs = stage_lsh_sigs(batch, id_col, text_col, num_hashes, n)
+    else:
+        # a frame staged with another hash count or shingle size would
+        # band and append silently wrong signatures
+        staged = staged_sigs.schema["doc_id"].metadata.get(_SIG_META)
+        if staged != {"num_hashes": num_hashes, "n": n}:
+            raise ValueError(
+                f"staged_sigs were staged with {staged}, not with "
+                f"num_hashes={num_hashes}, n={n}: stage them with "
+                "stage_lsh_sigs and this call's parameters"
+            )
+        sigs = staged_sigs
     my_bands = band_rows(sigs, num_hashes, bands)
 
     pairs = None

@@ -38,8 +38,8 @@ parquet layout cannot (ADVICE r2):
   window where ``path`` does not exist; ``sources.tables.load_table``
   retries PATH_NOT_FOUND briefly, so a reader that *resolves* during
   the swap succeeds.  A relation resolved *before* the swap still pins
-  deleted part-files — the swap invalidates this session's table memo
-  for exactly that reason, but other sessions' open relations mean the
+  deleted part-files — the swap invalidates this session's registered
+  artifacts of that sf_dir for exactly that reason, but other sessions' open relations mean the
   single-writer contract still extends to readers for the duration of
   ``run_pending``.
 """
@@ -180,8 +180,9 @@ def rewrite_table(df: DataFrame, path: str, partition_by=None) -> None:
     Readers that RESOLVE ``path`` during the swap are absorbed by the
     loader's bounded PATH_NOT_FOUND retry (``sources.tables.load_table``);
     relations resolved before the swap still pin deleted part-files, so
-    the memo entries covering ``path`` are invalidated on success and
-    other sessions' readers must be quiesced (module docstring)."""
+    the registered artifacts covering ``path`` (and those derived from
+    its sf_dir) are invalidated on success, and other sessions' readers
+    must be quiesced (module docstring)."""
     from ..sources.tables import invalidate_table_memo
     from .silver import MONTH_COL
 

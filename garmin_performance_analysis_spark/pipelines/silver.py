@@ -161,7 +161,8 @@ def compact_table(
 
     Reads the table, repartitions to ``ceil(bytes / target_file_mb)``
     output files, and swaps atomically via ``migrations.rewrite_table``
-    (temp write → two renames, crash-safe, loader memo invalidated).
+    (temp write → two renames, crash-safe, registered artifacts
+    invalidated).
     Returns the target partition count.
 
     Sizing uses the CURRENT on-disk bytes, which over-counts when the

@@ -13,6 +13,8 @@ multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -31,6 +33,25 @@ def ship_package_path(spark: SparkSession) -> None:
     parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
     if _PACKAGE_ROOT not in parts:
         env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *parts])
+
+
+@contextmanager
+def call_scope(spark: SparkSession) -> Iterator[None]:
+    """Owns the blocks one call persists: unpersists, when the block
+    exits (returns or raises), every RDD persisted inside it — the
+    ``localCheckpoint``s and ``persist``s of the queries run there.
+    Consume results inside the block.  Registered artifacts
+    (``sources.tables.artifact``) hold no blocks, so nothing here is
+    exempt.  Each snapshot is a JVM round-trip over the persisted-RDD
+    map, so keep both off timed paths."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(False)
 
 
 def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSession:

@@ -10,7 +10,9 @@ partition pruning for free.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,26 +36,57 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-# (session id, sf_dir, table) → resolved DataFrame.  Re-resolving a
-# parquet relation re-lists files and re-reads footers on every call;
-# the relation for a read-only table is reusable across queries, and
-# the memo keeps repeated catalog/bench invocations from paying that
-# driver-side cost again (~50 ms/query locally, far more on object
-# storage where listing is a network round-trip).
-_TABLE_MEMO: dict = {}
+# (SparkContext, abspath(sf_dir), name) → (value, dirs): the one
+# registry of cross-call artifacts.  A table relation is reusable
+# across queries (re-resolving re-lists files and re-reads footers, a
+# network round-trip per file listing on object storage);
+# a derived artifact (s10's partitioned layout, j15's bucketed tables,
+# v8b's PQ codebook + codes, v10b's IVF index) is files under ``dirs``
+# plus tiny collected rows — never persisted blocks, so no per-call
+# release can break it.  The context object itself is in the key: it
+# cannot be recycled the way ``id()`` can, and a hit needs no JVM call.
+_REGISTRY: dict = {}
+
+
+def artifact(spark: SparkSession, sf_dir: str, name: str, build):
+    """The registered artifact ``name`` of ``sf_dir`` for ``spark``'s
+    context, building it with ``build() -> (value, dirs)`` on a miss.
+
+    A hit refreshes the mtime of its dirs (so ``scratch.reclaim_stale``
+    never takes a live artifact) and is rebuilt when one of them is
+    gone.  Build only from tables of ``sf_dir``: ``invalidate_table_memo``
+    drops every entry of an sf_dir when one of its tables is rewritten."""
+    key = (spark.sparkContext, os.path.abspath(sf_dir), name)
+    hit = _REGISTRY.get(key)
+    if hit is not None:
+        try:
+            for d in hit[1]:
+                os.utime(d)
+        except OSError:
+            pass  # reclaimed or deleted under us: rebuild
+        else:
+            return hit[0]
+    entry = _REGISTRY[key] = build()
+    return entry[0]
+
+
+def artifact_tag(spark: SparkSession, sf_dir: str) -> str:
+    """8 hex digits naming (application, sf_dir) in artifact dir and
+    table names, so concurrent sessions never share a path."""
+    app_id = spark.sparkContext.applicationId
+    return hashlib.md5(f"{app_id}:{os.path.abspath(sf_dir)}".encode()).hexdigest()[:8]
 
 
 def invalidate_table_memo(path: str | None = None) -> int:
-    """Drop memoized relations whose backing files live under ``path``
-    (everything when ``path`` is None).  Table rewrites
-    (``pipelines.migrations.rewrite_table``) call this: a memoized
-    relation pins the OLD file listing, so a query run after a rewrite
-    would read deleted part-files and fail (or silently read stale
-    data on object stores).  Returns the number of entries dropped."""
-    if path is None:
-        n = len(_TABLE_MEMO)
-        _TABLE_MEMO.clear()
-        return n
+    """Drop every registered artifact of an sf_dir that contains
+    ``path`` or lies under it (everything when ``path`` is None) and
+    delete its dirs.  Table
+    rewrites (``pipelines.migrations.rewrite_table``) call this: a
+    registered relation pins the OLD file listing, so a query run
+    after a rewrite would read deleted part-files and fail (or silently
+    read stale data on object stores), and an artifact derived from
+    the old table would answer for data that is gone.  Returns the
+    number of entries dropped."""
 
     # abspath both sides (a relative sf_dir must match the same dir
     # given absolutely) and compare on whole path segments — a bare
@@ -62,15 +95,16 @@ def invalidate_table_memo(path: str | None = None) -> int:
         child, parent = os.path.abspath(child), os.path.abspath(parent)
         return child == parent or child.startswith(parent + os.sep)
 
-    norm = os.path.abspath(path)
     stale = [
         k
-        for k in _TABLE_MEMO
-        if _under(os.path.join(k[1], f"{k[2]}.parquet"), norm)
-        or _under(norm, k[1])
+        for k in _REGISTRY
+        if path is None
+        or _under(os.path.join(k[1], f"{k[2]}.parquet"), path)
+        or _under(path, k[1])
     ]
     for k in stale:
-        del _TABLE_MEMO[k]
+        for d in _REGISTRY.pop(k)[1]:
+            shutil.rmtree(d, ignore_errors=True)
     return len(stale)
 
 
@@ -86,9 +120,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (``session.py``), so the NTZ→TZ cast preserves the wall-clock value.
     """
     ship_package_path(spark)
-    key = (id(spark.sparkContext), sf_dir, name)
-    if key in _TABLE_MEMO:
-        return _TABLE_MEMO[key]
+    return artifact(spark, sf_dir, name, lambda: (_resolve(spark, sf_dir, name), ()))
+
+
+def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # engine contract: timestamps are UTC instants (session.py).
         # Enforce at the loader so an embedding harness's session on a
@@ -132,7 +167,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_MEMO[key] = df
     return df
 
 

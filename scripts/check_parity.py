@@ -40,7 +40,7 @@ from garmin_performance_analysis_spark.harness.compare import (
     compare_frames,
     duckdb_connection,
 )
-from garmin_performance_analysis_spark.session import get_spark
+from garmin_performance_analysis_spark.session import call_scope, get_spark
 from garmin_performance_analysis_spark.sources.tables import DEFAULT_SF_DIR
 
 
@@ -139,7 +139,8 @@ def main() -> int:
     for name, spec in items:
         t0 = time.time()
         try:
-            spark_pdf = spec.fn(spark, sf_dir).toPandas()
+            with call_scope(spark):
+                spark_pdf = spec.fn(spark, sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failures += 1

@@ -3,9 +3,11 @@
 
 Usage: python scripts/profile_query.py <name> [runs]
 
-Runs the query with the Spark event log enabled (UI stays off), then
-parses the log into per-stage wall/task-time rows tagged by job group,
-so a composite query's cost can be attributed to its internal passes
+Runs the bench's warm-up (``bench.warm_up``), then the query's runs
+inside one ``session.call_scope`` — the session state the bench times —
+with the Spark event log enabled (UI stays off); then parses the log
+into per-stage wall/task-time rows tagged by job group, so a composite
+query's cost can be attributed to its internal passes
 (candidate join vs CC rounds vs final window, checkpoint jobs, etc.).
 Nothing here is used by the bench — it is a diagnosis tool only.
 """
@@ -20,8 +22,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force, warm_up  # noqa: E402
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
-from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
+from garmin_performance_analysis_spark.session import call_scope, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -39,16 +42,12 @@ def main() -> None:
         + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
     )
     spark = get_spark("profile")
-    # warmup as in bench
-    CATALOG["p2_point_lookup"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    for i in range(runs):
-        t0 = time.perf_counter()
-        CATALOG[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        print(f"run {i}: {time.perf_counter() - t0:.2f}s", flush=True)
+    warm_up(spark, sf_dir)
+    with call_scope(spark):
+        for i in range(runs):
+            t0 = time.perf_counter()
+            force(CATALOG[name].fn(spark, sf_dir))
+            print(f"run {i}: {time.perf_counter() - t0:.2f}s", flush=True)
     app_id = spark.sparkContext.applicationId
     spark.stop()
     time.sleep(1)

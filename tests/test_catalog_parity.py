@@ -105,3 +105,64 @@ def test_sink_roundtrips_leave_no_scratch(spark, tmp_path, monkeypatch):
         df = CATALOG[name].fn(spark, SF_SMOKE)
         assert list(tmp_path.iterdir()) == [], name
         assert len(df.collect()) > 0, name
+
+
+def test_call_scope_releases_what_the_block_persisted(spark):
+    """``session.call_scope`` unpersists every RDD persisted inside it:
+    i1 (4 blocks per call), g8 (6) and v10b leave the session's
+    persisted set as they found it and return an unscoped call's rows,
+    and a block that raises still releases what it persisted."""
+    from garmin_performance_analysis_spark.session import call_scope
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted_after_release():
+        # the blocks of earlier unscoped calls are unreachable, and the
+        # context cleaner may drop them at any JVM GC: release them now
+        # so the snapshot cannot shrink while the scope runs
+        for rdd in jsc.getPersistentRDDs().values():
+            rdd.unpersist(False)
+        return set(jsc.getPersistentRDDs().keys())
+
+    for name in (
+        "i1_incremental_dedup_replay",
+        "g8_hits",
+        "v10b_ivf_query_path",
+    ):
+        fn = CATALOG[name].fn
+        unscoped = sorted(repr(r) for r in fn(spark, SF_SMOKE).collect())
+        before = persisted_after_release()
+        with call_scope(spark):
+            df = fn(spark, SF_SMOKE)  # held: its plan pins its blocks
+            scoped = sorted(repr(r) for r in df.collect())
+            assert set(jsc.getPersistentRDDs().keys()) > before, name
+        assert set(jsc.getPersistentRDDs().keys()) == before, name
+        assert scoped == unscoped, name
+
+    before = persisted_after_release()
+    with pytest.raises(RuntimeError, match="mid-call"):
+        with call_scope(spark):
+            df = CATALOG["g8_hits"].fn(spark, SF_SMOKE)
+            df.collect()
+            assert set(jsc.getPersistentRDDs().keys()) > before
+            raise RuntimeError("mid-call failure")
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
+def test_registered_artifact_rebuilds_when_its_dirs_are_gone(spark):
+    """A registered artifact whose files were reclaimed or deleted is
+    rebuilt on its next call, not read from a missing path: j15's
+    bucketed tables, removed from the warehouse, come back with the
+    same rows."""
+    import os
+    import shutil
+
+    from garmin_performance_analysis_spark.sources.tables import _REGISTRY
+
+    fn = CATALOG["j15_bucketed_colocated_join"].fn
+    first = sorted(repr(r) for r in fn(spark, SF_SMOKE).collect())
+    _, dirs = _REGISTRY[(spark.sparkContext, os.path.abspath(SF_SMOKE), "j15")]
+    assert dirs
+    for d in dirs:  # this session's tables only: others may share the warehouse
+        shutil.rmtree(d)
+    assert sorted(repr(r) for r in fn(spark, SF_SMOKE).collect()) == first

@@ -29,8 +29,9 @@ from garmin_performance_analysis_spark.sources.raw_json import (
 )
 from garmin_performance_analysis_spark.streaming.ingest import incremental_append
 
-FIXTURE_DIR = (
-    "/root/reference/packages/garmin-mcp-server/tests/fixtures/data/raw/activity/12345678901"
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)),
+    "fixtures", "raw", "activity", "12345678901",
 )
 
 

@@ -3,6 +3,9 @@ partition-pruned registry reads, and fresh-session persistence."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from garmin_performance_analysis_spark.pipelines import incremental
@@ -373,3 +376,20 @@ def test_staged_lsh_sigs_match_unstaged(spark, tmp_path):
     rows_b = sorted(map(tuple, pb.collect()))
     assert rows_a == rows_b
     assert rows_a, "near-identical docs must collide in at least one band"
+
+
+def test_staged_lsh_sigs_must_match_the_call(spark, tmp_path):
+    """Signatures staged with another shingle size ``n`` (or not staged
+    by ``stage_lsh_sigs`` at all) are rejected, not banded and appended
+    to the signature store."""
+    batch = _batch(spark, [(1, "quick brown fox jumps over the lazy dog")])
+    reg = str(tmp_path / "lsh")
+    staged = incremental.stage_lsh_sigs(batch, "doc_id", "text", 16, 5)
+    unmarked = staged.select(*staged.columns).withMetadata("doc_id", {})
+    for sigs in (staged, unmarked):
+        with pytest.raises(ValueError, match="staged_sigs"):
+            incremental.incremental_lsh_candidates(
+                spark, batch, reg, "doc_id", "text", num_hashes=16, n=3,
+                staged_sigs=sigs,
+            )
+    assert not os.path.exists(reg)

@@ -5,6 +5,7 @@ rows-only or whose semantics deserve direct assertions."""
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -906,15 +907,55 @@ def test_v8b_query_path_equals_v8(spark, sf_dir):
     training means the split is a pure cost refactor, never a result
     change."""
     from garmin_performance_analysis_spark.harness.catalog import CATALOG
-    from garmin_performance_analysis_spark.harness import q_pipeline
+    from garmin_performance_analysis_spark.sources.tables import _REGISTRY
 
     v8 = CATALOG["v8_pq_topk"].fn(spark, sf_dir).collect()
     first = CATALOG["v8b_pq_query_path"].fn(spark, sf_dir).collect()
     assert first == v8
-    # second call hits the codebook memo and still matches
-    assert q_pipeline._PQ_CODEBOOK_MEMO  # populated by the first call
+    # second call hits the registered codebook and still matches
+    key = (spark.sparkContext, os.path.abspath(sf_dir), "v8b")
+    assert key in _REGISTRY  # registered by the first call
     again = CATALOG["v8b_pq_query_path"].fn(spark, sf_dir).collect()
     assert again == v8
+
+
+def test_registered_indexes_survive_block_release(spark, sf_dir):
+    """The registered v8b/v10b artifacts hold no persisted blocks: once
+    every persisted RDD in the session is unpersisted (what releasing a
+    call's blocks does), the next call still answers, with the rows of
+    the first."""
+    from garmin_performance_analysis_spark.harness.catalog import CATALOG
+
+    names = ("v8b_pq_query_path", "v10b_ivf_query_path")
+    first = {n: CATALOG[n].fn(spark, sf_dir).collect() for n in names}
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(False)
+    for n in names:
+        assert CATALOG[n].fn(spark, sf_dir).collect() == first[n], n
+
+
+def test_v10b_index_follows_embeddings_rewrite(spark, sf_dir, tmp_path):
+    """Rewriting a table drops the artifacts derived from its sf_dir:
+    after the corpus loses every third vector, v10b answers from an
+    index of the NEW corpus, i.e. exactly as train-per-call v10 does."""
+    import shutil
+
+    from garmin_performance_analysis_spark.harness.catalog import CATALOG
+    from garmin_performance_analysis_spark.pipelines.migrations import (
+        rewrite_table,
+    )
+
+    base = str(tmp_path)
+    shutil.copy(os.path.join(sf_dir, "embeddings.parquet"), base)
+    v10b = CATALOG["v10b_ivf_query_path"].fn
+    v10b(spark, base).collect()
+    emb = load_table(spark, base, "embeddings")
+    rewrite_table(
+        emb.filter(F.col("vec_id") % 3 != 2),  # keeps vec_id 0
+        os.path.join(base, "embeddings.parquet"),
+    )
+    v10 = CATALOG["v10_ivf_recall_verdict"].fn(spark, base).collect()
+    assert sorted(v10b(spark, base).collect()) == sorted(v10)
 
 
 def test_doc_chunks_windows_and_remainder(spark):

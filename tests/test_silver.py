@@ -259,11 +259,11 @@ def test_rewrite_invalidates_loader_memo(spark, tmp_path):
     base = str(tmp_path)
     _base(spark).write.parquet(f"{base}/activities.parquet")
     before = tbl.load_table(spark, base, "activities")
-    assert ("activities" in {k[2] for k in tbl._TABLE_MEMO})
+    assert ("activities" in {k[2] for k in tbl._REGISTRY})
     mig.rewrite_table(
         before.withColumn("flagged", SF.lit(False)), f"{base}/activities.parquet"
     )
-    stale = {k[2] for k in tbl._TABLE_MEMO if k[1] == base}
+    stale = {k[2] for k in tbl._REGISTRY if k[1] == base}
     assert "activities" not in stale
     after = tbl.load_table(spark, base, "activities")
     assert "flagged" in after.columns and after.count() == 4
