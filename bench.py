@@ -31,6 +31,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
 from garmin_performance_analysis_spark.session import call_scope, get_spark  # noqa: E402
+# the benchmark's probes, shared rather than copied: ``force`` is the
+# noop-sink materialization, ``read_steal``/``steal_pct`` the /proc/stat
+# hypervisor-steal share (a shared host's vCPUs can be stolen in waves,
+# so per-query steal is recorded next to each timing)
+from perfbench.layers import read_steal, steal_pct  # noqa: E402
+from perfbench.run import force  # noqa: E402
 
 # Headline set: the catalog entries tagged "read" or "batch".  "read"
 # entries are the read-path queries the reference's <300 ms budget
@@ -41,28 +47,6 @@ HEADLINE = [n for n, s in CATALOG.items() if {"read", "batch"} & set(s.tags)]
 BATCH_JOBS = {n for n, s in CATALOG.items() if "batch" in s.tags}
 # timed runs per query, and the cap when a query's runs spread > 3x
 RUNS, MAX_RUNS = 3, 5
-
-
-def force(df) -> None:
-    """Materialize the full plan without collecting rows to the driver."""
-    df.write.mode("overwrite").format("noop").save()
-
-
-def read_steal() -> tuple[int, int]:
-    """(steal_jiffies, total_jiffies) from /proc/stat, (0, 0) if absent.
-
-    Round-12 finding: this host's vCPUs are periodically stolen by the
-    hypervisor in waves (identical code measured 161.8-288 s across
-    full sweeps, bursts to 13.6% steal in 20 s windows), so per-query
-    steal deltas are recorded alongside the timings — a reader can
-    tell a plan regression from a wave-hit query.
-    """
-    try:
-        with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return (vals[7] if len(vals) > 7 else 0), sum(vals[:8])
-    except (OSError, ValueError, IndexError):
-        return 0, 0
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -106,9 +90,9 @@ def main() -> None:
     start_load = round(os.getloadavg()[0], 2)
     # NOTE: a 48g heap was tried here ("headroom vs GC noise") and made
     # allocation-heavy queries ERRATIC instead: d4b measured 7/15/2 s
-    # across three runs at 48g vs a stable ~3.4 s at the 16g default
-    # (oversized G1 young gen → long unpredictable pauses).  Keep the
-    # session default.
+    # across three runs at 48g vs a stable ~3.4 s at 16g (oversized G1
+    # young gen → long unpredictable pauses).  Keep the session default
+    # (half of physical RAM, at most 16g).
     spark = get_spark("bench")
 
     warm_up(spark, sf_dir)
@@ -124,7 +108,7 @@ def main() -> None:
     failed: dict[str, str] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"bench: {name}")
-        s0, st0 = read_steal()
+        steal0 = read_steal()
         walls: list[float] = []
         # the scope releases the blocks this query's runs persisted (a
         # session that keeps them slows later queries: d4b measured 16 s
@@ -144,10 +128,9 @@ def main() -> None:
             first_line = (str(exc).strip().splitlines() or [""])[0]
             failed[name] = f"{type(exc).__name__}: {first_line}"[:300]
         else:
-            s1, st1 = read_steal()
             timings[name] = round(min(walls), 3)
             # steal share of this query's whole wall (all runs), percent
-            steals[name] = round(100.0 * (s1 - s0) / max(1, st1 - st0), 2)
+            steals[name] = round(steal_pct(steal0, read_steal()), 2)
 
     total = round(sum(timings.values()), 3)
     read_times = sorted(v for k, v in timings.items() if k not in BATCH_JOBS)

@@ -50,7 +50,6 @@ def a1_stats_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2-dp fixed-point metrics: scaled-long moments; median via the
         # two-level fixed-grid selection (bounded domain, no big sort)
         fixed_scale=2,
-        median_mode="grid",
         median_grids={"l_quantity": 1.0, "l_extendedprice": 100.0},
     )
     rounded = [

@@ -128,24 +128,6 @@ def ls_sum_wide(col, scale: int = 6):
     return (hi * float(_WIDE_B) + lo) / float(f)
 
 
-def ls_std(col, scale: int = 2, sample: bool = True):
-    """Deterministic STDDEV for fixed-scale columns, fully primitive:
-    first/second moments accumulate as scaled longs (the squared term
-    via the same hi/lo split as ``ls_sum_wide`` — q² ≤ 1e14 per row
-    would overflow a single long sum beyond ~9e4 rows·1e14).  Replaces
-    the DECIMAL(38,12) moment path where the input scale is known."""
-    f = float(10**scale)
-    q = F.floor(col * f + 0.5)
-    n = F.count(col)
-    sx = F.sum(q).cast("double") / f
-    q2 = q * q
-    hi = F.sum(((q2 - q2 % _WIDE_B) / _WIDE_B).cast("long")).cast("double")
-    lo = F.sum(q2 % _WIDE_B).cast("double")
-    sxx = (hi * float(_WIDE_B) + lo) / (f * f)
-    den = (n - 1) if sample else n
-    return F.when(den > 0, F.sqrt(F.greatest((sxx - sx * sx / n) / den, F.lit(0.0))))
-
-
 def sql_lsum(expr: str, scale: int = 2) -> str:
     f = 10**scale
     return f"(CAST(SUM(CAST(FLOOR(({expr}) * {f} + 0.5) AS BIGINT)) AS DOUBLE) / {f}.0)"

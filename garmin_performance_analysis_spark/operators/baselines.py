@@ -341,8 +341,7 @@ def huber_irls_baseline(
         # would buffer a whole group's residual multiset in one task
         # (the a9 anti-pattern).  The counts-histogram shape is cheap
         # here because |y - bx - a| inherits the inputs' small discrete
-        # domain (fixed-point x, y → few distinct residuals per group);
-        # for genuinely continuous inputs switch bucketed=True.
+        # domain (fixed-point x, y → few distinct residuals per group).
         s = grouped_median(
             r, g, ["_ar"], weight_col="_wt" if weight_col else None
         ).withColumnRenamed("_ar_median", "_med")

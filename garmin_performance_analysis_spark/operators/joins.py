@@ -26,7 +26,6 @@ def nearest_date_asof_join(
     max_gap_days: Optional[int] = 14,
     tie_break_past: bool = True,
     right_tiebreak: Optional[str] = None,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Join each left row to the nearest-dated right row within
     ``±max_gap_days``; ties go to the past side.
@@ -45,14 +44,13 @@ def nearest_date_asof_join(
     makes same-date right duplicates deterministic.
 
     The bounded gap is what keeps this scalable: it turns an O(N·M)
-    cross product into a band join, and the small side broadcasts.
-    Unbounded mode is only safe when the right side is a genuinely
-    small dimension (it always broadcasts and every left row fans out
-    over every same-key right row).
+    cross product into a band join.  The right side is always
+    broadcast, so it must be a small dimension (the reference's
+    body-composition and VO2max snapshots are); unbounded mode needs
+    that anyway, since every left row fans out over every same-key
+    right row.
     """
-    r = right
-    if broadcast_right or max_gap_days is None:
-        r = F.broadcast(r)
+    r = F.broadcast(right)
     gap = F.datediff(F.col(f"r.{right_date}"), F.col(f"l.{left_date}"))
     cond = F.lit(True) if max_gap_days is None else (F.abs(gap) <= max_gap_days)
     for k in join_keys:

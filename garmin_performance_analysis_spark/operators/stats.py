@@ -2,10 +2,19 @@
 
 All exact — the reference computes exact MEDIAN/STDDEV via DuckDB
 (e.g. the 5-stat block ``mcp/database/readers/splits_query_builder.py:33-34``),
-so we use ``percentile`` (exact interpolated), never ``percentile_approx``,
-wherever oracle parity matters.  Everything here is built-in-expression
-only: map-side partial aggregation and whole-stage codegen apply, and the
-single shuffle per groupBy is on the grouping key.
+so every median here is bit-identical to ``percentile(x, 0.5)`` (exact
+interpolated), never ``percentile_approx``.  Everything here is
+built-in-expression only: map-side partial aggregation and whole-stage
+codegen apply, and the single shuffle per groupBy is on the grouping key.
+
+Exact medians have two shapes, and ``five_stat_block``/``profile_columns``
+choose between them from their arguments:
+
+- the per-value count scan (``grouped_median``/``histogram_median`` →
+  ``_median_over_counts``): any domain, many small groups;
+- the fused two-level grid selection (``_five_stat_fused_grid``/
+  ``_profile_fused_grid`` → ``_grid_select_median``): fixed-point
+  metrics of a bounded domain, given ``fixed_scale`` and per-metric grids.
 """
 
 from __future__ import annotations
@@ -15,93 +24,27 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..harness.registry import _WIDE_B, dec_avg, dec_std, ls_avg, ls_std
+from ..harness.registry import _WIDE_B, dec_avg, dec_std
 
 
-def _median_over_counts(
-    counts: DataFrame,
-    keys: Sequence[str],
-    bucketed: bool = False,
-    n_buckets: int = 64,
-) -> DataFrame:
+def _median_over_counts(counts: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Turn a per-distinct-value histogram ``(*keys, _v, _cnt)`` into
     one row per key group: ``_median`` (percentile-0.5 semantics,
     two-sided interpolation weights) + ``_n_distinct``.
 
-    Two shapes for the cumulative-count rank scan:
-
-    - ``bucketed=False``: one window partition per key group — right
-      when groups are many and individually small (per-activity stats):
-      parallelism comes from the group count, and no partition exceeds
-      a group's distinct-value count.
-    - ``bucketed=True``: right when there are FEW groups with HUGE
-      value domains (whole-table profiling) — a per-group window would
-      sort an entire column's distinct values in ONE task (the same
-      un-scalable shape as ``percentile``'s merge).  Instead: compute
-      ~``n_buckets`` ordered split points per group with
-      ``percentile_approx`` (the sketch only steers bucketing; the
-      result stays exact regardless of the split quality), take local
-      cumsums within each (group, bucket), then shift them by exclusive
-      per-bucket offsets from a buckets-count-sized side frame
-      (broadcast back).  Every task now touches ~1/n_buckets of a
-      column — the per-task memory bound survives unbounded value-domain
-      growth.  Honest cost note: at sf0.1 this shape is ~15% SLOWER than
-      the unbucketed scan (the counts subtree appears in three plan
-      branches and Catalyst only partially reuses the exchange), so it
-      is reserved for inputs whose per-group distinct set can outgrow a
-      task: pick by domain, not reflex.  Fixed-point metrics (2-dp
-      prices) have a bounded domain at any row count → unbucketed;
-      continuous domains (raw sensor doubles) grow with the data →
-      bucketed.
+    The cumulative-count rank scan runs one window partition per key
+    group: parallelism comes from the group count, and no partition
+    exceeds a group's distinct-value count.
     """
     keys = list(keys)
-    if not bucketed:
-        w = Window.partitionBy(*keys).orderBy("_v")
-        tot = Window.partitionBy(*keys)
-        r = (F.sum("_cnt").over(tot) - 1) / 2.0
-        upto = F.sum("_cnt").over(w)
-        below = upto - F.col("_cnt")
-        ranked = counts.select(
-            *keys, "_v", "_cnt", r.alias("_r"), upto.alias("_upto"), below.alias("_below")
-        )
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        splits = counts.groupBy(*keys).agg(
-            F.percentile_approx("_v", qs, 200).alias("_splits")
-        )
-        bucket = F.aggregate(
-            F.col("_splits"),
-            F.lit(0),
-            lambda acc, x: acc + F.when(F.col("_v") >= x, 1).otherwise(0),
-        )
-        withb = (
-            counts.join(F.broadcast(splits), keys)
-            .withColumn("_bucket", bucket)
-            .drop("_splits")
-        )
-        btot = withb.groupBy(*keys, "_bucket").agg(F.sum("_cnt").alias("_btot"))
-        w_off = Window.partitionBy(*keys).orderBy("_bucket")
-        w_all = Window.partitionBy(*keys)
-        offsets = btot.select(
-            *keys,
-            "_bucket",
-            (F.sum("_btot").over(w_off) - F.col("_btot")).alias("_offset"),
-            F.sum("_btot").over(w_all).alias("_total"),
-        )
-        w_local = Window.partitionBy(*keys, "_bucket").orderBy("_v")
-        local_upto = F.sum("_cnt").over(w_local)
-        ranked = (
-            withb.withColumn("_lupto", local_upto)
-            .join(F.broadcast(offsets), keys + ["_bucket"])
-            .select(
-                *keys,
-                "_v",
-                "_cnt",
-                ((F.col("_total") - 1) / 2.0).alias("_r"),
-                (F.col("_lupto") + F.col("_offset")).alias("_upto"),
-                (F.col("_lupto") + F.col("_offset") - F.col("_cnt")).alias("_below"),
-            )
-        )
+    w = Window.partitionBy(*keys).orderBy("_v")
+    tot = Window.partitionBy(*keys)
+    r = (F.sum("_cnt").over(tot) - 1) / 2.0
+    upto = F.sum("_cnt").over(w)
+    below = upto - F.col("_cnt")
+    ranked = counts.select(
+        *keys, "_v", "_cnt", r.alias("_r"), upto.alias("_upto"), below.alias("_below")
+    )
     return _interpolate_ranked(
         ranked, keys, F.count(F.lit(1)).alias("_n_distinct")
     )
@@ -141,141 +84,6 @@ def _interpolate_ranked(
     )
 
 
-def selected_median(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    metrics: Sequence[str],
-    accuracy: int = 200,
-    q_band: tuple = (0.4, 0.6),
-    small_n: int = 100,
-) -> DataFrame:
-    """Exact median with NO large sort anywhere — the
-    approximate-bracket / exact-select shape:
-
-    1. One aggregation pass per group per metric: count, min/max, and a
-       cheap ``percentile_approx`` bracket at ``q_band`` (rank error
-       ≤ n/accuracy = 0.005·n, vs a 0.1·n margin — 20× slack; the
-       bracket only has to CONTAIN the median ranks, the result never
-       depends on its quality).  Groups smaller than ``small_n`` use
-       min/max as the bracket (the discrete-rank guarantee of a sketch
-       is only meaningful once n ≫ the band width).
-    2. One exact counting pass: rows strictly below the bracket.
-    3. One candidate pass: rows inside the bracket (~20%), reduced to a
-       per-distinct-value histogram — the only frame that gets a
-       cumulative rank scan, and it is band-sized, not column-sized.
-
-    Median = interpolation at rank (n-1)/2 with global rank =
-    below + local cumsum.  Every shuffle is aggregation-sized; the
-    sort touches only the in-band distinct values.  This is the shape
-    that wins when few groups hold huge value sets (the windowed scan
-    of ``grouped_median`` sorts a whole group in one task; the bucketed
-    scan fixes memory but triples the counts subtree).  Measured on the
-    a1 block at sf0.1: 2.15 s (windowed) → ~1.0 s, and no task ever
-    holds more than the bracket slice.
-    Output: one row per group with ``{m}_median`` columns (all-null
-    metrics yield no row — left-join at the call site).
-    """
-    qlo, qhi = q_band
-    keys = [*group_cols, "_metric"]
-    b_aggs = []
-    for m in metrics:
-        c = F.col(m)
-        b_aggs += [
-            F.count(c).alias(f"_n_{m}"),
-            F.min(c).cast("double").alias(f"_mn_{m}"),
-            F.max(c).cast("double").alias(f"_mx_{m}"),
-            F.percentile_approx(c.cast("double"), [qlo, qhi], accuracy).alias(
-                f"_q_{m}"
-            ),
-        ]
-    bounds = df.groupBy(*group_cols).agg(*b_aggs)
-    stack_b = ", ".join(
-        f"'{m}', _n_{m}, CASE WHEN _n_{m} < {small_n} THEN _mn_{m} ELSE _q_{m}[0] END,"
-        f" CASE WHEN _n_{m} < {small_n} THEN _mx_{m} ELSE _q_{m}[1] END"
-        for m in metrics
-    )
-    bounds_long = bounds.selectExpr(
-        *group_cols,
-        f"stack({len(metrics)}, {stack_b}) as (_metric, _n, _blo, _bhi)",
-    )
-    stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in metrics)
-    long = df.selectExpr(
-        *group_cols, f"stack({len(metrics)}, {stack_v}) as (_metric, _v)"
-    ).filter(F.col("_v").isNotNull())
-    joined = long.join(F.broadcast(bounds_long), keys)
-    below = (
-        joined.filter(F.col("_v") < F.col("_blo"))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_nbelow"))
-    )
-    cand = (
-        joined.filter((F.col("_v") >= F.col("_blo")) & (F.col("_v") <= F.col("_bhi")))
-        .groupBy(*keys, "_n", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .join(below, keys, "left")
-        .withColumn("_nbelow", F.coalesce(F.col("_nbelow"), F.lit(0)))
-    )
-    w = Window.partitionBy(*keys).orderBy("_v")
-    ranked = cand.select(
-        *keys,
-        "_v",
-        ((F.col("_n") - 1) / 2.0).alias("_r"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w) - F.col("_cnt")).alias("_below"),
-    )
-    per_metric = _interpolate_ranked(ranked, keys)
-    return _pivot_medians(per_metric, group_cols, metrics)
-
-
-def grid_median(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    grids: "dict[str, float]",
-) -> DataFrame:
-    """Exact median for metrics with a KNOWN bounded value domain, via a
-    fixed coarse grid — deterministic, sketch-free, and no task ever
-    holds more than one grid cell:
-
-    1. Coarse pass: histogram of ``floor(v / grid)`` per group — the
-       cell count is ``domain_width / grid`` regardless of row count, so
-       the rank scan over cells is a tiny window (e.g. ~1000 cells for
-       2-dp prices with grid=100).
-    2. The 1–2 cells straddling ranks ``floor(r)``/``ceil(r)`` are
-       joined back (broadcast — one row per group) as a filter on a
-       second scan; only that cell's distinct values (≤ grid·10^scale)
-       get the fine rank scan, offset by the exact below-cell count.
-
-    This is the same two-level idea as the reference's own equal-width
-    histogram tool (A10, ``readers/utility.py:254-264``) applied to rank
-    selection.  Right when the domain is bounded (fixed-point money,
-    bounded sensor ranges); for unbounded domains use
-    ``grouped_median(bucketed=True)`` (memory-safe) — this one's cell
-    width would not bound the fine pass.  Measured on a1's price column
-    at sf0.1: 1.35 s (windowed count scan) → ~0.75 s, two cheap scans
-    instead of one 600k-row count shuffle + single-task sorts.
-    Output: one row per group, ``{m}_median`` columns.
-    """
-    metrics = list(grids)
-    keys = [*group_cols, "_metric"]
-    stack_v = ", ".join(
-        f"'{m}', cast({m} as double), floor(cast({m} as double) / {grids[m]!r}d)"
-        for m in metrics
-    )
-
-    def _long(cols):
-        return df.selectExpr(
-            *group_cols, f"stack({len(metrics)}, {stack_v}) as (_metric, _v, _cell)"
-        ).filter(F.col("_v").isNotNull()).select(*cols)
-
-    coarse = _long([*keys, "_cell"]).groupBy(*keys, "_cell").agg(
-        F.count(F.lit(1)).alias("_ccnt")
-    )
-    per_metric = _grid_select_median(
-        coarse, _long([*keys, "_v", "_cell"]), keys, F.count(F.lit(1))
-    )
-    return _pivot_medians(per_metric, group_cols, metrics)
-
-
 def _pivot_medians(
     per_metric: DataFrame, group_cols: Sequence[str], metrics: Sequence[str]
 ) -> DataFrame:
@@ -294,9 +102,11 @@ def _pivot_medians(
 def _grid_select_median(
     coarse: DataFrame, cells: DataFrame, keys: Sequence[str], cnt: Column
 ) -> DataFrame:
-    """Two-level grid rank selection shared by ``grid_median`` and the
-    fused five-stat/profile plans.  ``coarse`` is the cell histogram
-    ``(*keys, _cell, _ccnt)``; the 1-2 cells straddling ranks
+    """Two-level grid rank selection shared by the fused five-stat and
+    profile plans, for metrics with a KNOWN bounded value domain: the
+    cell count is ``domain_width / grid`` at any row count, so no task
+    ever holds more than a cell's values.  ``coarse`` is the cell
+    histogram ``(*keys, _cell, _ccnt)``; the 1-2 cells straddling ranks
     ``floor(r)``/``ceil(r)`` are joined back (broadcast — one row per
     key) as a filter on ``cells`` (rows ``(*keys, _cell, _v, ...)``,
     each weighing the ``cnt`` aggregate), whose values get the fine rank
@@ -350,7 +160,6 @@ def grouped_median(
     df: DataFrame,
     group_cols: Sequence[str],
     metrics: Sequence[str],
-    bucketed: bool = False,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Exact per-group median for each metric, distributed: unpivot the
@@ -365,8 +174,6 @@ def grouped_median(
     Groups where a metric is entirely null get a NULL median (matching
     percentile-over-empty) via the caller's left join.
     Output: one row per group with ``{metric}_median`` columns.
-    ``bucketed=True`` switches the rank scan to the split-point shape —
-    see ``_median_over_counts`` for when each shape is right.
 
     ``weight_col``: treat each row as ``weight`` identical observations
     (integer multiplicity).  The median of the expanded multiset equals
@@ -383,9 +190,7 @@ def grouped_median(
     counts = long.groupBy(*group_cols, "_metric", "_v").agg(
         (F.sum(weight_col) if weight_col else F.count(F.lit(1))).alias("_cnt")
     )
-    per_metric = _median_over_counts(
-        counts, [*group_cols, "_metric"], bucketed=bucketed
-    )
+    per_metric = _median_over_counts(counts, [*group_cols, "_metric"])
     return _pivot_medians(per_metric, group_cols, metrics)
 
 
@@ -399,17 +204,16 @@ def _five_stat_fused_grid(
 ) -> DataFrame:
     """Fused grid-mode five-stat block: ONE stacked scan produces
     per-(group, metric, cell) partials — row count, scaled-long moment
-    sums (the ``ls_avg``/``ls_std`` integers, summed per cell then
+    sums (the ``ls_avg``/``ls_sum_wide`` integers, summed per cell then
     re-summed per group: BIGINT addition is associative, so the totals
     are bit-identical to the per-row pass), min/max, and the coarse
-    rank histogram — replacing five_stat_block's separate moments scan
-    + grid_median coarse scan (3 raw passes → 2; the fine pass still
-    re-scans, filtered to the 1-2 rank-straddling cells).  Null values
-    land in a NULL cell so the group row count stays COUNT(*)-exact
-    while rank selection sees only non-null cells (grid_median's
-    filter).  Measured on a1 at sf0.1: 1.44 → ~1.2 s (the remaining
-    cost is the fine re-scan + fixed stage overhead), identical
-    values."""
+    rank histogram — replacing a separate moments scan + coarse grid
+    scan (3 raw passes → 2; the fine pass still re-scans, filtered to
+    the 1-2 rank-straddling cells).  Null values land in a NULL cell so
+    the group row count stays COUNT(*)-exact while rank selection sees
+    only non-null cells.  Measured on a1 at sf0.1: 1.44 → ~1.2 s (the
+    remaining cost is the fine re-scan + fixed stage overhead),
+    identical values."""
     f = 10**scale
     gcols = list(group_cols)
     stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in metrics)
@@ -468,8 +272,8 @@ def _five_stat_fused_grid(
         ]
     moments = part.groupBy(*gcols).agg(*aggs)
 
-    # rank selection over the SAME partials (grid_median's exact
-    # two-level logic; only non-null cells carry rank mass)
+    # rank selection over the SAME partials (only non-null cells
+    # carry rank mass)
     keys = [*gcols, "_metric"]
     coarse = part.filter(F.col("_cell").isNotNull()).select(
         *keys, "_cell", F.col("_ccnt")
@@ -499,13 +303,21 @@ def _five_stat_columns(
     return joined.select(*order)
 
 
+def _use_fused_grid(fixed_scale: int | None, grids: "dict[str, float] | None") -> bool:
+    """The shape rule shared by ``five_stat_block`` and ``profile_columns``:
+    a fixed scale and per-metric grids together select the fused grid
+    plan, neither selects DECIMAL moments plus the count-scan median."""
+    if (fixed_scale is None) != (grids is None):
+        raise ValueError("pass fixed_scale and the median grids together, or neither")
+    return fixed_scale is not None
+
+
 def five_stat_block(
     df: DataFrame,
     group_cols: Sequence[str],
     metrics: Sequence[str],
     count_col: str = "n",
     fixed_scale: int | None = None,
-    median_mode: str = "window",
     median_grids: "dict[str, float] | None" = None,
 ) -> DataFrame:
     """AVG/MEDIAN/STDDEV/MIN/MAX per metric per group + row count.
@@ -514,61 +326,39 @@ def five_stat_block(
     block per field group (``splits_query_builder.py:152-173``).
     Output columns: ``{metric}_{avg,median,stddev,min,max}`` + ``n``.
 
-    Two passes: a map-side-combined moments aggregation, plus the
-    distributed exact-median histogram (``grouped_median``) joined back
-    on the group key — both post-agg frames are group-cardinality-sized,
-    so the join is cheap at any input scale.  This replaced a per-group
-    ``percentile``: 10.2 s → moments-bound at sf0.1, and no single-task
-    value buffers.
+    Two paths, chosen by the arguments:
 
-    ``fixed_scale``: when the metrics are fixed-point (e.g. 2-dp
-    prices), pass their decimal scale to accumulate moments as scaled
-    longs (primitive codegen) instead of DECIMALs — same exactness,
-    ~2× on the moments pass.
+    - neither ``fixed_scale`` nor ``median_grids`` (the splits tools:
+      many small groups): a map-side-combined DECIMAL moments
+      aggregation, plus the distributed exact-median histogram
+      (``grouped_median``) joined back on the group key — both post-agg
+      frames are group-cardinality-sized, so the join is cheap at any
+      input scale.  This replaced a per-group ``percentile``: 10.2 s →
+      moments-bound at sf0.1, and no single-task value buffers.
+    - both (a1: fixed-point metrics of a bounded domain, few groups):
+      ``fixed_scale`` is the metrics' decimal scale (moments accumulate
+      as scaled longs, same exactness as DECIMAL) and ``median_grids``
+      the per-metric cell width of the two-level grid selection; see
+      ``_five_stat_fused_grid``.
 
-    ``median_mode``: "window" (per-group rank scan — groups are many
-    and small), "bucketed" (split-point scan — few groups, huge
-    domains, memory-bounded), or "select" (approx-bracket exact
-    selection — few groups, huge domains, no large sort; fastest when
-    the bracket pass can piggyback on cheap scans), or "grid"
-    (two-level fixed-grid selection via ``median_grids`` — bounded
-    domains, cheapest of the scale-safe shapes).  All shapes produce
-    bit-identical medians (property-tested).
+    Both give medians bit-identical to ``percentile(m, 0.5)``
+    (property-tested).  Giving only one of the two raises ``ValueError``.
     """
-    if median_mode == "grid" and fixed_scale is not None:
-        # fixed-point bounded-domain metrics: the fused two-scan plan
+    if _use_fused_grid(fixed_scale, median_grids):
         return _five_stat_fused_grid(
-            df,
-            group_cols,
-            metrics,
-            count_col,
-            fixed_scale,
-            median_grids or {m: 1.0 for m in metrics},
+            df, group_cols, metrics, count_col, fixed_scale, median_grids
         )
     aggs: list[Column] = [F.count(F.lit(1)).alias(count_col)]
     for m in metrics:
         c = F.col(m)
-        if fixed_scale is None:
-            avg_c, std_c = dec_avg(c), dec_std(c)
-        else:
-            avg_c, std_c = ls_avg(c, fixed_scale), ls_std(c, fixed_scale)
         aggs += [
-            avg_c.alias(f"{m}_avg"),
-            std_c.alias(f"{m}_stddev"),
+            dec_avg(c).alias(f"{m}_avg"),
+            dec_std(c).alias(f"{m}_stddev"),
             F.min(c).alias(f"{m}_min"),
             F.max(c).alias(f"{m}_max"),
         ]
     moments = df.groupBy(*group_cols).agg(*aggs)
-    if median_mode == "grid":
-        medians = grid_median(
-            df, group_cols, median_grids or {m: 1.0 for m in metrics}
-        )
-    elif median_mode == "select":
-        medians = selected_median(df, group_cols, metrics)
-    else:
-        medians = grouped_median(
-            df, group_cols, metrics, bucketed=(median_mode == "bucketed")
-        )
+    medians = grouped_median(df, group_cols, metrics)
     return _five_stat_columns(moments, medians, group_cols, metrics, count_col)
 
 
@@ -630,20 +420,6 @@ def conditional_halves(
     return joined.groupBy(*group_cols).agg(*aggs)
 
 
-def weighted_avg(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    weight_col: str,
-    out_col: str = "weighted_avg",
-) -> DataFrame:
-    """``sum(v*w)/sum(w)`` — the reference's distance/time-weighted phase
-    averages (``mcp/database/inserters/performance_trends.py:263-318``)."""
-    num = F.sum(F.col(value_col) * F.col(weight_col))
-    den = F.sum(F.col(weight_col))
-    return df.groupBy(*group_cols).agg((num / den).alias(out_col))
-
-
 def category_distribution(
     df: DataFrame, category_col: str, frac_col: str = "fraction"
 ) -> DataFrame:
@@ -663,9 +439,7 @@ def category_distribution(
     return counts.withColumn(frac_col, F.col("n") / total)
 
 
-def histogram_median(
-    df: DataFrame, columns: Sequence[str], bucketed: bool = False
-) -> DataFrame:
+def histogram_median(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """Exact whole-table median per column, fully distributed: unpivot
     to ``(column_name, value)``, count per distinct value, cumulative
     count ordered by value, then linear interpolation at rank
@@ -677,12 +451,8 @@ def histogram_median(
     Why not ``percentile``: its final merge pulls every value of a
     column into ONE task's memory (single-group aggregate), a hard OOM
     at large inputs.  Here the only per-task state is the distinct-value
-    histogram slice.  Pass ``bucketed=True`` for columns whose distinct
-    set can outgrow one task (continuous domains): a whole-table profile
-    has few key groups (one per column), so the unbucketed scan sorts a
-    column's entire distinct set in a single task — fine for bounded
-    fixed-point domains, a hazard for unbounded ones (see
-    ``_median_over_counts`` for the trade).
+    histogram slice; the rank scan sorts one column's distinct values
+    per task.
     Returns ``(column_name, stat_median, stat_n_distinct)``; all-null
     columns produce no row (left-join them back as NULL, = percentile of
     empty set).  The distinct count rides the same frame: distinct
@@ -696,7 +466,7 @@ def histogram_median(
     ).filter(F.col("_v").isNotNull())
     counts = long.groupBy("column_name", "_v").agg(F.count(F.lit(1)).alias("_cnt"))
     return (
-        _median_over_counts(counts, ["column_name"], bucketed=bucketed)
+        _median_over_counts(counts, ["column_name"])
         .withColumnRenamed("_median", "stat_median")
         .withColumnRenamed("_n_distinct", "stat_n_distinct")
     )
@@ -712,13 +482,12 @@ def _profile_fused_grid(
     ONE raw pass builds a per-(column, value) histogram (nulls kept as
     their own row), and every statistic is then algebra over that
     histogram — moments as scaled-long sums weighted by the value
-    count (bit-identical to the per-row ``ls_avg``/``ls_std`` sums,
-    since integer addition is associative), null rate and row count
-    from the counts, exact n_distinct = non-null histogram rows, and
-    the median via the same two-level grid selection as
-    ``grid_median`` with the fine pass FILTERING the histogram instead
-    of re-scanning the table.  This replaced profile_columns' grids
-    shape (moments scan + coarse scan + fine scan + distinct scan =
+    count (bit-identical to per-row scaled-long sums, since integer
+    addition is associative), null rate and row count from the counts,
+    exact n_distinct = non-null histogram rows, and the median via the
+    two-level grid selection (``_grid_select_median``) with the fine
+    pass FILTERING the histogram instead of re-scanning the table.
+    This replaced an unfused grid shape (moments scan + coarse scan + fine scan + distinct scan =
     4 raw passes, 3 of them stack-tripled).  Locally the wall barely
     moves (~1.7 → ~1.6 s at sf0.1: the per-value shuffle — the
     exact-distinct cost the profiler already paid — dominates either
@@ -743,7 +512,6 @@ def _profile_fused_grid(
     v, c = F.col("_v"), F.col("_c")
     q = F.floor(v * f + 0.5)
     q2 = q * q
-    nn = F.sum(F.when(v.isNotNull(), c)).alias  # non-null rows
     n_nonnull = F.sum(F.when(v.isNotNull(), c))
     sx = F.sum(F.when(v.isNotNull(), q * c)).cast("double") / float(f)
     hi = F.sum(F.when(v.isNotNull(), ((q2 - q2 % _WIDE_B) / _WIDE_B).cast("long") * c)).cast("double")
@@ -770,8 +538,8 @@ def _profile_fused_grid(
         ).alias("stat_null_rate"),
         F.count(F.when(v.isNotNull(), 1)).cast("double").alias("stat_n_distinct"),
     )
-    # two-level grid median over the histogram (grid_median's exact
-    # logic; counts are the same integers, so values are identical)
+    # two-level grid median over the histogram (counts are the same
+    # integers as a row scan's, so values are identical)
     grid_expr = F.lit(None).cast("double")
     for m, g in grids.items():
         grid_expr = F.when(F.col("column_name") == m, F.lit(float(g))).otherwise(grid_expr)
@@ -799,7 +567,6 @@ def _profile_fused_grid(
 def profile_columns(
     df: DataFrame,
     columns: Sequence[str],
-    bucketed: bool = False,
     grids: "dict[str, float] | None" = None,
     fixed_scale: int | None = None,
 ) -> DataFrame:
@@ -810,33 +577,34 @@ def profile_columns(
     :103-113) profiles the first 10 columns of any table; null rate is
     ``SUM(CASE WHEN c IS NULL ...)/COUNT(*)``.
 
-    Plan shape: ONE moments pass plus ONE unpivoted per-value histogram
-    pass that yields both the exact median and the exact distinct count
-    (distinct non-null values = histogram rows).  The earlier shapes
-    this replaces, both measured at sf0.1: a combined
-    COUNT(DISTINCT)+percentile aggregate (Catalyst Expand duplicates
-    the input per distinct column — 3× slower) and a separate
-    count-distinct pass (1.26 s of the profiler's 2.4 s).  The
-    single-group ``percentile`` merge also cannot scale — it buffers a
-    whole column in one task; the histogram never holds more than a
-    slice per task.
+    Two paths, chosen by the arguments (the rule of ``five_stat_block``):
+
+    - neither ``grids`` nor ``fixed_scale`` (``tools.profile_table``):
+      ONE DECIMAL moments pass plus ONE unpivoted per-value histogram
+      pass (``histogram_median``) that yields both the exact median and
+      the exact distinct count (distinct non-null values = histogram
+      rows).  The earlier shapes this replaces, both measured at sf0.1:
+      a combined COUNT(DISTINCT)+percentile aggregate (Catalyst Expand
+      duplicates the input per distinct column — 3× slower) and a
+      separate count-distinct pass (1.26 s of the profiler's 2.4 s).
+      The single-group ``percentile`` merge also cannot scale — it
+      buffers a whole column in one task; the histogram never holds
+      more than a slice per task.
+    - both (a9: 2-dp bounded-domain columns): the single-scan fused
+      histogram plan, ``_profile_fused_grid``.
+
+    Giving only one of the two raises ``ValueError``.
     """
-    if grids and fixed_scale is not None:
-        # bounded-domain fixed-point columns: the single-scan fused
-        # histogram plan (see _profile_fused_grid)
+    if _use_fused_grid(fixed_scale, grids):
         return _profile_fused_grid(df, columns, grids, fixed_scale)
     basic: list[Column] = [F.count(F.lit(1)).alias("_rows")]
     for m in columns:
         c = F.col(m)
-        if fixed_scale is None:
-            avg_c, std_c = dec_avg(c), dec_std(c)
-        else:
-            avg_c, std_c = ls_avg(c, fixed_scale), ls_std(c, fixed_scale)
         basic += [
             F.min(c).cast("double").alias(f"{m}__min"),
             F.max(c).cast("double").alias(f"{m}__max"),
-            avg_c.alias(f"{m}__avg"),
-            std_c.alias(f"{m}__stddev"),
+            dec_avg(c).alias(f"{m}__avg"),
+            dec_std(c).alias(f"{m}__stddev"),
             F.avg(c.isNull().cast("double")).alias(f"{m}__null_rate"),
         ]
     stats = ["min", "max", "avg", "stddev", "null_rate"]
@@ -851,31 +619,9 @@ def profile_columns(
         f"stack({len(columns)}, {stack_args}) as "
         f"(column_name, {', '.join('stat_' + s for s in stats)})",
     )
-    if grids:
-        # bounded-domain columns: grid selection for the median (no
-        # column-sized sort anywhere) + a two-level aggregation for the
-        # exact distinct count (groupBy value, then count rows — an
-        # agg-only plan; no rank scan is needed for counting)
-        med = grid_median(df, [], grids).selectExpr(
-            f"stack({len(columns)}, "
-            + ", ".join(f"'{m}', {m}_median" for m in columns)
-            + ") as (column_name, stat_median)"
-        )
-        stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in columns)
-        long = df.selectExpr(
-            f"stack({len(columns)}, {stack_v}) as (column_name, _v)"
-        ).filter(F.col("_v").isNotNull())
-        dist = (
-            long.groupBy("column_name", "_v")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy("column_name")
-            .agg(F.count(F.lit(1)).cast("double").alias("stat_n_distinct"))
-        )
-        hist = med.join(dist, "column_name", "left")
-    else:
-        hist = histogram_median(df, columns, bucketed=bucketed).withColumn(
-            "stat_n_distinct", F.col("stat_n_distinct").cast("double")
-        )
+    hist = histogram_median(df, columns).withColumn(
+        "stat_n_distinct", F.col("stat_n_distinct").cast("double")
+    )
     return unpivoted.join(hist, "column_name", "left").withColumn(
         # an all-null column has no histogram row: COUNT(DISTINCT) = 0,
         # median stays NULL (percentile of the empty set)
@@ -929,8 +675,8 @@ def weighted_median(
 ) -> DataFrame:
     """Exact lower weighted median per group: the smallest value whose
     cumulative weight reaches half the group's total — the robust
-    center the plain median family (selected/grid/histogram medians
-    above) can't express when observations carry unequal mass
+    center the plain median family (count-scan and grid medians above)
+    can't express when observations carry unequal mass
     (duration-weighted paces, token-weighted quality scores).
 
     ``weight_col`` must be INTEGER-valued (scale fixed-point weights
@@ -945,13 +691,13 @@ def weighted_median(
     by the group key, never global — and a min-combine on the crossing
     rows.  Three exchanges, all hashed on the group key.
 
-    ``grid``: for bounded fixed-point value domains, the grid_median
-    two-level shape — a coarse cell histogram finds the half-weight
+    ``grid``: for bounded fixed-point value domains, the two-level grid
+    shape of ``_grid_select_median`` — a coarse cell histogram finds the half-weight
     crossing CELL (cell-cardinality windows, bounded at any scale),
     and only that cell's values get the fine cumulative scan.  This
     replaces the per-group ordered window over every distinct value
     (a single-task column sort per group when groups are few — the
-    exact shape grid_median exists to avoid).  Identical results for
+    exact shape the grid selection exists to avoid).  Identical results for
     non-null values by the same integer arithmetic; the grid path
     requires ``value_col`` non-null (a NULL carries no weight there,
     while the default path's NULLS-FIRST window would count it).

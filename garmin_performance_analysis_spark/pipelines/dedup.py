@@ -347,7 +347,6 @@ def contamination_stats(
     text_col: str,
     n: int = 5,
     flag_threshold: float = 0.1,
-    broadcast_probe: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: per corpus document, how many of its
     distinct word ``n``-grams also appear in the PROBE set (the eval /
@@ -358,7 +357,7 @@ def contamination_stats(
 
     Plan shape for 100 TB: both sides reduce to DISTINCT shingles
     first; the probe side (benchmark suites are small by nature)
-    builds the distinct set and the join can broadcast it, so the
+    builds the distinct set and the join broadcasts it, so the
     corpus-side pass is scan → shingle → semi-join with no corpus
     shuffle for the hit count beyond the per-doc aggregate.  Output is
     one row per corpus document (zero-hit docs included — the audit
@@ -369,13 +368,11 @@ def contamination_stats(
     c_sh = word_shingles(corpus, id_col, text_col, n=n)
     p_sh = word_shingles(probe, id_col, text_col, n=n).select("shingle").distinct()
     per_doc = c_sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # real benchmark suites are broadcast-sized, so the hint is the
-    # default — but it's FORCED, which disables Spark's size fallback;
-    # pass broadcast_probe=False when the probe set scales with the
-    # corpus (AQE then picks the join strategy from runtime sizes)
-    p_side = F.broadcast(p_sh) if broadcast_probe else p_sh
+    # real benchmark suites are broadcast-sized; the hint is FORCED,
+    # which disables Spark's size fallback, so a probe set that scales
+    # with the corpus needs a different operator
     hits = (
-        c_sh.join(p_side, "shingle")
+        c_sh.join(F.broadcast(p_sh), "shingle")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )

@@ -54,6 +54,16 @@ def call_scope(spark: SparkSession) -> Iterator[None]:
                 rdd.unpersist(False)
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    half of physical RAM, at most 16 GB.  A fixed 16g heap exceeds a
+    15 GB host, where the JVM would grow into memory the OS and the
+    Python workers need; on larger hosts 16g stays the cap, because a
+    bigger heap made allocation-heavy queries erratic (see ``bench.py``)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
+    return f"{min(16 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -103,7 +113,10 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -22,9 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import force, warm_up  # noqa: E402
+from bench import warm_up  # noqa: E402
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
 from garmin_performance_analysis_spark.session import call_scope, get_spark  # noqa: E402
+from perfbench.run import force  # noqa: E402
 
 
 def main() -> None:

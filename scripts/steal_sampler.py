@@ -10,34 +10,27 @@ depending on neighbor demand).
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def read_stat() -> tuple[int, int]:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    # user nice system idle iowait irq softirq steal guest guest_nice
-    steal = vals[7] if len(vals) > 7 else 0
-    total = sum(vals[:8])
-    return steal, total
+from perfbench.layers import read_steal, steal_pct  # noqa: E402
 
 
 def main() -> None:
     interval = float(sys.argv[1]) if len(sys.argv) > 1 else 5.0
-    prev_steal, prev_total = read_stat()
+    prev = read_steal()
     while True:
         time.sleep(interval)
-        steal, total = read_stat()
-        d_total = max(1, total - prev_total)
-        d_steal = steal - prev_steal
+        cur = read_steal()
         print(
-            f"{time.time():.0f} steal={100.0 * d_steal / d_total:.2f}% "
+            f"{time.time():.0f} steal={steal_pct(prev, cur):.2f}% "
             f"window={interval:.0f}s",
             flush=True,
         )
-        prev_steal, prev_total = steal, total
+        prev = cur
 
 
 if __name__ == "__main__":

@@ -10,6 +10,7 @@ from garmin_performance_analysis_spark.harness.compare import (
     compare_frames,
     duckdb_connection,
 )
+from garmin_performance_analysis_spark.session import call_scope
 
 from conftest import SF_SMOKE
 
@@ -22,7 +23,10 @@ def oracle_con():
 @pytest.mark.parametrize("name", sorted(CATALOG))
 def test_query_matches_oracle(name, spark, oracle_con):
     spec = CATALOG[name]
-    spark_pdf = spec.fn(spark, SF_SMOKE).toPandas()
+    # the scope releases what the call persisted, so the session does
+    # not accumulate blocks over the sweep
+    with call_scope(spark):
+        spark_pdf = spec.fn(spark, SF_SMOKE).toPandas()
     if spec.oracle is None:
         assert len(spark_pdf) >= 0  # rows-only check (driver does the same)
         return
@@ -63,7 +67,8 @@ def test_every_query_returns_rows_at_sf001(spark):
     # An empty result here is the correct answer, oracle-confirmed.
     empty_ok = {"g5_kcore"}
     for name, spec in CATALOG.items():
-        n = spec.fn(spark, SF_SMOKE).count()
+        with call_scope(spark):
+            n = spec.fn(spark, SF_SMOKE).count()
         if n == 0 and name not in empty_ok:
             pytest.fail(f"{name} returned 0 rows at sf0.001")
 

@@ -95,3 +95,14 @@ def test_python_worker_entry_from_foreign_cwd(tmp_path, sf_dir):
     assert rows.keys() == set(_FOREIGN_CWD_ENTRIES), proc.stdout
     assert rows["v9_semantic_dedup"] == "500"
     assert all(int(n) > 0 for n in rows.values()), rows
+
+
+def test_default_driver_memory_is_half_the_host_capped_at_16g(monkeypatch):
+    """No Spark: the heap default follows physical RAM."""
+    from garmin_performance_analysis_spark import session
+
+    page = 4096
+    for ram_gb, want in [(15, f"{15 * 1024 // 2}m"), (32, "16384m"), (256, "16384m")]:
+        conf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_gb * 1024**3 // page}
+        monkeypatch.setattr(session.os, "sysconf", conf.__getitem__)
+        assert session._default_driver_memory() == want

@@ -12,14 +12,15 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from garmin_performance_analysis_spark.operators.stats import (
-    grid_median,
+    five_stat_block,
     grouped_median,
     histogram_median,
-    selected_median,
+    profile_columns,
 )
 from garmin_performance_analysis_spark.operators.windows import sustained_islands
 
@@ -110,8 +111,11 @@ def test_histogram_median_matches_percentile(spark, vals):
     st.lists(
         st.tuples(
             st.integers(min_value=0, max_value=3),
-            st.floats(
-                min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False
+            st.one_of(
+                st.none(),
+                st.integers(min_value=-(10**8), max_value=10**8).map(
+                    lambda c: c / 100.0
+                ),
             ),
         ),
         min_size=1,
@@ -119,31 +123,45 @@ def test_histogram_median_matches_percentile(spark, vals):
     )
 )
 def test_median_shapes_agree(spark, rows):
-    """The bucketed rank scan and the approx-bracket selection are pure
-    plan-shape changes: both must return bit-identical medians to the
-    per-group window scan, whatever the group sizes and however the
-    approximate split points / brackets land (small_n=3 forces the
-    sketch-bracket path even on tiny hypothesis groups)."""
-    df = spark.createDataFrame(rows, "k int, x double")
-    plain = {
-        (r["k"], r["x_median"])
-        for r in grouped_median(df, ["k"], ["x"]).collect()
+    """The two exact-median shapes — the per-value count scan and the
+    fused two-level grid selection of the five-stat block and the
+    profiler — must return medians bit-identical to ``percentile(x, 0.5)``
+    per group, whatever the group sizes, NULLs and grid width: one grid
+    coarser than the ±1e6 domain (every value in one or two cells) and
+    one finer (about one value per cell).  Group 4 is all NULL: its
+    median is NULL on every shape.  The fused block's scaled-long
+    STDDEV must equal the integer-exact Python mirror per group."""
+    df = spark.createDataFrame(rows + [(4, None), (4, None)], "k int, x double")
+    want = {
+        r["k"]: r["m"]
+        for r in df.groupBy("k").agg(F.expr("percentile(x, 0.5)").alias("m")).collect()
     }
-    bucketed = {
-        (r["k"], r["x_median"])
-        for r in grouped_median(df, ["k"], ["x"], bucketed=True).collect()
+    counted = {
+        r["k"]: r["x_median"] for r in grouped_median(df, ["k"], ["x"]).collect()
     }
-    selected = {
-        (r["k"], r["x_median"])
-        for r in selected_median(df, ["k"], ["x"], small_n=3).collect()
-    }
-    gridded = {
-        (r["k"], r["x_median"])
-        for r in grid_median(df, ["k"], {"x": 917.3}).collect()
-    }
-    assert plain == bucketed
-    assert plain == selected
-    assert plain == gridded
+    # the count scan emits no row for an all-NULL group (callers left-join)
+    assert {k: counted.get(k) for k in want} == want
+    by_k = {k: [x for kk, x in rows if kk == k and x is not None] for k in want}
+    want_std = {k: _py_ls_moments(vs)[1] if vs else None for k, vs in by_k.items()}
+    # one profiled column per group: x<k> holds group k's values, NULL
+    # elsewhere, so its median is the group's median
+    wide = df.select(
+        *[F.when(F.col("k") == k, F.col("x")).alias(f"x{k}") for k in want]
+    )
+    for g in (4e6, 917.3):
+        fused = five_stat_block(df, ["k"], ["x"], fixed_scale=2, median_grids={"x": g})
+        got = fused.collect()
+        assert {r["k"]: r["x_median"] for r in got} == want
+        assert {r["k"]: r["x_stddev"] for r in got} == want_std
+        profiled = profile_columns(
+            wide, wide.columns, grids=dict.fromkeys(wide.columns, g), fixed_scale=2
+        )
+        got = profiled.collect()
+        assert {int(r["column_name"][1:]): r["stat_median"] for r in got} == want
+    with pytest.raises(ValueError):
+        five_stat_block(df, ["k"], ["x"], fixed_scale=2)
+    with pytest.raises(ValueError):
+        profile_columns(df, ["x"], grids={"x": 1.0})
 
 
 def brute_nearest(left_dates: list[int], right_dates: list[int], max_gap):
@@ -201,9 +219,10 @@ def test_asof_tiebreak_matches_bruteforce(spark, lds, rds, max_gap):
 
 
 def _py_ls_moments(vals: list[float], scale: int = 2):
-    """Python mirror of registry.ls_avg / ls_std / ls_sum_wide — same
-    integerization, same op ORDER (each double step replicated), so the
-    expected values are bit-exact, not approximate."""
+    """Python mirror of registry.ls_avg / ls_sum_wide and the fused
+    five-stat block's scaled-long STDDEV — same integerization, same op
+    ORDER (each double step replicated), so the expected values are
+    bit-exact, not approximate."""
     f = float(10**scale)
     B = 1 << 20
     qs = [math.floor(v * f + 0.5) for v in vals]
@@ -233,24 +252,22 @@ def _py_ls_moments(vals: list[float], scale: int = 2):
     )
 )
 def test_scaled_long_moments_match_python_mirror(spark, vals):
-    """The scaled-long aggregation core (ls_avg/ls_std/ls_sum_wide) must
-    be bit-identical to the integer-exact Python mirror of the same
-    formula — this is the determinism the oracles rely on."""
+    """The scaled-long aggregation core (ls_avg/ls_sum_wide) must be
+    bit-identical to the integer-exact Python mirror of the same formula
+    — this is the determinism the oracles rely on.  The STDDEV half of
+    the mirror is checked in ``test_median_shapes_agree``."""
     from garmin_performance_analysis_spark.harness.registry import (
         ls_avg,
-        ls_std,
         ls_sum_wide,
     )
 
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     row = df.agg(
         ls_avg(F.col("x")).alias("a"),
-        ls_std(F.col("x")).alias("s"),
         ls_sum_wide(F.col("x"), scale=2).alias("w"),
     ).collect()[0]
-    exp_avg, exp_std, exp_wide = _py_ls_moments(vals)
+    exp_avg, _, exp_wide = _py_ls_moments(vals)
     assert row["a"] == exp_avg
-    assert row["s"] == exp_std
     assert row["w"] == exp_wide
 
 
