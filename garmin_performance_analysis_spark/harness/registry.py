@@ -10,15 +10,48 @@ modules:
 - Every ordering that feeds a LIMIT ends in a unique key column.
 - Dates in outputs are formatted as strings; timestamps pass through
   (both engines are microsecond/UTC after the events loader).
+
+Plan reuse.  ``register`` wraps every entry, so ``QuerySpec.fn``
+resolves an entry's plan once per session and sf_dir and returns a NEW
+DataFrame over it on later calls: ``Dataset.ofRows(session, analyzed)``,
+with its own QueryExecution, so optimization, physical planning, AQE
+and shuffles still run per call; only the Python-side Column
+construction and the JVM analysis are skipped.  These are the
+semantics of a Spark temp view: analysis-time confs (session time
+zone, ANSI, case sensitivity), and any conf the Python build itself
+reads (``plans.layout.spread_for_compute``'s shuffle width), are
+captured when the plan is first resolved; optimizer and physical
+confs are read on every call.
+
+- Key: ``sources.tables.plan_key`` — (SparkSession, abspath(sf_dir),
+  entry name) in the one artifact registry.  A table rewrite
+  (``invalidate_table_memo``) drops the entries of its sf_dir, so the
+  next call resolves again.
+- Rule: an entry is eligible when, while it builds, no Spark job runs
+  (counted under a unique job tag, which adds to a caller's job group
+  rather than replacing it), no RDD is newly persisted, the frame is
+  not streaming, and every leaf of the analyzed plan is a local, range
+  or one-row relation or a file relation over tables of sf_dir
+  (``<sf_dir>/<table>.parquet``).  Artifact, warehouse and scratch
+  files, ``LogicalRDD`` leaves and subquery expressions disqualify.
+- When: the first call runs as is (a cold session resolves its tables
+  with jobs there); the second call decides and returns its own frame;
+  an ineligible verdict is final, and costs one dict lookup per call.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
+import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.tables import _REGISTRY, TABLE_NAMES, plan_key
 
 
 @dataclass
@@ -33,11 +66,106 @@ CATALOG: dict[str, QuerySpec] = {}
 
 
 def register(name: str, oracle: Optional[str] = None, tags: tuple = ()):
+    """Register ``fn`` under ``name``; ``QuerySpec.fn`` is the
+    plan-reusing wrapper (module docstring), the module keeps ``fn``."""
+
     def deco(fn):
-        CATALOG[name] = QuerySpec(fn=fn, oracle=oracle, doc=fn.__doc__ or "", tags=tags)
+        CATALOG[name] = QuerySpec(
+            fn=_reusing_plan(name, fn), oracle=oracle, doc=fn.__doc__ or "", tags=tags
+        )
         return fn
 
     return deco
+
+
+# plan states in the registry besides a reusable plan
+_SEEN, _INELIGIBLE = "seen", "ineligible"
+_CHECK_TAGS = itertools.count()
+_LOCAL_LEAVES = {"LocalRelation", "OneRowRelation", "Range"}
+
+
+def _reusing_plan(name: str, fn):
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        key = plan_key(spark, sf_dir, name)
+        state = _REGISTRY.get(key, (None,))[0]
+        if state is _INELIGIBLE:
+            return fn(spark, sf_dir)
+        if state is None:
+            df = fn(spark, sf_dir)
+            _REGISTRY[key] = (_SEEN, ())
+            return df
+        if state is _SEEN:
+            df, pure = _checked_build(fn, spark, sf_dir)
+            _REGISTRY[key] = ((pure and _reusable_plan(df, sf_dir)) or _INELIGIBLE, ())
+            return df
+        of_rows, analyzed, session = state
+        return DataFrame(of_rows(session._jsparkSession, analyzed), session)
+
+    return call
+
+
+def serves_reused_plan(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    """Whether the next ``CATALOG[name].fn(spark, sf_dir)`` returns a
+    frame over a reused plan (a registry lookup, no JVM call)."""
+    state = _REGISTRY.get(plan_key(spark, sf_dir, name), (None,))[0]
+    return isinstance(state, tuple)
+
+
+def _checked_build(fn, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
+    """``fn(spark, sf_dir)``, and whether its build ran no Spark job and
+    newly persisted no RDD."""
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    tag = f"plan-reuse-check-{next(_CHECK_TAGS)}"
+    persisted = set(jsc.getPersistentRDDs().keys())
+    sc.addJobTag(tag)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.removeJobTag(tag)
+    pure = len(jsc.sc().statusTracker().getJobIdsForTag(tag)) == 0 and set(
+        jsc.getPersistentRDDs().keys()
+    ) <= persisted
+    return df, pure
+
+
+def _reusable_plan(df: DataFrame, sf_dir: str) -> Optional[tuple]:
+    """``(Dataset.ofRows, analyzed plan, session)`` of a built frame
+    whose plan can serve later calls, or None (module docstring)."""
+    if df.isStreaming:
+        return None
+    session = df.sparkSession
+    jvm = session._jvm
+    analyzed = df._jdf.queryExecution().analyzed()
+    subquery = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION()
+    if analyzed.containsPattern(subquery):
+        return None  # collectLeaves does not reach a subquery's leaves
+    tables = tuple(os.path.join(os.path.abspath(sf_dir), f"{t}.parquet") for t in TABLE_NAMES)
+    leaves = analyzed.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        kind = leaf.getClass().getSimpleName()
+        if kind in _LOCAL_LEAVES:
+            continue
+        if kind != "LogicalRelation":
+            return None
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        files = [urlparse(uri) for uri in relation.inputFiles()]
+        if not files or not all(_in_tables(f, tables) for f in files):
+            return None
+    return jvm.org.apache.spark.sql.classic.Dataset.ofRows, analyzed, session
+
+
+def _in_tables(url, tables: tuple) -> bool:
+    """Whether a parsed input-file URI is one of ``tables`` or lies
+    under one."""
+    path = unquote(url.path)
+    return url.scheme in ("", "file") and any(
+        path == t or path.startswith(t + os.sep) for t in tables
+    )
 
 
 def r6(col):

@@ -303,12 +303,18 @@ def _five_stat_columns(
     return joined.select(*order)
 
 
-def _use_fused_grid(fixed_scale: int | None, grids: "dict[str, float] | None") -> bool:
+def _use_fused_grid(
+    fixed_scale: int | None, grids: "dict[str, float] | None", columns: Sequence[str]
+) -> bool:
     """The shape rule shared by ``five_stat_block`` and ``profile_columns``:
-    a fixed scale and per-metric grids together select the fused grid
-    plan, neither selects DECIMAL moments plus the count-scan median."""
+    a fixed scale and a grid for every column together select the fused
+    grid plan, neither selects DECIMAL moments plus the count-scan
+    median."""
     if (fixed_scale is None) != (grids is None):
         raise ValueError("pass fixed_scale and the median grids together, or neither")
+    missing = [c for c in columns if c not in (grids or {})]
+    if grids is not None and missing:
+        raise ValueError(f"no median grid for column(s) {missing}")
     return fixed_scale is not None
 
 
@@ -342,9 +348,10 @@ def five_stat_block(
       ``_five_stat_fused_grid``.
 
     Both give medians bit-identical to ``percentile(m, 0.5)``
-    (property-tested).  Giving only one of the two raises ``ValueError``.
+    (property-tested).  Giving only one of the two, or grids that miss
+    a metric, raises ``ValueError``.
     """
-    if _use_fused_grid(fixed_scale, median_grids):
+    if _use_fused_grid(fixed_scale, median_grids, metrics):
         return _five_stat_fused_grid(
             df, group_cols, metrics, count_col, fixed_scale, median_grids
         )
@@ -593,9 +600,10 @@ def profile_columns(
     - both (a9: 2-dp bounded-domain columns): the single-scan fused
       histogram plan, ``_profile_fused_grid``.
 
-    Giving only one of the two raises ``ValueError``.
+    Giving only one of the two, or grids that miss a column, raises
+    ``ValueError``.
     """
-    if _use_fused_grid(fixed_scale, grids):
+    if _use_fused_grid(fixed_scale, grids, columns):
         return _profile_fused_grid(df, columns, grids, fixed_scale)
     basic: list[Column] = [F.count(F.lit(1)).alias("_rows")]
     for m in columns:

@@ -112,6 +112,13 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
             "HDFSBackedStateStoreProvider",
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # PySpark otherwise records the Python call site of every
+        # functions.* call (an active-session lookup, a conf read and
+        # an origin set and clear: ~5 py4j round trips each), which
+        # was 69-72 % of the round trips of a catalog build.  Errors
+        # keep their class and message and lose only the DataFrame
+        # call-site context.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

@@ -45,7 +45,19 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # plus tiny collected rows — never persisted blocks, so no per-call
 # release can break it.  The context object itself is in the key: it
 # cannot be recycled the way ``id()`` can, and a hit needs no JVM call.
+# Catalog entries' reusable plans live here too, under ``plan_key``
+# (per SparkSession, no dirs; see ``harness.registry``).
 _REGISTRY: dict = {}
+
+
+def plan_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
+    """The registry key of catalog entry ``name``'s plan state over
+    ``sf_dir``.  Keyed on the SparkSession, not its context: a plan is
+    analyzed against one session's temp views and analysis confs, so
+    ``spark.newSession()`` resolves its own.  Its value holds no files
+    and no blocks, and ``invalidate_table_memo`` drops it with the rest
+    of its sf_dir's entries."""
+    return (spark, os.path.abspath(sf_dir), name)
 
 
 def artifact(spark: SparkSession, sf_dir: str, name: str, build):
@@ -78,15 +90,16 @@ def artifact_tag(spark: SparkSession, sf_dir: str) -> str:
 
 
 def invalidate_table_memo(path: str | None = None) -> int:
-    """Drop every registered artifact of an sf_dir that contains
-    ``path`` or lies under it (everything when ``path`` is None) and
-    delete its dirs.  Table
+    """Drop every registered artifact and entry plan of an sf_dir that
+    contains ``path`` or lies under it (everything when ``path`` is
+    None) and delete its dirs.  Table
     rewrites (``pipelines.migrations.rewrite_table``) call this: a
     registered relation pins the OLD file listing, so a query run
     after a rewrite would read deleted part-files and fail (or silently
     read stale data on object stores), and an artifact derived from
-    the old table would answer for data that is gone.  Returns the
-    number of entries dropped."""
+    the old table would answer for data that is gone, and a reused plan
+    would scan the old relation.  Returns the number of entries
+    dropped."""
 
     # abspath both sides (a relative sf_dir must match the same dir
     # given absolutely) and compare on whole path segments — a bare

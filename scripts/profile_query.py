@@ -9,6 +9,8 @@ with the Spark event log enabled (UI stays off); then parses the log
 into per-stage wall/task-time rows tagged by job group, so a composite
 query's cost can be attributed to its internal passes
 (candidate join vs CC rounds vs final window, checkpoint jobs, etc.).
+Each run line says whether its call was built or served from a reused
+plan (an eligible entry's third call on, ``harness/registry.py``).
 Nothing here is used by the bench — it is a diagnosis tool only.
 """
 
@@ -24,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import warm_up  # noqa: E402
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
+from garmin_performance_analysis_spark.harness.registry import serves_reused_plan  # noqa: E402
 from garmin_performance_analysis_spark.session import call_scope, get_spark  # noqa: E402
 from perfbench.run import force  # noqa: E402
 
@@ -46,9 +49,10 @@ def main() -> None:
     warm_up(spark, sf_dir)
     with call_scope(spark):
         for i in range(runs):
+            plan = "reused plan" if serves_reused_plan(spark, sf_dir, name) else "built"
             t0 = time.perf_counter()
             force(CATALOG[name].fn(spark, sf_dir))
-            print(f"run {i}: {time.perf_counter() - t0:.2f}s", flush=True)
+            print(f"run {i}: {time.perf_counter() - t0:.2f}s ({plan})", flush=True)
     app_id = spark.sparkContext.applicationId
     spark.stop()
     time.sleep(1)

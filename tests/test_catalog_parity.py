@@ -171,3 +171,156 @@ def test_registered_artifact_rebuilds_when_its_dirs_are_gone(spark):
     for d in dirs:  # this session's tables only: others may share the warehouse
         shutil.rmtree(d)
     assert sorted(repr(r) for r in fn(spark, SF_SMOKE).collect()) == first
+
+
+_READS = sorted(n for n, s in CATALOG.items() if "read" in s.tags)
+
+
+def _normalized_optimized_plan(df) -> str:
+    """The optimized plan with its per-build ids normalized away
+    (expression ids, common-expression and lambda-variable names, plan
+    ids, RDD ids, artifact hex tags)."""
+    import re
+
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = re.sub(r"#\d+L?", "#", text)
+    text = re.sub(r"_common_expr_\d+", "_common_expr_", text)
+    text = re.sub(r"(lambda \w+?)_\d+#", r"\1_#", text)
+    text = re.sub(r",? ?\[plan_id=\d+\]", "", text)
+    text = re.sub(r"RDD \d+", "RDD", text)
+    return re.sub(r"_[0-9a-f]{8}\b", "_<hex>", text)
+
+
+def test_reused_plans_match_a_fresh_build(spark):
+    """Every read entry, called a third time, has the optimized plan of
+    a fresh build of its raw function; each one served from a reused
+    plan also returns the fresh build's rows."""
+    from garmin_performance_analysis_spark.harness.registry import serves_reused_plan
+
+    reused, plan_differs, rows_differ = [], [], []
+    for name in _READS:
+        spec = CATALOG[name]
+        with call_scope(spark):
+            spec.fn(spark, SF_SMOKE)
+            spec.fn(spark, SF_SMOKE)  # the second call decides
+            hit = serves_reused_plan(spark, SF_SMOKE, name)
+            third = spec.fn(spark, SF_SMOKE)
+            fresh = spec.fn.__wrapped__(spark, SF_SMOKE)
+            if _normalized_optimized_plan(third) != _normalized_optimized_plan(fresh):
+                plan_differs.append(name)
+            if hit:
+                reused.append(name)
+                if sorted(map(repr, third.collect())) != sorted(map(repr, fresh.collect())):
+                    rows_differ.append(name)
+    assert plan_differs == [] and rows_differ == []
+    # the three reads of perfbench's interactive workload are pure
+    assert {"w12_ewma_halflife", "t3_sustained_islands", "d10_performance_trends"} <= set(reused)
+
+
+def test_ingest_entries_never_store_a_plan(spark):
+    """s8 (a CSV sink/source roundtrip) and i3 (a streaming replay)
+    run jobs and read scratch files while they build: their second call
+    marks them ineligible and no call is served from a plan."""
+    from garmin_performance_analysis_spark.harness.registry import serves_reused_plan
+    from garmin_performance_analysis_spark.sources.tables import _REGISTRY, plan_key
+
+    for name in ("s8_csv_roundtrip", "i3_stream_window_replay"):
+        for _ in range(3):
+            with call_scope(spark):
+                assert not serves_reused_plan(spark, SF_SMOKE, name), name
+                assert len(CATALOG[name].fn(spark, SF_SMOKE).collect()) > 0, name
+        assert _REGISTRY[plan_key(spark, SF_SMOKE, name)] == ("ineligible", ()), name
+
+
+def _job_tasks(spark, tag: str) -> int:
+    """Tasks completed by the jobs that ran under job tag ``tag``."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    done = 0
+    for job in tracker.getJobIdsForTag(tag):
+        for stage in tracker.getJobInfo(job).get().stageIds():
+            info = tracker.getStageInfo(stage)
+            if info.isDefined():
+                done += info.get().numCompletedTasks()
+    return done
+
+
+def test_each_hit_is_a_new_frame_with_its_own_execution(spark):
+    """Two calls served from t3's reused plan are two DataFrames over
+    one analyzed plan, each with its own QueryExecution, so the second
+    ``toPandas`` runs every task again instead of reusing the first
+    call's shuffle outputs (re-running one frame does reuse them)."""
+    from garmin_performance_analysis_spark.harness.registry import serves_reused_plan
+
+    name = "t3_sustained_islands"
+    fn = CATALOG[name].fn
+    sc = spark.sparkContext
+    identity = sc._jvm.System.identityHashCode
+    with call_scope(spark):
+        while not serves_reused_plan(spark, SF_SMOKE, name):
+            fn(spark, SF_SMOKE)
+        a, b = fn(spark, SF_SMOKE), fn(spark, SF_SMOKE)
+        qa, qb = a._jdf.queryExecution(), b._jdf.queryExecution()
+        assert a is not b and not qa.equals(qb)
+        assert identity(qa.analyzed()) == identity(qb.analyzed())
+        tasks = []
+        for i, df in enumerate((a, b, a)):
+            tag = f"hit-execution-{i}"
+            sc.addJobTag(tag)
+            try:
+                pdf = df.toPandas()
+            finally:
+                sc.removeJobTag(tag)
+            tasks.append(_job_tasks(spark, tag))
+        assert len(pdf) > 0
+    # control: running ``a`` again reuses its shuffle outputs, so it
+    # completes fewer tasks; the second hit does not
+    assert tasks[1] == tasks[0] > tasks[2], tasks
+
+
+def test_reused_plan_follows_rewrite_table(spark, tmp_path):
+    """After ``rewrite_table`` on a copy of sf0.001, t3's next call is
+    built again over the rewritten lineitem: it equals a fresh build of
+    the raw function and differs from the answer before the rewrite."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from garmin_performance_analysis_spark.harness.registry import serves_reused_plan
+    from garmin_performance_analysis_spark.pipelines.migrations import rewrite_table
+    from garmin_performance_analysis_spark.sources.tables import load_table
+
+    base = str(tmp_path)
+    shutil.copy(os.path.join(SF_SMOKE, "lineitem.parquet"), base)
+    fn = CATALOG["t3_sustained_islands"].fn
+    for _ in range(3):
+        before = sorted(map(repr, fn(spark, base).collect()))
+    assert serves_reused_plan(spark, base, "t3_sustained_islands")
+    lineitem = load_table(spark, base, "lineitem")
+    rewrite_table(lineitem.filter(F.col("l_orderkey") % 2 == 0), os.path.join(base, "lineitem.parquet"))
+    assert not serves_reused_plan(spark, base, "t3_sustained_islands")
+    after = sorted(map(repr, fn(spark, base).collect()))
+    assert after == sorted(map(repr, fn.__wrapped__(spark, base).collect()))
+    assert after != before
+
+
+def test_new_session_resolves_its_own_plan(spark):
+    """A ``spark.newSession()`` gets its own plan entry: its calls do
+    not reuse the parent session's analyzed plan, and return its rows."""
+    from garmin_performance_analysis_spark.sources.tables import _REGISTRY, plan_key
+
+    name = "w12_ewma_halflife"
+    fn = CATALOG[name].fn
+
+    def third_call_rows(session):
+        fn(session, SF_SMOKE)
+        fn(session, SF_SMOKE)
+        return sorted(map(repr, fn(session, SF_SMOKE).collect()))
+
+    other = spark.newSession()
+    assert third_call_rows(other) == third_call_rows(spark)
+    mine = _REGISTRY[plan_key(spark, SF_SMOKE, name)][0]
+    theirs = _REGISTRY[plan_key(other, SF_SMOKE, name)][0]
+    assert isinstance(mine, tuple) and isinstance(theirs, tuple)
+    identity = spark.sparkContext._jvm.System.identityHashCode
+    assert identity(mine[1]) != identity(theirs[1])

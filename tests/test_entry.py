@@ -106,3 +106,15 @@ def test_default_driver_memory_is_half_the_host_capped_at_16g(monkeypatch):
         conf = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": ram_gb * 1024**3 // page}
         monkeypatch.setattr(session.os, "sysconf", conf.__getitem__)
         assert session._default_driver_memory() == want
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    """``get_spark`` disables PySpark's per-call origin capture; a
+    runtime error keeps its error class without it."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        spark.range(3).select((F.col("id") / F.lit(0)).alias("q")).collect()

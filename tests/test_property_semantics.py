@@ -164,6 +164,21 @@ def test_median_shapes_agree(spark, rows):
         profile_columns(df, ["x"], grids={"x": 1.0})
 
 
+def test_fused_grid_needs_a_grid_per_column(spark):
+    """A profiled column or five-stat metric without a median grid
+    raises a ``ValueError`` naming it, from both fused callers, instead
+    of a NULL median (the profiler) or a ``KeyError`` (the block)."""
+    df = spark.createDataFrame(
+        [(1, 1.0, 2.0), (1, 2.0, 4.0), (1, 3.0, 6.0)], "k int, a double, b double"
+    )
+    with pytest.raises(ValueError, match=r"\['b'\]"):
+        profile_columns(df, ["a", "b"], grids={"a": 1.0}, fixed_scale=2)
+    with pytest.raises(ValueError, match=r"\['b'\]"):
+        five_stat_block(df, ["k"], ["a", "b"], fixed_scale=2, median_grids={"a": 1.0})
+    full = profile_columns(df, ["a", "b"], grids={"a": 1.0, "b": 1.0}, fixed_scale=2)
+    assert {r["column_name"]: r["stat_median"] for r in full.collect()} == {"a": 2.0, "b": 4.0}
+
+
 def brute_nearest(left_dates: list[int], right_dates: list[int], max_gap):
     """J7/J8 tie semantics: nearest by |gap|, tie -> past side (the
     smaller signed gap, i.e. the earlier right date)."""
