@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..scratch import artifact_dir, scratch_dir
+from ..session import run_concurrently
 from ..sources.tables import artifact_tag, load_table
 from .registry import dec_sum as _dec_sum
 from .registry import dec_avg as _dec_avg
@@ -579,13 +580,19 @@ def s9_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no in-place cast), which is exactly the shape this entry
     exercises."""
     orders = load_table(spark, sf_dir, "orders")
+    batch1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
+        "o_orderkey", "o_totalprice"
+    )
+    batch2 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
+        "o_orderkey", "o_totalprice", "o_orderpriority"
+    )
     with scratch_dir(prefix="s9_evolve_") as root:
-        orders.filter(F.col("o_orderkey") % 2 == 0).select(
-            "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(root + "/batch=1")
-        orders.filter(F.col("o_orderkey") % 2 == 1).select(
-            "o_orderkey", "o_totalprice", "o_orderpriority"
-        ).write.mode("overwrite").parquet(root + "/batch=2")
+        # the two ingests are independent writes: overlap them
+        run_concurrently(
+            spark,
+            lambda: batch1.write.mode("overwrite").parquet(root + "/batch=1"),
+            lambda: batch2.write.mode("overwrite").parquet(root + "/batch=2"),
+        )
         merged = spark.read.option("mergeSchema", "true").parquet(
             root + "/batch=1", root + "/batch=2"
         )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..pipelines import incremental
 from ..scratch import scratch_dir
+from ..session import run_concurrently
 from ..sources.tables import load_table
 from .q_pipeline import _BANDS, _NUM_HASHES, _minhash_sig_ctes
 from .registry import r6 as _r6
@@ -94,18 +95,16 @@ def i1_incremental_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two ingests' REGISTRY steps stay strictly sequential while
         # batch 2's scan+md5+collapse back-fills executors idled by
         # ingest 1's commit/collect phases.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            staged_b2 = pool.submit(
-                incremental.collapse_batch, b2, "doc_id", key
-            )
-            incremental.incremental_dedup(
+        staged_b2, _ = run_concurrently(
+            spark,
+            lambda: incremental.collapse_batch(b2, "doc_id", key),
+            lambda: incremental.incremental_dedup(
                 spark, b1.select("doc_id", "text"), reg_dir, "doc_id", key
-            )
-            incremental.incremental_dedup(
-                spark, b2, reg_dir, "doc_id", key, staged=staged_b2.result()
-            )
+            ),
+        )
+        incremental.incremental_dedup(
+            spark, b2, reg_dir, "doc_id", key, staged=staged_b2
+        )
         final = incremental.read_registry(spark, reg_dir).localCheckpoint(
             eager=True
         )
@@ -155,22 +154,19 @@ def i2_incremental_lsh_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # never the band/sig stores, so the store mutations stay
         # strictly sequential while batch 2's shingle+minhash pass
         # back-fills executors idled by ingest 1's append commits.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            staged_b2 = pool.submit(
-                incremental.stage_lsh_sigs, b2, "doc_id", "text",
-                _NUM_HASHES, 3,
-            )
-            incremental.incremental_lsh_candidates(
+        staged_b2, _ = run_concurrently(
+            spark,
+            lambda: incremental.stage_lsh_sigs(b2, "doc_id", "text", _NUM_HASHES, 3),
+            lambda: incremental.incremental_lsh_candidates(
                 spark, b1, reg_dir, "doc_id", "text",
                 num_hashes=_NUM_HASHES, bands=_BANDS, n=3, threshold=0.5,
-            )
-            pairs = incremental.incremental_lsh_candidates(
-                spark, b2, reg_dir, "doc_id", "text",
-                num_hashes=_NUM_HASHES, bands=_BANDS, n=3, threshold=0.5,
-                staged_sigs=staged_b2.result(),
-            ).localCheckpoint(eager=True)
+            ),
+        )
+        pairs = incremental.incremental_lsh_candidates(
+            spark, b2, reg_dir, "doc_id", "text",
+            num_hashes=_NUM_HASHES, bands=_BANDS, n=3, threshold=0.5,
+            staged_sigs=staged_b2,
+        ).localCheckpoint(eager=True)
     return pairs.select(
         "old_doc", "new_doc", _r6(F.col("est_jaccard")).alias("est_jaccard")
     )

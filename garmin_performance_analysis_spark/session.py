@@ -13,9 +13,13 @@ multi-executor cluster:
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import warnings
+from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -54,6 +58,34 @@ def call_scope(spark: SparkSession) -> Iterator[None]:
                 rdd.unpersist(False)
 
 
+# Pool width of ``run_concurrently``: the overlapped actions are small
+# jobs whose fixed cost (scheduling, commit, footer write) is what
+# overlaps, so a few threads suffice even on wide hosts.
+_MAX_CONCURRENT = 4
+
+
+def run_concurrently(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """Run independent Spark actions at once; return their results in
+    submission order.  Each thunk runs on a pool thread, wrapped by
+    ``pyspark.inheritable_thread_target(spark)``, so its jobs carry the
+    caller's job group, job description and job tags: a plain pool
+    thread drops them, which hides the jobs from job-group counters and
+    from ``harness.registry._checked_build``'s purity tag.  Waits for
+    every thunk, then raises the first failure in submission order; no
+    pool thread outlives the call.  A single thunk runs in the caller's
+    thread.  Start Spark work from another thread only through here."""
+    if len(thunks) <= 1:
+        return [thunk() for thunk in thunks]
+    with ThreadPoolExecutor(max_workers=min(_MAX_CONCURRENT, len(thunks))) as pool:
+        # one wrap per thunk: each copies the caller's local properties,
+        # so concurrent SQL executions never share one Properties object
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    for future in futures:
+        if future.exception() is not None:
+            raise future.exception()
+    return [future.result() for future in futures]
+
+
 def _default_driver_memory() -> str:
     """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
     half of physical RAM, at most 16 GB.  A fixed 16g heap exceeds a
@@ -64,7 +96,31 @@ def _default_driver_memory() -> str:
     return f"{min(16 * 1024, ram_mb // 2)}m"
 
 
+# PySpark's call-site capture: a static conf, read once per process.
+_CALL_SITE_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def _warn_on_call_site_capture(conf) -> None:
+    """Warn when ``conf`` (a session's ``RuntimeConfig``) has PySpark's
+    call-site capture on."""
+    if conf.get(_CALL_SITE_CONF, "true").lower() == "true":
+        warnings.warn(
+            f"{_CALL_SITE_CONF} is true in this session, and it is a static "
+            "conf: every functions.* call in every catalog build pays about "
+            "5 py4j round trips to record its call site.  Build the session "
+            "with it set to false, or let get_spark build it.",
+            stacklevel=3,
+        )
+
+
 def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSession:
+    """The engine's session: ``local[$SPARK_GRAFT_CPUS]`` with the confs
+    below.  In a process whose session already exists, ``getOrCreate``
+    returns that session and its static confs stay as they were built;
+    if PySpark's call-site capture (``spark.python.sql.dataFrameDebugging
+    .enabled``) is on there, this warns once: every ``functions.*`` call
+    of every build then costs about 5 py4j round trips, and only a
+    session built with the conf false avoids it."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -118,7 +174,7 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         # was 69-72 % of the round trips of a catalog build.  Errors
         # keep their class and message and lose only the DataFrame
         # call-site context.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(_CALL_SITE_CONF, "false")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",
@@ -127,5 +183,6 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _warn_on_call_site_capture(spark.conf)
     ship_package_path(spark)
     return spark

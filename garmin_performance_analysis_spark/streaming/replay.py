@@ -51,13 +51,15 @@ call site.  The caller owns ``work_dir`` and its deletion
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 # Target bytes of source data per state partition.  Matches the AQE
 # advisory-partition order of magnitude: a replay over KB of events
@@ -103,21 +105,20 @@ def _stage_batches(batches: list[DataFrame], src: str) -> None:
     source lists unprocessed files in modTime order — probed with
     path order reversed against mtime order).
 
-    The per-batch writes are independent single-task jobs, so they are
-    submitted concurrently (guide §2.6 — overlap independent jobs);
-    naming and mtimes are assigned after all writes land, keeping the
-    replay order a pure function of batch index."""
+    The per-batch writes are independent single-task jobs, so they run
+    concurrently (``session.run_concurrently``, guide §2.6 — overlap
+    independent jobs); naming and mtimes are assigned after all writes
+    land, keeping the replay order a pure function of batch index."""
     os.makedirs(src, exist_ok=True)
     tmp_dirs = [f"{src}_stage{i}" for i in range(len(batches))]
 
-    def write(i: int) -> None:
-        batches[i].coalesce(1).write.mode("overwrite").parquet(tmp_dirs[i])
-
-    if len(batches) > 1:
-        with ThreadPoolExecutor(max_workers=min(4, len(batches))) as pool:
-            list(pool.map(write, range(len(batches))))
-    else:
-        write(0)
+    run_concurrently(
+        batches[0].sparkSession,
+        *(
+            functools.partial(b.coalesce(1).write.mode("overwrite").parquet, tmp)
+            for b, tmp in zip(batches, tmp_dirs)
+        ),
+    )
     t0 = time.time() - len(batches)
     for i, tmp in enumerate(tmp_dirs):
         part = next(f for f in os.listdir(tmp) if f.startswith("part-"))
@@ -134,14 +135,16 @@ def _replay(
     build,
     *,
     per_batch: bool = False,
-) -> str:
+) -> DataFrame:
     """The one replay scaffold: stage every batch of every side in one
     ``_stage_batches`` call (the writes overlap), size the state
     partitions from the staged bytes, run the query, and restore every
     overridden conf in one ``finally``.  ``sides`` holds one batch list
     per stream source (equal lengths, one schema); ``build`` maps one
     file stream per side to the streaming DataFrame to sink.  Returns
-    the sink path.
+    the sink read back under that frame's own schema, so the read runs
+    no schema-inference job and a replay that emitted nothing still has
+    its columns.
 
     Default mode: every batch is released into its side's source dir
     up-front and ONE ``Trigger.AvailableNow`` query with
@@ -178,16 +181,16 @@ def _replay(
                 os.path.join(src, f"batch_{i:05d}.parquet"),
             )
 
-    def run() -> None:
+    def run() -> DataFrame:
         streams = [
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             for src in srcs
         ]
+        stream = build(*streams)
         q = (
-            build(*streams)
-            .writeStream.format("parquet")
+            stream.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", chk)
             .outputMode("append")
@@ -195,6 +198,7 @@ def _replay(
             .start()
         )
         q.awaitTermination()
+        return stream
 
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     confs = {"spark.sql.shuffle.partitions": str(_state_partitions(staged, shuffle))}
@@ -214,15 +218,15 @@ def _replay(
         if per_batch:
             for i in range(n):
                 release(i)
-                run()
+                stream = run()
         else:
             for i in range(n):
                 release(i)
-            run()
+            stream = run()
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    return out
+    return spark.read.schema(stream.schema).parquet(out)
 
 
 def windowed_stats_replay(
@@ -245,7 +249,7 @@ def windowed_stats_replay(
     (shuffle-order-independent, registry convention); ``value_avg`` is
     derived as sum/n at read-back so both engines share one formula.
     """
-    out = _replay(
+    sink = _replay(
         spark,
         [batches],
         work_dir,
@@ -263,7 +267,6 @@ def windowed_stats_replay(
             )
         ),
     )
-    sink = spark.read.parquet(out)
     return sink.select(
         F.col("win.start").alias("window_start"),
         F.col("key"),
@@ -370,8 +373,7 @@ def stream_join_replay(
             join_type,
         ).drop("r_k")
 
-    out = _replay(spark, [left_batches, right_batches], work_dir, build)
-    return spark.read.parquet(out)
+    return _replay(spark, [left_batches, right_batches], work_dir, build)
 
 
 def stream_dedup_replay(
@@ -413,7 +415,7 @@ def stream_dedup_replay(
     are.  Callers wanting payloads must make them functions of the key.
     """
     key_cols = key_cols or ["k"]
-    out = _replay(
+    return _replay(
         spark,
         [batches],
         work_dir,
@@ -421,8 +423,7 @@ def stream_dedup_replay(
             ts_col, f"{delay_sec} seconds"
         ).dropDuplicatesWithinWatermark(key_cols),
         per_batch=True,
-    )
-    return spark.read.parquet(out).select(*key_cols)
+    ).select(*key_cols)
 
 
 def stream_session_replay(
@@ -462,7 +463,7 @@ def stream_session_replay(
       overlapping it opens a separate session (probed: overlapping
       emitted+new sessions both appear in the sink).
     """
-    out = _replay(
+    sink = _replay(
         spark,
         [batches],
         work_dir,
@@ -479,7 +480,6 @@ def stream_session_replay(
         ),
         per_batch=True,
     )
-    sink = spark.read.parquet(out)
     return sink.select(
         F.col("sw.start").alias("window_start"),
         F.col("sw.end").alias("window_end"),
@@ -527,7 +527,7 @@ def stream_stateful_runs_replay(
     """
     from .stateful import sustained_runs_stateful
 
-    out = _replay(
+    return _replay(
         spark,
         [batches],
         work_dir,
@@ -535,7 +535,6 @@ def stream_stateful_runs_replay(
             stream, key_col, seq_col, max_gap=max_gap, min_span=min_span
         ),
     )
-    return spark.read.parquet(out)
 
 
 def stream_static_enrich_replay(
@@ -570,7 +569,7 @@ def stream_static_enrich_replay(
 
     Aggregates mirror ``windowed_stats_replay`` (DECIMAL sums).
     """
-    out = _replay(
+    sink = _replay(
         spark,
         [batches],
         work_dir,
@@ -587,7 +586,6 @@ def stream_static_enrich_replay(
             )
         ),
     )
-    sink = spark.read.parquet(out)
     return sink.select(
         F.col("win.start").alias("window_start"),
         F.col("key"),

@@ -118,3 +118,27 @@ def test_get_spark_turns_off_call_site_capture(spark):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
         spark.range(3).select((F.col("id") / F.lit(0)).alias("q")).collect()
+
+
+def test_call_site_capture_left_on_warns():
+    """No Spark: a session whose static call-site conf is on (or unset,
+    PySpark's default) gets one warning naming the conf and its cost;
+    one built with it off gets none."""
+    import warnings
+
+    import pytest
+
+    from garmin_performance_analysis_spark import session
+
+    class Conf(dict):
+        def get(self, key, default=None):
+            return super().get(key, default)
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    for conf in (Conf({key: "true"}), Conf({key: "TRUE"}), Conf()):
+        with pytest.warns(UserWarning, match=key) as caught:
+            session._warn_on_call_site_capture(conf)
+        assert len(caught) == 1 and "5 py4j round trips" in str(caught[0].message)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        session._warn_on_call_site_capture(Conf({key: "false"}))

@@ -615,3 +615,99 @@ def test_stream_static_inferred_filter_watermark(spark, tmp_path):
     # t=1000 (wm 880); [900,1200) held because the unmatched t=5000
     # row never advances the watermark under the inferred filter
     assert starts == ["00:00:00", "00:05:00"], starts
+
+
+def _capture_read_backs(monkeypatch):
+    """Record every ``_replay`` result with its sink directory."""
+    from garmin_performance_analysis_spark.streaming import replay
+
+    captured = []
+    real = replay._replay
+
+    def spy(spark, sides, work_dir, build, **kw):
+        df = real(spark, sides, work_dir, build, **kw)
+        captured.append((df, os.path.join(work_dir, "out")))
+        return df
+
+    monkeypatch.setattr(replay, "_replay", spy)
+    return captured
+
+
+def _names_and_types(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_replay_read_back_has_the_sinks_schema(spark, tmp_path, monkeypatch):
+    """Every public replay reads its sink back under the streaming
+    frame's own schema (no inference job); the column names and types
+    must equal a plain ``spark.read.parquet`` of that sink."""
+    import datetime
+
+    from garmin_performance_analysis_spark.streaming import replay
+
+    captured = _capture_read_backs(monkeypatch)
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def ev(rows):
+        return spark.createDataFrame(
+            [(u, t0 + datetime.timedelta(seconds=s), k, float(v)) for u, s, k, v in rows],
+            "user_id long, ts timestamp, event_type string, value double",
+        )
+
+    b1 = ev([(3, 60, "a", 1.0), (7, 400, "b", 2.0), (3, 1000, "a", 3.0)])
+    b2 = ev([(3, 1500, "a", 4.0), (7, 4000, "b", 5.0)])
+    dim = spark.createDataFrame([(3, "x"), (7, "y")], "user_id long, tier string")
+    runs = lambda rows: spark.createDataFrame(rows, "key string, seq long")  # noqa: E731
+    work = lambda name: str(tmp_path / name)  # noqa: E731
+    outputs = {
+        "windowed_stats": replay.windowed_stats_replay(
+            spark, [b1, b2], work("w"), key_col="event_type"
+        ),
+        "join": replay.stream_join_replay(
+            spark, [b1, b2], [b1, b2], work("j"), max_gap_sec=600
+        ),
+        "dedup": replay.stream_dedup_replay(
+            spark, [b1, b2], work("d"), key_cols=["user_id"]
+        ),
+        "session": replay.stream_session_replay(spark, [b1, b2], work("s")),
+        "stateful_runs": replay.stream_stateful_runs_replay(
+            spark,
+            [runs([("k", s) for s in range(0, 6)]), runs([("k", s) for s in range(20, 26)])],
+            work("r"),
+            min_span=3,
+        ),
+        "static_enrich": replay.stream_static_enrich_replay(
+            spark, [b1, b2], dim, work("e")
+        ),
+    }
+    assert len(captured) == len(outputs)
+    for df, sink in captured:
+        assert _names_and_types(df) == _names_and_types(spark.read.parquet(sink)), sink
+    for name, out in outputs.items():
+        assert out.count() > 0, name
+
+
+def test_replay_with_no_closed_window_is_empty_with_the_sinks_schema(
+    spark, tmp_path, monkeypatch
+):
+    """No window ever falls behind the watermark: the replay returns 0
+    rows, still with the sink's columns and types."""
+    import datetime
+
+    from garmin_performance_analysis_spark.streaming.replay import (
+        windowed_stats_replay,
+    )
+
+    captured = _capture_read_backs(monkeypatch)
+    batch = spark.createDataFrame(
+        [(datetime.datetime(2024, 1, 1, 0, 1), "a", 1.0)],
+        "ts timestamp, event_type string, value double",
+    )
+    out = windowed_stats_replay(spark, [batch], str(tmp_path / "none"))
+    assert out.count() == 0
+    ((read_back, sink),) = captured
+    assert read_back.count() == 0
+    assert _names_and_types(read_back) == _names_and_types(spark.read.parquet(sink))
+    assert out.columns == [
+        "window_start", "key", "n", "value_sum", "value_avg", "value_min", "value_max",
+    ]
