@@ -1156,7 +1156,7 @@ def c9_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             assigned, out_dir, "doc_id", "payload", ["doc_id", "lang"]
         )
         manifest.collect()  # force the sink; bounded: one row per shard
-        back = shards.read_webdataset_shards(spark, out_dir + "/*.tar")
+        back = shards.read_webdataset_shards(spark, out_dir)
         return back.select(
             "key",
             F.octet_length("payload").alias("n_payload_bytes"),

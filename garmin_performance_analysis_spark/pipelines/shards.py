@@ -161,14 +161,25 @@ def write_webdataset_shards(
     return slim.groupBy("shard_id").applyInPandas(write_shard, schema=MANIFEST_SCHEMA)
 
 
-def read_webdataset_shards(spark: SparkSession, path_glob: str) -> DataFrame:
+def read_webdataset_shards(spark: SparkSession, path: str) -> DataFrame:
     """Read WebDataset tar shards back to sample rows: ``binaryFile``
     scan (one input split per shard file — the parallelism unit IS the
     shard) + Arrow-batched untar pairing ``<key>.bin`` with
     ``<key>.json``.  Unknown extensions are ignored, unpaired members
     surface with NULL on the missing side — loaders see exactly what is
-    in the shard."""
-    files = spark.read.format("binaryFile").load(path_glob)
+    in the shard.
+
+    ``path`` is a shard file or a directory; every ``*.tar`` under a
+    directory is read, subdirectories included (the streaming sink's
+    ``batch-*/``).  Give the directory rather than a ``<dir>/*.tar``
+    glob: Spark probes a glob for a streaming sink's metadata log and
+    logs the failed probe as a warning with a stack trace."""
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.tar")
+        .option("recursiveFileLookup", "true")
+        .load(path)
+    )
 
     def untar(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

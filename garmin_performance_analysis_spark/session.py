@@ -138,9 +138,11 @@ def get_spark(app_name: str = "garmin_performance_analysis_spark") -> SparkSessi
         # 5.04 s → 1.59 s best-of-3 after the flip, with m16 0.70×,
         # t4 0.69×, a19 0.77×, g8 0.82× in the same matched A/B).
         # KB-scale frames still coalesce to one task under true —
-        # minPartitionSize caps the split — so the per-exchange
-        # scheduling saving that motivated false is retained where it
-        # matters.
+        # minPartitionSize caps the split.  Reads over a table Spark
+        # scans as one split plan no exchange at all: the loader
+        # (sources.tables) coalesces such a table to one partition, so
+        # this setting shapes only the shuffles over larger tables and
+        # the explicit repartitions.
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -131,6 +131,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     plain UTC TIMESTAMP here so every downstream query can rely on
     ``unix_micros(ts)`` etc.  The session timezone is UTC
     (``session.py``), so the NTZ→TZ cast preserves the wall-clock value.
+
+    A table that Spark scans as one split (``scan_splits``: with two or
+    more cores, one file of at most ``spark.sql.files.openCostInBytes``)
+    comes back coalesced to one partition, so the aggregates, windows
+    and joins over it plan no exchange and a read runs in one stage.
+    The verdict is taken under the confs of the first load and is
+    registered with the relation; ``invalidate_table_memo`` drops both.
     """
     ship_package_path(spark)
     return artifact(spark, sf_dir, name, lambda: (_resolve(spark, sf_dir, name), ()))
@@ -180,7 +187,73 @@ def _resolve(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if scan_splits(spark, path) in (0, 1):
+        # Spark scans this table in one task anyway, so the coalesce
+        # costs nothing at run time; it reports SinglePartition, which
+        # satisfies every clustered and ordered distribution above it.
+        # Filters and column pruning still push through to the scan.
+        df = df.coalesce(1)
     return df
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-listing filter: names it never reads as data."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def scan_splits(spark: SparkSession, path: str) -> int | None:
+    """The number of input partitions Spark's file scan plans for the
+    parquet table at local ``path`` under ``spark``'s current confs;
+    None when ``path`` is not a local file or directory.
+
+    Mirrors ``FilePartition.maxSplitBytes`` and ``getFilePartitions``
+    over the data files' sizes instead of planning the scan, which
+    would cost about as much as resolving the relation.  The split size
+    is ``maxPartitionBytes`` capped below by ``openCostInBytes`` and by
+    the bytes per leaf core; files are cut into splits of that size and
+    packed largest first, each file adding ``openCostInBytes``.  With
+    two or more cores, a table is one split only when it is one file of
+    at most ``openCostInBytes`` (4 MB by default).  Spark's
+    ``spark.sql.files.maxPartitionNum`` only merges partitions, so
+    ignoring it can miss a one-split table, never invent one."""
+    if os.path.isfile(path):
+        sizes = [os.path.getsize(path)]
+    elif os.path.isdir(path):
+        sizes = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            sizes += [
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if not _hidden(f)
+            ]
+    else:
+        return None
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get()
+        if min_parts.isDefined()
+        else jspark.leafNodeDefaultParallelism()
+    )
+    total = sum(size + open_cost for size in sizes)
+    split = min(conf.filesMaxPartitionBytes(), max(open_cost, total // min_parts))
+    chunks = sorted(
+        (min(split, size - off) for size in sizes for off in range(0, size, split)),
+        reverse=True,
+    )
+    parts = used = 0
+    for chunk in chunks:
+        if parts == 0 or used + chunk > split:
+            parts, used = parts + 1, 0
+        used += chunk + open_cost
+    return parts
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -13,7 +13,8 @@ batch's manifest partition is written with per-partition overwrite —
 so a retried micro-batch converges to the same on-disk state instead
 of duplicating samples.  Shard ids restart at 0 in each batch; the
 per-batch subdirectory keeps names collision-free, and readers just
-glob ``batch-*/*.tar`` through ``read_webdataset_shards``.
+pass ``out_dir`` to ``read_webdataset_shards``, which reads the
+``batch-*/*.tar`` shards under it.
 """
 
 from __future__ import annotations

@@ -244,11 +244,12 @@ def _job_tasks(spark, tag: str) -> int:
     return done
 
 
-def test_each_hit_is_a_new_frame_with_its_own_execution(spark):
+def test_each_hit_is_a_new_frame_with_its_own_execution(spark, sf_multi_split):
     """Two calls served from t3's reused plan are two DataFrames over
     one analyzed plan, each with its own QueryExecution, so the second
     ``toPandas`` runs every task again instead of reusing the first
-    call's shuffle outputs (re-running one frame does reuse them)."""
+    call's shuffle outputs (re-running one frame does reuse them).  Runs
+    on the two-file tables: over one-split tables t3 plans no shuffle."""
     from garmin_performance_analysis_spark.harness.registry import serves_reused_plan
 
     name = "t3_sustained_islands"
@@ -256,9 +257,9 @@ def test_each_hit_is_a_new_frame_with_its_own_execution(spark):
     sc = spark.sparkContext
     identity = sc._jvm.System.identityHashCode
     with call_scope(spark):
-        while not serves_reused_plan(spark, SF_SMOKE, name):
-            fn(spark, SF_SMOKE)
-        a, b = fn(spark, SF_SMOKE), fn(spark, SF_SMOKE)
+        while not serves_reused_plan(spark, sf_multi_split, name):
+            fn(spark, sf_multi_split)
+        a, b = fn(spark, sf_multi_split), fn(spark, sf_multi_split)
         qa, qb = a._jdf.queryExecution(), b._jdf.queryExecution()
         assert a is not b and not qa.equals(qb)
         assert identity(qa.analyzed()) == identity(qb.analyzed())

@@ -1,5 +1,11 @@
 """Plan-shape assertions: the scale properties the README/SCALING.md
-claim must be visible in the physical plan, not just asserted in prose."""
+claim must be visible in the physical plan, not just asserted in prose.
+
+The loader plans a table that Spark scans as one split as a single
+partition, so nothing above it shuffles.  The tests that count
+exchanges pin the plan of tables spanning several splits and run on
+``sf_multi_split`` (conftest), the sf0.001 tables written as two files
+each."""
 
 from __future__ import annotations
 
@@ -40,9 +46,9 @@ def test_flagship_uses_codegen(spark):
     assert checks.has_whole_stage_codegen(df)
 
 
-def test_flagship_single_shuffle(spark):
+def test_flagship_single_shuffle(spark, sf_multi_split):
     # scan -> partial agg -> exchange on group key -> final agg: exactly 1
-    df = CATALOG["q1_pricing_summary"].fn(spark, SF_SMOKE)
+    df = CATALOG["q1_pricing_summary"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) == 1
 
 
@@ -66,11 +72,11 @@ def test_j8_unbounded_asof_broadcasts_dim(spark):
     assert checks.uses_broadcast_join(df)
 
 
-def test_d10_shares_one_partition_shuffle(spark):
+def test_d10_shares_one_partition_shuffle(spark, sf_multi_split):
     # the lag chain, rep numbering, median gate and both grouped passes
     # all key on activity_id: one shuffle for the window pass plus one
     # for each grouped pass at most — no accidental re-partitioning
-    df = CATALOG["d10_performance_trends"].fn(spark, SF_SMOKE)
+    df = CATALOG["d10_performance_trends"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) <= 3
 
 
@@ -105,22 +111,22 @@ def test_m8_window_sum_stays_primitive(spark):
     assert "decimal(22,2)" not in plan.lower()
 
 
-def test_m8_shuffle_budget(spark):
+def test_m8_shuffle_budget(spark, sf_multi_split):
     # one exchange for the window partition key; ranking reuses it
-    df = CATALOG["m8_best_segment"].fn(spark, SF_SMOKE)
+    df = CATALOG["m8_best_segment"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) <= 1
 
 
-def test_a1_stats_block_shuffle_budget(spark):
+def test_a1_stats_block_shuffle_budget(spark, sf_multi_split):
     # moments pass + shared unpivoted grid-median passes + pivot/join:
     # 6 today; the guard catches a per-metric re-shuffle regression
     # (a naive per-metric median would add ~3 per metric)
-    df = CATALOG["a1_stats_block"].fn(spark, SF_SMOKE)
+    df = CATALOG["a1_stats_block"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) <= 6
 
 
-def test_a9_profile_shuffle_budget(spark):
-    df = CATALOG["a9_profile_table"].fn(spark, SF_SMOKE)
+def test_a9_profile_shuffle_budget(spark, sf_multi_split):
+    df = CATALOG["a9_profile_table"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) <= 8
 
 
@@ -131,13 +137,13 @@ def test_t4_full_causes_context_is_single_broadcast_pass(spark):
     assert checks.uses_broadcast_join(df)
 
 
-def test_d4_fingerprints_are_map_only(spark):
+def test_d4_fingerprints_are_map_only(spark, sf_multi_split):
     """SimHash fingerprinting must be a pure projection: one explicit
     balance repartition, then codegen expression work — the r3 rewrite
     removed a |tokens|*64-row explode through two groupBy shuffles."""
     from garmin_performance_analysis_spark.pipelines import dedup
 
-    docs = load_table(spark, SF_SMOKE, "documents")
+    docs = load_table(spark, sf_multi_split, "documents")
     df = dedup.simhash64(docs, "doc_id", "text")
     # the only exchange is the explicit doc-balance repartition
     assert checks.count_shuffles(df) <= 1
@@ -157,19 +163,19 @@ def test_v4_srp_buckets_computed_without_plane_join(spark):
     assert "decimal(22,7)" not in plan.lower()
 
 
-def test_c2_sample_is_shuffle_free_scan_filter(spark):
+def test_c2_sample_is_shuffle_free_scan_filter(spark, sf_multi_split):
     """The deterministic sampler must be a pure scan-side filter —
     zero exchanges — so it can stack in front of expensive stages
     without moving data."""
-    df = CATALOG["c2_stratified_sample"].fn(spark, SF_SMOKE)
+    df = CATALOG["c2_stratified_sample"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) == 0
     assert checks.has_whole_stage_codegen(df)
 
 
-def test_v6_sq_topk_is_shuffle_free_shortlist(spark):
+def test_v6_sq_topk_is_shuffle_free_shortlist(spark, sf_multi_split):
     """SQ shortlist + exact re-rank: both ranking passes are global
     top-k (TakeOrderedAndProject), never a full sort exchange."""
-    df = CATALOG["v6_sq_topk"].fn(spark, SF_SMOKE)
+    df = CATALOG["v6_sq_topk"].fn(spark, sf_multi_split)
     assert checks.count_shuffles(df) == 0
     plan = checks.formatted_plan(df)
     assert "TakeOrderedAndProject" in plan
@@ -196,24 +202,24 @@ def test_d6_decontamination_broadcasts_probe_set(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_k2_salted_join_shuffles_on_key_plus_salt(spark):
+def test_k2_salted_join_shuffles_on_key_plus_salt(spark, sf_multi_split):
     """The salted join must actually reach a shuffled join keyed on
     (n_key, _salt) — if Spark broadcast the dim, the salt would never
     touch an exchange and the entry would demonstrate nothing."""
-    df = CATALOG["k2_salted_skew_join"].fn(spark, SF_SMOKE)
+    df = CATALOG["k2_salted_skew_join"].fn(spark, sf_multi_split)
     plan = checks.formatted_plan(df)
     assert "ShuffledHashJoin" in plan
     assert "_salt" in plan  # salt participates in the join keys
     assert "BroadcastHashJoin" not in plan.split("ShuffledHashJoin")[0]
 
 
-def test_j15_bucketed_join_has_no_join_exchange(spark):
+def test_j15_bucketed_join_has_no_join_exchange(spark, sf_multi_split):
     """The co-bucketed silver tables must join with ZERO exchanges on
     either side — the only Exchange in the whole plan is the final
     grouped aggregate.  If bucketed scan metadata is lost (or the join
     degrades to broadcast, which bypasses bucketed scans), this gate
     trips."""
-    df = CATALOG["j15_bucketed_colocated_join"].fn(spark, SF_SMOKE)
+    df = CATALOG["j15_bucketed_colocated_join"].fn(spark, sf_multi_split)
     plan = checks.formatted_plan(df)
     assert "SortMergeJoin" in plan
     assert "BroadcastHashJoin" not in plan
@@ -250,14 +256,14 @@ def test_s10_scan_is_partition_pruned(spark):
     assert ">= 2024-01-10" in pf[0] and "<= 2024-01-16" in pf[0]
 
 
-def test_a22_cms_shuffle_carries_cells_not_stream(spark):
+def test_a22_cms_shuffle_carries_cells_not_stream(spark, sf_multi_split):
     """The sketch build's only row-cardinality shuffle is the token
     dedup inside the probe's exact recount; the CMS groupBy itself
     must partially aggregate map-side (HashAggregate below the
     exchange) so the wire carries ≤ depth×width cells per task."""
     from garmin_performance_analysis_spark.operators import sketches
 
-    docs = load_table(spark, SF_SMOKE, "documents")
+    docs = load_table(spark, sf_multi_split, "documents")
     terms = docs.select(
         F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
     )
@@ -278,11 +284,11 @@ def test_o10_keyset_page_never_global_sorts(spark):
     assert plan.count("Sort (") == 0
 
 
-def test_j16_prune_is_chained_broadcast_semis_no_extra_exchange(spark):
+def test_j16_prune_is_chained_broadcast_semis_no_extra_exchange(spark, sf_multi_split):
     """The Bloom prune must run as three LeftSemi broadcast joins in
     front of the real join — no explode, and no exchange beyond the
     final aggregate's (the dim join itself broadcasts here)."""
-    df = CATALOG["j16_bloom_pruned_join"].fn(spark, SF_SMOKE)
+    df = CATALOG["j16_bloom_pruned_join"].fn(spark, sf_multi_split)
     plan = checks.formatted_plan(df)
     assert plan.count("LeftSemi") >= 3
     assert "Generate" not in plan  # no explode in the prune

@@ -4,6 +4,7 @@ respect, partition invariance, byte determinism, roundtrip equality."""
 from __future__ import annotations
 
 import io
+import os
 import tarfile
 
 import pytest
@@ -67,7 +68,7 @@ def test_write_read_roundtrip_and_determinism(spark, tmp_path):
     }
     assert sum(r["n_samples"] for r in rows1.values()) == df.count()
 
-    back = shards.read_webdataset_shards(spark, out1 + "/*.tar")
+    back = shards.read_webdataset_shards(spark, out1)
     got = {
         int(r["key"]): (bytes(r["payload"]), r["meta"]) for r in back.collect()
     }
@@ -84,6 +85,28 @@ def test_write_read_roundtrip_and_determinism(spark, tmp_path):
     assert chk["n_shards"] == len(rows1)
     assert chk["n_samples"] == df.count()
     assert chk["dup_digest_shards"] == 0
+
+
+def test_reader_directory_and_glob_forms_agree(spark, tmp_path):
+    """Reading the shard directory (the form callers use: a glob makes
+    Spark log a failed sink-metadata probe) returns the same rows as
+    the ``<dir>/*.tar`` glob; the parquet manifest beside the shards is
+    not read."""
+    df = shards.assign_shards(_docs(spark), "doc_id", "n_bytes", 16384)
+    out = str(tmp_path / "w")
+    shards.write_webdataset_shards(
+        df, out, "doc_id", "payload", ["doc_id", "lang"]
+    ).write.parquet(os.path.join(out, "manifest.parquet"))
+
+    def rows(path):
+        return sorted(
+            (r["key"], bytes(r["payload"]), r["meta"], r["shard_path"])
+            for r in shards.read_webdataset_shards(spark, path).collect()
+        )
+
+    by_dir = rows(out)
+    assert len(by_dir) == df.count()
+    assert by_dir == rows(out + "/*.tar")
 
 
 def test_reader_tolerates_unpaired_and_foreign_members(spark, tmp_path):
